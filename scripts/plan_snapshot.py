@@ -36,9 +36,14 @@ def canon_plan(s: str) -> str:
     # process — registry reordering alone renumbers every later query
     # (r15: 59 false "changed plans" in the r14→r15 diff before this
     # rule; all were HOF consumers downstream of the reordered front).
-    s = re.sub(r"\blambda x_\d+", "lambda x_N", s)
-    s = re.sub(r"\bx_\d+", "x_N", s)
-    return s
+    # Renumber them in order of first appearance within the plan, so a
+    # plan that swaps which lambda variable it references still differs.
+    ids: dict[str, int] = {}
+    return re.sub(
+        r"\bx_(\d+)",
+        lambda m: f"x_{ids.setdefault(m.group(1), len(ids))}",
+        s,
+    )
 
 
 def main() -> None:

@@ -16,11 +16,22 @@ import pytest
 from trackdechets_etl_spark.queries import all_queries
 from tests.conftest import SF_DIR
 
-# r15: slow shard — excluded from the default pytest run (see
-# pytest.ini); run the full suite with -m "slow or not slow".
-pytestmark = pytest.mark.slow
-
 REGISTRY = all_queries()
+
+# The default shard checks the five reference pipelines and one consumer
+# of each shared SQL/Column helper (cosine and hyperplane SQL, md5 hex to
+# int SQL, array dot product); the rest of the sweep is marked slow (see
+# pytest.ini) and runs with -m "slow or not slow".
+_DEFAULT_SHARD = {
+    "pipeline_siretisation_stats_pre",
+    "pipeline_siretisation_enriched",
+    "pipeline_siretisation_stats",
+    "pipeline_rubriques_chain",
+    "pipeline_open_data",
+    "dedup_embedding_cosine",
+    "sample_weighted_reservoir",
+    "ml_kmeans_lite",
+}
 
 
 def _normalize(rows, colnames):
@@ -47,7 +58,13 @@ def _normalize(rows, colnames):
     return sorted(normed)
 
 
-@pytest.mark.parametrize("name", sorted(REGISTRY))
+@pytest.mark.parametrize(
+    "name",
+    [
+        pytest.param(n, marks=() if n in _DEFAULT_SHARD else pytest.mark.slow)
+        for n in sorted(REGISTRY)
+    ],
+)
 def test_query_matches_oracle(name, spark, duck):
     spec = REGISTRY[name]
     sdf = spec.fn(spark, SF_DIR)

@@ -26,6 +26,7 @@ from trackdechets_etl_spark.operators.temporal import (
     semi_anti_split,
 )
 from trackdechets_etl_spark.queries import QuerySpec
+from trackdechets_etl_spark.queries.llm import _cos_sql
 
 # --------------------------------------------------------------- as-of join
 
@@ -292,13 +293,6 @@ def _sim_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     out = ivf_topk(e, "vec_id", "embedding", "label", IVF_QUERY_IDS, k=5)
     return out.select(
         "q_id", "c_id", F.col("rank").cast("long").alias("rank"), "cos_sim"
-    )
-
-
-def _cos_sql(a: str, b: str) -> str:
-    return (
-        f"list_dot_product({a}, {b}) / "
-        f"(sqrt(list_dot_product({a}, {a})) * sqrt(list_dot_product({b}, {b})))"
     )
 
 

@@ -16,10 +16,11 @@ Invariant tests in tests/test_round20.py.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from trackdechets_etl_spark.io.readers import read_table
+from trackdechets_etl_spark.llm.similarity import dot
 from trackdechets_etl_spark.queries import QuerySpec
 
 _K = 8
@@ -27,22 +28,14 @@ _ROUNDS = 2
 _DIMS = 64
 
 
-def _dot(a: Column, b: Column) -> Column:
-    return F.aggregate(
-        F.zip_with(a, b, lambda x, y: x * y),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
-
-
 def _assign(e: DataFrame, cents: DataFrame) -> DataFrame:
     """Nearest centroid per vector: broadcast the k-row centroid
     table, compute the expanded squared distance, argmin via a
     min-struct with the centroid id as tiebreak."""
     d2 = F.round(
-        _dot(F.col("v"), F.col("v"))
-        - 2 * _dot(F.col("v"), F.col("c"))
-        + _dot(F.col("c"), F.col("c")),
+        dot(F.col("v"), F.col("v"))
+        - 2 * dot(F.col("v"), F.col("c"))
+        + dot(F.col("c"), F.col("c")),
         6,
     )
     scored = e.crossJoin(F.broadcast(cents)).select(

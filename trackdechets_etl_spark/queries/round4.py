@@ -26,6 +26,7 @@ from pyspark.sql.window import Window
 
 from trackdechets_etl_spark.io.readers import read_table
 from trackdechets_etl_spark.queries import QuerySpec
+from trackdechets_etl_spark.queries.round61 import _hex8_int_sql
 
 # ---------------------------------------------------- retention cohorts
 
@@ -694,15 +695,6 @@ FROM wide,
 # ------------------------------------------- weighted reservoir sample
 
 _WRS_K = 20
-_HEX = "0123456789abcdef"
-
-
-def _wrs_hex_int_sql(md5_expr: str) -> str:
-    terms = [
-        f"(strpos('{_HEX}', substr({md5_expr}, {i + 1}, 1)) - 1) * {16 ** (7 - i)}"
-        for i in range(8)
-    ]
-    return "(" + " + ".join(terms) + ")"
 
 
 def _sample_weighted_reservoir(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -729,7 +721,7 @@ def _sample_weighted_reservoir(spark: SparkSession, sf_dir: str) -> DataFrame:
 WRS_SQL = f"""
 WITH keyed AS (
     SELECT doc_id, n_chars,
-           round(ln(({_wrs_hex_int_sql("md5(CAST(doc_id AS VARCHAR))")} + 0.5)
+           round(ln(({_hex8_int_sql("md5(CAST(doc_id AS VARCHAR))")} + 0.5)
                     / 4294967296.0) / n_chars, 9) AS sample_key
     FROM documents)
 SELECT doc_id, n_chars, sample_key

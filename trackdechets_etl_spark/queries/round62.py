@@ -55,11 +55,9 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from trackdechets_etl_spark.io.readers import read_table
-from trackdechets_etl_spark.llm.similarity import (
-    bucket_expr,
-    hyperplane,
-)
+from trackdechets_etl_spark.llm.similarity import bucket_expr
 from trackdechets_etl_spark.queries import QuerySpec
+from trackdechets_etl_spark.queries.llm import _plane_sql
 
 EMB_DIMS = 64
 
@@ -289,10 +287,6 @@ FROM per
 
 
 # ------------------------------------------------- LSH silhouette
-
-
-def _plane_sql(p: int) -> str:
-    return "[" + ", ".join(str(x) for x in hyperplane(p, EMB_DIMS)) + "]"
 
 
 def _bucket_sql(n_planes: int = 4) -> str:

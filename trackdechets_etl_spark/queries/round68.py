@@ -54,6 +54,7 @@ from pyspark.sql import functions as F
 from trackdechets_etl_spark.io.readers import read_table
 from trackdechets_etl_spark.llm.similarity import cosine
 from trackdechets_etl_spark.queries import QuerySpec
+from trackdechets_etl_spark.queries.llm import _cos_sql
 
 # ------------------------------------------------- two-way ANOVA
 
@@ -250,14 +251,6 @@ def _embedding_triplet_eval(
             F.round(F.col("satisfied") / F.col("n_triplets"), 6),
         )
         .orderBy("label")
-    )
-
-
-def _cos_sql(a: str, b: str) -> str:
-    return (
-        f"list_dot_product({a}, {b})"
-        f" / (sqrt(list_dot_product({a}, {a}))"
-        f" * sqrt(list_dot_product({b}, {b})))"
     )
 
 

@@ -51,16 +51,9 @@ from pyspark.sql import functions as F
 from trackdechets_etl_spark.io.readers import read_table
 from trackdechets_etl_spark.llm.similarity import cosine
 from trackdechets_etl_spark.queries import QuerySpec
+from trackdechets_etl_spark.queries.llm import _cos_sql
 
 EMB_DIMS = 64
-
-
-def _cos_sql(a: str, b: str) -> str:
-    return (
-        f"list_dot_product({a}, {b}) / "
-        f"(sqrt(list_dot_product({a}, {a})) "
-        f"* sqrt(list_dot_product({b}, {b})))"
-    )
 
 
 # --------------------------------------------- IVF recall curve

@@ -50,6 +50,7 @@ from pyspark.sql import functions as F
 from trackdechets_etl_spark.io.readers import read_table
 from trackdechets_etl_spark.llm.similarity import dot
 from trackdechets_etl_spark.queries import QuerySpec
+from trackdechets_etl_spark.queries.llm import _cos_sql
 
 # ------------------------------------------- class-balanced sample
 
@@ -184,14 +185,6 @@ def _embedding_hubness_score(
         F.round(
             (F.col("np") - F.col("n_hit")) / F.col("np"), 6
         ).alias("antihub_share"),
-    )
-
-
-def _cos_sql(a: str, b: str) -> str:
-    return (
-        f"list_dot_product({a}, {b}) / "
-        f"(sqrt(list_dot_product({a}, {a})) "
-        f"* sqrt(list_dot_product({b}, {b})))"
     )
 
 

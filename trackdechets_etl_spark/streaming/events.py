@@ -249,19 +249,6 @@ def idempotent_batch_writer(path: str):
     return write
 
 
-def run_to_memory_sink(stream_df: DataFrame, name: str) -> None:
-    """Drive a streaming DataFrame to completion into an in-memory table
-    using availableNow (processes all available input then stops)."""
-    q = (
-        stream_df.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("complete")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-
-
 def user_type_profile(events: DataFrame) -> DataFrame:
     """Per-user event count + distinct-event-type count via Spark 4's
     ``transformWithStateInPandas`` (the successor API to

@@ -1,6 +1,9 @@
 from __future__ import annotations
 
+from pathlib import Path
+
 import duckdb
+import pyarrow.parquet as pq
 import pytest
 
 from trackdechets_etl_spark.session import get_spark
@@ -36,3 +39,16 @@ def duck():
         )
     yield con
     con.close()
+
+
+def write_parted(table: str, sf_dir, n_files: int = 3) -> int:
+    """Write the ``SF_DIR`` table into ``sf_dir`` as a directory
+    ``<table>.parquet/`` of ``n_files`` part files — the layout real
+    writers produce — and return the summed size of the part files."""
+    t = pq.read_table(f"{SF_DIR}/{table}.parquet")
+    out = Path(sf_dir) / f"{table}.parquet"
+    out.mkdir(parents=True)
+    step = -(-t.num_rows // n_files)
+    for i in range(n_files):
+        pq.write_table(t.slice(i * step, step), out / f"part-{i:05d}.parquet")
+    return sum(f.stat().st_size for f in out.iterdir())

@@ -7,6 +7,7 @@ from __future__ import annotations
 import tarfile
 from pathlib import Path
 
+import pytest
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
     DoubleType,
@@ -22,6 +23,7 @@ from trackdechets_etl_spark.io.readers import (
     resolve_source_path,
 )
 from trackdechets_etl_spark.io.writers import write_csv, write_parquet
+from tests.conftest import SF_DIR, write_parted
 
 ICPE_LIKE_SCHEMA = StructType(
     [
@@ -322,3 +324,118 @@ def test_jdbc_partitioned_read_parallelism(spark, tmp_path):
     assert sorted(r["n_nationkey"] for r in df.collect()) == sorted(
         r["n_nationkey"] for r in src.collect()
     )
+
+
+# ------------------------------------------- sizing a scan off the fixture layout
+
+
+def test_table_bytes_sums_listed_files(spark, tmp_path):
+    """table_bytes is the summed part-file size for a directory and for
+    its file:// URI, and the file size for a single file."""
+    import os
+
+    from trackdechets_etl_spark.io.readers import table_bytes
+
+    parts = write_parted("orders", tmp_path)
+    path = str(tmp_path / "orders.parquet")
+    assert table_bytes(spark.read.parquet(path)) == parts
+    assert table_bytes(spark.read.parquet(f"file://{path}")) == parts
+    single = f"{SF_DIR}/orders.parquet"
+    assert table_bytes(spark.read.parquet(single)) == os.path.getsize(single)
+
+
+def _round_robin(df) -> bool:
+    return "RoundRobinPartitioning" in df._jdf.queryExecution().executedPlan().toString()
+
+
+@pytest.mark.parametrize("uri", [False, True], ids=["dir", "file_uri"])
+def test_fan_out_decides_from_listed_bytes(spark, tmp_path, uri):
+    """The small-scan fan-out compares the listed bytes, not the size of
+    a directory entry, against the split size: at a split size of
+    bytes // parallelism the scan already spans every core, one byte
+    more and it does not. A directory entry (a few KiB) or an unstat-able
+    URI would give the same decision on both sides of that boundary."""
+    from trackdechets_etl_spark.io.readers import read_table
+
+    parts = write_parted("documents", tmp_path)
+    sf_dir = f"file://{tmp_path}" if uri else str(tmp_path)
+    parallelism = spark.sparkContext.defaultParallelism
+    conf = "spark.sql.files.maxPartitionBytes"
+    old = spark.conf.get(conf)
+    try:
+        spark.conf.set(conf, str(parts // parallelism))
+        assert not _round_robin(read_table(spark, sf_dir, "documents"))
+        spark.conf.set(conf, str(parts // parallelism + 1))
+        assert _round_robin(read_table(spark, sf_dir, "documents"))
+    finally:
+        spark.conf.set(conf, old)
+
+
+def test_compact_parquet_sizes_uri_like_path(spark, tmp_path):
+    from trackdechets_etl_spark.io.writers import compact_parquet
+
+    parts = write_parted("orders", tmp_path / "src")
+    src = str(tmp_path / "src" / "orders.parquet")
+    target = parts // 3
+    n_path = compact_parquet(spark, src, str(tmp_path / "a"), target_file_bytes=target)
+    n_uri = compact_parquet(
+        spark, f"file://{src}", str(tmp_path / "b"), target_file_bytes=target
+    )
+    assert n_path == n_uri == -(-parts // target)
+
+
+# ------------------------------------------------ events.ts stored as nanoseconds
+
+
+def _write_nanos_events(sf_dir) -> dict[int, int]:
+    """Rewrite the fixture events with ``ts`` as TIMESTAMP(NANOS) plus
+    0-999 sub-microsecond nanos, and return DuckDB's reading of it as
+    {event_id: epoch micros}."""
+    import duckdb
+    import pyarrow as pa
+    import pyarrow.compute as pc
+    import pyarrow.parquet as pq
+
+    t = pq.read_table(f"{SF_DIR}/events.parquet")
+    extra = pc.multiply(pc.bit_wise_and(t["event_id"], 3), 333)
+    ns = pc.add(pc.multiply(t["ts"].cast(pa.int64()), 1000), extra)
+    t = t.set_column(
+        t.schema.get_field_index("ts"), "ts", ns.cast(pa.timestamp("ns"))
+    )
+    path = f"{sf_dir}/events.parquet"
+    pq.write_table(t, path)
+    assert "nanoseconds" in str(pq.ParquetFile(path).schema.column(1).logical_type)
+    return dict(
+        duckdb.sql(f"SELECT event_id, epoch_us(ts) FROM '{path}'").fetchall()
+    )
+
+
+def test_events_nanos_truncate_to_micros_like_duckdb(spark, tmp_path):
+    """Every corpus stores ``ts`` in microseconds, so the nanos branch of
+    the events reader runs only on a file written this way: the batch
+    reader, the stream source and the helper they share all read
+    the truncated microseconds DuckDB reads."""
+    from trackdechets_etl_spark.io.readers import read_events, read_table
+    from trackdechets_etl_spark.streaming.events import stream_from_parquet
+
+    want = _write_nanos_events(tmp_path)
+    assert {v % 1000 for v in want.values()} != {0}  # not whole millis
+
+    def micros(df):
+        return df.select("event_id", F.unix_micros("ts").alias("us"))
+
+    batch = read_table(spark, str(tmp_path), "events")
+    assert dict(micros(batch).collect()) == want
+    events = read_events(spark, str(tmp_path / "events.parquet"))
+    assert dict(micros(events).collect()) == want
+
+    q = (
+        micros(stream_from_parquet(spark, str(tmp_path)))
+        .writeStream.format("memory")
+        .queryName("nanos_events")
+        .outputMode("append")
+        .trigger(availableNow=True)
+        .start()
+    )
+    q.awaitTermination()
+    assert dict(spark.sql("SELECT * FROM nanos_events").collect()) == want

@@ -20,8 +20,10 @@ REGISTRY = all_queries()
 
 # The default shard checks the five reference pipelines and one consumer
 # of each shared SQL/Column helper (cosine and hyperplane SQL, md5 hex to
-# int SQL, array dot product); the rest of the sweep is marked slow (see
-# pytest.ini) and runs with -m "slow or not slow".
+# int SQL, array dot product) and of each sized or converted read (the
+# orders rank gate, the documents and embeddings fan-out, events.ts); the
+# rest of the sweep is marked slow (see pytest.ini) and runs with
+# -m "slow or not slow".
 _DEFAULT_SHARD = {
     "pipeline_siretisation_stats_pre",
     "pipeline_siretisation_enriched",
@@ -31,6 +33,10 @@ _DEFAULT_SHARD = {
     "dedup_embedding_cosine",
     "sample_weighted_reservoir",
     "ml_kmeans_lite",
+    "window_rank_ratios",
+    "dedup_minhash_lsh",
+    "sim_topk_bruteforce",
+    "events_tumbling_hourly",
 }
 
 

@@ -2,7 +2,7 @@
 
 Locally the query keeps the 5-partition mktsegment window (measured
 faster at sf0.1: 0.90 vs 1.39 s, OPTIMIZATION_r14.md negative); above
-the on-disk orders.parquet threshold it switches to the distributed
+the scanned size of orders it switches to the distributed
 per-segment rank built on operators/ranking.global_row_number. The two
 paths must be BIT-identical — same doubles, not just same rounded
 values — and the gate itself must be visible in the plan.
@@ -15,8 +15,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from trackdechets_etl_spark.queries import analytics
-
-SF_DIR = "/root/testdata/sf0.001"
+from tests.conftest import SF_DIR, write_parted
 
 
 def _collect(df):
@@ -94,3 +93,28 @@ def test_gate_visible_in_plan(spark, monkeypatch):
     # executed plan shows its Scan ExistingRDD + __gr_pid columns)
     assert "percent_rank" not in dplan
     assert "__gr_pid" in dplan
+
+
+def _distributed(df) -> bool:
+    return "__gr_pid" in df._jdf.queryExecution().executedPlan().toString()
+
+
+@pytest.mark.parametrize("uri", [False, True], ids=["dir", "file_uri"])
+def test_gate_sizes_part_file_directory(spark, tmp_path, monkeypatch, uri):
+    """orders stored as a directory of part files (and reached through a
+    file:// URI) is sized by its listed bytes: the gate fires once the
+    threshold drops one byte below them, though a directory entry is only
+    a few KiB and a URI cannot be stat-ed."""
+    import shutil
+
+    parts = write_parted("orders", tmp_path)
+    shutil.copy(f"{SF_DIR}/customer.parquet", tmp_path)
+    sf_dir = f"file://{tmp_path}" if uri else str(tmp_path)
+    assert (tmp_path / "orders.parquet").stat().st_size < parts - 1
+
+    monkeypatch.setattr(analytics, "_RANK_SEGMENT_WINDOW_MAX_BYTES", parts)
+    assert not _distributed(analytics._window_rank_ratios(spark, sf_dir))
+    monkeypatch.setattr(analytics, "_RANK_SEGMENT_WINDOW_MAX_BYTES", parts - 1)
+    dist = analytics._window_rank_ratios(spark, sf_dir)
+    assert _distributed(dist)
+    assert _collect(dist) == _collect(analytics._window_rank_ratios(spark, SF_DIR))

@@ -1,7 +1,6 @@
 from trackdechets_etl_spark.io.readers import (
     read_csv_with_schema,
     read_jdbc_query,
-    read_parquet,
     read_table,
     resolve_source_path,
 )
@@ -10,7 +9,6 @@ from trackdechets_etl_spark.io.writers import write_csv, write_jdbc, write_parqu
 __all__ = [
     "read_csv_with_schema",
     "read_jdbc_query",
-    "read_parquet",
     "read_table",
     "resolve_source_path",
     "write_csv",

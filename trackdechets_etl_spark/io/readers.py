@@ -151,11 +151,36 @@ def read_jsonl(
     return spark.read.schema(schema).json(path)
 
 
-def read_parquet(spark: SparkSession, path: str) -> DataFrame:
-    """Parquet scan — the engine's native format. Column pruning and
-    predicate pushdown are automatic (verify via ``PushedFilters`` /
-    ``ReadSchema`` in ``.explain``)."""
-    return spark.read.parquet(path)
+def table_bytes(df: DataFrame) -> int:
+    """Byte size of a bare parquet scan: the sum of the file lengths
+    Spark listed when the scan was created, read from the analyzed
+    plan's statistics. Starts no job and opens no file, and works the
+    same for a single file, a directory of part files or any URI the
+    Hadoop file system resolves. Size the scan before projecting it:
+    a Project scales the estimate by row width."""
+    return int(df._jdf.queryExecution().analyzed().stats().sizeInBytes())
+
+
+def read_events(spark: SparkSession, path: str, stream: bool = False) -> DataFrame:
+    """Scan an events parquet with ``ts`` as a microsecond timestamp.
+
+    Spark rejects a TIMESTAMP(NANOS) column unless
+    ``spark.sql.legacy.parquet.nanosAsLong`` is on; it then arrives as
+    long nanos and is truncated here to microseconds, the conversion
+    DuckDB applies. The conf is runtime-settable and set here, so the
+    engine also works under a caller-built SparkSession. A microsecond
+    ``ts`` passes through unchanged. ``stream=True`` returns a
+    file-stream source over the same path, with the batch schema.
+    """
+    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    df = spark.read.parquet(path)
+    if stream:
+        # Glob form: the file-stream source requires a directory basePath;
+        # a glob makes it resolve to the parent directory.
+        df = spark.readStream.schema(df.schema).parquet(f"{path}*")
+    if dict(df.dtypes).get("ts") == "bigint":
+        df = df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
+    return df
 
 
 # Tables whose downstream workloads are per-row CPU-heavy (shingling,
@@ -167,14 +192,14 @@ def read_parquet(spark: SparkSession, path: str) -> DataFrame:
 _CPU_HEAVY_TABLES = {"documents", "embeddings"}
 
 
-def _fan_out_small_scan(spark: SparkSession, df: DataFrame, path: str) -> DataFrame:
+def _fan_out_small_scan(spark: SparkSession, df: DataFrame) -> DataFrame:
     """Parallelize scans of files Spark cannot split.
 
     A parquet file is splittable only at row-group boundaries; the test
     corpus writes ONE row group per file, so every scan arrives as a
     single partition and all per-row work (string ops, hashing,
     shingling) serializes onto one core until the first shuffle. When
-    the file's estimated split count is below the session parallelism,
+    the scan's estimated split count is below the session parallelism,
     repartition to fan the rows out — one tiny round-robin shuffle buys
     full-width execution of everything downstream.
 
@@ -182,43 +207,29 @@ def _fan_out_small_scan(spark: SparkSession, df: DataFrame, path: str) -> DataFr
     yields thousands of splits, so ``est_splits >= parallelism`` and no
     extra shuffle is inserted.
     """
-    try:
-        size = Path(path).stat().st_size
-    except OSError:
-        return df
     max_bytes = int(spark.conf.get("spark.sql.files.maxPartitionBytes", "134217728"))
     parallelism = spark.sparkContext.defaultParallelism
-    est_splits = max(1, size // max_bytes)
+    est_splits = max(1, table_bytes(df) // max_bytes)
     if est_splits < parallelism:
         return df.repartition(parallelism)
     return df
 
 
 def read_table(
-    spark: SparkSession, sf_dir: str, name: str, fan_out: bool | None = None
+    spark: SparkSession, sf_dir: str, name: str, fan_out: bool = False
 ) -> DataFrame:
-    """Load one of the driver's synthetic tables (TESTDATA.md).
+    """Load one of the synthetic corpus tables (TESTDATA.md); ``events``
+    goes through :func:`read_events`.
 
-    ``events.ts`` is TIMESTAMP(NANOS) in parquet; with
-    ``spark.sql.legacy.parquet.nanosAsLong`` it arrives as long nanos
-    and is converted here to a microsecond timestamp (truncating, the
-    same conversion DuckDB applies), keeping engine outputs comparable.
-
-    ``fan_out=True`` forces the small-scan fan-out (for fact spines
+    The CPU-heavy text/vector tables always get the small-scan fan-out;
+    ``fan_out=True`` also applies it to this table (for fact spines
     feeding broadcast-join pipelines, where ALL work until the first
-    aggregation runs inside the scan partitions); ``None`` auto-applies
-    it to the CPU-heavy text/vector tables only.
+    aggregation runs inside the scan partitions).
     """
-    if name == "events":
-        # Runtime-settable; applied here too so the engine works under a
-        # caller-built SparkSession that lacks the session-factory conf.
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     path = f"{sf_dir}/{name}.parquet"
-    df = spark.read.parquet(path)
-    if name == "events" and dict(df.dtypes).get("ts") == "bigint":
-        df = df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
-    if fan_out or (fan_out is None and name in _CPU_HEAVY_TABLES):
-        df = _fan_out_small_scan(spark, df, path)
+    df = read_events(spark, path) if name == "events" else spark.read.parquet(path)
+    if fan_out or name in _CPU_HEAVY_TABLES:
+        df = _fan_out_small_scan(spark, df)
     return df
 
 

@@ -10,9 +10,9 @@ JDBC writer batches at 1000+ rows). The REST sink (S10,
 
 from __future__ import annotations
 
-from pathlib import Path
-
 from pyspark.sql import DataFrame
+
+from trackdechets_etl_spark.io.readers import table_bytes
 
 
 def write_parquet(
@@ -61,15 +61,9 @@ def compact_parquet(
     many-small-files problem (streaming sinks, per-task outputs) that
     murders scan throughput at 100 TB — file-open overhead and
     footer reads dominate once files drop below ~tens of MB.
-    Returns the number of output partitions written.
-
-    Sizing walks the local filesystem; on object storage swap the walk
-    for the Hadoop FileSystem API (same coalesce logic)."""
+    Returns the number of output partitions written."""
     df = spark.read.parquet(src_path)
-    total_bytes = sum(
-        f.stat().st_size for f in Path(src_path).rglob("*.parquet")
-    )
-    n_parts = max(1, -(-total_bytes // target_file_bytes))  # ceil div
+    n_parts = max(1, -(-table_bytes(df) // target_file_bytes))  # ceil div
     df.coalesce(n_parts).write.mode("overwrite").parquet(dest_path)
     return n_parts
 

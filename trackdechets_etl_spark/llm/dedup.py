@@ -277,7 +277,6 @@ def minhash_lsh_pairs(
     id_col: str,
     threshold: float = 0.8,
     n: int = 3,
-    cache_shingles: bool = False,
 ) -> DataFrame:
     """MinHash-LSH near-dup pairs, verified by exact Jaccard.
 
@@ -290,15 +289,9 @@ def minhash_lsh_pairs(
     # (twice), and the size counts. Exchange reuse dedups only the
     # consumers that shuffle identically; the rest re-run the text
     # explode, so a LAZY localCheckpoint (materialized inside the
-    # query's own first action — no extra job) is the right middle
-    # ground: measured at sf0.1 1.43s → 1.27s, pair set unchanged.
-    # ``cache_shingles=True`` (a separate .cache() materialization)
-    # remains HARMFUL for single-query use — measured 8.5s vs 33s on a
-    # fresh session (memory-store materialization breaks exchange reuse
-    # and adds GC) — and is kept only for MULTI-action iterative
-    # pipelines where lineage recompute across actions is real.
-    sh = shingles(df, text_col, id_col, n)
-    sh = sh.cache() if cache_shingles else sh.localCheckpoint(eager=False)
+    # query's own first action — no extra job) shares it: measured at
+    # sf0.1 1.43s → 1.27s, pair set unchanged.
+    sh = shingles(df, text_col, id_col, n).localCheckpoint(eager=False)
     candidates = minhash_candidates(sh, id_col)
     return _pair_jaccard(sh, id_col, candidates).filter(F.col("jaccard") >= threshold)
 

@@ -26,15 +26,12 @@ def enrich_left(
     fact: DataFrame,
     dim: DataFrame,
     on: str | list[str] | Column,
-    broadcast_dim: bool = True,
     how: str = "left",
 ) -> DataFrame:
     """J1/J3/J4: left-outer (or inner) enrich of a fact table with a
-    dimension (reference ``dags/icpe-siretisation.py:175,285,311``).
-    ``broadcast_dim=True`` is the right call whenever the dim fits in
-    executor memory — the common case for code/reference tables."""
-    right = F.broadcast(dim) if broadcast_dim else dim
-    return fact.join(right, on, how)
+    broadcast dimension (reference ``dags/icpe-siretisation.py:175,285,311``)
+    — code/reference tables always fit in executor memory."""
+    return fact.join(F.broadcast(dim), on, how)
 
 
 def fanout_name_join(

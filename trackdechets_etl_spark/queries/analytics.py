@@ -15,7 +15,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from trackdechets_etl_spark.io.readers import read_table
+from trackdechets_etl_spark.io.readers import read_table, table_bytes
 from trackdechets_etl_spark.queries import QuerySpec
 
 # ----------------------------------------------------------- TPC-H Q1 shape
@@ -226,22 +226,14 @@ WINDOW w AS (
 
 
 # Scale escape hatch for the 5-partition mktsegment rank window
-# (VERDICT r14 ask #3). Below this on-disk size of orders.parquet the
-# plain segment window wins (measured r14: the distributed rewrite read
+# (VERDICT r14 ask #3). Below this scanned size of orders the plain
+# segment window wins (measured r14: the distributed rewrite read
 # 0.90 → 1.39 s at sf0.1 — the range-sampling pass + offset join cost
 # more than a 5-task sort of 150k rows); above it a 5-partition
 # full-sort window is the textbook straggler (each segment ≈ bytes/5 on
 # ONE task), so the query switches to the bit-identical distributed
-# rank. 4 GiB default ⇒ the window path never sorts more than ~1 GiB
-# per task; override via SPARK_GRAFT_RANK_SEGMENT_WINDOW_MAX_BYTES for
-# boxes with different per-task comfort.
-import os as _os
-
-_RANK_SEGMENT_WINDOW_MAX_BYTES = int(
-    _os.environ.get(
-        "SPARK_GRAFT_RANK_SEGMENT_WINDOW_MAX_BYTES", str(4 << 30)
-    )
-)
+# rank. 4 GiB ⇒ the window path never sorts more than ~1 GiB per task.
+_RANK_SEGMENT_WINDOW_MAX_BYTES = 4 << 30
 
 
 def _window_rank_ratios_distributed(j: DataFrame) -> DataFrame:
@@ -295,11 +287,7 @@ def _window_rank_ratios(spark: SparkSession, sf_dir: str) -> DataFrame:
     o = read_table(spark, sf_dir, "orders")
     c = read_table(spark, sf_dir, "customer").select("c_custkey", "c_mktsegment")
     j = o.join(c, o.o_custkey == c.c_custkey)
-    try:
-        orders_bytes = _os.stat(f"{sf_dir}/orders.parquet").st_size
-    except OSError:
-        orders_bytes = 0
-    if orders_bytes > _RANK_SEGMENT_WINDOW_MAX_BYTES:
+    if table_bytes(o) > _RANK_SEGMENT_WINDOW_MAX_BYTES:
         return _window_rank_ratios_distributed(j)
     w = Window.partitionBy("c_mktsegment").orderBy(
         F.col("o_totalprice").asc(), F.col("o_orderkey").asc()

@@ -21,6 +21,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from trackdechets_etl_spark.io.readers import read_events
+
 
 def tumbling_agg(events: DataFrame, width: str = "1 hour") -> DataFrame:
     """Tumbling-window counts/sums per event_type. Epoch-aligned window
@@ -84,19 +86,11 @@ def stream_from_parquet(
     spark, sf_dir: str, watermark: str = "1 hour"
 ) -> DataFrame:
     """readStream over the events parquet (file source) with a
-    watermark — the streaming entry point used by the tests."""
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
-    # Glob form: the file-stream source requires a directory basePath;
-    # a glob makes it resolve to the parent directory.
-    stream = spark.readStream.schema(schema).parquet(f"{sf_dir}/events.parquet*")
-    # ts arrives as long nanos (nanosAsLong; see io.readers.read_table) —
-    # convert to a microsecond timestamp before the watermark. Watermarks
-    # require TIMESTAMP (LTZ): NTZ-typed parquet timestamps must be cast.
-    ts_type = dict(stream.dtypes).get("ts")
-    if ts_type == "bigint":
-        stream = stream.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
-    elif ts_type == "timestamp_ntz":
+    watermark — the streaming entry point used by the tests.
+    Watermarks require TIMESTAMP (LTZ): NTZ-typed parquet timestamps
+    must be cast."""
+    stream = read_events(spark, f"{sf_dir}/events.parquet", stream=True)
+    if dict(stream.dtypes).get("ts") == "timestamp_ntz":
         stream = stream.withColumn("ts", F.col("ts").cast("timestamp"))
     return stream.withWatermark("ts", watermark)
 

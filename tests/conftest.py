@@ -5,7 +5,9 @@ from pathlib import Path
 import duckdb
 import pyarrow.parquet as pq
 import pytest
+from pyspark.sql import functions as F
 
+from trackdechets_etl_spark.io.readers import TABLE_SCHEMAS
 from trackdechets_etl_spark.session import get_spark
 
 SF_DIR = "/root/testdata/sf0.001"
@@ -52,3 +54,19 @@ def write_parted(table: str, sf_dir, n_files: int = 3) -> int:
     for i in range(n_files):
         pq.write_table(t.slice(i * step, step), out / f"part-{i:05d}.parquet")
     return sum(f.stat().st_size for f in out.iterdir())
+
+
+def write_corpus_table(df, sf_dir, name: str) -> None:
+    """Write ``df`` as corpus table ``name`` under ``sf_dir`` in the
+    declared schema ``read_table`` checks (``io.readers.TABLE_SCHEMAS``):
+    the columns ``df`` lacks are written as nulls, the others cast to
+    their declared type. Lets a test build a table from just the
+    columns its query reads."""
+    df.select(
+        [
+            (F.col(f.name) if f.name in df.columns else F.lit(None))
+            .cast(f.dataType)
+            .alias(f.name)
+            for f in TABLE_SCHEMAS[name]
+        ]
+    ).write.mode("overwrite").parquet(f"{sf_dir}/{name}.parquet")

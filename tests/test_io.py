@@ -439,3 +439,133 @@ def test_events_nanos_truncate_to_micros_like_duckdb(spark, tmp_path):
     )
     q.awaitTermination()
     assert dict(spark.sql("SELECT * FROM nanos_events").collect()) == want
+
+
+# ------------------------------------------------ declared corpus schemas
+
+
+def _jobs(spark) -> int:
+    return spark.sparkContext._jsc.sc().statusStore().jobsList(None).size()
+
+
+def test_read_table_starts_no_job(spark):
+    """Every corpus table is read with its declared schema and checked
+    against a footer on the driver: building the scan runs no Spark job
+    (an inferred read runs one schema-inference job per call)."""
+    from trackdechets_etl_spark.io.readers import ALL_TABLES, read_table
+
+    before = _jobs(spark)
+    for name in ALL_TABLES:
+        read_table(spark, SF_DIR, name)
+    assert _jobs(spark) == before
+
+
+@pytest.mark.parametrize("sf", ["0.001", "0.01", "0.1"])
+def test_table_schemas_equal_inferred(spark, sf):
+    from trackdechets_etl_spark.io.readers import ALL_TABLES, TABLE_SCHEMAS
+
+    sf_dir = str(Path(SF_DIR).parent / f"sf{sf}")
+    assert set(TABLE_SCHEMAS) == set(ALL_TABLES)
+    for name in ALL_TABLES:
+        inferred = spark.read.parquet(f"{sf_dir}/{name}.parquet").schema
+        assert TABLE_SCHEMAS[name] == inferred, name
+
+
+def _write_orders(sf_dir, drift=None):
+    """Write the fixture orders into ``sf_dir``, with ``drift`` applied
+    to its pyarrow table."""
+    import pyarrow.parquet as pq
+
+    t = pq.read_table(f"{SF_DIR}/orders.parquet")
+    pq.write_table(drift(t) if drift else t, f"{sf_dir}/orders.parquet")
+
+
+def _drop_custkey(t):
+    return t.drop_columns(["o_custkey"])
+
+
+def _orderkey_as_string(t):
+    import pyarrow as pa
+
+    i = t.schema.get_field_index("o_orderkey")
+    return t.set_column(i, "o_orderkey", t["o_orderkey"].cast(pa.string()))
+
+
+@pytest.mark.parametrize(
+    "drift, column, found",
+    [
+        (_drop_custkey, "o_custkey", "missing"),
+        (_orderkey_as_string, "o_orderkey", "string"),
+    ],
+    ids=["dropped", "retyped"],
+)
+def test_drifted_table_fails_before_any_job(spark, tmp_path, drift, column, found):
+    """A dropped column (which Spark would read as nulls) and a retyped
+    one (which Spark would reject only mid-scan) both fail the read,
+    naming the path, the column and both types."""
+    from trackdechets_etl_spark.io.readers import read_table
+
+    _write_orders(tmp_path, drift)
+    before = _jobs(spark)
+    with pytest.raises(ValueError) as err:
+        read_table(spark, str(tmp_path), "orders")
+    msg = str(err.value)
+    assert f"{tmp_path}/orders.parquet" in msg
+    assert repr(column) in msg and found in msg and "bigint" in msg
+    assert _jobs(spark) == before
+
+
+def test_rewritten_table_is_checked_again(spark, tmp_path):
+    """The footer schema is cached per listing: a table rewritten under
+    the same path in the same session is checked against its new footer."""
+    from trackdechets_etl_spark.io.readers import read_table
+
+    _write_orders(tmp_path)
+    assert read_table(spark, str(tmp_path), "orders").count() > 0
+    _write_orders(tmp_path, _drop_custkey)
+    with pytest.raises(ValueError, match="o_custkey"):
+        read_table(spark, str(tmp_path), "orders")
+
+
+# ------------------------------------------------------------ session settings
+
+
+def test_session_skips_call_site_capture_but_errors_name_the_column(spark):
+    """The engine session turns PySpark's DataFrame debugging hook off
+    (no per-Column call-site capture); an unresolved column still names
+    the column in the AnalysisException."""
+    import pyspark.errors.utils as errors_utils
+    from pyspark.errors import AnalysisException
+
+    assert spark.conf.get("spark.python.sql.dataFrameDebugging.enabled") == "false"
+    cached = errors_utils._enable_debugging_cache
+    errors_utils._enable_debugging_cache = None  # re-read the active session
+    try:
+        assert errors_utils.is_debugging_enabled() is False
+    finally:
+        errors_utils._enable_debugging_cache = cached
+    with pytest.raises(AnalysisException, match="no_such_col"):
+        spark.range(1).select(F.col("no_such_col")).schema
+
+
+# ---------------------------------------------------------- open-data payload
+
+
+def test_csv_payload_equals_two_pass_payload(spark):
+    """The one-pass payload holds the rows the former count-then-collect
+    payload held, compared order-insensitively."""
+    from trackdechets_etl_spark.plans.publish_open_data import (
+        open_data_pipeline,
+        to_csv_payload,
+    )
+
+    df = open_data_pipeline(spark, SF_DIR)
+    two_pass = df.toPandas().to_csv(index=False).splitlines()
+    one_pass = to_csv_payload(df).splitlines()
+    assert one_pass[0] == two_pass[0]
+    assert len(one_pass) > 1
+    assert sorted(one_pass[1:]) == sorted(two_pass[1:])
+    with pytest.raises(ValueError):
+        to_csv_payload(df, max_rows=len(one_pass) - 2)
+    at_cap = to_csv_payload(df, max_rows=len(one_pass) - 1).splitlines()
+    assert sorted(at_cap) == sorted(one_pass)

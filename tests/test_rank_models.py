@@ -13,15 +13,16 @@ import random
 
 import pytest
 
+from tests.conftest import write_corpus_table
+
 
 # r15: slow shard — excluded from the default pytest run (see
 # pytest.ini); run the full suite with -m "slow or not slow".
 pytestmark = pytest.mark.slow
 
 def _write_events_uv(spark, tmp_path, pairs):
-    spark.createDataFrame(pairs, "user_id long, value double").coalesce(
-        1
-    ).write.mode("overwrite").parquet(str(tmp_path / "events.parquet"))
+    df = spark.createDataFrame(pairs, "user_id long, value double").coalesce(1)
+    write_corpus_table(df, tmp_path, "events")
 
 
 def _midrank(v, arr):
@@ -89,11 +90,10 @@ def test_kruskal_wallis_matches_midrank_model(spark, tmp_path, seed):
     # has all five types; an empty group would be a different entry)
     for i, t in enumerate(_KW_TYPES):
         rows.append((100 + i, t, 2.50))
-    spark.createDataFrame(
+    df = spark.createDataFrame(
         rows, "user_id long, event_type string, value double"
-    ).coalesce(1).write.mode("overwrite").parquet(
-        str(tmp_path / "events.parquet")
-    )
+    ).coalesce(1)
+    write_corpus_table(df, tmp_path, "events")
     row = (
         all_queries()["events_kruskal_wallis"]
         .fn(spark, str(tmp_path))
@@ -170,13 +170,12 @@ def test_jonckheere_matches_pair_count_model(spark, tmp_path, seed):
                 rng.randrange(6) * 0.75 + 1.0,
             )
         )
-    spark.createDataFrame(
+    df = spark.createDataFrame(
         rows, "ts string, event_type string, value double"
     ).selectExpr(
         "CAST(ts AS TIMESTAMP) AS ts", "event_type", "value"
-    ).coalesce(1).write.mode("overwrite").parquet(
-        str(tmp_path / "events.parquet")
-    )
+    ).coalesce(1)
+    write_corpus_table(df, tmp_path, "events")
     row = (
         all_queries()["events_jonckheere_dow"]
         .fn(spark, str(tmp_path))
@@ -223,11 +222,10 @@ def test_mood_median_matches_contingency_model(spark, tmp_path, seed):
         rows.append((u, t, rng.randrange(8) * 0.80 + 1.0))
     for i, t in enumerate(_MOOD_TYPES):  # every group non-empty
         rows.append((200 + i, t, 3.20))
-    spark.createDataFrame(
+    df = spark.createDataFrame(
         rows, "user_id long, event_type string, value double"
-    ).coalesce(1).write.mode("overwrite").parquet(
-        str(tmp_path / "events.parquet")
-    )
+    ).coalesce(1)
+    write_corpus_table(df, tmp_path, "events")
     row = (
         all_queries()["events_mood_median"]
         .fn(spark, str(tmp_path))
@@ -265,11 +263,10 @@ def test_wilcoxon_signed_rank_matches_midrank_model(
     for ok in range(40):
         for ln in range(1, rng.randrange(2, 6)):
             rows.append((ok, ln, rng.randrange(5) * 2.00 + 1.0))
-    spark.createDataFrame(
+    df = spark.createDataFrame(
         rows, "l_orderkey long, l_linenumber int, l_extendedprice double"
-    ).coalesce(1).write.mode("overwrite").parquet(
-        str(tmp_path / "lineitem.parquet")
-    )
+    ).coalesce(1)
+    write_corpus_table(df, tmp_path, "lineitem")
     row = (
         all_queries()["lineitem_wilcoxon_signed_rank"]
         .fn(spark, str(tmp_path))
@@ -362,13 +359,12 @@ def test_pettitt_matches_sgn_pair_model(spark, tmp_path, seed):
         cnt = base + rng.randrange(3)
         for i in range(cnt):
             rows.append((i, f"2024-03-{d:02d} 08:00:00", "click", 1.0))
-    spark.createDataFrame(
+    df = spark.createDataFrame(
         rows, "user_id long, ts string, event_type string, value double"
     ).selectExpr(
         "user_id", "CAST(ts AS TIMESTAMP) AS ts", "event_type", "value"
-    ).coalesce(1).write.mode("overwrite").parquet(
-        str(tmp_path / "events.parquet")
-    )
+    ).coalesce(1)
+    write_corpus_table(df, tmp_path, "events")
     row = (
         all_queries()["events_pettitt_test"]
         .fn(spark, str(tmp_path))
@@ -400,11 +396,10 @@ def test_pettitt_matches_sgn_pair_model(spark, tmp_path, seed):
 
 
 def _write_lineitem_qd(spark, tmp_path, rows):
-    spark.createDataFrame(
+    df = spark.createDataFrame(
         rows, "l_quantity long, l_discount double"
-    ).coalesce(1).write.mode("overwrite").parquet(
-        str(tmp_path / "lineitem.parquet")
-    )
+    ).coalesce(1)
+    write_corpus_table(df, tmp_path, "lineitem")
 
 
 @pytest.mark.parametrize("seed", [111, 112])
@@ -487,13 +482,12 @@ def test_ljung_box_matches_acf_model(spark, tmp_path, seed):
             rows.append(
                 (f"2024-04-{d:02d}", rng.randrange(20, 90) * 1.00)
             )
-    spark.createDataFrame(
+    df = spark.createDataFrame(
         rows, "o_orderdate string, o_totalprice double"
     ).selectExpr(
         "CAST(o_orderdate AS DATE) AS o_orderdate", "o_totalprice"
-    ).coalesce(1).write.mode("overwrite").parquet(
-        str(tmp_path / "orders.parquet")
-    )
+    ).coalesce(1)
+    write_corpus_table(df, tmp_path, "orders")
     row = (
         all_queries()["orders_ljung_box"]
         .fn(spark, str(tmp_path))
@@ -533,11 +527,10 @@ def test_bartlett_matches_pooled_variance_model(spark, tmp_path, seed):
     for u in range(120):
         t = types[rng.randrange(5)]
         rows.append((u, t, rng.randrange(10, 80) * 0.50))
-    spark.createDataFrame(
+    df = spark.createDataFrame(
         rows, "user_id long, event_type string, value double"
-    ).coalesce(1).write.mode("overwrite").parquet(
-        str(tmp_path / "events.parquet")
-    )
+    ).coalesce(1)
+    write_corpus_table(df, tmp_path, "events")
     row = (
         all_queries()["events_bartlett_test"]
         .fn(spark, str(tmp_path))

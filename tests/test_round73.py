@@ -15,6 +15,7 @@ from trackdechets_etl_spark.operators.percentiles import (
     exact_percentiles_value_counts,
 )
 from trackdechets_etl_spark.queries import all_queries
+from tests.conftest import write_corpus_table
 
 # r15: slow shard — excluded from the default pytest run (see
 # pytest.ini); run the full suite with -m "slow or not slow".
@@ -70,9 +71,7 @@ def test_wilcoxon_symmetric_is_centered(spark):
     import tempfile
 
     with tempfile.TemporaryDirectory() as td:
-        df.coalesce(1).write.mode("overwrite").parquet(
-            f"{td}/lineitem.parquet"
-        )
+        write_corpus_table(df.coalesce(1), td, "lineitem")
         out = q.fn(spark, td).collect()[0]
     assert out.n_pairs == 8
     assert abs(out.z_stat) < 1e-9
@@ -98,9 +97,7 @@ def test_pettitt_detects_level_shift(spark):
     import tempfile
 
     with tempfile.TemporaryDirectory() as td:
-        df.coalesce(1).write.mode("overwrite").parquet(
-            f"{td}/events.parquet"
-        )
+        write_corpus_table(df.coalesce(1), td, "events")
         out = (
             all_queries()["events_pettitt_test"].fn(spark, td).collect()[0]
         )
@@ -125,9 +122,7 @@ def test_ses_weights_sum_to_one(spark):
     import tempfile
 
     with tempfile.TemporaryDirectory() as td:
-        df.coalesce(1).write.mode("overwrite").parquet(
-            f"{td}/events.parquet"
-        )
+        write_corpus_table(df.coalesce(1), td, "events")
         out = (
             all_queries()["events_ses_backtest"].fn(spark, td).collect()[0]
         )

@@ -8,6 +8,7 @@ import tempfile
 from pyspark.sql import functions as F
 
 from trackdechets_etl_spark.queries import all_queries
+from tests.conftest import write_corpus_table
 
 SF = "/root/testdata/sf0.001"
 
@@ -18,7 +19,7 @@ def _write_events(spark, rows, td):
         "event_id long, ts string, user_id long, event_type string,"
         " value double, props string",
     ).withColumn("ts", F.col("ts").cast("timestamp"))
-    df.coalesce(1).write.mode("overwrite").parquet(f"{td}/events.parquet")
+    write_corpus_table(df.coalesce(1), td, "events")
 
 
 def test_bartlett_zero_for_identical_groups(spark):

@@ -7,14 +7,13 @@ import tempfile
 from pyspark.sql import functions as F
 
 from trackdechets_etl_spark.queries import all_queries
+from tests.conftest import write_corpus_table
 
 
 def _run_on_docs(spark, docs):
     df = spark.createDataFrame(docs, "doc_id long, text string, source string")
     with tempfile.TemporaryDirectory() as td:
-        df.coalesce(1).write.mode("overwrite").parquet(
-            f"{td}/documents.parquet"
-        )
+        write_corpus_table(df.coalesce(1), td, "documents")
         return (
             all_queries()["text_bleu_dup_pairs"].fn(spark, td).collect()
         )

@@ -8,6 +8,7 @@ import pytest
 import tempfile
 
 from trackdechets_etl_spark.queries import all_queries
+from tests.conftest import write_corpus_table
 from trackdechets_etl_spark.queries.round76 import (
     _WIN_K,
     _WIN_MIN_SHARED,
@@ -24,9 +25,7 @@ SF = "/root/testdata/sf0.001"
 def _run(spark, name, docs):
     df = spark.createDataFrame(docs, "doc_id long, text string, source string")
     with tempfile.TemporaryDirectory() as td:
-        df.coalesce(1).write.mode("overwrite").parquet(
-            f"{td}/documents.parquet"
-        )
+        write_corpus_table(df.coalesce(1), td, "documents")
         return all_queries()[name].fn(spark, td).collect()
 
 

@@ -11,7 +11,7 @@ from pyspark.sql import functions as F
 
 from trackdechets_etl_spark.io.readers import read_table
 from trackdechets_etl_spark.queries import all_queries
-from tests.conftest import SF_DIR
+from tests.conftest import SF_DIR, write_corpus_table
 
 
 # r15: slow shard — excluded from the default pytest run (see
@@ -28,9 +28,7 @@ def _q(name):
 def _rouge_on_docs(spark, docs):
     df = spark.createDataFrame(docs, "doc_id long, text string, source string")
     with tempfile.TemporaryDirectory() as td:
-        df.coalesce(1).write.mode("overwrite").parquet(
-            f"{td}/documents.parquet"
-        )
+        write_corpus_table(df.coalesce(1), td, "documents")
         return _q("text_rouge_dup_pairs")(spark, td).collect()
 
 

@@ -14,7 +14,7 @@ from pyspark.sql import functions as F
 
 from trackdechets_etl_spark.io.readers import read_table
 from trackdechets_etl_spark.queries import all_queries
-from tests.conftest import SF_DIR
+from tests.conftest import SF_DIR, write_corpus_table
 
 
 # r15: slow shard — excluded from the default pytest run (see
@@ -62,14 +62,16 @@ def test_herfindahl_bounds_and_domain(spark):
 def test_herfindahl_monopoly_is_one(spark):
     """A segment with a single customer has HHI = 1 by construction."""
     with tempfile.TemporaryDirectory() as td:
-        spark.createDataFrame(
+        df = spark.createDataFrame(
             [(1, 10.0), (2, 5.0), (3, 5.0)],
             "o_custkey long, o_totalprice double",
-        ).write.mode("overwrite").parquet(f"{td}/orders.parquet")
-        spark.createDataFrame(
+        )
+        write_corpus_table(df, td, "orders")
+        df = spark.createDataFrame(
             [(1, "MONO"), (2, "DUO"), (3, "DUO")],
             "c_custkey long, c_mktsegment string",
-        ).write.mode("overwrite").parquet(f"{td}/customer.parquet")
+        )
+        write_corpus_table(df, td, "customer")
         got = {
             r.c_mktsegment: r
             for r in _q("orders_herfindahl")(spark, td).collect()
@@ -86,9 +88,7 @@ def _dice_on_docs(spark, docs):
         docs, "doc_id long, text string, source string"
     )
     with tempfile.TemporaryDirectory() as td:
-        df.coalesce(1).write.mode("overwrite").parquet(
-            f"{td}/documents.parquet"
-        )
+        write_corpus_table(df.coalesce(1), td, "documents")
         return _q("text_dice_tversky")(spark, td).collect()
 
 
@@ -146,14 +146,12 @@ def test_map_perfect_when_lsh_equals_exact(spark):
     for i in range(12):
         # same direction + tiny parallel scaling: one shared bucket,
         # stable exact ranking by id tiebreak (all cosines equal 1)
-        rows.append((i, [x * (1.0 + 0.01 * i) for x in base], "lbl"))
+        rows.append((i, [x * (1.0 + 0.01 * i) for x in base], 1))
     df = spark.createDataFrame(
-        rows, "vec_id long, embedding array<double>, label string"
+        rows, "vec_id long, embedding array<double>, label int"
     )
     with tempfile.TemporaryDirectory() as td:
-        df.coalesce(1).write.mode("overwrite").parquet(
-            f"{td}/embeddings.parquet"
-        )
+        write_corpus_table(df.coalesce(1), td, "embeddings")
         row = _q("sim_map_eval")(spark, td).collect()[0]
     assert row.n_queries == 10
     assert row.map_at_5 == 1.0 and row.p_at_5 == 1.0
@@ -200,9 +198,7 @@ def test_jt_known_small_example(spark):
         data, "user_id long, event_type string, ts timestamp, value double"
     )
     with tempfile.TemporaryDirectory() as td:
-        df.coalesce(1).write.mode("overwrite").parquet(
-            f"{td}/events.parquet"
-        )
+        write_corpus_table(df.coalesce(1), td, "events")
         row = _q("events_jonckheere_dow")(spark, td).collect()[0]
     # all 3 group pairs fully concordant: 4 + 4 + 4 = 12
     assert row.jt_stat == 12.0
@@ -246,9 +242,7 @@ def test_page_perfect_order_hits_max(spark):
     import tempfile as _tf
 
     with _tf.TemporaryDirectory() as td:
-        df.coalesce(1).write.mode("overwrite").parquet(
-            f"{td}/events.parquet"
-        )
+        write_corpus_table(df.coalesce(1), td, "events")
         row = _q("events_page_trend")(spark, td).collect()[0]
     assert row.n_blocks == 2
     assert row.page_l == 2 * sum(j * j for j in range(1, 6))
@@ -274,9 +268,7 @@ def test_atkinson_zero_on_equal_values(spark):
         "o_orderkey long, o_orderpriority string, o_totalprice double",
     )
     with _tf.TemporaryDirectory() as td:
-        df.coalesce(1).write.mode("overwrite").parquet(
-            f"{td}/orders.parquet"
-        )
+        write_corpus_table(df.coalesce(1), td, "orders")
         row = _q("orders_atkinson_index")(spark, td).collect()[0]
     assert row.atkinson_05 == 0.0 and row.atkinson_1 == 0.0
 
@@ -327,9 +319,7 @@ def test_ansari_bradley_known_small(spark):
         rows, "user_id long, event_type string, value double"
     )
     with _tf.TemporaryDirectory() as td:
-        df.coalesce(1).write.mode("overwrite").parquet(
-            f"{td}/events.parquet"
-        )
+        write_corpus_table(df.coalesce(1), td, "events")
         row = _q("events_ansari_bradley")(spark, td).collect()[0]
     assert (row.n0, row.n1) == (2, 2)
     assert row.ab_stat == 2.0
@@ -353,9 +343,7 @@ def test_grubbs_constant_data_yields_null(spark):
         "l_orderkey long, l_extendedprice double",
     )
     with _tf.TemporaryDirectory() as td:
-        df.coalesce(1).write.mode("overwrite").parquet(
-            f"{td}/lineitem.parquet"
-        )
+        write_corpus_table(df.coalesce(1), td, "lineitem")
         row = _q("lineitem_grubbs_test")(spark, td).collect()[0]
     assert row.mean_cents == 4200.0
     assert row.sd_cents is None and row.g_max is None and row.g_min is None
@@ -369,9 +357,7 @@ def test_atkinson_zero_value_yields_null(spark):
         "o_orderkey long, o_orderpriority string, o_totalprice double",
     )
     with _tf.TemporaryDirectory() as td:
-        df.coalesce(1).write.mode("overwrite").parquet(
-            f"{td}/orders.parquet"
-        )
+        write_corpus_table(df.coalesce(1), td, "orders")
         row = _q("orders_atkinson_index")(spark, td).collect()[0]
     assert row.atkinson_05 is None and row.atkinson_1 is None
 
@@ -390,9 +376,7 @@ def test_jt_single_group_yields_null_z(spark):
         data, "user_id long, event_type string, ts timestamp, value double"
     )
     with _tf.TemporaryDirectory() as td:
-        df.coalesce(1).write.mode("overwrite").parquet(
-            f"{td}/events.parquet"
-        )
+        write_corpus_table(df.coalesce(1), td, "events")
         row = _q("events_jonckheere_dow")(spark, td).collect()[0]
     assert row.jt_stat == 0.0 and row.z_score is None
 
@@ -405,9 +389,7 @@ def test_ansari_one_arm_yields_null(spark):
         rows, "user_id long, event_type string, value double"
     )
     with _tf.TemporaryDirectory() as td:
-        df.coalesce(1).write.mode("overwrite").parquet(
-            f"{td}/events.parquet"
-        )
+        write_corpus_table(df.coalesce(1), td, "events")
         row = _q("events_ansari_bradley")(spark, td).collect()[0]
     assert row.n1 == 0
     assert row.ab_stat is None and row.z_score is None
@@ -445,9 +427,7 @@ def test_cohen_kappa_known_small(spark):
         rows, "user_id long, event_type string, value double"
     )
     with _tf.TemporaryDirectory() as td:
-        df.coalesce(1).write.mode("overwrite").parquet(
-            f"{td}/events.parquet"
-        )
+        write_corpus_table(df.coalesce(1), td, "events")
         row = _q("events_cohen_kappa")(spark, td).collect()[0]
     assert (row.n11, row.n10, row.n01, row.n00, row.n_users) == (
         2, 1, 1, 2, 6
@@ -469,9 +449,7 @@ def test_cohen_kappa_perfect_agreement_is_one(spark):
         rows, "user_id long, event_type string, value double"
     )
     with _tf.TemporaryDirectory() as td:
-        df.coalesce(1).write.mode("overwrite").parquet(
-            f"{td}/events.parquet"
-        )
+        write_corpus_table(df.coalesce(1), td, "events")
         row = _q("events_cohen_kappa")(spark, td).collect()[0]
     assert (row.n10, row.n01) == (0, 0)
     assert row.kappa == 1.0
@@ -488,9 +466,7 @@ def test_cohen_kappa_constant_raters_yields_null(spark):
         rows, "user_id long, event_type string, value double"
     )
     with _tf.TemporaryDirectory() as td:
-        df.coalesce(1).write.mode("overwrite").parquet(
-            f"{td}/events.parquet"
-        )
+        write_corpus_table(df.coalesce(1), td, "events")
         row = _q("events_cohen_kappa")(spark, td).collect()[0]
     assert row.n00 == row.n_users == 4
     assert row.p_obs == 1.0 and row.p_exp == 1.0

@@ -7,7 +7,9 @@ explicit SELECT lists (``dags/icpe-siretisation.py:230-233``,
 ``dags/publish-open-data.py:26-30``). Nothing is inferred. We keep that
 discipline: every reader takes a ``StructType`` (or pushes an explicit
 query to JDBC). At 100 TB schema inference is a full extra scan — never
-enable it.
+enable it. The corpus parquet tables take theirs from
+:data:`TABLE_SCHEMAS`, checked once per listing against one file's
+footer, so drifted input fails loudly before any job runs.
 
 The reference's pickle relay (S7, ``to_pickle``/``read_pickle`` at every
 Airflow task boundary) has no equivalent here: one lazy lineage replaces
@@ -16,14 +18,26 @@ it, with ``.cache()`` only at genuine branch points (SURVEY §3.1).
 
 from __future__ import annotations
 
+import json
 import shutil
 import tarfile
 import urllib.request
+import weakref
 from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.types import StructType
+from pyspark.sql.types import (
+    ArrayType,
+    DoubleType,
+    FloatType,
+    IntegerType,
+    LongType,
+    StringType,
+    StructField,
+    StructType,
+    TimestampNTZType,
+)
 
 
 def resolve_source_path(url_or_path: str, dest: str) -> str:
@@ -161,6 +175,112 @@ def table_bytes(df: DataFrame) -> int:
     return int(df._jdf.queryExecution().analyzed().stats().sizeInBytes())
 
 
+def _schema(columns: str) -> StructType:
+    types = {
+        "int": IntegerType(),
+        "bigint": LongType(),
+        "double": DoubleType(),
+        "string": StringType(),
+        "timestamp_ntz": TimestampNTZType(),
+        "array<float>": ArrayType(FloatType()),
+    }
+    return StructType(
+        [StructField(n, types[t]) for n, t in (c.split() for c in columns.split(","))]
+    )
+
+
+# The corpus tables (TESTDATA.md) as their parquet footers store them and
+# Spark reads them: keys are BIGINT/INT exactly as written, the
+# ``timestamp[us]`` columns read as TIMESTAMP_NTZ. Declaring them saves
+# the schema-inference job every inferred read starts.
+TABLE_SCHEMAS: dict[str, StructType] = {
+    "region": _schema("r_regionkey int, r_name string"),
+    "nation": _schema("n_nationkey int, n_name string, n_regionkey int"),
+    "customer": _schema(
+        "c_custkey bigint, c_name string, c_nationkey int, c_acctbal double,"
+        " c_mktsegment string"
+    ),
+    "supplier": _schema(
+        "s_suppkey bigint, s_name string, s_nationkey int, s_acctbal double"
+    ),
+    "part": _schema(
+        "p_partkey bigint, p_name string, p_brand string, p_type string,"
+        " p_size int, p_retailprice double"
+    ),
+    "orders": _schema(
+        "o_orderkey bigint, o_custkey bigint, o_orderstatus string,"
+        " o_totalprice double, o_orderdate timestamp_ntz, o_orderpriority string"
+    ),
+    "lineitem": _schema(
+        "l_orderkey bigint, l_partkey bigint, l_suppkey bigint, l_linenumber int,"
+        " l_quantity double, l_extendedprice double, l_discount double,"
+        " l_tax double, l_returnflag string, l_linestatus string,"
+        " l_shipdate timestamp_ntz"
+    ),
+    "events": _schema(
+        "event_id bigint, ts timestamp_ntz, user_id bigint, event_type string,"
+        " value double, props string"
+    ),
+    "documents": _schema(
+        "doc_id bigint, text string, lang string, source string, n_chars bigint"
+    ),
+    "embeddings": _schema("vec_id bigint, embedding array<float>, label int"),
+}
+
+# {session: {(path, listed bytes): footer schema}}. Keyed on the listed
+# bytes so that a table rewritten under the same path is read again.
+_FOOTER_SCHEMAS: weakref.WeakKeyDictionary[
+    SparkSession, dict[tuple[str, int], StructType]
+] = weakref.WeakKeyDictionary()
+
+
+def _footer_schema(spark: SparkSession, path: str, df: DataFrame) -> StructType:
+    """The schema Spark would infer for the scan ``df`` of ``path``: the
+    footer of one listed file, converted by the session's own
+    ``ParquetToSparkSchemaConverter`` (which applies ``nanosAsLong`` and
+    the TIMESTAMP_NTZ rules as inference does). Driver-side, no job.
+    Only the chosen file's name crosses to Python, not the listing."""
+    cache = _FOOTER_SCHEMAS.setdefault(spark, {})
+    key = (path, table_bytes(df))
+    if key not in cache:
+        files = df._jdf.inputFiles()
+        if len(files) == 0:
+            raise ValueError(f"{path}: no parquet file listed")
+        jvm, jss = spark._jvm, spark._jsparkSession
+        hadoop = jvm.org.apache.hadoop
+        parquet = jvm.org.apache.parquet.hadoop
+        reader = parquet.ParquetFileReader.open(
+            parquet.util.HadoopInputFile.fromPath(
+                hadoop.fs.Path(files[0]), jss.sessionState().newHadoopConf()
+            )
+        )
+        try:
+            message = reader.getFooter().getFileMetaData().getSchema()
+        finally:
+            reader.close()
+        datasources = jvm.org.apache.spark.sql.execution.datasources
+        converter = datasources.parquet.ParquetToSparkSchemaConverter(
+            jss.sessionState().conf()
+        )
+        footer = converter.convert(message).json()
+        cache[key] = StructType.fromJson(json.loads(footer))
+    return cache[key]
+
+
+def _check_schema(path: str, declared: StructType, footer: StructType) -> None:
+    """Fail before any job runs if a declared column is missing from the
+    file or stored as another type: Spark would read the first as nulls
+    and fail on the second only mid-scan."""
+    found = {f.name: f.dataType.simpleString() for f in footer}
+    for f in declared:
+        want = f.dataType.simpleString()
+        got = found.get(f.name, "missing")
+        if got != want:
+            raise ValueError(
+                f"{path}: column {f.name!r} is {got} in the file, declared {want}"
+            )
+
+
 def read_events(spark: SparkSession, path: str, stream: bool = False) -> DataFrame:
     """Scan an events parquet with ``ts`` as a microsecond timestamp.
 
@@ -168,17 +288,27 @@ def read_events(spark: SparkSession, path: str, stream: bool = False) -> DataFra
     ``spark.sql.legacy.parquet.nanosAsLong`` is on; it then arrives as
     long nanos and is truncated here to microseconds, the conversion
     DuckDB applies. The conf is runtime-settable and set here, so the
-    engine also works under a caller-built SparkSession. A microsecond
-    ``ts`` passes through unchanged. ``stream=True`` returns a
-    file-stream source over the same path, with the batch schema.
+    engine also works under a caller-built SparkSession. Whether ``ts``
+    is nanos is read from the file's footer; a microsecond ``ts`` passes
+    through unchanged. ``stream=True`` returns a file-stream source over
+    the same path, with the batch schema.
     """
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    df = spark.read.parquet(path)
+    schema = TABLE_SCHEMAS["events"]
+    df = spark.read.schema(schema).parquet(path)
+    footer = _footer_schema(spark, path, df)
+    nanos = any(f.name == "ts" and f.dataType == LongType() for f in footer)
+    if nanos:
+        schema = StructType(
+            [StructField("ts", LongType()) if f.name == "ts" else f for f in schema]
+        )
+        df = spark.read.schema(schema).parquet(path)
+    _check_schema(path, schema, footer)
     if stream:
         # Glob form: the file-stream source requires a directory basePath;
         # a glob makes it resolve to the parent directory.
-        df = spark.readStream.schema(df.schema).parquet(f"{path}*")
-    if dict(df.dtypes).get("ts") == "bigint":
+        df = spark.readStream.schema(schema).parquet(f"{path}*")
+    if nanos:
         df = df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
     return df
 
@@ -218,8 +348,9 @@ def _fan_out_small_scan(spark: SparkSession, df: DataFrame) -> DataFrame:
 def read_table(
     spark: SparkSession, sf_dir: str, name: str, fan_out: bool = False
 ) -> DataFrame:
-    """Load one of the synthetic corpus tables (TESTDATA.md); ``events``
-    goes through :func:`read_events`.
+    """Load one of the synthetic corpus tables (TESTDATA.md) with its
+    declared schema, checked against the file; ``events`` goes through
+    :func:`read_events`.
 
     The CPU-heavy text/vector tables always get the small-scan fan-out;
     ``fan_out=True`` also applies it to this table (for fact spines
@@ -227,7 +358,11 @@ def read_table(
     aggregation runs inside the scan partitions).
     """
     path = f"{sf_dir}/{name}.parquet"
-    df = read_events(spark, path) if name == "events" else spark.read.parquet(path)
+    if name == "events":
+        df = read_events(spark, path)
+    else:
+        df = spark.read.schema(TABLE_SCHEMAS[name]).parquet(path)
+        _check_schema(path, TABLE_SCHEMAS[name], _footer_schema(spark, path, df))
     if fan_out or name in _CPU_HEAVY_TABLES:
         df = _fan_out_small_scan(spark, df)
     return df

@@ -39,14 +39,15 @@ def to_csv_payload(df: DataFrame, max_rows: int = 1_000_000) -> str:
     string for the REST upload (reference ``dags/publish-open-data.py:99``
     does ``df.to_csv()`` in memory). Guarded: this collects to the
     driver, which is only sane for the small, already-reduced publish
-    set — the cap fails fast if a caller points it at a fact table."""
-    n = df.count()
-    if n > max_rows:
+    set — the cap fails fast if a caller points it at a fact table.
+    One pass: at most ``max_rows + 1`` rows are collected, the extra
+    one proving the cap was exceeded."""
+    pdf = df.limit(max_rows + 1).toPandas()
+    if len(pdf) > max_rows:
         raise ValueError(
-            f"refusing to collect {n} rows for a driver-side CSV payload "
-            f"(cap {max_rows}); reduce the frame first"
+            f"refusing to collect more than {max_rows} rows for a driver-side "
+            "CSV payload; reduce the frame first"
         )
-    pdf = df.toPandas()
     return pdf.to_csv(index=False)
 
 

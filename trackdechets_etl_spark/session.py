@@ -13,6 +13,12 @@ Scale posture (100 TB target, tested on local[N]):
   *initial* number high-ish and let AQE shrink it.
 - Arrow enabled for the few Pandas-UDF paths (multimodal decode).
 - UTC session timezone so timestamp semantics match the DuckDB oracle.
+- PySpark's DataFrame debugging hook off: with it on, every ``F.*`` /
+  ``Column`` call captures its Python call site, about five extra py4j
+  round trips each. Errors still name the column or expression at
+  fault; pass ``extra_conf={"spark.python.sql.dataFrameDebugging.enabled":
+  "true"}`` to get the call site back (PySpark reads the flag once per
+  process).
 """
 
 from __future__ import annotations
@@ -52,6 +58,7 @@ def get_spark(
         .config("spark.sql.parquet.filterPushdown", "true")
         .config("spark.sql.files.maxPartitionBytes", str(128 * 1024 * 1024))
         .config("spark.ui.enabled", "false")
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
     )
     for k, v in (extra_conf or {}).items():

@@ -4,7 +4,8 @@ string), so a refactor can prove "the physical plan the driver
 executes did not change" query by query.
 
 Canonicalization strips plan/exprId churn that is not physical:
-#NNN expression ids, plan_id=NNN tags, and checkpoint RDD ids.
+#NNN expression ids, plan_id=NNN tags, checkpoint RDD ids, and the
+hash-ordered columns and group ids of multi-distinct aggregates.
 
 Usage:
     python scripts/plan_snapshot.py out.json [names...]
@@ -24,8 +25,93 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 SF_DIR = "/root/testdata/sf0.01"
 
 
+def _split_top(s: str) -> list[str]:
+    """Split ``s`` on the commas that sit outside any bracket."""
+    parts, depth, start = [], 0, 0
+    for i, ch in enumerate(s):
+        if ch in "([":
+            depth += 1
+        elif ch in ")]":
+            depth -= 1
+        elif ch == "," and depth == 0:
+            parts.append(s[start:i].strip())
+            start = i + 1
+    parts.append(s[start:].strip())
+    return parts
+
+
+def _bracket_end(s: str, i: int) -> int:
+    """Index just past the bracket that opens at ``s[i]``."""
+    depth = 0
+    for j in range(i, len(s)):
+        if s[j] in "([":
+            depth += 1
+        elif s[j] in ")]":
+            depth -= 1
+            if depth == 0:
+                return j + 1
+    raise ValueError("unbalanced brackets")
+
+
+def _strip_ids(s: str) -> str:
+    return re.sub(r"#\d+", "#x", s)
+
+
+def _canon_expand(plan: str, start: int) -> str:
+    """Put the multi-distinct ``Expand`` whose row list opens at
+    ``plan[start]`` into a fixed column and row order.
+
+    Spark's distinct-aggregate rewrite orders the distinct children and
+    numbers their groups (``gid``) by a hash of expression ids, so the
+    same query planned after a different number of ids prints its
+    columns, rows and ``gid`` literals in another order. The distinct
+    columns (those before ``gid`` that are null in some row) are sorted
+    by name, in the rows and wherever the plan lists them together; the
+    rows are sorted with ``gid`` left out and renumbered in that order,
+    and every ``(gid#N = k)`` of this ``gid`` is remapped to match. A
+    filter that binds a group to another column still differs."""
+    rows_end = _bracket_end(plan, start)
+    if not plan.startswith(", [", rows_end):
+        return plan
+    out_end = _bracket_end(plan, rows_end + 2)
+    rows = [_split_top(r[1:-1]) for r in _split_top(plan[start + 1 : rows_end - 1])]
+    out = _split_top(plan[rows_end + 3 : out_end - 1])
+    gids = [i for i, a in enumerate(out) if re.fullmatch(r"gid#\d+", a)]
+    if len(gids) != 1 or any(len(r) != len(out) for r in rows):
+        return plan
+    g = gids[0]
+    first = g
+    while first > 0 and any(r[first - 1] == "null" for r in rows):
+        first -= 1
+    order = list(range(first)) + sorted(
+        range(first, g), key=lambda i: _strip_ids(out[i])
+    ) + list(range(g, len(out)))
+    rows = [[r[i] for i in order] for r in rows]
+    rows.sort(key=lambda r: _strip_ids(", ".join(r[:g] + r[g + 1 :])))
+    remap = {r[g]: str(k) for k, r in enumerate(rows)}
+    for k, r in enumerate(rows):
+        r[g] = str(k)
+    new_expand = (
+        "[" + ", ".join("[" + ", ".join(r) + "]" for r in rows) + "], ["
+        + ", ".join(out[i] for i in order) + "]"
+    )
+    plan = plan[:start] + new_expand + plan[out_end:]
+    old_run = ", ".join(out[first:g])
+    new_run = ", ".join(out[i] for i in order[first:g])
+    plan = re.sub(rf"(?<![\w#]){re.escape(old_run)}(?!\w)", lambda _: new_run, plan)
+    return re.sub(
+        rf"\({re.escape(out[g])} = (\d+)\)",
+        lambda m: f"({out[g]} = {remap.get(m.group(1), m.group(1))})",
+        plan,
+    )
+
+
 def canon_plan(s: str) -> str:
-    s = re.sub(r"#\d+", "#x", s)
+    pos = 0
+    while (i := s.find("Expand [[", pos)) >= 0:
+        s = _canon_expand(s, i + len("Expand "))
+        pos = i + 1
+    s = _strip_ids(s)
     s = re.sub(r"plan_id=\d+", "plan_id=x", s)
     s = re.sub(r"\[id=#?\d+\]", "[id=x]", s)
     s = re.sub(r"ExistingRDD\[\d+\]", "ExistingRDD[x]", s)

@@ -5,11 +5,10 @@ from trackdechets_etl_spark.config import EngineConfig
 
 def test_from_env_and_overrides(monkeypatch):
     monkeypatch.setenv("SPARK_GRAFT_JDBC_URL", "jdbc:postgresql://db/x")
-    monkeypatch.setenv("SPARK_GRAFT_CPUS", "8")
-    cfg = EngineConfig.from_env(sf_dir="/data/sf1")
+    monkeypatch.setenv("SPARK_GRAFT_DATA_DIR", "/from/env")
+    cfg = EngineConfig.from_env(data_dir="/data/out")
     assert cfg.jdbc_url == "jdbc:postgresql://db/x"
-    assert cfg.cpus == 8
-    assert cfg.sf_dir == "/data/sf1"
+    assert cfg.data_dir == "/data/out"
     # defaults survive
     assert cfg.datagouv_api_url == ""
 

@@ -13,30 +13,25 @@ import math
 
 import pytest
 
+from perfbench.workloads import WORKLOADS
 from trackdechets_etl_spark.queries import all_queries
 from tests.conftest import SF_DIR
 
 REGISTRY = all_queries()
 
-# The default shard checks the five reference pipelines and one consumer
-# of each shared SQL/Column helper (cosine and hyperplane SQL, md5 hex to
-# int SQL, array dot product) and of each sized or converted read (the
-# orders rank gate, the documents and embeddings fan-out, events.ts); the
-# rest of the sweep is marked slow (see pytest.ini) and runs with
-# -m "slow or not slow".
-_DEFAULT_SHARD = {
-    "pipeline_siretisation_stats_pre",
-    "pipeline_siretisation_enriched",
-    "pipeline_siretisation_stats",
-    "pipeline_rubriques_chain",
-    "pipeline_open_data",
+# The default shard checks every query a perfbench workload runs (the
+# five reference pipelines, the 22 headline queries and the iterative
+# graph_pagerank and graph_kcore_peel, heavy users of
+# session.materialize) and one consumer of each shared SQL/Column helper
+# (cosine and hyperplane SQL, md5 hex to int SQL, array dot product) and
+# of each sized or converted read (the orders rank gate, the documents
+# and embeddings fan-out, events.ts); the rest of the sweep is marked
+# slow (see pytest.ini) and runs with -m "slow or not slow".
+_DEFAULT_SHARD = {name for work in WORKLOADS.values() for name, _ in work} | {
     "dedup_embedding_cosine",
     "sample_weighted_reservoir",
     "ml_kmeans_lite",
     "window_rank_ratios",
-    "dedup_minhash_lsh",
-    "sim_topk_bruteforce",
-    "events_tumbling_hourly",
 }
 
 

@@ -32,3 +32,51 @@ def test_shifted_lambda_counter_is_equal():
     early = _plan(3, 5, body=(3, 5))
     late = _plan(103, 105, body=(103, 105))
     assert plan_snapshot.canon_plan(early) == plan_snapshot.canon_plan(late)
+
+
+def _distinct_plan(cols: tuple[str, str], gid_of: dict[str, int], base: int) -> str:
+    """A two-distinct-count aggregate as Spark prints it: ``cols`` is the
+    order of the distinct columns, ``gid_of`` the group id of each
+    column's Expand row, ``base`` shifts every expression id."""
+    ids = {"ls": base + 4, "rf": base + 5}
+    child = {"ls": base - 21, "rf": base - 22}
+
+    def row(c: str) -> str:
+        return "[" + ", ".join(
+            [f"{k}#{child[k]}" if k == c else "null" for k in cols]
+            + [str(gid_of[c]), "null"]
+        ) + "]"
+
+    attrs = ", ".join(f"{c}#{ids[c]}" for c in cols)
+    return (
+        f"HashAggregate(keys=[], functions=[partial_first(sum(nxy)#{base + 7}L, true) "
+        f"FILTER (WHERE (gid#{base + 3} = 0)), "
+        f"partial_count(rf#{ids['rf']}) FILTER (WHERE (gid#{base + 3} = {gid_of['rf']})), "
+        f"partial_count(ls#{ids['ls']}) FILTER (WHERE (gid#{base + 3} = {gid_of['ls']}))])\n"
+        f"+- HashAggregate(keys=[{attrs}, gid#{base + 3}], functions=[sum(nxy#{base + 6}L)])\n"
+        f"   +- Exchange hashpartitioning({attrs}, gid#{base + 3}, 4)\n"
+        f"      +- Expand [[null, null, 0, nxy#{base - 20}L], "
+        + ", ".join(row(c) for c in cols)
+        + f"], [{attrs}, gid#{base + 3}, nxy#{base + 6}L]"
+    )
+
+
+def test_swapped_expand_rows_with_their_gid_filters_are_equal():
+    a = _distinct_plan(("ls", "rf"), {"ls": 1, "rf": 2}, base=100)
+    b = _distinct_plan(("ls", "rf"), {"ls": 2, "rf": 1}, base=300)
+    assert plan_snapshot.canon_plan(a) == plan_snapshot.canon_plan(b)
+
+
+def test_swapped_distinct_columns_are_equal():
+    a = _distinct_plan(("ls", "rf"), {"ls": 1, "rf": 2}, base=100)
+    b = _distinct_plan(("rf", "ls"), {"rf": 1, "ls": 2}, base=300)
+    assert plan_snapshot.canon_plan(a) == plan_snapshot.canon_plan(b)
+
+
+def test_group_bound_to_the_wrong_column_differs():
+    a = _distinct_plan(("ls", "rf"), {"ls": 1, "rf": 2}, base=100)
+    wrong = a.replace("(gid#103 = 2)", "(gid#103 = 9)").replace(
+        "(gid#103 = 1)", "(gid#103 = 2)"
+    ).replace("(gid#103 = 9)", "(gid#103 = 1)")
+    assert wrong != a
+    assert plan_snapshot.canon_plan(a) != plan_snapshot.canon_plan(wrong)

@@ -565,3 +565,23 @@ def test_bloom_prefilter_probe_is_constant_time_and_broadcast(spark):
     )
     assert "BroadcastHashJoin" in plan, "exact FP-removal join not broadcast"
     assert "SortMergeJoin" not in plan, "fact table shuffled for a join"
+
+
+def test_only_materialize_cuts_lineage():
+    """Every lineage cut goes through ``session.materialize``, which
+    picks a local or a reliable checkpoint from the master; a direct
+    ``localCheckpoint``/``.checkpoint(`` elsewhere would lose its result
+    with the executor that computed it on a cluster."""
+    import re
+    from pathlib import Path
+
+    pkg = Path(__file__).resolve().parents[1] / "trackdechets_etl_spark"
+    pattern = re.compile(r"localCheckpoint|\.checkpoint\(")
+    hits = [
+        f"{path.relative_to(pkg.parent)}:{n}"
+        for path in sorted(pkg.rglob("*.py"))
+        if path != pkg / "session.py"
+        for n, line in enumerate(path.read_text().splitlines(), 1)
+        if pattern.search(line)
+    ]
+    assert not hits, f"lineage cut outside session.materialize: {hits}"

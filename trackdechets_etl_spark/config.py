@@ -29,8 +29,6 @@ class EngineConfig:
     jdbc_password: str = ""
     datagouv_api_url: str = ""
     datagouv_api_key: str = ""
-    sf_dir: str = "/root/testdata/sf0.1"
-    cpus: int = 32
 
     @classmethod
     def from_env(cls, prefix: str = "SPARK_GRAFT_", **overrides) -> "EngineConfig":
@@ -40,7 +38,7 @@ class EngineConfig:
         for f in fields(cls):
             env_val = os.environ.get(f"{prefix}{f.name.upper()}")
             if env_val is not None:
-                kwargs[f.name] = int(env_val) if f.type == "int" else env_val
+                kwargs[f.name] = env_val
         kwargs.update(overrides)
         return cls(**kwargs)
 

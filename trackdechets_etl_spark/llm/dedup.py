@@ -26,6 +26,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from trackdechets_etl_spark.session import materialize
+
 N_MINHASH = 8
 N_BANDS = 4  # rows per band = N_MINHASH // N_BANDS = 2
 SIMHASH_BITS = 16
@@ -180,9 +182,8 @@ def ngram_jaccard_pairs(
     # jobs otherwise race the lazy materialization and re-execute the
     # lineage (r6 A/B at sf0.1: eager 2.00s vs lazy 2.40s; the r5
     # lazy-wins measurement only holds for the tiny-frame CC loop).
-    keyed = (
+    keyed = materialize(
         sh.select(F.col(id_col), F.xxhash64("shingle").alias("k"))
-        .localCheckpoint(eager=True)
     )
     w = Window.partitionBy(id_col).orderBy("k")
     # prefix length |d| - ceil(t*|d|) + 1; the 1e-9 keeps ceil from
@@ -288,10 +289,10 @@ def minhash_lsh_pairs(
     # The shingle table feeds the signatures, the candidate verify join
     # (twice), and the size counts. Exchange reuse dedups only the
     # consumers that shuffle identically; the rest re-run the text
-    # explode, so a LAZY localCheckpoint (materialized inside the
+    # explode, so a LAZY materialize (computed inside the
     # query's own first action — no extra job) shares it: measured at
     # sf0.1 1.43s → 1.27s, pair set unchanged.
-    sh = shingles(df, text_col, id_col, n).localCheckpoint(eager=False)
+    sh = materialize(shingles(df, text_col, id_col, n), eager=False)
     candidates = minhash_candidates(sh, id_col)
     return _pair_jaccard(sh, id_col, candidates).filter(F.col("jaccard") >= threshold)
 
@@ -392,9 +393,9 @@ def containment_pairs(
     EXACT output: the DuckDB oracle is the naive inverted-index join,
     and fast == naive is pinned in tests/test_llm.py."""
     sh = shingles(df, text_col, id_col, n)
-    keyed = (
-        sh.select(F.col(id_col), F.xxhash64("shingle").alias("k"))
-        .localCheckpoint(eager=False)
+    keyed = materialize(
+        sh.select(F.col(id_col), F.xxhash64("shingle").alias("k")),
+        eager=False,
     )
     sizes = keyed.groupBy(id_col).agg(F.count(F.lit(1)).alias("n_sh"))
     a_full = keyed.select(F.col(id_col).alias("id_a"), "k")

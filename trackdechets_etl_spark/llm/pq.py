@@ -30,6 +30,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from trackdechets_etl_spark.llm.similarity import as_double
+from trackdechets_etl_spark.session import materialize
 
 # Parameters picked by a measured sweep on the test corpus (numpy
 # prototype, recall@5 vs exact): (M=4, K=8) → 0.02, (16, 16) → 0.26,
@@ -135,7 +136,7 @@ def train_codebook(e: DataFrame) -> DataFrame:
     # The codebook is consumed by encoding, query partials, AND norms;
     # it is M*K*DSUB rows (~1k) — checkpoint so the Lloyd chain above
     # runs once, not once per consumer.
-    return cents.localCheckpoint(eager=True)
+    return materialize(cents)
 
 
 def pq_encode(e: DataFrame, cents: DataFrame) -> DataFrame:
@@ -144,7 +145,7 @@ def pq_encode(e: DataFrame, cents: DataFrame) -> DataFrame:
     scoring pass. Checkpointed: the scoring pass reads codes twice
     (ADC lookups + candidate norms) and codes are n×M ints, the frame
     PQ exists to make small."""
-    return _assign(e, cents).localCheckpoint(eager=True)
+    return materialize(_assign(e, cents))
 
 
 def adc_topk(
@@ -246,7 +247,7 @@ def ivfpq_topk(
     )
 
     # --- PQ codebook + codes over the full corpus
-    e = explode_subspaces(emb, id_col, vec_col).localCheckpoint(eager=True)
+    e = materialize(explode_subspaces(emb, id_col, vec_col))
     cents = train_codebook(e)
     codes = pq_encode(e, cents)
 

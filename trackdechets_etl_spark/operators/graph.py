@@ -11,7 +11,9 @@ Iterative min-label propagation, pure DataFrame ops:
 - each round is ONE shuffle (join on the edge endpoint + groupBy min);
   rounds needed = graph diameter, which for near-dup clusters is tiny
   (dup groups are near-cliques, typically diameter ≤ 2-3);
-- ``localCheckpoint`` truncates lineage each round: without it the plan
+- ``session.materialize`` truncates lineage each round (a local
+  checkpoint on ``local[...]``, a reliable one into
+  ``spark.checkpoint.dir`` on a cluster): without it the plan
   doubles per iteration and the driver chokes on analysis long before
   the executors do — the standard iterative-algorithm discipline
   (GraphFrames' CC does the same with its large-star/small-star
@@ -22,6 +24,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from trackdechets_etl_spark.session import materialize
 
 # Below this many (symmetrized, distinct) edges, label via driver-side
 # union-find instead of the distributed loop — see the fast path in
@@ -51,7 +55,7 @@ def connected_components(
     # Checkpoint edges FIRST and derive labels from the checkpointed
     # frame — deriving labels from the raw lineage would materialize the
     # (expensive) pair computation a second time.
-    edges = edges.localCheckpoint(eager=True)
+    edges = materialize(edges)
     # Size the per-round parallelism to the GRAPH, not the session
     # default: near-dup graphs are hundreds of edges, and running each
     # round's join + min-agg across 32 shuffle partitions is pure task-
@@ -117,7 +121,7 @@ def connected_components(
     labels = (
         edges.select(F.col("u").alias("node")).distinct().withColumn("label", F.col("node"))
     )
-    labels = labels.coalesce(n_parts).localCheckpoint(eager=False)
+    labels = materialize(labels.coalesce(n_parts), eager=False)
 
     # Convergence signature must work for ANY orderable node-id type
     # (plain F.sum("label") breaks on string ids): labels only ever
@@ -146,12 +150,12 @@ def connected_components(
         neighbor_labels = edges.join(
             labels.select(F.col("node").alias("v"), "label"), "v"
         ).select(F.col("u").alias("node"), "label")
-        labels = (
+        labels = materialize(
             labels.unionByName(neighbor_labels)
             .groupBy("node")
             .agg(F.min("label").alias("label"))
-            .coalesce(n_parts)
-            .localCheckpoint(eager=False)
+            .coalesce(n_parts),
+            eager=False,
         )
         cur_sum = _label_sig(labels)
         if cur_sum == prev_sum:
@@ -224,8 +228,8 @@ def pagerank(
     current rank), one groupBy(dst) sum — a single shuffle, the same
     budget as one connected-components round. Out-degrees are computed
     once and pre-joined onto the edges, so the loop body never
-    recomputes them. ``localCheckpoint`` truncates the growing lineage
-    each round (same discipline as :func:`connected_components`).
+    recomputes them. ``materialize`` truncates the growing lineage
+    every second round (same discipline as :func:`connected_components`).
 
     Assumes every node has at least one outgoing edge (true for
     symmetrized graphs); dangling-node redistribution is out of scope.
@@ -238,9 +242,9 @@ def pagerank(
     # pays the same exchange for the aggregate AND a second pass to
     # attach it). A/B at sf0.1: 1.93s -> 0.99s for the annotated,
     # checkpointed edge frame.
-    e_deg = e.withColumn(
-        "out_deg", F.count(F.lit(1)).over(Window.partitionBy("src"))
-    ).localCheckpoint(eager=True)
+    e_deg = materialize(
+        e.withColumn("out_deg", F.count(F.lit(1)).over(Window.partitionBy("src")))
+    )
     deg = e_deg.select("src", "out_deg").distinct()
     n_nodes = deg.count()
     base = (1.0 - damping) / n_nodes
@@ -271,7 +275,7 @@ def pagerank(
         # the two. Values are unchanged — the checkpoint only cuts
         # lineage; each iteration's join/agg plan shape is identical.
         if i % 2 == 1 or i == iterations - 1:
-            ranks = ranks.localCheckpoint(eager=True)
+            ranks = materialize(ranks)
     return ranks
 
 
@@ -295,7 +299,7 @@ def climb_to_root(
     single count per round, like :func:`connected_components`.
     """
     e = edges.select(F.col(child).alias("cur"), F.col(parent).alias("nxt"))
-    e = e.localCheckpoint(eager=True)
+    e = materialize(e)
     if nodes is None:
         # Default node universe: edge endpoints. Isolated nodes (roots
         # with no children) exist in many forests — pass ``nodes``
@@ -313,13 +317,15 @@ def climb_to_root(
         moved = joined.filter(F.col("nxt").isNotNull())
         if moved.limit(1).count() == 0:
             break
-        state = joined.select(
-            "node",
-            F.coalesce("nxt", "cur").alias("cur"),
-            (F.col("depth") + F.when(F.col("nxt").isNotNull(), 1).otherwise(0)).alias(
-                "depth"
-            ),
-        ).localCheckpoint(eager=True)
+        state = materialize(
+            joined.select(
+                "node",
+                F.coalesce("nxt", "cur").alias("cur"),
+                (
+                    F.col("depth") + F.when(F.col("nxt").isNotNull(), 1).otherwise(0)
+                ).alias("depth"),
+            )
+        )
     else:
         raise RuntimeError(
             f"climb_to_root: tree deeper than {max_iterations} levels (or cyclic)"

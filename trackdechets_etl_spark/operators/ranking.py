@@ -27,6 +27,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from trackdechets_etl_spark.session import materialize
+
 _PID = "__gr_pid"
 _LRN = "__gr_lrn"
 _OFF = "__gr_off"
@@ -47,7 +49,7 @@ def global_row_number(
     as a distributed ORDER BY), one within-partition window keyed on
     the partition id, one broadcast join against the
     partition-count-sized offset frame. The repartitioned frame is
-    localCheckpoint-ed because it feeds two consumers (the ranked rows
+    materialized because it feeds two consumers (the ranked rows
     and the offset counts) whose range boundaries must be sampled
     exactly once.
 
@@ -61,10 +63,10 @@ def global_row_number(
     spark = df.sparkSession
     if num_partitions is None:
         num_partitions = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
-    rp = (
+    rp = materialize(
         df.repartitionByRange(num_partitions, *order_cols)
-        .withColumn(_PID, F.spark_partition_id())
-        .localCheckpoint(eager=False)
+        .withColumn(_PID, F.spark_partition_id()),
+        eager=False,
     )
     w = Window.partitionBy(_PID).orderBy(*order_cols)
     local = rp.withColumn(_LRN, F.row_number().over(w))
@@ -117,10 +119,10 @@ def global_prefix_max_exclusive(
     spark = df.sparkSession
     if num_partitions is None:
         num_partitions = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
-    rp = (
+    rp = materialize(
         df.repartitionByRange(num_partitions, *order_cols)
-        .withColumn(_PID, F.spark_partition_id())
-        .localCheckpoint(eager=False)
+        .withColumn(_PID, F.spark_partition_id()),
+        eager=False,
     )
     w = Window.partitionBy(_PID).orderBy(*order_cols).rowsBetween(
         Window.unboundedPreceding, -1

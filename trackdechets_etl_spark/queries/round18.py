@@ -19,6 +19,7 @@ from pyspark.sql import functions as F
 
 from trackdechets_etl_spark.io.readers import read_table
 from trackdechets_etl_spark.queries import QuerySpec
+from trackdechets_etl_spark.session import materialize
 
 
 def _dedup_minhash_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -41,7 +42,7 @@ def _dedup_minhash_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("id_a", "id_b")
         .withColumn("in_true", F.lit(1))
     )
-    sh = shingles(d, "text", "doc_id").localCheckpoint(eager=False)
+    sh = materialize(shingles(d, "text", "doc_id"), eager=False)
     cand = minhash_candidates(sh, "doc_id").withColumn("in_cand", F.lit(1))
     # one distributed plan, no driver-side counts: full-outer the two
     # pair sets and reduce to a single row of mergeable sums

@@ -29,6 +29,7 @@ from pyspark.sql import functions as F
 
 from trackdechets_etl_spark.io.readers import read_table
 from trackdechets_etl_spark.queries import QuerySpec
+from trackdechets_etl_spark.session import materialize
 
 # ------------------------------------------------- image phash dedup
 
@@ -58,7 +59,7 @@ def _multimodal_image_phash(spark: SparkSession, sf_dir: str) -> DataFrame:
     mm = with_payload(d, "text", "doc_id").filter(
         (F.col("mm_kind") == "image") & (F.col("n_bytes") >= _N_PX)
     )
-    bits = image_phash_bits(mm, n_px=_N_PX).localCheckpoint(eager=True)
+    bits = materialize(image_phash_bits(mm, n_px=_N_PX))
     bands_all = bits.select(
         "doc_id",
         F.explode(

@@ -28,6 +28,7 @@ from pyspark.sql import functions as F
 
 from trackdechets_etl_spark.io.readers import read_table
 from trackdechets_etl_spark.queries import QuerySpec
+from trackdechets_etl_spark.session import materialize
 
 # ------------------------------------------------ Matryoshka recall
 
@@ -182,11 +183,10 @@ def _graph_degree_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     sides × log-buckets rows at any scale."""
     li = read_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_suppkey")
     o = read_table(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
-    edges = (
+    edges = materialize(
         li.join(o, li.l_orderkey == o.o_orderkey)
         .select(F.col("o_custkey").alias("cust"), F.col("l_suppkey").alias("supp"))
         .distinct()
-        .localCheckpoint(eager=True)
     )
 
     def side_hist(frame, key, label):

@@ -28,6 +28,7 @@ from pyspark.sql import functions as F
 
 from trackdechets_etl_spark.io.readers import read_table
 from trackdechets_etl_spark.queries import QuerySpec
+from trackdechets_etl_spark.session import materialize
 
 # ------------------------------------------- quantile normalization
 
@@ -93,7 +94,7 @@ def _dedup_minhash_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     d = read_table(spark, sf_dir, "documents")
-    sh = shingles(d, "text", "doc_id", 3).localCheckpoint(eager=True)
+    sh = materialize(shingles(d, "text", "doc_id", 3))
     cand = minhash_candidates(sh, "doc_id")
     sig = minhash_signatures(sh, "doc_id")
     sa = sig.select(

@@ -24,6 +24,7 @@ from pyspark.sql import functions as F
 
 from trackdechets_etl_spark.io.readers import read_table
 from trackdechets_etl_spark.queries import QuerySpec
+from trackdechets_etl_spark.session import materialize
 
 # ------------------------------------------------------------- BM25
 
@@ -46,12 +47,11 @@ def _text_bm25_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     emitted score, ranking uses the 9dp-rounded key (the engine-stable
     ordering convention)."""
     d = read_table(spark, sf_dir, "documents")
-    tc = (
+    tc = materialize(
         d.select("doc_id", F.explode(F.split("text", " ")).alias("term"))
         .filter(F.col("term") != "")
         .groupBy("doc_id", "term")
         .agg(F.count(F.lit(1)).alias("tf"))
-        .localCheckpoint(eager=True)
     )
     dl = tc.groupBy("doc_id").agg(F.sum("tf").alias("dl"))
     # scalar corpus stats stay LAZY: 1-row aggregates broadcast-cross-

@@ -27,6 +27,7 @@ from pyspark.sql.window import Window
 from trackdechets_etl_spark.io.readers import read_table
 from trackdechets_etl_spark.queries import QuerySpec
 from trackdechets_etl_spark.queries.round61 import _hex8_int_sql
+from trackdechets_etl_spark.session import materialize
 
 # ---------------------------------------------------- retention cohorts
 
@@ -284,14 +285,13 @@ def _events_rfm_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.round(F.sum("value"), 2).alias("monetary"),
     )
     anchor = ev.agg(F.max(F.to_date("ts")).alias("anchor_day"))
-    base = (
-        per_user.crossJoin(F.broadcast(anchor))
-        .withColumn(
+    # feeds the n_total aggregate plus three rank pipelines
+    base = materialize(
+        per_user.crossJoin(F.broadcast(anchor)).withColumn(
             "recency_days",
             F.datediff(F.col("anchor_day"), F.col("last_day")).cast("long"),
-        )
-        # feeds the n_total aggregate plus three rank pipelines
-        .localCheckpoint(eager=False)
+        ),
+        eager=False,
     )
     n_total = base.agg(F.count(F.lit(1)).alias("n_total"))
     orders = {

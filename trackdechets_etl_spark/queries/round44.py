@@ -31,6 +31,7 @@ from pyspark.sql import functions as F
 
 from trackdechets_etl_spark.io.readers import read_table
 from trackdechets_etl_spark.queries import QuerySpec
+from trackdechets_etl_spark.session import materialize
 
 # ------------------------------------------------ RAKE keywords
 
@@ -175,20 +176,18 @@ def _graph_label_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .distinct()
     )
-    edges = (
+    # Eager: a lazy checkpoint materializes only AFTER the first
+    # job finishes, so the single final action would still
+    # re-derive the join+distinct edge list once per round.
+    edges = materialize(
         raw.select(
             F.col("cust").alias("src"), (F.col("supp") + _LP_OFFSET).alias("dst")
-        )
-        .unionByName(
+        ).unionByName(
             raw.select(
                 (F.col("supp") + _LP_OFFSET).alias("src"),
                 F.col("cust").alias("dst"),
             )
         )
-        # Eager: a lazy checkpoint materializes only AFTER the first
-        # job finishes, so the single final action would still
-        # re-derive the join+distinct edge list once per round.
-        .localCheckpoint(eager=True)
     )
     labels = edges.select(F.col("src").alias("node")).distinct().select(
         "node", F.col("node").alias("label")

@@ -27,6 +27,7 @@ from pyspark.sql import functions as F
 
 from trackdechets_etl_spark.io.readers import read_table
 from trackdechets_etl_spark.queries import QuerySpec
+from trackdechets_etl_spark.session import materialize
 
 # ------------------------------------------------ MMR selection
 
@@ -55,13 +56,13 @@ def _embedding_mmr_select(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # top-k via orderBy+limit -> TakeOrderedAndProject (per-partition
     # heaps, k rows cross the wire) — never a corpus-scale window.
-    cand = (
+    cand = materialize(
         scored.orderBy(F.round(F.col("sim_q"), 9).desc(), F.col("vec_id").asc())
         .limit(_MMR_POOL)
-        .select("vec_id", "embedding", "sim_q")
-        .localCheckpoint(eager=False)
+        .select("vec_id", "embedding", "sim_q"),
+        eager=False,
     )
-    pair = (
+    pair = materialize(
         cand.alias("a")
         .crossJoin(
             F.broadcast(
@@ -76,8 +77,8 @@ def _embedding_mmr_select(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("a.vec_id").alias("vec_id"),
             "bid",
             cosine(F.col("a.embedding"), F.col("bv")).alias("sim_cc"),
-        )
-        .localCheckpoint(eager=False)
+        ),
+        eager=False,
     )
     picks = []
     selected = None
@@ -109,7 +110,7 @@ def _embedding_mmr_select(spark: SparkSession, sf_dir: str) -> DataFrame:
             pool = pool.select(
                 "vec_id", "sim_q", (_MMR_LAMBDA * F.col("sim_q")).alias("mmr")
             )
-        pick = (
+        pick = materialize(
             pool.orderBy(F.round(F.col("mmr"), 9).desc(), F.col("vec_id").asc())
             .limit(1)
             .select(
@@ -117,8 +118,8 @@ def _embedding_mmr_select(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.col("vec_id").alias("pick_id"),
                 F.round("sim_q", 6).alias("sim_q"),
                 F.round("mmr", 6).alias("mmr_score"),
-            )
-            .localCheckpoint(eager=False)
+            ),
+            eager=False,
         )
         picks.append(pick)
         selected = (

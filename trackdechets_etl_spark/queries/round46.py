@@ -29,6 +29,7 @@ from pyspark.sql import functions as F
 
 from trackdechets_etl_spark.io.readers import read_table
 from trackdechets_etl_spark.queries import QuerySpec
+from trackdechets_etl_spark.session import materialize
 
 # ------------------------------------------- discount elasticity
 
@@ -167,7 +168,7 @@ def _graph_kcore_peel(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .distinct()
     )
-    edges = (
+    edges = materialize(
         raw.select(
             F.col("cust").alias("src"),
             (F.col("supp") + _KCORE_OFFSET).alias("dst"),
@@ -177,22 +178,22 @@ def _graph_kcore_peel(spark: SparkSession, sf_dir: str) -> DataFrame:
                 (F.col("supp") + _KCORE_OFFSET).alias("src"),
                 F.col("cust").alias("dst"),
             )
-        )
-        .localCheckpoint(eager=False)
+        ),
+        eager=False,
     )
     summaries = []
     for rnd in range(1, _KCORE_ROUNDS + 1):
-        keep = (
+        keep = materialize(
             edges.groupBy("src")
             .agg(F.count(F.lit(1)).alias("deg"))
             .filter(F.col("deg") >= _KCORE_K)
-            .select(F.col("src").alias("node"))
-            .localCheckpoint(eager=False)
+            .select(F.col("src").alias("node")),
+            eager=False,
         )
-        edges = (
+        edges = materialize(
             edges.join(keep.select(F.col("node").alias("src")), "src", "left_semi")
-            .join(keep.select(F.col("node").alias("dst")), "dst", "left_semi")
-            .localCheckpoint(eager=False)
+            .join(keep.select(F.col("node").alias("dst")), "dst", "left_semi"),
+            eager=False,
         )
         summaries.append(
             keep.agg(

@@ -26,6 +26,7 @@ from trackdechets_etl_spark.operators.percentiles import (
     exact_percentiles_value_counts,
 )
 from trackdechets_etl_spark.queries import QuerySpec
+from trackdechets_etl_spark.session import materialize
 
 # ---------------------------------------------------- stats suite
 
@@ -453,7 +454,7 @@ def _embedding_pc1(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Each round consumes the exploded frame twice; checkpoint it once
     # so iterations don't re-scan and re-explode the parquet (the same
     # lineage-truncation discipline as connected_components/pagerank).
-    e = e.localCheckpoint(eager=True)
+    e = materialize(e)
     x = spark.range(1, _PI_DIMS + 1).select(
         F.col("id").cast("int").alias("i"),
         F.lit(1.0 / _PI_DIMS**0.5).alias("x"),

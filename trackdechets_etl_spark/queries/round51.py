@@ -25,6 +25,7 @@ from pyspark.sql import functions as F
 
 from trackdechets_etl_spark.io.readers import read_table
 from trackdechets_etl_spark.queries import QuerySpec
+from trackdechets_etl_spark.session import materialize
 
 # ------------------------------------------- daily autocorrelation
 
@@ -113,13 +114,13 @@ def _graph_degree_assortativity(spark: SparkSession, sf_dir: str) -> DataFrame:
     # bit-identical to the doubled-frame form. The union + 2m-row
     # degree/join passes are replaced by half-size passes over the raw
     # bipartite edge set (lazy-checkpointed once for its 3 consumers).
-    raw = (
+    raw = materialize(
         li.join(o, li.l_orderkey == o.o_orderkey)
         .select(
             F.col("o_custkey").alias("cust"), F.col("l_suppkey").alias("supp")
         )
-        .distinct()
-        .localCheckpoint(eager=False)
+        .distinct(),
+        eager=False,
     )
     degc = raw.groupBy("cust").agg(F.count(F.lit(1)).alias("dc"))
     degs = raw.groupBy("supp").agg(F.count(F.lit(1)).alias("ds"))

@@ -36,6 +36,7 @@ from pyspark.sql import functions as F
 
 from trackdechets_etl_spark.io.readers import read_table
 from trackdechets_etl_spark.queries import QuerySpec
+from trackdechets_etl_spark.session import materialize
 
 # ------------------------------------- local clustering coefficient
 
@@ -59,7 +60,7 @@ def _graph_clustering_coefficient(spark: SparkSession, sf_dir: str) -> DataFrame
         .filter(F.col("__support") >= _CC_SUPPORT)
         .select("u", "v")
     )
-    edges = edges.localCheckpoint(eager=False)  # degree + three join legs
+    edges = materialize(edges, eager=False)  # degree + three join legs
     deg = (
         edges.select(F.col("u").alias("node"))
         .unionByName(edges.select(F.col("v").alias("node")))

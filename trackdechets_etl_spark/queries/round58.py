@@ -31,7 +31,7 @@ randomness tests and the repeated-span length ladder.
 - ``text_repeated_span_ladder``: the repeated-span screen of
   ``text_repeated_span_coverage`` swept over span lengths
   n ∈ {4, 8, 16, 32} in ONE pass — token leads are computed once
-  (31 lead columns over the per-doc window, localCheckpoint-ed
+  (31 lead columns over the per-doc window, materialized
   because four different hash aggregations consume them), and each
   rung hashes its own prefix. Corpus-level output: positions,
   cross-doc duplicated positions, and per-mille rate per rung — the
@@ -48,6 +48,7 @@ from pyspark.sql import functions as F
 
 from trackdechets_etl_spark.io.readers import read_table
 from trackdechets_etl_spark.queries import QuerySpec
+from trackdechets_etl_spark.session import materialize
 
 # ------------------------------------------ Jarque–Bera
 
@@ -401,7 +402,7 @@ def _text_repeated_span_ladder(spark: SparkSession, sf_dir: str) -> DataFrame:
     ]
     # one window pass serves all four rungs; eager checkpoint because
     # four DIFFERENT hash aggregations consume the same lead frame.
-    led = toks.select("doc_id", "tok", *leads).localCheckpoint(eager=True)
+    led = materialize(toks.select("doc_id", "tok", *leads))
     rungs = []
     for n in _LADDER_NS:
         cols = ["tok"] + [f"t{i}" for i in range(1, n)]

@@ -32,6 +32,7 @@ from pyspark.sql import functions as F
 
 from trackdechets_etl_spark.io.readers import read_table
 from trackdechets_etl_spark.queries import QuerySpec
+from trackdechets_etl_spark.session import materialize
 
 # ------------------------------------- harmonic centrality (top-20)
 
@@ -80,18 +81,17 @@ def _graph_harmonic_centrality_top(
     exploding the ≤ 20 set bits of each cumulative mask (n_hops are
     successive differences), so unreached nodes contribute nothing
     (harmonic semantics on disconnected graphs)."""
-    edges = _trade_edges(spark, sf_dir).localCheckpoint(eager=True)
+    edges = materialize(_trade_edges(spark, sf_dir))
     deg = edges.groupBy("src").agg(F.count(F.lit(1)).alias("degree"))
     # bit index per source: rank under the same (degree desc, src asc)
     # total order that picks the top-20. The window input is the
     # 20-row limit result — bounded, so the single partition is fine.
     w = Window.orderBy(F.desc("degree"), F.asc("src"))
-    sources = (
+    sources = materialize(
         deg.orderBy(F.desc("degree"), F.asc("src"))
         .limit(_HC_TOP)
         .withColumn("i", F.row_number().over(w) - 1)
         .select(F.col("src").alias("s"), "degree", "i")
-        .localCheckpoint(eager=True)
     )
     mask = sources.select(
         F.col("s").alias("node"), F.expr("shiftleft(1L, i)").alias("m")
@@ -108,11 +108,10 @@ def _graph_harmonic_centrality_top(
         prop = edges.join(mask, edges.src == mask.node).select(
             F.col("dst").alias("node"), "m"
         )
-        mask = (
+        mask = materialize(
             mask.unionByName(prop)
             .groupBy("node")
             .agg(F.bit_or("m").alias("m"))
-            .localCheckpoint(eager=True)
         )
         bits = mask.select(
             "node",

@@ -34,6 +34,7 @@ from pyspark.sql import functions as F
 
 from trackdechets_etl_spark.io.readers import read_table
 from trackdechets_etl_spark.queries import QuerySpec
+from trackdechets_etl_spark.session import materialize
 
 # ------------------------------------------------- gap-fill + forward-fill
 
@@ -68,7 +69,7 @@ def _events_gap_ffill(spark: SparkSession, sf_dir: str) -> DataFrame:
         .cast("long")
         .alias("__avx"),
     )
-    agg = agg.localCheckpoint(eager=False)  # 3 consumers, one shuffle
+    agg = materialize(agg, eager=False)  # 3 consumers, one shuffle
     bounds = agg.agg(
         F.min("bucket_ts").alias("h0"), F.max("bucket_ts").alias("h1")
     )
@@ -388,7 +389,7 @@ def _sketch_countmin(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
 
     users = e.groupBy("user_id").agg(F.count(F.lit(1)).alias("n_exact"))
-    users = users.localCheckpoint(eager=False)  # feeds counters + probe
+    users = materialize(users, eager=False)  # feeds counters + probe
     hashed = users.select(
         "user_id", "n_exact", F.explode(seeds).alias("d")
     ).withColumn("b", bucket(F.col("d"), F.col("user_id")))
@@ -522,10 +523,9 @@ def _dedup_incremental_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
     # shrinks ~(1−t)² on both sides. One keyed shingle frame feeds
     # three consumers (prefix window, both verification joins) —
     # eager checkpoint per the measured many-consumer rule.
-    keyed = (
+    keyed = materialize(
         shingles(d, "text", "doc_id", 3)
         .select("doc_id", F.xxhash64("shingle").alias("k"))
-        .localCheckpoint(eager=True)
     )
     wp = Window.partitionBy("doc_id").orderBy("k")
     # n_sh as a window count over the same partition key rides the
@@ -1120,7 +1120,7 @@ def _graph_triangles(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("__support") >= _TRI_SUPPORT)
         .select("u", "v")
     )
-    edges = edges.localCheckpoint(eager=False)  # three join legs
+    edges = materialize(edges, eager=False)  # three join legs
     e1 = edges.select(F.col("u").alias("a"), F.col("v").alias("b"))
     e2 = edges.select(F.col("u").alias("b"), F.col("v").alias("c"))
     e3 = edges.select(F.col("u").alias("a"), F.col("v").alias("c"))

@@ -59,6 +59,7 @@ from trackdechets_etl_spark.llm.similarity import cosine
 from trackdechets_etl_spark.operators.ranking import global_row_number
 from trackdechets_etl_spark.queries import QuerySpec
 from trackdechets_etl_spark.queries.round61 import _hex8_int_sql
+from trackdechets_etl_spark.session import materialize
 
 # ------------------------------------------------- logistic IRLS
 
@@ -68,7 +69,9 @@ _IRLS_ITERS = 4
 def _lineitem_logistic_irls(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    lv = (
+    # the level frame feeds one aggregation per IRLS iteration —
+    # materialize it so the fact scan runs once, not ×iterations
+    lv = materialize(
         read_table(spark, sf_dir, "lineitem")
         .select(
             F.round(F.col("l_discount") * 100).cast("long").alias("d"),
@@ -81,9 +84,6 @@ def _lineitem_logistic_irls(
             F.count(F.lit(1)).cast("long").alias("n"),
             F.sum("yy").cast("long").alias("y"),
         )
-        # the level frame feeds one aggregation per IRLS iteration —
-        # checkpoint so the fact scan runs once, not ×iterations
-        .localCheckpoint(eager=True)
     )
     beta = spark.range(1).select(
         F.lit(0.0).alias("b0"), F.lit(0.0).alias("b1")
@@ -210,12 +210,11 @@ def _rank_by_self_join(lst: DataFrame, id_col: str) -> DataFrame:
 
 def _sim_rrf_hybrid(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = read_table(spark, sf_dir, "documents")
-    tc = (
+    tc = materialize(
         d.select("doc_id", F.explode(F.split("text", " ")).alias("term"))
         .filter(F.col("term") != "")
         .groupBy("doc_id", "term")
         .agg(F.count(F.lit(1)).alias("tf"))
-        .localCheckpoint(eager=True)
     )
     dl = tc.groupBy("doc_id").agg(F.sum("tf").alias("dl"))
     nd = d.agg(F.count(F.lit(1)).cast("double").alias("n_docs"))
@@ -240,7 +239,7 @@ def _sim_rrf_hybrid(spark: SparkSession, sf_dir: str) -> DataFrame:
             + (F.col("n_docs") - F.col("df") + 0.5) / (F.col("df") + 0.5)
         ).alias("idf"),
     )
-    sparse = (
+    sparse = materialize(
         tc.join(F.broadcast(idf), "term")
         .join(dl, "doc_id")
         .crossJoin(F.broadcast(ad))
@@ -261,13 +260,12 @@ def _sim_rrf_hybrid(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.round(F.sum("s"), 9).alias("skey"))
         .orderBy(F.desc("skey"), F.asc("doc_id"))
         .limit(_RRF_LIST_K)
-        .localCheckpoint(eager=True)
     )
     e = read_table(spark, sf_dir, "embeddings")
     qv = e.filter(F.col("vec_id") == _RRF_QUERY_VEC_ID).select(
         F.col("embedding").alias("qvec")
     )
-    dense = (
+    dense = materialize(
         e.crossJoin(F.broadcast(qv))
         .select(
             F.col("vec_id").alias("doc_id"),
@@ -277,7 +275,6 @@ def _sim_rrf_hybrid(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .orderBy(F.desc("skey"), F.asc("doc_id"))
         .limit(_RRF_LIST_K)
-        .localCheckpoint(eager=True)
     )
     rs = _rank_by_self_join(sparse, "doc_id").withColumnRenamed(
         "rank", "rank_sparse"
@@ -398,10 +395,13 @@ def _orders_conformal_interval(
     # aggregate of the tiny model frame — the second full scan+md5 pass
     # over the calibration rows that nk used to cost is gone. The model
     # frame is lazy-checkpointed once for its three consumers.
-    model_n = cal.groupBy("g").agg(
-        F.round(F.avg("cents")).cast("long").alias("mc"),
-        F.count(F.lit(1)).alias("n_g"),
-    ).localCheckpoint(eager=False)
+    model_n = materialize(
+        cal.groupBy("g").agg(
+            F.round(F.avg("cents")).cast("long").alias("mc"),
+            F.count(F.lit(1)).alias("n_g"),
+        ),
+        eager=False,
+    )
     model = model_n.select("g", "mc")
     res = cal.join(F.broadcast(model), "g").select(
         "o_orderkey", F.abs(F.col("cents") - F.col("mc")).alias("r")

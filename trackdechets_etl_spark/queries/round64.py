@@ -55,6 +55,7 @@ from trackdechets_etl_spark.io.readers import read_table
 from trackdechets_etl_spark.llm.similarity import bucket_expr
 from trackdechets_etl_spark.queries import QuerySpec
 from trackdechets_etl_spark.queries.round62 import _bucket_sql
+from trackdechets_etl_spark.session import materialize
 
 EMB_DIMS = 64
 
@@ -193,7 +194,7 @@ ORDER BY label
 def _lineitem_decision_stump(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    lv = (
+    lv = materialize(
         read_table(spark, sf_dir, "lineitem")
         .select(
             F.round(F.col("l_discount") * 100).cast("long").alias("d"),
@@ -206,7 +207,6 @@ def _lineitem_decision_stump(
             F.count(F.lit(1)).cast("long").alias("n"),
             F.sum("yy").cast("long").alias("y"),
         )
-        .localCheckpoint(eager=True)
     )
     mind = lv.agg(F.min("d").alias("mind"))
     thr = (
@@ -614,7 +614,7 @@ ORDER BY channel
 
 
 def _part_price_index(spark: SparkSession, sf_dir: str) -> DataFrame:
-    py = (
+    py = materialize(
         read_table(spark, sf_dir, "lineitem")
         .groupBy(
             "l_partkey", F.year("l_shipdate").alias("yr")
@@ -627,7 +627,6 @@ def _part_price_index(spark: SparkSession, sf_dir: str) -> DataFrame:
             .cast("long")
             .alias("sq"),
         )
-        .localCheckpoint(eager=True)
     )
     base_yr = py.agg(F.min("yr").alias("byr"))
     base = (

@@ -55,6 +55,7 @@ from pyspark.sql import functions as F
 from trackdechets_etl_spark.io.readers import read_table
 from trackdechets_etl_spark.operators.ranking import global_row_number
 from trackdechets_etl_spark.queries import QuerySpec
+from trackdechets_etl_spark.session import materialize
 
 # ---------------------------------------------- reco holdout eval
 
@@ -98,14 +99,14 @@ def _reco_holdout_hitrate(spark: SparkSession, sf_dir: str) -> DataFrame:
     # held item already excluded). This replaces the former two-window
     # pass over inter (max-struct + row_number) with array expressions
     # inside the aggregate, and — the actual win — the frame is
-    # localCheckpoint'ed so the six downstream consumers (pop, toppop,
+    # materialized so the six downstream consumers (pop, toppop,
     # pop_hits, co, scores, co_hits, n_users) stop re-deriving the
     # lineitem⋈orders join: the executed plan drops from 14 parquet
     # scans / 32 exchanges to one scan pass plus the few real shuffles. At
     # 100 TB the profile frame is one bounded-width row per customer
     # (CAP+1 item ids), far smaller than the interaction table it
-    # replaces, and checkpointing it to executor-local storage is the
-    # standard multi-consumer materialization.
+    # replaces, and materializing it is the standard multi-consumer
+    # discipline.
     held_c = F.array_max("all_arr")["s"]
     rest = F.filter(
         "all_arr", lambda x: x["s"] != F.col("held")
@@ -127,12 +128,11 @@ def _reco_holdout_hitrate(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.slice(F.array_sort(keyed), 1, _RECO_DEGREE_CAP),
         lambda x: x["s"],
     )
-    user = (
+    user = materialize(
         inter.groupBy("c")
         .agg(F.collect_list(F.struct("last_d", "s")).alias("all_arr"))
         .withColumn("held", held_c)
         .select("c", seen.alias("seen_arr"), "held")
-        .localCheckpoint(eager=True)
     )
     train = user.select("c", F.explode("seen_arr").alias("s"))
     pop = train.groupBy("s").agg(
@@ -182,7 +182,7 @@ def _reco_holdout_hitrate(spark: SparkSession, sf_dir: str) -> DataFrame:
     # so ONE map-side-combined aggregate yields the symmetric co
     # matrix directly. The former s1<s2 half-matrix + flipped-union
     # shape consumed its aggregate twice and needed an eager
-    # localCheckpoint to avoid recomputing the explode; emitting both
+    # materialize to avoid recomputing the explode; emitting both
     # directions before the groupBy removes the union, the second
     # consumer and the checkpoint (r14: interleaved best-of-5,
     # sf0.001 1.07→1.04 s best / 1.34→1.14 med, sf0.1 3.71→3.59 s).
@@ -459,7 +459,7 @@ _RBO_W = [repr((1 - _RBO_P) * _RBO_P ** (d - 1)) for d in range(1, _RBO_DEPTH + 
 def _text_topk_rbo_eras(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = read_table(spark, sf_dir, "documents")
     mx = d.agg(F.max("doc_id").alias("mx"))
-    tok = (
+    tok = materialize(
         d.crossJoin(F.broadcast(mx))
         .select(
             (F.col("doc_id") * 2 > F.col("mx"))
@@ -470,15 +470,13 @@ def _text_topk_rbo_eras(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("w") != "")
         .groupBy("era", "w")
         .agg(F.count(F.lit(1)).cast("long").alias("cnt"))
-        .localCheckpoint(eager=True)
     )
 
     def toplist(era: int) -> DataFrame:
-        lst = (
+        lst = materialize(
             tok.filter(F.col("era") == era)
             .orderBy(F.desc("cnt"), F.asc("w"))
             .limit(_RBO_DEPTH)
-            .localCheckpoint(eager=True)
         )
         a = lst.select("w", "cnt")
         b = lst.select(
@@ -626,7 +624,7 @@ FROM src, tot
 def _orders_growth_accounting(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    cm = (
+    cm = materialize(
         read_table(spark, sf_dir, "orders")
         .select(
             "o_custkey",
@@ -634,7 +632,6 @@ def _orders_growth_accounting(
             .alias("mi"),
         )
         .distinct()
-        .localCheckpoint(eager=True)
     )
     firsts = cm.groupBy("o_custkey").agg(F.min("mi").alias("f"))
     prev = cm.select(
@@ -760,14 +757,13 @@ def _events_interarrival_exp_fit(
         ),
     )
     w = Window.partitionBy("user_id").orderBy("s", "event_id")
-    ia = (
+    ia = materialize(
         ev.select(
             "user_id",
             "event_id",
             (F.col("s") - F.lag("s").over(w)).cast("long").alias("dd"),
         )
         .filter(F.col("dd") >= 1)
-        .localCheckpoint(eager=True)
     )
     mom = ia.agg(
         F.count(F.lit(1)).cast("long").alias("n"),

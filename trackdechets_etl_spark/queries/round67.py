@@ -55,6 +55,7 @@ from pyspark.sql import functions as F
 
 from trackdechets_etl_spark.io.readers import read_table
 from trackdechets_etl_spark.queries import QuerySpec
+from trackdechets_etl_spark.session import materialize
 
 # ---------------------------------------------- Poisson GLM (IRLS)
 
@@ -64,11 +65,10 @@ _PGLM_ITERS = 4
 def _events_poisson_glm_irls(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    lv = (
+    lv = materialize(
         read_table(spark, sf_dir, "events")
         .groupBy(F.hour("ts").alias("h"))
         .agg(F.count(F.lit(1)).cast("long").alias("y"))
-        .localCheckpoint(eager=True)
     )
     beta = lv.agg(
         F.log(F.avg(F.col("y").cast("double"))).alias("b0"),
@@ -159,7 +159,7 @@ _LN2 = "0.6931471805599453"
 def _orders_retention_halflife(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    cm = (
+    cm = materialize(
         read_table(spark, sf_dir, "orders")
         .select(
             "o_custkey",
@@ -167,7 +167,6 @@ def _orders_retention_halflife(
             .alias("mi"),
         )
         .distinct()
-        .localCheckpoint(eager=True)
     )
     f = cm.groupBy("o_custkey").agg(F.min("mi").alias("fm"))
     maxm = cm.agg(F.max("mi").alias("mm"))
@@ -286,11 +285,10 @@ _BD_OUT_PAIRS = 20
 
 
 def _text_burrows_delta(spark: SparkSession, sf_dir: str) -> DataFrame:
-    tok = (
+    tok = materialize(
         read_table(spark, sf_dir, "documents")
         .select("source", F.explode(F.split("text", " ")).alias("w"))
         .filter(F.col("w") != "")
-        .localCheckpoint(eager=True)
     )
     top = (
         tok.groupBy("w")
@@ -412,11 +410,10 @@ ORDER BY dkey, src_a, src_b LIMIT {_BD_OUT_PAIRS}
 def _events_seasonality_strength(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    daily = (
+    daily = materialize(
         read_table(spark, sf_dir, "events")
         .groupBy(F.to_date("ts").alias("dday"))
         .agg(F.count(F.lit(1)).cast("long").alias("c"))
-        .localCheckpoint(eager=True)
     )
     a = daily.select(
         F.col("dday").alias("da"), F.col("c").alias("ca")
@@ -542,12 +539,11 @@ def _sim_query_expansion_prf(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
     d = read_table(spark, sf_dir, "documents")
-    tc = (
+    tc = materialize(
         d.select("doc_id", F.explode(F.split("text", " ")).alias("term"))
         .filter(F.col("term") != "")
         .groupBy("doc_id", "term")
         .agg(F.count(F.lit(1)).alias("tf"))
-        .localCheckpoint(eager=True)
     )
     dl = tc.groupBy("doc_id").agg(F.sum("tf").alias("dl"))
     nd = d.agg(F.count(F.lit(1)).cast("double").alias("n_docs"))
@@ -560,10 +556,9 @@ def _sim_query_expansion_prf(
         ).alias("term")
     )
     base = _bm25_scores(tc, dl, nd, ad, q0)
-    fb = (
+    fb = materialize(
         base.orderBy(F.desc("skey"), F.asc("doc_id"))
         .limit(_PRF_FEEDBACK_DOCS)
-        .localCheckpoint(eager=True)
     )
     # expansion: top TF-IDF terms inside the pseudo-relevant docs,
     # excluding the original query terms
@@ -595,10 +590,9 @@ def _sim_query_expansion_prf(
     )
     q1 = q0.unionByName(exp_terms)
     final = _bm25_scores(tc, dl, nd, ad, q1)
-    top = (
+    top = materialize(
         final.orderBy(F.desc("skey"), F.asc("doc_id"))
         .limit(_PRF_OUT_K)
-        .localCheckpoint(eager=True)
     )
     # rank via bounded self-join (window-free, the round63 pattern)
     b = top.select(

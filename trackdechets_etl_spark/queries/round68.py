@@ -55,6 +55,7 @@ from trackdechets_etl_spark.io.readers import read_table
 from trackdechets_etl_spark.llm.similarity import cosine
 from trackdechets_etl_spark.queries import QuerySpec
 from trackdechets_etl_spark.queries.llm import _cos_sql
+from trackdechets_etl_spark.session import materialize
 
 # ------------------------------------------------- two-way ANOVA
 
@@ -387,7 +388,7 @@ _RC_TOP = 20
 
 
 def _graph_rich_club(spark: SparkSession, sf_dir: str) -> DataFrame:
-    e = (
+    e = materialize(
         read_table(spark, sf_dir, "lineitem")
         .select("l_orderkey", "l_suppkey")
         .join(
@@ -400,7 +401,6 @@ def _graph_rich_club(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("o_custkey").alias("c"), F.col("l_suppkey").alias("s")
         )
         .distinct()
-        .localCheckpoint(eager=True)
     )
     topc = (
         e.groupBy("c")

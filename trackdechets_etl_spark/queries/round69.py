@@ -52,6 +52,7 @@ from trackdechets_etl_spark.io.readers import read_table
 from trackdechets_etl_spark.llm.similarity import cosine
 from trackdechets_etl_spark.queries import QuerySpec
 from trackdechets_etl_spark.queries.llm import _cos_sql
+from trackdechets_etl_spark.session import materialize
 
 EMB_DIMS = 64
 
@@ -114,7 +115,7 @@ def _sim_ivf_recall_curve(
         F.col("v").alias("cv"),
         F.col("label").alias("clist"),
     )
-    cands = (
+    cands = materialize(
         F.broadcast(assigned)
         .join(c, "clist")
         .filter(F.col("q_id") != F.col("c_id"))
@@ -124,7 +125,6 @@ def _sim_ivf_recall_curve(
             "crank",
             F.round(cosine(F.col("qv"), F.col("cv")), 9).alias("ckey"),
         )
-        .localCheckpoint(eager=True)
     )
     # literal nprobe grid via explode (a Python-created broadcast
     # frame costs ~4.4 s of spin-up — profiled in round70)
@@ -352,11 +352,10 @@ FROM costs ORDER BY o_orderpriority
 
 
 def _events_pacf_lags(spark: SparkSession, sf_dir: str) -> DataFrame:
-    daily = (
+    daily = materialize(
         read_table(spark, sf_dir, "events")
         .groupBy(F.to_date("ts").alias("dd"))
         .agg(F.count(F.lit(1)).cast("long").alias("c"))
-        .localCheckpoint(eager=True)
     )
     mom = daily.agg(
         F.count(F.lit(1)).cast("long").alias("n"),
@@ -559,7 +558,7 @@ FROM gap
 
 
 def _orders_ar1_backtest(spark: SparkSession, sf_dir: str) -> DataFrame:
-    daily = (
+    daily = materialize(
         read_table(spark, sf_dir, "orders")
         .groupBy(F.col("o_orderdate").alias("dd"))
         .agg(
@@ -567,7 +566,6 @@ def _orders_ar1_backtest(spark: SparkSession, sf_dir: str) -> DataFrame:
             .cast("long")
             .alias("rev")
         )
-        .localCheckpoint(eager=True)
     )
     # date split at 80% of the calendar span — no ranks, no window
     span = daily.agg(

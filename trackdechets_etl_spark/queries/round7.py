@@ -40,6 +40,7 @@ from pyspark.sql import functions as F
 
 from trackdechets_etl_spark.io.readers import read_table
 from trackdechets_etl_spark.queries import QuerySpec
+from trackdechets_etl_spark.session import materialize
 
 # ------------------------------------------------ sequence pattern match
 
@@ -195,7 +196,7 @@ def _events_gap_interpolate(spark: SparkSession, sf_dir: str) -> DataFrame:
     agg = e.groupBy(
         "event_type", F.date_trunc("hour", "ts").alias("bucket_ts")
     ).agg(F.round(F.avg("value") * 1000).cast("long").alias("__v"))
-    agg = agg.localCheckpoint(eager=False)
+    agg = materialize(agg, eager=False)
     bounds = agg.agg(
         F.min("bucket_ts").alias("h0"), F.max("bucket_ts").alias("h1")
     )

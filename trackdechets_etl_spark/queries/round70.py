@@ -63,6 +63,7 @@ from trackdechets_etl_spark.queries.round56 import (
     _LM_TRAIN_HEX,
     _doc_bigrams,
 )
+from trackdechets_etl_spark.session import materialize
 
 # --------------------------------------------------- KN vs add-one
 
@@ -81,7 +82,7 @@ def _text_kn_vs_mle_heldout(
         F.col("tok").alias("w1"),
         F.col("nxt").alias("w2"),
     )
-    train = bg.filter(F.col("is_train")).localCheckpoint(eager=True)
+    train = materialize(bg.filter(F.col("is_train")))
     val = bg.filter(~F.col("is_train"))
     c12 = train.groupBy("w1", "w2").agg(
         F.count(F.lit(1)).alias("n12")
@@ -205,11 +206,10 @@ _TWO_PI = repr(2.0 * math.pi)
 def _events_dft_weekly_power(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    daily = (
+    daily = materialize(
         read_table(spark, sf_dir, "events")
         .groupBy(F.to_date("ts").alias("dd"))
         .agg(F.count(F.lit(1)).cast("long").alias("c"))
-        .localCheckpoint(eager=True)
     )
     mom = daily.agg(
         F.count(F.lit(1)).cast("long").alias("n"),
@@ -472,14 +472,17 @@ def _part_price_dispersion_nations(
     # lazy-checkpoint it so the lineitem scan + two aggregation
     # exchanges run once instead of once per consumer (the frame is
     # bounded by |part|, a few 10k rows at sf0.1).
-    scored = per.select(
-        "l_partkey",
-        "n_nations",
-        F.round(F.col("s1") / F.col("n_nations") / 100.0, 4).alias(
-            "mean_price"
+    scored = materialize(
+        per.select(
+            "l_partkey",
+            "n_nations",
+            F.round(F.col("s1") / F.col("n_nations") / 100.0, 4).alias(
+                "mean_price"
+            ),
+            F.round(cv, 9).alias("cvkey"),
         ),
-        F.round(cv, 9).alias("cvkey"),
-    ).localCheckpoint(eager=False)
+        eager=False,
+    )
     meancv = scored.agg(F.avg("cvkey").alias("corpus_mean_cv"))
     return (
         scored.crossJoin(F.broadcast(meancv))

@@ -52,6 +52,7 @@ from trackdechets_etl_spark.operators.percentiles import (
     exact_percentiles_value_counts,
 )
 from trackdechets_etl_spark.queries import QuerySpec
+from trackdechets_etl_spark.session import materialize
 
 # ------------------------------------------------------ tukey fences
 
@@ -399,7 +400,7 @@ def _orders_ljung_box(spark: SparkSession, sf_dir: str) -> DataFrame:
     (cents ~1e7, n ~2400 → terms ≤ ~1e24). Doubles only at ρ_k = num/
     den and the final Q sum. The day index is a calendar-bounded
     window; the daily aggregate is the only row-scale pass."""
-    idx = _daily_revenue_idx(spark, sf_dir).localCheckpoint(eager=True)
+    idx = materialize(_daily_revenue_idx(spark, sf_dir))
     dec = lambda c: F.col(c).cast("decimal(38,0)")  # noqa: E731
     base = idx.agg(
         F.count(F.lit(1)).cast("long").alias("n"),
@@ -707,9 +708,9 @@ def _orders_granger_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count(F.lit(1)).cast("long").alias("c"),
     )
     wd = Window.orderBy("day")
-    idx = daily.withColumn(
-        "t", F.row_number().over(wd).cast("long")
-    ).localCheckpoint(eager=True)
+    idx = materialize(
+        daily.withColumn("t", F.row_number().over(wd).cast("long"))
+    )
     cur = idx.select(F.col("t"), F.col("r").alias("y"))
     prev = idx.select(
         (F.col("t") + 1).alias("t"),

@@ -30,6 +30,7 @@ from pyspark.sql import functions as F
 
 from trackdechets_etl_spark.io.readers import read_table
 from trackdechets_etl_spark.queries import QuerySpec
+from trackdechets_etl_spark.session import materialize
 
 # ------------------------------------------------------ bartlett
 
@@ -129,11 +130,11 @@ def _events_friedman_test(spark: SparkSession, sf_dir: str) -> DataFrame:
     only row-scale pass is the day×type sum; everything downstream is
     O(days·k²)."""
     ev = read_table(spark, sf_dir, "events")
-    cell = ev.groupBy(
-        F.to_date("ts").alias("day"), "event_type"
-    ).agg(
-        F.sum(F.round(F.col("value") * 100).cast("long")).alias("vc")
-    ).localCheckpoint(eager=True)
+    cell = materialize(
+        ev.groupBy(F.to_date("ts").alias("day"), "event_type").agg(
+            F.sum(F.round(F.col("value") * 100).cast("long")).alias("vc")
+        )
+    )
     ktot = cell.agg(
         F.countDistinct("event_type").cast("long").alias("k")
     )

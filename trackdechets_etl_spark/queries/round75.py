@@ -26,6 +26,7 @@ from pyspark.sql import functions as F
 from trackdechets_etl_spark.io.readers import read_table
 from trackdechets_etl_spark.llm.dedup import simhash_pairs
 from trackdechets_etl_spark.queries import QuerySpec
+from trackdechets_etl_spark.session import materialize
 
 
 def _gram_counts(d: DataFrame) -> DataFrame:
@@ -73,14 +74,13 @@ def _gram_counts(d: DataFrame) -> DataFrame:
 def _text_bleu_dup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = read_table(spark, sf_dir, "documents")
     # pairs has THREE consumers (ids semi-join, clip join, precision
-    # join) — eager localCheckpoint per the measured many-consumer
+    # join) — eager materialize per the measured many-consumer
     # rule, so the SimHash fingerprint aggregate + bucket self-join
     # run once instead of three times (r14 interleaved best-of-4 at
     # sf0.1: 7.97 → 6.44 s, identical output).
-    pairs = (
+    pairs = materialize(
         simhash_pairs(d, "text", "doc_id")
         .select("id_a", "id_b")
-        .localCheckpoint(eager=True)
     )
     # Gram counts only for docs that occur in a candidate pair — a
     # no-op on results (counts are only ever joined to pairs) but the
@@ -95,9 +95,7 @@ def _text_bleu_dup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
         .unionByName(pairs.select(F.col("id_b").alias("doc_id")))
         .distinct()
     )
-    counts = _gram_counts(
-        d.join(ids, "doc_id", "left_semi")
-    ).localCheckpoint(eager=True)
+    counts = materialize(_gram_counts(d.join(ids, "doc_id", "left_semi")))
     totals = counts.groupBy("doc_id", "n").agg(
         F.sum("c").cast("long").alias("tot")
     )

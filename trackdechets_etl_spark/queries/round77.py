@@ -50,6 +50,7 @@ from pyspark.sql import functions as F
 
 from trackdechets_etl_spark.io.readers import read_table
 from trackdechets_etl_spark.queries import QuerySpec
+from trackdechets_etl_spark.session import materialize
 
 # --------------------------------------------------- ROUGE-1/2 pairs
 
@@ -62,19 +63,16 @@ def _text_rouge_dup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     # eager-checkpointed: four consumers (ids, clip, both pr joins) —
     # the round75 BLEU measurement (7.97 → 6.44 s at sf0.1) applies
     # identically to this shared shape
-    pairs = (
+    pairs = materialize(
         simhash_pairs(d, "text", "doc_id")
         .select("id_a", "id_b")
-        .localCheckpoint(eager=True)
     )
     ids = (
         pairs.select(F.col("id_a").alias("doc_id"))
         .unionByName(pairs.select(F.col("id_b").alias("doc_id")))
         .distinct()
     )
-    counts = _gram_counts(
-        d.join(ids, "doc_id", "left_semi")
-    ).localCheckpoint(eager=True)
+    counts = materialize(_gram_counts(d.join(ids, "doc_id", "left_semi")))
     totals = counts.groupBy("doc_id", "n").agg(
         F.sum("c").cast("long").alias("tot")
     )

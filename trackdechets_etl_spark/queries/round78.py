@@ -78,6 +78,7 @@ from pyspark.sql import functions as F
 
 from trackdechets_etl_spark.io.readers import read_table
 from trackdechets_etl_spark.queries import QuerySpec
+from trackdechets_etl_spark.session import materialize
 
 _DEC = "decimal(38,0)"
 
@@ -233,16 +234,15 @@ def _text_dice_tversky(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     d = read_table(spark, sf_dir, "documents")
     # pairs has TWO consumers (the inter join and the final j frame) —
-    # eager localCheckpoint per the round75 many-consumer rule, so the
+    # eager materialize per the round75 many-consumer rule, so the
     # SimHash fingerprint aggregate + bucket self-join run once.
     # Interleaved A/B at sf0.1 (8 rounds, all faster): best
     # 2.42 → 1.92 s (r15; AQE ReusedExchange covers the shingle frame's
     # identical self-join sides — the r14 wash — but not the two
     # disjoint consumptions of the pairs subtree).
-    pairs = (
+    pairs = materialize(
         simhash_pairs(d, "text", "doc_id")
         .select("id_a", "id_b")
-        .localCheckpoint(eager=True)
     )
     sh = shingles(d, "text", "doc_id").select(
         "doc_id", F.xxhash64("shingle").alias("k")
@@ -689,12 +689,11 @@ def _events_page_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = read_table(spark, sf_dir, "events").filter(
         F.col("event_type").isin(_PAGE_TYPES)
     )
-    cell = (
+    cell = materialize(
         ev.groupBy(F.to_date("ts").alias("day"), "event_type")
         .agg(
             F.sum(F.round(F.col("value") * 100).cast("long")).alias("vc")
         )
-        .localCheckpoint(eager=True)
     )
     k = len(_PAGE_TYPES)
     complete = (
@@ -882,12 +881,11 @@ def _text_lmir_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     the rank-constant Σ ln p(t|C) term is dropped as usual. Ranking
     uses the 9dp-rounded key (engine-stable ordering convention)."""
     d = read_table(spark, sf_dir, "documents")
-    tc = (
+    tc = materialize(
         d.select("doc_id", F.explode(F.split("text", " ")).alias("term"))
         .filter(F.col("term") != "")
         .groupBy("doc_id", "term")
         .agg(F.count(F.lit(1)).alias("tf"))
-        .localCheckpoint(eager=True)
     )
     dl = tc.groupBy("doc_id").agg(F.sum("tf").alias("dl"))
     ctot = dl.agg(F.sum("dl").cast("double").alias("c_tokens"))

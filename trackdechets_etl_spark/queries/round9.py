@@ -41,6 +41,7 @@ from pyspark.sql import functions as F
 
 from trackdechets_etl_spark.io.readers import read_table
 from trackdechets_etl_spark.queries import QuerySpec
+from trackdechets_etl_spark.session import materialize
 
 # ------------------------------------------------- multi-touch attribution
 
@@ -162,18 +163,18 @@ def _graph_khop_reach(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .distinct()
     )
-    edges = (
+    # one materialization, K join legs
+    edges = materialize(
         raw.select(
             F.col("cust").alias("src"),
             (F.col("supp") + _KH_OFFSET).alias("dst"),
-        )
-        .unionByName(
+        ).unionByName(
             raw.select(
                 (F.col("supp") + _KH_OFFSET).alias("src"),
                 F.col("cust").alias("dst"),
             )
-        )
-        .localCheckpoint(eager=False)  # one materialization, K join legs
+        ),
+        eager=False,
     )
     c = read_table(spark, sf_dir, "customer")
     dist = c.filter(F.col("c_custkey") < _KH_SEED_MAX).select(

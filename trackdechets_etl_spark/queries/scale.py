@@ -24,6 +24,7 @@ from pyspark.sql import functions as F
 
 from trackdechets_etl_spark.io.readers import read_table
 from trackdechets_etl_spark.queries import QuerySpec
+from trackdechets_etl_spark.session import materialize
 
 # ---------------------------------------------------- DPP demonstration
 
@@ -138,7 +139,7 @@ def _sim_pq_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = explode_subspaces(emb, "vec_id", "embedding")
     # Codebook + codes each feed two consumers — truncate the lineage
     # once (same discipline as embedding_pc1's exploded frame).
-    e = e.localCheckpoint(eager=True)
+    e = materialize(e)
     cents = train_codebook(e)
     codes = pq_encode(e, cents)
     approx = adc_topk(e, codes, cents, TOPK_QUERY_IDS, k=5).select(

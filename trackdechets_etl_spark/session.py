@@ -19,13 +19,15 @@ Scale posture (100 TB target, tested on local[N]):
   fault; pass ``extra_conf={"spark.python.sql.dataFrameDebugging.enabled":
   "true"}`` to get the call site back (PySpark reads the flag once per
   process).
+- ``materialize`` is the one place that cuts an intermediate result's
+  lineage (see its docstring).
 """
 
 from __future__ import annotations
 
 import os
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 
 
 def get_spark(
@@ -66,3 +68,31 @@ def get_spark(
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+def is_local_master(master: str) -> bool:
+    """True for ``local`` and ``local[...]``: every executor lives in the
+    driver JVM. ``local-cluster[...]`` starts separate executor JVMs, so
+    it is a cluster here."""
+    return master == "local" or master.startswith("local[")
+
+
+def materialize(df: DataFrame, eager: bool = True) -> DataFrame:
+    """Compute ``df`` once (now, or with the first action when ``eager``
+    is false) and return a frame whose lineage starts at the stored
+    result, so later consumers neither recompute it nor re-plan a
+    growing lineage.
+
+    On a ``local[...]`` master this is ``df.localCheckpoint(eager=eager)``:
+    blocks stay in the driver JVM's block manager, and nothing can lose
+    them that would not also lose the driver. On any other master a
+    local checkpoint block lives only on the executor that computed it,
+    and losing that executor fails the next action
+    (``CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND``), so the result is written as
+    a reliable checkpoint into Spark's ``spark.checkpoint.dir``; Spark
+    raises its own error if that is unset. That checkpoint is always
+    eager: a lazy one recomputes the lineage in a second job when the
+    files are written."""
+    if is_local_master(df.sparkSession.sparkContext.master):
+        return df.localCheckpoint(eager=eager)
+    return df.checkpoint(eager=True)

@@ -18,33 +18,9 @@ import re
 import sys
 import time
 
+from perfbench.workloads import HEADLINE
 from trackdechets_etl_spark.queries import all_queries
 from trackdechets_etl_spark.session import get_spark
-
-HEADLINE = [
-    "flagship_revenue_by_nation",
-    "join_inner_rubriques",
-    "agg_coverage_stats",
-    "agg_keep_last_by_year",
-    "pipeline_siretisation_enriched",
-    "pipeline_siretisation_stats",
-    "pipeline_open_data",
-    "events_tumbling_hourly",
-    "events_session_window",
-    "dedup_ngram_jaccard",
-    "dedup_minhash_lsh",
-    "dedup_simhash",
-    "sim_topk_bruteforce",
-    "sim_lsh_bucket_topk",
-    "text_quality_score",
-    "text_fingerprint",
-    "tpch_q1_pricing_summary",
-    "tpch_q3_shipping_priority",
-    "tpch_q6_forecast_revenue",
-    "window_suite",
-    "join_asof_events",
-    "sim_ivf_topk",
-]
 
 
 def main() -> None:

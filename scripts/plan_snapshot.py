@@ -1,7 +1,7 @@
 """Snapshot every registry query's pre-execution physical plan at
-sf0.01 into one JSON file (name -> md5 of the canonicalized plan
-string), so a refactor can prove "the physical plan the driver
-executes did not change" query by query.
+sf0.01 into one JSON file (name -> canonicalized plan text), so a
+refactor can prove "the physical plan Spark executes did not
+change" query by query, and ``--diff`` can show where a plan changed.
 
 Canonicalization strips plan/exprId churn that is not physical:
 #NNN expression ids, plan_id=NNN tags, checkpoint RDD ids, and the
@@ -14,15 +14,20 @@ Usage:
 
 from __future__ import annotations
 
-import hashlib
 import json
 import os
 import re
 import sys
+from itertools import zip_longest
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 SF_DIR = "/root/testdata/sf0.01"
+
+# Spark prints at most spark.sql.debug.maxToStringFields (default 25)
+# entries of a field list and replaces the rest by "... N more fields",
+# so two plans that differ past the cut would print the same.
+_MAX_TO_STRING_FIELDS = "1000000"
 
 
 def _split_top(s: str) -> list[str]:
@@ -132,6 +137,24 @@ def canon_plan(s: str) -> str:
     )
 
 
+def plan_text(df) -> str:
+    """Canonical text of ``df``'s executed plan with every field
+    printed: raises the field-list cut of ``df``'s session first."""
+    df.sparkSession.conf.set(
+        "spark.sql.debug.maxToStringFields", _MAX_TO_STRING_FIELDS
+    )
+    return canon_plan(df._jdf.queryExecution().executedPlan().toString())
+
+
+def first_difference(a: str, b: str) -> tuple[str, str]:
+    """The first line at which plan texts ``a`` and ``b`` differ, from
+    each side (``""`` where one side has run out of lines)."""
+    for x, y in zip_longest(a.splitlines(), b.splitlines(), fillvalue=""):
+        if x != y:
+            return x, y
+    return "", ""
+
+
 def main() -> None:
     if sys.argv[1:2] == ["--diff"]:
         a = json.load(open(sys.argv[2]))
@@ -151,6 +174,9 @@ def main() -> None:
         )
         only = sorted(a.keys() ^ b.keys())
         print(f"{len(changed)} changed plans" + (f": {changed}" if changed else ""))
+        for k in changed:
+            x, y = first_difference(a[k], b[k])
+            print(f"{k}:\n  - {x.strip()}\n  + {y.strip()}")
         if errored:
             print(f"{len(errored)} ERROR entries (no plan evidence): {errored}")
         if only:
@@ -179,13 +205,7 @@ def main() -> None:
         if only and name not in only:
             continue
         try:
-            plan = (
-                spec.fn(spark, SF_DIR)
-                ._jdf.queryExecution()
-                .executedPlan()
-                .toString()
-            )
-            snap[name] = hashlib.md5(canon_plan(plan).encode()).hexdigest()
+            snap[name] = plan_text(spec.fn(spark, SF_DIR))
         except Exception as exc:
             snap[name] = f"ERROR:{type(exc).__name__}"
             print(f"{name}: ERROR {exc}", file=sys.stderr)

@@ -18,14 +18,11 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import duckdb
 
+from trackdechets_etl_spark.io.readers import ALL_TABLES
 from trackdechets_etl_spark.queries import all_queries
 from trackdechets_etl_spark.session import get_spark
 
 SF_DIR = os.environ.get("SELFCHECK_SF_DIR", "/root/testdata/sf0.01")
-TABLES = (
-    "region nation customer supplier part orders lineitem events "
-    "documents embeddings"
-).split()
 
 
 # Default is EXACT float compare (driver strictness). Set
@@ -56,7 +53,7 @@ def canon(rows, colnames):
 def main() -> None:
     spark = get_spark(app_name="selfcheck")
     con = duckdb.connect()
-    for t in TABLES:
+    for t in ALL_TABLES:
         con.execute(
             f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{SF_DIR}/{t}.parquet')"
         )

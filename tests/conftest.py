@@ -7,22 +7,10 @@ import pyarrow.parquet as pq
 import pytest
 from pyspark.sql import functions as F
 
-from trackdechets_etl_spark.io.readers import TABLE_SCHEMAS
+from trackdechets_etl_spark.io.readers import ALL_TABLES, TABLE_SCHEMAS
 from trackdechets_etl_spark.session import get_spark
 
 SF_DIR = "/root/testdata/sf0.001"
-TABLES = [
-    "region",
-    "nation",
-    "customer",
-    "supplier",
-    "part",
-    "orders",
-    "lineitem",
-    "events",
-    "documents",
-    "embeddings",
-]
 
 
 @pytest.fixture(scope="session")
@@ -35,7 +23,7 @@ def spark():
 @pytest.fixture(scope="session")
 def duck():
     con = duckdb.connect()
-    for t in TABLES:
+    for t in ALL_TABLES:
         con.execute(
             f"CREATE VIEW {t} AS SELECT * FROM '{SF_DIR}/{t}.parquet'"
         )

@@ -280,3 +280,81 @@ def test_containment_is_asymmetric_and_bounded(spark):
     for r in rows:
         assert 0.9 <= r.containment <= 1.0
         assert r.id_a != r.id_b
+
+
+
+# Hand-built corpora where t·|d| is an integer, so the 1e-9 slack in the
+# AllPairs prefix bound decides its length. 0.8×5 and 0.9×10 are exact in
+# binary; 0.56×25 evaluates to 14.000000000000002, which ceil would round
+# up to 15 without the slack.
+_BOUNDARY_CASES = [(0.8, 5), (0.9, 10), (0.56, 25)]
+
+
+def _boundary_corpus(spark, t, n_sh):
+    """Three docs: ``A`` (id 1) with ``n_sh`` shingles; ``S`` (id 2),
+    whose shingles are the first ``t·n_sh`` of A's, so Jaccard(A, S) =
+    C(A, S) = t; and ``B`` (id 3), the last ``t·n_sh``
+    of A's shingles in key order kept apart by separator words, so
+    C(A, B) = t and the pair's first common key sits at the last
+    position of A's prefix."""
+    from fractions import Fraction
+
+    from trackdechets_etl_spark.functions.scalar import hash_key
+    from trackdechets_etl_spark.llm.dedup import shingles
+
+    need = int(Fraction(str(t)) * n_sh)
+    words = [f"w{i}" for i in range(n_sh + 2)]
+    a = spark.createDataFrame([(1, " ".join(words))], ["doc_id", "text"])
+    by_key = [
+        r.shingle for r in shingles(a, "text", "doc_id").orderBy(hash_key("shingle")).collect()
+    ]
+    b = " ".join(f"{s} s{i}" for i, s in enumerate(by_key[-need:]))
+    return spark.createDataFrame(
+        [(1, " ".join(words)), (2, " ".join(words[: need + 2])), (3, b)],
+        ["doc_id", "text"],
+    )
+
+
+@pytest.mark.parametrize("t, n_sh", _BOUNDARY_CASES)
+def test_prefix_filters_are_lossless_at_an_exact_boundary(spark, t, n_sh):
+    from trackdechets_etl_spark.llm.dedup import containment_pairs
+
+    d = _boundary_corpus(spark, t, n_sh)
+    fast_j = sorted(map(tuple, ngram_jaccard_pairs(d, "text", "doc_id", t).collect()))
+    naive_j = sorted(
+        map(tuple, ngram_jaccard_pairs(d, "text", "doc_id", t, prefix_filter=False).collect())
+    )
+    assert naive_j == [(1, 2, t)]
+    assert fast_j == naive_j
+    fast_c = sorted(map(tuple, containment_pairs(d, "text", "doc_id", t).collect()))
+    naive_c = sorted(
+        map(tuple, containment_pairs(d, "text", "doc_id", t, prefix_filter=False).collect())
+    )
+    assert {(1, 2, t), (1, 3, t), (2, 1, 1.0)} <= set(naive_c)
+    assert fast_c == naive_c
+
+
+@pytest.mark.parametrize("t, n_sh", _BOUNDARY_CASES)
+def test_prefix_keeps_the_allpairs_length(spark, t, n_sh):
+    """The shared prefix step keeps |d| − ceil(t·|d|) + 1 positions of
+    every doc, with ceil taken on the exact decimal t."""
+    import math
+    from fractions import Fraction
+
+    from trackdechets_etl_spark.llm.dedup import (
+        in_prefix,
+        shingle_keys,
+        shingle_positions,
+        shingles,
+    )
+
+    keyed = shingle_keys(shingles(_boundary_corpus(spark, t, n_sh), "text", "doc_id"), "doc_id")
+    sizes = {r.doc_id: r["count"] for r in keyed.groupBy("doc_id").count().collect()}
+    kept = {
+        r.doc_id: r["count"]
+        for r in shingle_positions(keyed, "doc_id").filter(in_prefix(t)).groupBy("doc_id").count().collect()
+    }
+    assert sizes[1] == n_sh
+    assert kept == {
+        doc: n - math.ceil(Fraction(str(t)) * n) + 1 for doc, n in sizes.items()
+    }

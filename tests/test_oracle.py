@@ -22,16 +22,29 @@ REGISTRY = all_queries()
 # The default shard checks every query a perfbench workload runs (the
 # five reference pipelines, the 22 headline queries and the iterative
 # graph_pagerank and graph_kcore_peel, heavy users of
-# session.materialize) and one consumer of each shared SQL/Column helper
+# session.materialize), one consumer of each shared SQL/Column helper
 # (cosine and hyperplane SQL, md5 hex to int SQL, array dot product) and
 # of each sized or converted read (the orders rank gate, the documents
-# and embeddings fan-out, events.ts); the rest of the sweep is marked
+# and embeddings fan-out, events.ts), and every consumer of a
+# functions.scalar.hash_key key or of a keyed-shingle step of llm/dedup
+# (shingle keys, prefix positions, Jaccard candidates, overlap counts)
+# that the workloads do not already run; the rest of the sweep is marked
 # slow (see pytest.ini) and runs with -m "slow or not slow".
 _DEFAULT_SHARD = {name for work in WORKLOADS.values() for name, _ in work} | {
     "dedup_embedding_cosine",
     "sample_weighted_reservoir",
     "ml_kmeans_lite",
     "window_rank_ratios",
+    "dedup_containment_pairs",
+    "dedup_incremental_batch",
+    "text_ngram_novelty",
+    "text_dice_tversky",
+    "dedup_minhash_calibration",
+    "text_bleu_dup_pairs",
+    "linkage_edit_distance_join",
+    "join_fuzzy_name",
+    "join_bloom_prefilter",
+    "dedup_clusters",
 }
 
 

@@ -1,6 +1,7 @@
 """The plan-snapshot canonicalizer renumbers lambda variables within
 each plan: a shifted session counter hashes the same, a changed
-reference does not."""
+reference does not. The snapshot text keeps every field of a wide
+plan."""
 
 from __future__ import annotations
 
@@ -80,3 +81,20 @@ def test_group_bound_to_the_wrong_column_differs():
     ).replace("(gid#103 = 9)", "(gid#103 = 1)")
     assert wrong != a
     assert plan_snapshot.canon_plan(a) != plan_snapshot.canon_plan(wrong)
+
+
+def _wide_select(spark, col28: str):
+    """A 30-column select whose 28th column is named ``col28``."""
+    from pyspark.sql import functions as F
+
+    names = [f"c{i}" for i in range(30)]
+    names[27] = col28
+    return spark.range(3).select(*[(F.col("id") + i).alias(n) for i, n in enumerate(names)])
+
+
+def test_plans_differing_past_the_field_cut_differ(spark):
+    a = plan_snapshot.plan_text(_wide_select(spark, "c27"))
+    b = plan_snapshot.plan_text(_wide_select(spark, "other"))
+    assert "more fields" not in a
+    assert a != b
+    assert plan_snapshot.first_difference(a, b) != ("", "")

@@ -585,3 +585,21 @@ def test_only_materialize_cuts_lineage():
         if pattern.search(line)
     ]
     assert not hits, f"lineage cut outside session.materialize: {hits}"
+
+
+def test_only_hash_key_hashes():
+    """Every 64-bit key goes through ``functions.scalar.hash_key``, so
+    which hash and how wide is decided (and documented) in one place."""
+    import re
+    from pathlib import Path
+
+    pkg = Path(__file__).resolve().parents[1] / "trackdechets_etl_spark"
+    pattern = re.compile(r"xxhash64\(")
+    hits = [
+        f"{path.relative_to(pkg.parent)}:{n}"
+        for path in sorted(pkg.rglob("*.py"))
+        if path != pkg / "functions" / "scalar.py"
+        for n, line in enumerate(path.read_text().splitlines(), 1)
+        if pattern.search(line)
+    ]
+    assert not hits, f"xxhash64 outside hash_key: {hits}"

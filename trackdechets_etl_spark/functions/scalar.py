@@ -87,3 +87,18 @@ def pct(numer: Column, denom: Column) -> Column:
     """C9: percentage arithmetic used by the stats report
     (reference ``dags/icpe-siretisation.py:352,354``)."""
     return numer / denom * F.lit(100.0)
+
+
+def hash_key(*cols: Column | str) -> Column:
+    """The package's one hash for a join, grouping or bucket key: the
+    64-bit xxhash64 (Spark's fixed seed 42) of ``cols`` as a long, so a
+    shuffle moves and a join compares 8 bytes instead of the values.
+
+    Two distinct values collide with probability 2⁻⁶⁴; over ``n``
+    distinct values the expected number of colliding pairs is
+    n(n−1)/2⁶⁵ ≈ n²/2⁶⁵ — about 0.7 at 5×10⁹ values. Every caller either
+    verifies its candidates on the raw values afterwards (a collision
+    only adds a candidate) or states what a collision would miscount
+    (``docs/SCALE.md`` § Global posture, "Hash keys"). An independently
+    salted second key is ``hash_key(F.lit(salt), ...)``."""
+    return F.xxhash64(*cols)

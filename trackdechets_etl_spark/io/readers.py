@@ -368,18 +368,7 @@ def read_table(
     return df
 
 
-ALL_TABLES = (
-    "region",
-    "nation",
-    "customer",
-    "supplier",
-    "part",
-    "orders",
-    "lineitem",
-    "events",
-    "documents",
-    "embeddings",
-)
+ALL_TABLES = tuple(TABLE_SCHEMAS)
 
 
 def register_views(spark: SparkSession, sf_dir: str) -> None:

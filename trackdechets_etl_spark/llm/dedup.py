@@ -22,10 +22,11 @@ No UDFs anywhere — md5/min/groupBy are all JVM built-ins.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from trackdechets_etl_spark.functions.scalar import hash_key
 from trackdechets_etl_spark.session import materialize
 
 N_MINHASH = 8
@@ -73,54 +74,136 @@ def shingles(df: DataFrame, text_col: str, id_col: str, n: int = 3) -> DataFrame
     return df.select(F.col(id_col), F.explode(F.array_distinct(sh)).alias("shingle"))
 
 
+def shingle_keys(sh: DataFrame, id_col: str) -> DataFrame:
+    """(id, k): each shingle of an (id, shingle) frame replaced by its
+    :func:`hash_key`. Every join, window and count of the keyed-shingle
+    steps below runs on ``k``: the shuffle moves 8-byte keys instead of
+    ~25-byte strings, and the ascending ``k`` order is the global
+    shingle order the prefix filters rely on. A 64-bit collision
+    between two distinct shingles of one doc pair would add one to its
+    overlap count (expected ≈ n²/2⁶⁵ colliding pairs over n distinct
+    shingles)."""
+    return sh.select(F.col(id_col), hash_key("shingle").alias("k"))
+
+
+def shingle_positions(keyed: DataFrame, id_col: str) -> DataFrame:
+    """(id, k, __rn, n_sh): each key's 1-based position in its doc's
+    ascending key order, and the doc's key count. ``n_sh`` is a window
+    count over the SAME partition key as the position ``row_number``,
+    so it rides that window's exchange+sort instead of a separate sizes
+    aggregate joined back (r14 join-free owner counting; interleaved
+    A/B at sf0.1: faster all 4 rounds, best 1.63 → 1.54 s)."""
+    w = Window.partitionBy(id_col).orderBy("k")
+    return keyed.select(
+        id_col,
+        "k",
+        F.row_number().over(w).alias("__rn"),
+        F.count(F.lit(1)).over(Window.partitionBy(id_col)).alias("n_sh"),
+    )
+
+
+def in_prefix(threshold: float) -> Column:
+    """True on the :func:`shingle_positions` rows inside their doc's
+    AllPairs prefix, the first ``n_sh - ceil(t·n_sh) + 1`` positions:
+    two docs with overlap ≥ ceil(t·n_sh) must share a key there. The
+    ``1e-9`` keeps ``ceil`` from rounding an exactly integral ``t·n_sh``
+    UP on its binary representation, which would shorten the prefix and
+    lose pairs."""
+    return (
+        F.col("__rn")
+        <= F.col("n_sh") - F.ceil(F.lit(threshold) * F.col("n_sh") - F.lit(1e-9)) + 1
+    )
+
+
+def _side(pos: DataFrame, id_col: str, side: str) -> DataFrame:
+    """A :func:`shingle_positions` frame as one side of a candidate
+    join: (id_<side>, k, n_<side>, rn_<side>)."""
+    return pos.select(
+        F.col(id_col).alias(f"id_{side}"),
+        "k",
+        F.col("n_sh").alias(f"n_{side}"),
+        F.col("__rn").alias(f"rn_{side}"),
+    )
+
+
+def jaccard_candidates(
+    pref_a: DataFrame,
+    pref_b: DataFrame,
+    id_col: str,
+    threshold: float,
+    keep: Column | None = None,
+) -> DataFrame:
+    """Distinct (id_a, id_b) pairs, ``pref_a`` × ``pref_b`` prefix rows
+    sharing a key (and passing ``keep``), that can still reach Jaccard
+    ≥ threshold: a superset of the true pairs.
+
+    Size ratio: J ≤ min/max. PPJoin positional bound (r13): for a
+    shared key at sorted positions (i, j), overlap(a, b) ≤ 1 +
+    min(n_a − i, n_b − j) holds at the pair's FIRST common key (all
+    other common keys sort after it on both sides), and J ≥ t ⇔
+    overlap ≥ t/(1+t)·(n_a+n_b) — so a true pair always keeps its
+    first-match row and the distinct still sees it (measured 2.75×
+    fewer distinct candidates at sf0.1, 81,635 → 29,633). The ``1e-9``
+    slack on both float bounds keeps them lossless under binary
+    rounding of t."""
+    alpha = F.ceil(
+        F.lit(threshold / (1.0 + threshold)) * (F.col("n_a") + F.col("n_b"))
+        - F.lit(1e-9)
+    )
+    bounds = (
+        F.least("n_a", "n_b")
+        >= F.lit(threshold) * F.greatest("n_a", "n_b") - F.lit(1e-9)
+    ) & (
+        F.lit(1) + F.least(F.col("n_a") - F.col("rn_a"), F.col("n_b") - F.col("rn_b"))
+        >= alpha
+    )
+    return (
+        _side(pref_a, id_col, "a")
+        .join(_side(pref_b, id_col, "b"), "k")
+        .filter(bounds if keep is None else keep & bounds)
+        .select("id_a", "id_b")
+        .distinct()
+    )
+
+
+def overlap_counts(candidates: DataFrame, keyed: DataFrame, id_col: str) -> DataFrame:
+    """(id_a, id_b, n_inter): shared keys per candidate pair, built by
+    expanding the candidate pairs against the keyed frame (two key
+    joins) instead of the full inverted-index self-join — the self-join
+    is O(Σ df²) over key document frequencies, the expansion
+    O(|candidates| × keys/doc). Pairs sharing no key are absent."""
+    a = keyed.select(F.col(id_col).alias("id_a"), "k")
+    b = keyed.select(F.col(id_col).alias("__idb"), F.col("k").alias("__kb"))
+    return (
+        candidates.join(a, "id_a")
+        .join(b, (F.col("id_b") == F.col("__idb")) & (F.col("k") == F.col("__kb")))
+        .groupBy("id_a", "id_b")
+        .agg(F.count(F.lit(1)).alias("n_inter"))
+    )
+
+
 def _pair_jaccard(
-    sh: DataFrame,
+    keyed: DataFrame,
     id_col: str,
     candidates: DataFrame | None = None,
-    keyed: bool = False,
 ) -> DataFrame:
-    """Jaccard for doc pairs from a shingle table; optionally restricted
-    to a candidate-pair frame (id_a, id_b).
-
-    With candidates, the intersection counts are built by expanding the
-    candidate pairs against the shingle table (two key joins) instead of
-    the full inverted-index self-join — the self-join is O(Σ df²) over
-    shingle document-frequencies, the candidate expansion is
-    O(|candidates| × shingles/doc).
-
-    Shingles are re-keyed to ``xxhash64`` longs before any join: the
-    shuffle moves 8-byte keys instead of ~25-byte strings and the join
-    compares longs. Intersection counts are unchanged unless two
-    distinct shingles of the same doc pair collide in 64 bits
-    (p ≈ n²/2^65 — negligible at any realistic shingle count).
-    ``keyed=True`` marks a caller-provided already-xxhash64-keyed
-    shingle frame (so a shared checkpointed frame isn't re-keyed)."""
-    if not keyed:
-        sh = sh.select(F.col(id_col), F.xxhash64("shingle").alias("shingle"))
-    sizes = sh.groupBy(id_col).agg(F.count(F.lit(1)).alias("n_sh"))
-    a = sh.select(F.col(id_col).alias("id_a"), "shingle")
-    b = sh.select(F.col(id_col).alias("id_b"), "shingle")
+    """Jaccard for doc pairs from a :func:`shingle_keys` frame;
+    restricted to a candidate-pair frame (id_a, id_b) when given
+    (:func:`overlap_counts`), else over the full inverted-index
+    self-join — the naive reference the prefix filters are tested
+    against."""
+    sizes = keyed.groupBy(id_col).agg(F.count(F.lit(1)).alias("n_sh"))
     if candidates is None:
+        a = keyed.select(F.col(id_col).alias("id_a"), "k")
+        b = keyed.select(F.col(id_col).alias("id_b"), "k")
         inter = (
-            a.join(b, "shingle")
+            a.join(b, "k")
             .filter(F.col("id_a") < F.col("id_b"))
             .groupBy("id_a", "id_b")
             .agg(F.count(F.lit(1)).alias("n_inter"))
         )
     else:
-        b2 = sh.select(
-            F.col(id_col).alias("__idb"), F.col("shingle").alias("__shb")
-        )
-        inter = (
-            candidates.join(a, "id_a")
-            .join(
-                b2,
-                (F.col("id_b") == F.col("__idb"))
-                & (F.col("shingle") == F.col("__shb")),
-            )
-            .groupBy("id_a", "id_b")
-            .agg(F.count(F.lit(1)).alias("n_inter"))
-        )
+        inter = overlap_counts(candidates, keyed, id_col)
     sa = sizes.select(F.col(id_col).alias("id_a"), F.col("n_sh").alias("n_a"))
     sb = sizes.select(F.col(id_col).alias("id_b"), F.col("n_sh").alias("n_b"))
     return (
@@ -150,7 +233,7 @@ def ngram_jaccard_pairs(
 
     ``prefix_filter=True`` enables AllPairs/PPJoin-style prefix
     filtering: under any global total order on shingles (here: their
-    xxhash64 value), two docs with J ≥ t MUST share a shingle within
+    :func:`hash_key` value), two docs with J ≥ t MUST share a shingle within
     each one's first ``|d| - ceil(t*|d|) + 1`` shingles. Only those
     prefixes enter the inverted-index self-join, shrinking it by
     ~(1-t)² (25× at t=0.8); a size-ratio filter (min/max ≥ t, another
@@ -173,7 +256,9 @@ def ngram_jaccard_pairs(
             .drop("df")
         )
     if not prefix_filter:
-        return _pair_jaccard(sh, id_col).filter(F.col("jaccard") >= threshold)
+        return _pair_jaccard(shingle_keys(sh, id_col), id_col).filter(
+            F.col("jaccard") >= threshold
+        )
 
     # One keyed shingle frame feeds FOUR consumers (sizes, the prefix
     # window, and both sides of the verification join); checkpoint it
@@ -182,81 +267,14 @@ def ngram_jaccard_pairs(
     # jobs otherwise race the lazy materialization and re-execute the
     # lineage (r6 A/B at sf0.1: eager 2.00s vs lazy 2.40s; the r5
     # lazy-wins measurement only holds for the tiny-frame CC loop).
-    keyed = materialize(
-        sh.select(F.col(id_col), F.xxhash64("shingle").alias("k"))
+    keyed = materialize(shingle_keys(sh, id_col))
+    pref = shingle_positions(keyed, id_col).filter(in_prefix(threshold))
+    candidates = jaccard_candidates(
+        pref, pref, id_col, threshold, keep=F.col("id_a") < F.col("id_b")
     )
-    w = Window.partitionBy(id_col).orderBy("k")
-    # prefix length |d| - ceil(t*|d|) + 1; the 1e-9 keeps ceil from
-    # rounding an exactly-integral t*|d| UP on its binary representation
-    # (which would shorten the prefix and break the no-loss guarantee).
-    # n_sh is a window count over the SAME partition key as the prefix
-    # row_number, so it rides that window's exchange+sort — the
-    # separate sizes aggregate and its join back onto the window frame
-    # are gone (r14 join-free owner counting; interleaved A/B at
-    # sf0.1: faster all 4 rounds, best 1.63 → 1.54 s, exact output).
-    pref = (
-        keyed.select(
-            id_col,
-            "k",
-            F.row_number().over(w).alias("__rn"),
-            F.count(F.lit(1)).over(Window.partitionBy(id_col)).alias("n_sh"),
-        )
-        .filter(
-            F.col("__rn")
-            <= F.col("n_sh")
-            - F.ceil(F.lit(threshold) * F.col("n_sh") - F.lit(1e-9))
-            + 1
-        )
+    return _pair_jaccard(keyed, id_col, candidates).filter(
+        F.col("jaccard") >= threshold
     )
-    a = pref.select(
-        F.col(id_col).alias("id_a"),
-        "k",
-        F.col("n_sh").alias("n_a"),
-        F.col("__rn").alias("rn_a"),
-    )
-    b = pref.select(
-        F.col(id_col).alias("id_b"),
-        "k",
-        F.col("n_sh").alias("n_b"),
-        F.col("__rn").alias("rn_b"),
-    )
-    # PPJoin positional filter (r13): for a shared shingle at sorted
-    # positions (i, j), overlap(a, b) ≤ 1 + min(n_a − i, n_b − j) holds
-    # at the pair's FIRST common shingle (all other common shingles
-    # sort after it on both sides), and J ≥ t ⇔ overlap ≥
-    # t/(1+t)·(n_a+n_b) — so a true pair always keeps its first-match
-    # row and the distinct below still sees it: exact output, measured
-    # 2.75× fewer distinct candidates at sf0.1 (81,635 → 29,633)
-    # entering the verification expansion.
-    alpha = F.ceil(
-        F.lit(threshold / (1.0 + threshold))
-        * (F.col("n_a") + F.col("n_b"))
-        - F.lit(1e-9)
-    )
-    candidates = (
-        a.join(b, "k")
-        .filter(
-            (F.col("id_a") < F.col("id_b"))
-            # size-ratio necessary condition: J ≤ min/max
-            & (
-                F.least("n_a", "n_b")
-                >= F.lit(threshold) * F.greatest("n_a", "n_b") - F.lit(1e-9)
-            )
-            & (
-                F.lit(1)
-                + F.least(
-                    F.col("n_a") - F.col("rn_a"),
-                    F.col("n_b") - F.col("rn_b"),
-                )
-                >= alpha
-            )
-        )
-        .select("id_a", "id_b")
-        .distinct()
-    )
-    return _pair_jaccard(
-        keyed.withColumnRenamed("k", "shingle"), id_col, candidates, keyed=True
-    ).filter(F.col("jaccard") >= threshold)
 
 
 def minhash_signatures(sh: DataFrame, id_col: str, n_hashes: int = N_MINHASH) -> DataFrame:
@@ -294,7 +312,9 @@ def minhash_lsh_pairs(
     # sf0.1 1.43s → 1.27s, pair set unchanged.
     sh = materialize(shingles(df, text_col, id_col, n), eager=False)
     candidates = minhash_candidates(sh, id_col)
-    return _pair_jaccard(sh, id_col, candidates).filter(F.col("jaccard") >= threshold)
+    return _pair_jaccard(shingle_keys(sh, id_col), id_col, candidates).filter(
+        F.col("jaccard") >= threshold
+    )
 
 
 def minhash_candidates(sh: DataFrame, id_col: str) -> DataFrame:
@@ -392,38 +412,12 @@ def containment_pairs(
     pair's first common shingle) prune candidates further.
     EXACT output: the DuckDB oracle is the naive inverted-index join,
     and fast == naive is pinned in tests/test_llm.py."""
-    sh = shingles(df, text_col, id_col, n)
     keyed = materialize(
-        sh.select(F.col(id_col), F.xxhash64("shingle").alias("k")),
-        eager=False,
+        shingle_keys(shingles(df, text_col, id_col, n), id_col), eager=False
     )
     sizes = keyed.groupBy(id_col).agg(F.count(F.lit(1)).alias("n_sh"))
-    a_full = keyed.select(F.col(id_col).alias("id_a"), "k")
-    b_full = keyed.select(F.col(id_col).alias("id_b"), "k")
     if prefix_filter:
-        w = Window.partitionBy(id_col).orderBy("k")
-        # n_sh as a window count over the same partition key rides the
-        # prefix window's exchange+sort — the sizes join onto the full
-        # position frame is gone (sizes itself stays: the containment
-        # denominator below still needs it). r14 join-free owner
-        # counting, same proof as ngram_jaccard_pairs.
-        pos = keyed.select(
-            id_col,
-            "k",
-            F.row_number().over(w).alias("__rn"),
-            F.count(F.lit(1)).over(Window.partitionBy(id_col)).alias("n_sh"),
-        )
-        a_cand = pos.filter(
-            F.col("__rn")
-            <= F.col("n_sh")
-            - F.ceil(F.lit(threshold) * F.col("n_sh") - F.lit(1e-9))
-            + 1
-        ).select(
-            F.col(id_col).alias("id_a"),
-            "k",
-            F.col("n_sh").alias("n_a"),
-            F.col("__rn").alias("rn_a"),
-        )
+        pos = shingle_positions(keyed, id_col)
         # The host side stays fully indexed but carries its sorted
         # position too: the r13 PPJoin positional bound adapts to
         # containment. The pair's first common key is the MINIMUM
@@ -432,15 +426,10 @@ def containment_pairs(
         # C ≥ t needs overlap ≥ ceil(t·n_a), so a true pair always
         # keeps its first-match row and the distinct still sees it —
         # exact output preserved.
-        b_cand = pos.select(
-            F.col(id_col).alias("id_b"),
-            "k",
-            F.col("n_sh").alias("n_b"),
-            F.col("__rn").alias("rn_b"),
-        )
         need = F.ceil(F.lit(threshold) * F.col("n_a") - F.lit(1e-9))
         candidates = (
-            a_cand.join(b_cand, "k")
+            _side(pos.filter(in_prefix(threshold)), id_col, "a")
+            .join(_side(pos, id_col, "b"), "k")
             .filter(
                 (F.col("id_a") != F.col("id_b"))
                 # size necessary condition: C ≤ |B|/|A|
@@ -458,21 +447,15 @@ def containment_pairs(
             .distinct()
         )
     else:
+        a = keyed.select(F.col(id_col).alias("id_a"), "k")
+        b = keyed.select(F.col(id_col).alias("id_b"), "k")
         candidates = (
-            a_full.join(b_full, "k")
+            a.join(b, "k")
             .filter(F.col("id_a") != F.col("id_b"))
             .select("id_a", "id_b")
             .distinct()
         )
-    inter = (
-        candidates.join(a_full, "id_a")
-        .join(
-            b_full.select(F.col("id_b").alias("__idb"), F.col("k").alias("__kb")),
-            (F.col("id_b") == F.col("__idb")) & (F.col("k") == F.col("__kb")),
-        )
-        .groupBy("id_a", "id_b")
-        .agg(F.count(F.lit(1)).alias("n_inter"))
-    )
+    inter = overlap_counts(candidates, keyed, id_col)
     return (
         inter.join(sizes.select(F.col(id_col).alias("id_a"), "n_sh"), "id_a")
         .select(

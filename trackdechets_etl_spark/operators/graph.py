@@ -25,6 +25,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from trackdechets_etl_spark.functions.scalar import hash_key
 from trackdechets_etl_spark.session import materialize
 
 # Below this many (symmetrized, distinct) edges, label via driver-side
@@ -126,7 +127,7 @@ def connected_components(
     # Convergence signature must work for ANY orderable node-id type
     # (plain F.sum("label") breaks on string ids): labels only ever
     # decrease, so "converged" is exactly "label multiset unchanged",
-    # which the sum of per-row xxhash64 detects for any type. The sums
+    # which the sum of per-row hash_key detects for any type. The sums
     # accumulate in decimal(38,0) — full-range int64 hashes would
     # overflow an ANSI long sum. This check is PROBABILISTIC (unlike
     # the numeric-label sum it replaced, which was provably sound for
@@ -135,8 +136,8 @@ def connected_components(
     # in the SAME aggregation (no extra job) push the per-round
     # collision odds to ~2^-128 — below any hardware error rate.
     def _label_sig(frame: DataFrame):
-        h = F.xxhash64(F.col("label").cast("string"))
-        h2 = F.xxhash64(F.lit(0x9E3779B9), F.col("label").cast("string"))
+        h = hash_key(F.col("label").cast("string"))
+        h2 = hash_key(F.lit(0x9E3779B9), F.col("label").cast("string"))
         return tuple(
             frame.agg(
                 F.sum(h.cast("decimal(38,0)")),

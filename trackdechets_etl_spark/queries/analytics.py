@@ -15,6 +15,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from trackdechets_etl_spark.functions.scalar import hash_key
 from trackdechets_etl_spark.io.readers import read_table, table_bytes
 from trackdechets_etl_spark.queries import QuerySpec
 
@@ -661,7 +662,7 @@ def _join_fuzzy_name(spark: SparkSession, sf_dir: str) -> DataFrame:
         "c_custkey",
         "c_name",
         F.explode(F.sequence(F.lit(1), F.length("c_name"))).alias("pos"),
-    ).select("c_custkey", "c_name", F.xxhash64(masked).alias("k"))
+    ).select("c_custkey", "c_name", hash_key(masked).alias("k"))
     a = keyed.filter(F.col("c_custkey") < FUZZY_LEFT_MAX).select(
         F.col("c_custkey").alias("id_a"), F.col("c_name").alias("name_a"), "k"
     )

@@ -29,14 +29,12 @@ from trackdechets_etl_spark.queries import QuerySpec
 def _text_ngram_novelty(spark: SparkSession, sf_dir: str) -> DataFrame:
     """First-occurrence doc per shingle is one min-aggregation of the
     (doc, shingle) frame; novelty joins it back on the shingle key —
-    both sides shuffle on the 8-byte xxhash64 shingle key, never the
-    text. Output per doc: distinct shingles, novel count, ratio."""
-    from trackdechets_etl_spark.llm.dedup import shingles
+    both sides shuffle on the 8-byte shingle key, never the text.
+    Output per doc: distinct shingles, novel count, ratio."""
+    from trackdechets_etl_spark.llm.dedup import shingle_keys, shingles
 
     d = read_table(spark, sf_dir, "documents")
-    sh = shingles(d, "text", "doc_id").select(
-        "doc_id", F.xxhash64("shingle").alias("k")
-    )
+    sh = shingle_keys(shingles(d, "text", "doc_id"), "doc_id")
     first = sh.groupBy("k").agg(F.min("doc_id").alias("first_doc"))
     per_doc = (
         sh.join(first, "k")

@@ -35,6 +35,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from trackdechets_etl_spark.functions.scalar import hash_key
 from trackdechets_etl_spark.io.readers import read_table
 from trackdechets_etl_spark.queries import QuerySpec
 
@@ -211,7 +212,7 @@ def _join_bloom_prefilter(spark: SparkSession, sf_dir: str) -> DataFrame:
     # probe side indexes by position instead of searching.
     words = (
         keys.select(
-            F.pmod(F.xxhash64("p_partkey"), F.lit(_BLOOM_BITS)).alias("b")
+            F.pmod(hash_key("p_partkey"), F.lit(_BLOOM_BITS)).alias("b")
         )
         .select(
             F.expr("int(b div 64)").alias("w"),
@@ -234,7 +235,7 @@ def _join_bloom_prefilter(spark: SparkSession, sf_dir: str) -> DataFrame:
     prefiltered = (
         li.crossJoin(F.broadcast(bitmap))
         .withColumn(
-            "_b", F.pmod(F.xxhash64("l_partkey"), F.lit(_BLOOM_BITS))
+            "_b", F.pmod(hash_key("l_partkey"), F.lit(_BLOOM_BITS))
         )
         .filter(
             F.expr(

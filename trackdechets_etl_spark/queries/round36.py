@@ -90,6 +90,7 @@ def _dedup_minhash_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
         _pair_jaccard,
         minhash_candidates,
         minhash_signatures,
+        shingle_keys,
         shingles,
     )
 
@@ -114,7 +115,9 @@ def _dedup_minhash_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
         .join(sb, "id_b")
         .select("id_a", "id_b", matches.alias("n_match"))
     )
-    exact = _pair_jaccard(sh, "doc_id", cand).select("id_a", "id_b", "jaccard")
+    exact = _pair_jaccard(shingle_keys(sh, "doc_id"), "doc_id", cand).select(
+        "id_a", "id_b", "jaccard"
+    )
     pairs = est.join(exact, ["id_a", "id_b"], "left").select(
         "n_match",
         F.coalesce(F.col("jaccard"), F.lit(0.0)).alias("jac"),

@@ -41,6 +41,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from trackdechets_etl_spark.functions.scalar import hash_key
 from trackdechets_etl_spark.io.readers import read_table
 from trackdechets_etl_spark.queries import QuerySpec
 
@@ -201,7 +202,7 @@ def _linkage_edit_distance_join(
     # posexplode over a length-sized index array stays JVM-side.
     # array_union is a set op, so (cid, k) pairs are unique by
     # construction — no dedup exchange needed before the join. The
-    # join key is xxhash64(k) (8-byte shuffle/compare instead of the
+    # join key is hash_key(k) (8-byte shuffle/compare instead of the
     # full name-length string; join+count 2.99s → 1.31s at sf0.1); a
     # hash collision can only ADD a candidate pair, and the exact
     # levenshtein verification filter removes it, so the result set is
@@ -228,7 +229,7 @@ def _linkage_edit_distance_join(
                 ),
             )
         ).alias("k"),
-    ).select("cid", "name", F.xxhash64("k").alias("hk"))
+    ).select("cid", "name", hash_key("k").alias("hk"))
     if max_block is not None:
         from pyspark.sql import Window
 

@@ -497,7 +497,14 @@ def _dedup_incremental_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
     not the corpus, which is what makes continuous dedup affordable at
     100 TB (the full self-join variants are the backfill path). Here
     the batch is ``doc_id % {mod} == 0``.""".format(mod=_INCR_MOD)
-    from trackdechets_etl_spark.llm.dedup import _pair_jaccard, shingles
+    from trackdechets_etl_spark.llm.dedup import (
+        _pair_jaccard,
+        in_prefix,
+        jaccard_candidates,
+        shingle_keys,
+        shingle_positions,
+        shingles,
+    )
     from trackdechets_etl_spark.queries.llm import JACCARD_THRESHOLD
 
     d = read_table(spark, sf_dir, "documents")
@@ -513,88 +520,24 @@ def _dedup_incremental_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
         .withColumn("__exact", F.lit(1))
     )
 
-    # r13 (verdict ask #4): the batch×corpus candidate join now runs
-    # on AllPairs PREFIX shingles with the size-ratio prune, exactly
-    # like ngram_jaccard_pairs — under the xxhash64 total order, two
-    # docs with J ≥ t must share a shingle within each one's first
-    # |d| − ceil(t·|d|) + 1 shingles, and the theorem doesn't care
-    # that one side is the batch and the other the corpus, so the
-    # result set is provably unchanged while the inverted-index join
-    # shrinks ~(1−t)² on both sides. One keyed shingle frame feeds
-    # three consumers (prefix window, both verification joins) —
-    # eager checkpoint per the measured many-consumer rule.
-    keyed = materialize(
-        shingles(d, "text", "doc_id", 3)
-        .select("doc_id", F.xxhash64("shingle").alias("k"))
-    )
-    wp = Window.partitionBy("doc_id").orderBy("k")
-    # n_sh as a window count over the same partition key rides the
-    # prefix window's exchange+sort; the sizes aggregate and its join
-    # are gone (r14 join-free owner counting, same proof as
-    # ngram_jaccard_pairs).
-    pref = (
-        keyed.select(
-            "doc_id",
-            "k",
-            F.row_number().over(wp).alias("__rn"),
-            F.count(F.lit(1)).over(Window.partitionBy("doc_id")).alias("n_sh"),
-        )
-        .filter(
-            F.col("__rn")
-            <= F.col("n_sh")
-            - F.ceil(
-                F.lit(JACCARD_THRESHOLD) * F.col("n_sh") - F.lit(1e-9)
-            )
-            + 1
-        )
-    )
-    pa = pref.filter(F.col("doc_id") % _INCR_MOD == 0).select(
-        F.col("doc_id").alias("id_a"),
-        "k",
-        F.col("n_sh").alias("n_a"),
-        F.col("__rn").alias("rn_a"),
-    )
-    pb = pref.filter(F.col("doc_id") % _INCR_MOD != 0).select(
-        F.col("doc_id").alias("id_b"),
-        "k",
-        F.col("n_sh").alias("n_b"),
-        F.col("__rn").alias("rn_b"),
-    )
-    # PPJoin positional bound, same proof as ngram_jaccard_pairs
-    # (llm/dedup.py): the true pair's FIRST common shingle always
-    # satisfies it, so the distinct below still sees every J ≥ t pair.
-    alpha = F.ceil(
-        F.lit(JACCARD_THRESHOLD / (1.0 + JACCARD_THRESHOLD))
-        * (F.col("n_a") + F.col("n_b"))
-        - F.lit(1e-9)
-    )
-    candidates = (
-        pa.join(pb, "k")
-        .filter(
-            (
-                F.least("n_a", "n_b")
-                >= F.lit(JACCARD_THRESHOLD) * F.greatest("n_a", "n_b")
-                - F.lit(1e-9)
-            )
-            & (
-                F.lit(1)
-                + F.least(
-                    F.col("n_a") - F.col("rn_a"),
-                    F.col("n_b") - F.col("rn_b"),
-                )
-                >= alpha
-            )
-        )
-        .select("id_a", "id_b")
-        .distinct()
+    # The batch×corpus candidate join runs on AllPairs PREFIX shingles
+    # with the size-ratio and PPJoin prunes, exactly like
+    # ngram_jaccard_pairs: the prefix theorem doesn't care that one
+    # side is the batch and the other the corpus, so the result set is
+    # provably unchanged while the inverted-index join shrinks ~(1−t)²
+    # on both sides. One keyed shingle frame feeds three consumers
+    # (prefix window, both verification joins) — eager materialize per
+    # the measured many-consumer rule.
+    keyed = materialize(shingle_keys(shingles(d, "text", "doc_id", 3), "doc_id"))
+    pref = shingle_positions(keyed, "doc_id").filter(in_prefix(JACCARD_THRESHOLD))
+    candidates = jaccard_candidates(
+        pref.filter(is_new),
+        pref.filter(~is_new),
+        "doc_id",
+        JACCARD_THRESHOLD,
     )
     near = (
-        _pair_jaccard(
-            keyed.withColumnRenamed("k", "shingle"),
-            "doc_id",
-            candidates,
-            keyed=True,
-        )
+        _pair_jaccard(keyed, "doc_id", candidates)
         .filter(F.col("jaccard") >= JACCARD_THRESHOLD)
         .groupBy("id_a")
         .agg(F.count(F.lit(1)).alias("n_near"))

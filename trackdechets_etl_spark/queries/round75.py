@@ -23,6 +23,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from trackdechets_etl_spark.functions.scalar import hash_key
 from trackdechets_etl_spark.io.readers import read_table
 from trackdechets_etl_spark.llm.dedup import simhash_pairs
 from trackdechets_etl_spark.queries import QuerySpec
@@ -32,7 +33,7 @@ from trackdechets_etl_spark.session import materialize
 def _gram_counts(d: DataFrame) -> DataFrame:
     """(doc_id, n, g, c): token 1-gram and 2-gram multiset counts.
 
-    ``g`` is the 8-byte ``xxhash64(n, gram)`` key, not the gram string
+    ``g`` is the 8-byte ``hash_key(n, gram)`` key, not the gram string
     (r15; guide §2.3 "narrower types"): the gram text itself is never
     emitted — it only ever serves as a grouping/join key in the clip
     and count frames — so the count aggregation and the (pair, gram)
@@ -65,7 +66,7 @@ def _gram_counts(d: DataFrame) -> DataFrame:
     )
     return (
         uni.unionByName(bi)
-        .select("doc_id", "n", F.xxhash64("n", "g").alias("g"))
+        .select("doc_id", "n", hash_key("n", "g").alias("g"))
         .groupBy("doc_id", "n", "g")
         .agg(F.count(F.lit(1)).cast("long").alias("c"))
     )

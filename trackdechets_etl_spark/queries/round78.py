@@ -23,7 +23,7 @@ float algebra mirrored verbatim in the DuckDB twin).
   plain Jaccard (dedup_ngram_jaccard) and containment
   (dedup_containment_pairs). Candidates from the linear bucket join;
   intersections from (pair, shingle-key) equi-joins — never all
-  pairs; 8-byte xxhash64 shingle keys on the engine side (the
+  pairs; 8-byte ``hash_key`` shingle keys on the engine side (the
   containment_pairs contract: 64-bit collisions are ~2⁻⁴⁰ on fixture
   vocabularies and the 3-SF oracle gate would surface one).
 - ``sim_map_eval``: precision@5 and MAP@5 of the LSH-bucket ANN
@@ -230,7 +230,12 @@ _TV_B = 0.2
 
 
 def _text_dice_tversky(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from trackdechets_etl_spark.llm.dedup import shingles, simhash_pairs
+    from trackdechets_etl_spark.llm.dedup import (
+        overlap_counts,
+        shingle_keys,
+        shingles,
+        simhash_pairs,
+    )
 
     d = read_table(spark, sf_dir, "documents")
     # pairs has TWO consumers (the inter join and the final j frame) —
@@ -244,20 +249,11 @@ def _text_dice_tversky(spark: SparkSession, sf_dir: str) -> DataFrame:
         simhash_pairs(d, "text", "doc_id")
         .select("id_a", "id_b")
     )
-    sh = shingles(d, "text", "doc_id").select(
-        "doc_id", F.xxhash64("shingle").alias("k")
-    )
+    sh = shingle_keys(shingles(d, "text", "doc_id"), "doc_id")
     sizes = sh.groupBy("doc_id").agg(
         F.count(F.lit(1)).cast("long").alias("n_sh")
     )
-    sa = sh.select(F.col("doc_id").alias("id_a"), "k")
-    sb = sh.select(F.col("doc_id").alias("id_b"), "k")
-    inter = (
-        pairs.join(sa, "id_a")
-        .join(sb, ["id_b", "k"])
-        .groupBy("id_a", "id_b")
-        .agg(F.count(F.lit(1)).cast("long").alias("n_inter"))
-    )
+    inter = overlap_counts(pairs, sh, "doc_id")
     za = sizes.select(
         F.col("doc_id").alias("id_a"), F.col("n_sh").alias("n_a")
     )

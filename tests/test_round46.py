@@ -8,7 +8,7 @@ from pyspark.sql import functions as F
 
 from trackdechets_etl_spark.io.readers import read_table
 from trackdechets_etl_spark.queries import all_queries
-from tests.conftest import SF_DIR
+from tests.conftest import SF_DIR, write_corpus_table
 
 
 def _q(name):
@@ -61,3 +61,40 @@ def test_kcore_trajectory_monotone_and_valid(spark):
     # converged by the last round on this fixture
     assert rows[-1].n_nodes == rows[-2].n_nodes
     assert rows[-1].n_edges == rows[-2].n_edges
+
+
+def test_kcore_emits_every_round_after_the_graph_empties(spark, tmp_path):
+    """Customer 1 buys from suppliers 1..12; each supplier also sells to
+    11 customers of its own. Round 1 keeps customer 1 and the 12
+    suppliers (degree 12 each) and their 24 directed edges; round 2
+    keeps customer 1 alone and no edge; rounds 3-5 peel nothing left.
+    A round whose graph is empty still has its row, all zeros."""
+    import duckdb
+
+    from trackdechets_etl_spark.queries.round46 import _KCORE_K, _KCORE_ROUNDS
+
+    pairs = [(1, s) for s in range(1, _KCORE_K + 1)] + [
+        (100 + 20 * s + j, s)
+        for s in range(1, _KCORE_K + 1)
+        for j in range(1, _KCORE_K)
+    ]
+    # One order per (customer, supplier) pair, one line per order.
+    orders = spark.createDataFrame(
+        [(i, c) for i, (c, _) in enumerate(pairs)], "o_orderkey long, o_custkey long"
+    )
+    lines = spark.createDataFrame(
+        [(i, s) for i, (_, s) in enumerate(pairs)], "l_orderkey long, l_suppkey long"
+    )
+    write_corpus_table(orders.coalesce(1), tmp_path, "orders")
+    write_corpus_table(lines.coalesce(1), tmp_path, "lineitem")
+
+    spec = all_queries()["graph_kcore_peel"]
+    rows = [tuple(r) for r in spec.fn(spark, str(tmp_path)).collect()]
+    want = [(1, 13, 24), (2, 1, 0)] + [(r, 0, 0) for r in range(3, _KCORE_ROUNDS + 1)]
+    assert rows == want
+
+    con = duckdb.connect()
+    for t in ("orders", "lineitem"):
+        con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{tmp_path}/{t}.parquet/*.parquet'")
+    assert [tuple(r) for r in con.execute(spec.oracle).fetchall()] == want
+    con.close()

@@ -1,6 +1,7 @@
 """``session.materialize``: a local checkpoint on ``local[...]``, a reliable
 checkpoint anywhere else, so a result survives the loss of the executor
-that computed it."""
+that computed it, and is deleted once its frame is collected. Also the
+session's generated-class cache, which a warm round must not outgrow."""
 
 from __future__ import annotations
 
@@ -11,6 +12,7 @@ from pathlib import Path
 
 import pytest
 
+from trackdechets_etl_spark.queries import all_queries
 from trackdechets_etl_spark.session import is_local_master
 from tests.conftest import SF_DIR
 
@@ -28,6 +30,33 @@ def test_local_masters_are_local(master):
 )
 def test_cluster_masters_are_not_local(master):
     assert not is_local_master(master)
+
+
+def test_warm_round_reuses_generated_classes(spark):
+    """The two iterative queries use more generated classes than Spark's
+    default 100-entry cache holds, so at that size each round evicted
+    the classes the next one needed and compiled about 90 of them
+    again. With the session's cache a second round reuses them. AQE
+    does not plan every stage the same way each time (another
+    codegenStageId, which is part of the generated source, or a
+    nullable input column), and each variant is its own class, so a
+    warm round may still compile a few (0-10 measured)."""
+    compiles = (
+        spark.sparkContext._jvm.org.apache.spark.metrics.source.CodegenMetrics
+        .METRIC_COMPILATION_TIME()
+    )
+    queries = all_queries()
+
+    def one_round():
+        for name in ("graph_pagerank", "graph_kcore_peel"):
+            df = queries[name].fn(spark, SF_DIR)
+            df.write.format("noop").mode("overwrite").save()
+
+    one_round()
+    before = compiles.getCount()
+    one_round()
+    again = compiles.getCount() - before
+    assert again < 20, f"the second round compiled {again} classes again"
 
 
 # Runs in its own process so the session-scoped local[...] fixture is
@@ -132,3 +161,59 @@ def test_pagerank_survives_a_lost_executor_on_local_cluster(tmp_path):
     assert "MATCH" in proc.stdout
     # The reliable checkpoint wrote its files under spark.checkpoint.dir.
     assert any((tmp_path / "ckpt").rglob("part-*"))
+
+
+# Runs in its own process like the kill test. Materializes a frame on
+# local-cluster (a reliable checkpoint), drops the only Python reference,
+# and asks the driver JVM to collect garbage until the checkpoint's
+# rdd-* directory is gone or the deadline passes.
+_CHECKPOINT_IS_DELETED = r"""
+import gc, sys, time
+from pathlib import Path
+
+from trackdechets_etl_spark.session import get_spark, materialize
+
+ckpt_dir = Path(sys.argv[1])
+spark = get_spark(
+    app_name="checkpoint_cleanup",
+    master="local-cluster[2,1,1024]",
+    shuffle_partitions=4,
+    extra_conf={"spark.checkpoint.dir": str(ckpt_dir)},
+)
+df = materialize(spark.range(1000).selectExpr("id", "id * 2 AS x"))
+if df.count() != 1000:
+    sys.exit("materialized frame lost rows")
+written = list(ckpt_dir.rglob("rdd-*"))
+if len(written) != 1:
+    sys.exit(f"expected one checkpoint directory, found {written}")
+del df
+gc.collect()
+deadline = time.time() + 60
+while written[0].exists():
+    if time.time() > deadline:
+        spark.stop()
+        sys.exit(f"{written[0]} still exists after the frame was collected")
+    spark.sparkContext._jvm.System.gc()
+    time.sleep(0.5)
+spark.stop()
+print("DELETED")
+"""
+
+
+@pytest.mark.slow
+def test_reliable_checkpoint_deleted_once_frame_is_collected(tmp_path):
+    env = {
+        **os.environ,
+        "PYTHONPATH": str(REPO),
+        "SPARK_GRAFT_DRIVER_MEM": "1g",
+    }
+    proc = subprocess.run(
+        [sys.executable, "-c", _CHECKPOINT_IS_DELETED, str(tmp_path / "ckpt")],
+        cwd=tmp_path,
+        env=env,
+        capture_output=True,
+        text=True,
+        timeout=300,
+    )
+    assert proc.returncode == 0, proc.stderr[-4000:]
+    assert "DELETED" in proc.stdout

@@ -223,11 +223,13 @@ def pagerank(
     pipeline needs (e.g. ranking canonical docs inside a near-dup
     cluster by link mass).
 
-    Fixed ``iterations`` (not convergence-tested) keeps the result
-    deterministic and oracle-checkable: the DuckDB twin unrolls the same
-    K steps as chained CTEs. Per iteration: one join (edge src →
-    current rank), one groupBy(dst) sum — a single shuffle, the same
-    budget as one connected-components round. Out-degrees are computed
+    Fixed ``iterations`` (at least 1; not convergence-tested) keeps the
+    result deterministic and oracle-checkable: the DuckDB twin unrolls
+    the same K steps as chained CTEs. Per iteration: one join (edge src
+    → current rank), one groupBy(dst) sum — a single shuffle, the same
+    budget as one connected-components round. The first iteration skips
+    the join: every starting rank is ``1/n``, so its contributions are
+    ``lit(1/n) / out_deg`` straight off the edges. Out-degrees are computed
     once and pre-joined onto the edges, so the loop body never
     recomputes them. ``materialize`` truncates the growing lineage
     every second round (same discipline as :func:`connected_components`).
@@ -237,6 +239,8 @@ def pagerank(
     """
     from pyspark.sql import Window
 
+    if iterations < 1:
+        raise ValueError(f"pagerank needs at least 1 iteration, got {iterations}")
     e = edges.select(F.col(src).alias("src"), F.col(dst).alias("dst"))
     # Degree via a src-partitioned window instead of groupBy+join-back:
     # one exchange annotates every edge in place (the agg+join form
@@ -246,20 +250,25 @@ def pagerank(
     e_deg = materialize(
         e.withColumn("out_deg", F.count(F.lit(1)).over(Window.partitionBy("src")))
     )
-    deg = e_deg.select("src", "out_deg").distinct()
-    n_nodes = deg.count()
+    n_nodes = e_deg.select("src", "out_deg").distinct().count()
     base = (1.0 - damping) / n_nodes
-    ranks = deg.select(F.col("src").alias("node"), F.lit(1.0 / n_nodes).alias("rank"))
+    # Iteration 0 needs no join: every starting rank is 1/n. It is the
+    # same double division as the join form below, so the values are
+    # bit-identical.
+    contribs = e_deg.select(
+        "dst", (F.lit(1.0 / n_nodes) / F.col("out_deg")).alias("c")
+    )
     for i in range(iterations):
-        # ranks is nodes-sized (≪ edges) but GROWS with the graph, so
-        # no broadcast hint: AQE broadcasts it while it fits (keeping
-        # the edge table from shuffling inside the loop) and falls
-        # back to a shuffle join on src when the node set outgrows the
-        # threshold — a forced hint would instead crash the loop at
-        # cluster scale.
-        contribs = e_deg.join(
-            ranks.withColumnRenamed("node", "src"), "src"
-        ).select("dst", (F.col("rank") / F.col("out_deg")).alias("c"))
+        if i > 0:
+            # ranks is nodes-sized (≪ edges) but GROWS with the graph,
+            # so no broadcast hint: AQE broadcasts it while it fits
+            # (keeping the edge table from shuffling inside the loop)
+            # and falls back to a shuffle join on src when the node set
+            # outgrows the threshold — a forced hint would instead
+            # crash the loop at cluster scale.
+            contribs = e_deg.join(
+                ranks.withColumnRenamed("node", "src"), "src"
+            ).select("dst", (F.col("rank") / F.col("out_deg")).alias("c"))
         ranks = (
             contribs.groupBy("dst")
             .agg((F.lit(base) + F.lit(damping) * F.sum("c")).alias("rank"))

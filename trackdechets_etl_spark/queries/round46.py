@@ -181,7 +181,13 @@ def _graph_kcore_peel(spark: SparkSession, sf_dir: str) -> DataFrame:
         ),
         eager=False,
     )
-    summaries = []
+    # One (round, n_nodes, n_edges) row per round from one aggregate:
+    # each kept node adds (round, 1, 0), each kept edge (round, 0, 1),
+    # and a (round, 0, 0) row per round keeps a round that peeled
+    # everything in the output.
+    tagged = spark.range(1, _KCORE_ROUNDS + 1).select(
+        F.col("id").alias("round"), F.lit(0).alias("node"), F.lit(0).alias("edge")
+    )
     for rnd in range(1, _KCORE_ROUNDS + 1):
         keep = materialize(
             edges.groupBy("src")
@@ -190,25 +196,27 @@ def _graph_kcore_peel(spark: SparkSession, sf_dir: str) -> DataFrame:
             .select(F.col("src").alias("node")),
             eager=False,
         )
+        # The two semi-joins read one broadcast of keep (the second is a
+        # ReusedExchange): a round is four jobs, the degree shuffle, the
+        # edge and keep shuffles AQE plans before it sees keep's size,
+        # and that broadcast.
         edges = materialize(
             edges.join(keep.select(F.col("node").alias("src")), "src", "left_semi")
             .join(keep.select(F.col("node").alias("dst")), "dst", "left_semi"),
             eager=False,
         )
-        summaries.append(
-            keep.agg(
-                F.lit(rnd).cast("long").alias("round"),
-                F.count(F.lit(1)).cast("long").alias("n_nodes"),
-            ).crossJoin(
-                F.broadcast(
-                    edges.agg(F.count(F.lit(1)).cast("long").alias("n_edges"))
-                )
-            )
-        )
-    out = summaries[0]
-    for s in summaries[1:]:
-        out = out.unionByName(s)
-    return out.orderBy("round")
+        r = F.lit(rnd).cast("long").alias("round")
+        tagged = tagged.unionByName(
+            keep.select(r, F.lit(1).alias("node"), F.lit(0).alias("edge"))
+        ).unionByName(edges.select(r, F.lit(0).alias("node"), F.lit(1).alias("edge")))
+    # _KCORE_ROUNDS rows: sorted in one partition, without the sampling
+    # job and range shuffle of a global orderBy.
+    return (
+        tagged.groupBy("round")
+        .agg(F.sum("node").alias("n_nodes"), F.sum("edge").alias("n_edges"))
+        .coalesce(1)
+        .sortWithinPartitions("round")
+    )
 
 
 def _kcore_oracle() -> str:

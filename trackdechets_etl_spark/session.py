@@ -19,8 +19,17 @@ Scale posture (100 TB target, tested on local[N]):
   fault; pass ``extra_conf={"spark.python.sql.dataFrameDebugging.enabled":
   "true"}`` to get the call site back (PySpark reads the flag once per
   process).
+- Generated-class cache at 1024 entries (Spark's default is 100). A
+  warm pass of the iterative or headline workload uses more than 100
+  generated classes, and an LRU cache smaller than a repeating cycle
+  evicts each class just before its next use, so at the default every
+  warm pass compiled every class again (docs/SCALE.md, "Generated
+  code").
 - ``materialize`` is the one place that cuts an intermediate result's
-  lineage (see its docstring).
+  lineage (see its docstring). Reliable checkpoints (non-local masters)
+  are deleted once their frame is garbage-collected
+  (``spark.cleaner.referenceTracking.cleanCheckpoints``); without it
+  every materialized frame stayed in ``spark.checkpoint.dir``.
 """
 
 from __future__ import annotations
@@ -61,6 +70,8 @@ def get_spark(
         .config("spark.sql.files.maxPartitionBytes", str(128 * 1024 * 1024))
         .config("spark.ui.enabled", "false")
         .config("spark.python.sql.dataFrameDebugging.enabled", "false")
+        .config("spark.sql.codegen.cache.maxEntries", "1024")
+        .config("spark.cleaner.referenceTracking.cleanCheckpoints", "true")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
     )
     for k, v in (extra_conf or {}).items():

@@ -6,11 +6,11 @@ Set SELFCHECK_SF_DIR to run the same compare at another scale (e.g.
 Runs every registry query in Spark AND DuckDB-oracle, canonicalizes
 like the driver (sort columns by name, order-insensitive row compare),
 prints one line per query and a final summary. Exit 1 on any mismatch.
+Rows are compared through ``trackdechets_etl_spark.canon.canon``.
 """
 
 from __future__ import annotations
 
-import math
 import os
 import sys
 
@@ -18,36 +18,12 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import duckdb
 
+from trackdechets_etl_spark.canon import canon
 from trackdechets_etl_spark.io.readers import ALL_TABLES
 from trackdechets_etl_spark.queries import all_queries
 from trackdechets_etl_spark.session import get_spark
 
 SF_DIR = os.environ.get("SELFCHECK_SF_DIR", "/root/testdata/sf0.01")
-
-
-# Default is EXACT float compare (driver strictness). Set
-# SELFCHECK_ROUND9=1 to fall back to the old 9-decimal canonicalization
-# for diagnosing whether a mismatch is representational or mathematical.
-_ROUND9 = os.environ.get("SELFCHECK_ROUND9", "") == "1"
-
-
-def norm_val(v):
-    if v is None:
-        return "∅"
-    if isinstance(v, float):
-        if math.isnan(v):
-            return "NaN"
-        return repr(round(v, 9)) if _ROUND9 else repr(v)
-    if hasattr(v, "isoformat"):
-        return v.isoformat()
-    if isinstance(v, bool):
-        return str(bool(v))
-    return str(v)
-
-
-def canon(rows, colnames):
-    order = sorted(range(len(colnames)), key=lambda i: colnames[i])
-    return sorted(tuple(norm_val(r[i]) for i in order) for r in rows)
 
 
 def main() -> None:

@@ -69,3 +69,27 @@ def test_pagerank_mass_conserved_and_positive(spark):
     supp = [r.rank for r in rows if r.node >= 1_000_000]
     cust = sorted(r.rank for r in rows if r.node < 1_000_000)
     assert supp and min(supp) > cust[len(cust) // 2]
+
+
+def test_trade_edges_symmetric_and_disjoint(spark):
+    """``trade_edges`` holds each ``trade_pairs`` pair in both
+    orientations, so it has twice as many edges, and customer and
+    supplier node ids fall in disjoint ranges (max(c_custkey) <
+    SUPPLIER_NODE_OFFSET at this scale)."""
+    from tests.conftest import SF_DIR
+    from trackdechets_etl_spark.plans.fixtures import (
+        SUPPLIER_NODE_OFFSET as OFF,
+        trade_edges,
+        trade_pairs,
+    )
+
+    pairs = [(r.cust, r.supp) for r in trade_pairs(spark, SF_DIR).collect()]
+    edges = [(r.src, r.dst) for r in trade_edges(spark, SF_DIR).collect()]
+    assert pairs and len(set(pairs)) == len(pairs)
+    assert len(edges) == 2 * len(pairs)
+    assert sorted(edges) == sorted(
+        [(c, s + OFF) for c, s in pairs] + [(s + OFF, c) for c, s in pairs]
+    )
+    customers = {c for c, _ in pairs}
+    suppliers = {s + OFF for _, s in pairs}
+    assert max(customers) < OFF <= min(suppliers)

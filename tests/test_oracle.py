@@ -5,15 +5,16 @@ column names, and order-insensitive values exactly.
 This is deliberately stricter than "close enough": the driver hashes
 values, so any float wobble or dtype drift that this test would forgive
 the driver would not. Exact equality after canonical normalization.
+Rows are normalized by ``trackdechets_etl_spark.canon.canon``, which is
+type-tagged, so a DOUBLE and a DECIMAL of the same value differ.
 """
 
 from __future__ import annotations
 
-import math
-
 import pytest
 
 from perfbench.workloads import WORKLOADS
+from trackdechets_etl_spark.canon import canon
 from trackdechets_etl_spark.queries import all_queries
 from tests.conftest import SF_DIR
 
@@ -28,8 +29,10 @@ REGISTRY = all_queries()
 # and embeddings fan-out, events.ts), and every consumer of a
 # functions.scalar.hash_key key or of a keyed-shingle step of llm/dedup
 # (shingle keys, prefix positions, Jaccard candidates, overlap counts)
-# that the workloads do not already run; the rest of the sweep is marked
-# slow (see pytest.ini) and runs with -m "slow or not slow".
+# that the workloads do not already run, every consumer of the
+# plans.fixtures trade graph, and the two oracles re-typed to DOUBLE
+# (orders_conformal_interval, text_topk_rbo_eras); the rest of the sweep
+# is marked slow (see pytest.ini) and runs with -m "slow or not slow".
 _DEFAULT_SHARD = {name for work in WORKLOADS.values() for name, _ in work} | {
     "dedup_embedding_cosine",
     "sample_weighted_reservoir",
@@ -45,31 +48,19 @@ _DEFAULT_SHARD = {name for work in WORKLOADS.values() for name, _ in work} | {
     "join_fuzzy_name",
     "join_bloom_prefilter",
     "dedup_clusters",
+    "graph_khop_reach",
+    "graph_neighbor_mode",
+    "graph_jaccard_neighbors",
+    "graph_degree_histogram",
+    "graph_label_propagation",
+    "graph_degree_assortativity",
+    "graph_harmonic_centrality_top",
+    "graph_modularity_nation",
+    "graph_rich_club",
+    "graph_degree_powerlaw",
+    "orders_conformal_interval",
+    "text_topk_rbo_eras",
 }
-
-
-def _normalize(rows, colnames):
-    """Canonical order-insensitive form: rows sorted by string repr,
-    each value normalized (floats → repr, timestamps → isoformat)."""
-
-    def norm_val(v):
-        if v is None:
-            return "∅"
-        if isinstance(v, float):
-            if math.isnan(v):
-                return "NaN"
-            return repr(v)
-        if isinstance(v, (list, tuple)):
-            return "[" + ",".join(norm_val(x) for x in v) + "]"
-        if hasattr(v, "isoformat"):
-            return v.isoformat()
-        if isinstance(v, bool):
-            return str(bool(v))
-        return str(v)
-
-    order = sorted(range(len(colnames)), key=lambda i: colnames[i])
-    normed = [tuple(norm_val(r[i]) for i in order) for r in rows]
-    return sorted(normed)
 
 
 @pytest.mark.parametrize(
@@ -110,8 +101,8 @@ def test_query_matches_oracle(name, spark, duck):
     assert len(spark_rows) == len(duck_rows), (
         f"{name}: row count {len(spark_rows)} vs oracle {len(duck_rows)}"
     )
-    s_norm = _normalize(spark_rows, spark_cols)
-    d_norm = _normalize(duck_rows, duck_cols)
+    s_norm = canon(spark_rows, spark_cols)
+    d_norm = canon(duck_rows, duck_cols)
     if s_norm != d_norm:
         diffs = [
             (a, b) for a, b in zip(s_norm, d_norm) if a != b

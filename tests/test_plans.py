@@ -603,3 +603,26 @@ def test_only_hash_key_hashes():
         if pattern.search(line)
     ]
     assert not hits, f"xxhash64 outside hash_key: {hits}"
+
+
+def test_trade_graph_has_one_home():
+    """The customer↔supplier trade graph (its pairs and the supplier node
+    offset) is derived in ``plans/fixtures.py`` only, so its edge set and
+    node encoding are decided in one place."""
+    import re
+    from pathlib import Path
+
+    pkg = Path(__file__).resolve().parents[1] / "trackdechets_etl_spark"
+    pattern = re.compile(
+        r"OFFSET\s*=\s*1_?000_?000\b"
+        r"|DISTINCT\s+(o\.)?o_custkey\s+AS\s+\w+\s*,\s*(l\.)?l_suppkey"
+        r"|DISTINCT\s+(l\.)?l_suppkey\s+AS\s+\w+\s*,\s*(o\.)?o_custkey"
+    )
+    hits = [
+        f"{path.relative_to(pkg.parent)}:{n}"
+        for path in sorted(pkg.rglob("*.py"))
+        if path != pkg / "plans" / "fixtures.py"
+        for n, line in enumerate(path.read_text().splitlines(), 1)
+        if pattern.search(line)
+    ]
+    assert not hits, f"trade graph derived outside plans/fixtures.py: {hits}"

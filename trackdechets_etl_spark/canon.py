@@ -6,7 +6,8 @@ back the invariance gates (`scripts/partition_invariance.py`,
 sub-epsilon float drift between execution regimes — canonicalization
 looser than the driver's value hash would let the drift pass. One
 definition so the gates can never disagree about what "bit-identical"
-means.
+means. The oracle compares (`tests/test_oracle.py`,
+`scripts/selfcheck_sf001.py`, perfbench's check) use it too.
 """
 
 from __future__ import annotations

@@ -17,6 +17,9 @@ Mapping (FIXTURES.md §7):
 - ``gerep``           ← orders    (multiple years per code → A1 keep-last;
   leading zero stripped → C3 prefix_zero; reference
   ``dags/icpe-siretisation.py:268-280``)
+- trade graph        ← lineitem ⋈ orders (the distinct customer↔supplier
+  pairs ``trade_pairs`` and their symmetrized edge list ``trade_edges``,
+  the input of every ``graph_*`` query except the co-purchase ones)
 
 SIRET synthesis: per entity key ``k``, k%7==0 → null, k%5==0 → too-short
 value, else a valid 14-char zero-padded value — exercising the §2.9.1
@@ -260,4 +263,49 @@ def open_data_company(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).alias("address"),
         F.col("c_mktsegment").alias("company_types"),
         status.alias("verification_status"),
+    )
+
+
+# ---------------------------------------------------------------- trade graph
+
+# A supplier's node id is ``supp + SUPPLIER_NODE_OFFSET`` (bound: ``trade_edges``).
+SUPPLIER_NODE_OFFSET = 1_000_000
+
+TRADE_PAIRS_SQL = """
+SELECT DISTINCT o.o_custkey AS cust, l.l_suppkey AS supp
+FROM lineitem l JOIN orders o ON l.l_orderkey = o.o_orderkey
+"""
+
+# Reads a CTE named ``trade_pairs`` (``trade_pairs AS (TRADE_PAIRS_SQL)``),
+# so a caller can hint both CTEs AS MATERIALIZED.
+TRADE_EDGES_SQL = f"""
+SELECT cust AS src, supp + {SUPPLIER_NODE_OFFSET} AS dst FROM trade_pairs
+UNION ALL
+SELECT supp + {SUPPLIER_NODE_OFFSET} AS src, cust AS dst FROM trade_pairs
+"""
+
+
+def trade_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Distinct ``(cust, supp)`` pairs of ``lineitem ⋈ orders``: one
+    undirected edge per customer and supplier that traded."""
+    li = read_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_suppkey")
+    o = read_table(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
+    return (
+        li.join(o, li.l_orderkey == o.o_orderkey)
+        .select(F.col("o_custkey").alias("cust"), F.col("l_suppkey").alias("supp"))
+        .distinct()
+    )
+
+
+def trade_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """``trade_pairs`` symmetrized into a directed ``(src, dst)`` edge
+    list, both orientations of each pair. Customers keep their ids;
+    suppliers become ``supp + SUPPLIER_NODE_OFFSET``. The two node ranges
+    are disjoint only while max(c_custkey) < 1,000,000, i.e. TPC-H
+    SF < 6.67 (150,000·SF customers); past that the graph queries merge
+    a customer and a supplier into one node."""
+    pairs = trade_pairs(spark, sf_dir)
+    supp = F.col("supp") + SUPPLIER_NODE_OFFSET
+    return pairs.select(F.col("cust").alias("src"), supp.alias("dst")).unionByName(
+        pairs.select(supp.alias("src"), F.col("cust").alias("dst"))
     )

@@ -27,6 +27,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from trackdechets_etl_spark.io.readers import read_table
+from trackdechets_etl_spark.plans.fixtures import TRADE_PAIRS_SQL, trade_pairs
 from trackdechets_etl_spark.queries import QuerySpec
 
 _SESSION_GAP_MIN = 30
@@ -209,32 +210,21 @@ def _graph_neighbor_mode(spark: SparkSession, sf_dir: str) -> DataFrame:
     segment-count-bounded, so the argmax never touches fact-sized
     data. The 1-round core of label propagation; K rounds = repeat
     with the new labels."""
-    li = read_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_suppkey")
-    o = read_table(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
     c = read_table(spark, sf_dir, "customer").select(
         "c_custkey", "c_mktsegment"
     )
-    pairs = (
-        li.join(o, li.l_orderkey == o.o_orderkey)
-        .select(
-            F.col("l_suppkey").alias("s_suppkey"),
-            F.col("o_custkey").alias("c_custkey"),
-        )
-        .distinct()
-    )
     votes = (
-        pairs.join(c, "c_custkey")
-        .groupBy("s_suppkey", "c_mktsegment")
+        trade_pairs(spark, sf_dir)
+        .join(c, F.col("cust") == F.col("c_custkey"))
+        .groupBy("supp", "c_mktsegment")
         .agg(F.count(F.lit(1)).alias("votes"))
     )
-    w = Window.partitionBy("s_suppkey").orderBy(
-        F.desc("votes"), F.col("c_mktsegment")
-    )
+    w = Window.partitionBy("supp").orderBy(F.desc("votes"), F.col("c_mktsegment"))
     return (
         votes.withColumn("rn", F.row_number().over(w))
         .filter(F.col("rn") == 1)
         .select(
-            "s_suppkey",
+            F.col("supp").alias("s_suppkey"),
             F.col("c_mktsegment").alias("assigned_segment"),
             F.col("votes").alias("votes"),
         )
@@ -242,13 +232,11 @@ def _graph_neighbor_mode(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-GRAPH_NEIGHBOR_MODE_SQL = """
-WITH pairs AS (
-    SELECT DISTINCT l_suppkey AS s_suppkey, o_custkey AS c_custkey
-    FROM lineitem JOIN orders ON l_orderkey = o_orderkey),
+GRAPH_NEIGHBOR_MODE_SQL = f"""
+WITH trade_pairs AS ({TRADE_PAIRS_SQL}),
 votes AS (
-    SELECT s_suppkey, c_mktsegment, CAST(count(*) AS BIGINT) AS votes
-    FROM pairs JOIN customer USING (c_custkey)
+    SELECT supp AS s_suppkey, c_mktsegment, CAST(count(*) AS BIGINT) AS votes
+    FROM trade_pairs JOIN customer ON cust = c_custkey
     GROUP BY 1, 2),
 ranked AS (
     SELECT *, row_number() OVER (PARTITION BY s_suppkey

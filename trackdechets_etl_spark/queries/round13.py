@@ -22,6 +22,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from trackdechets_etl_spark.io.readers import read_table
+from trackdechets_etl_spark.plans.fixtures import TRADE_PAIRS_SQL
 from trackdechets_etl_spark.queries import QuerySpec
 
 # -------------------------------------------------- association rules
@@ -147,6 +148,7 @@ def _graph_jaccard_neighbors(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle applies the identical cut. Top-3 neighbours per supplier by
     (similarity rounded at 6, neighbour id) — a supplier-keyed window
     over the candidate pair table."""
+    # Not plans.fixtures.trade_pairs: this one repartitions by cust first.
     li = read_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_suppkey")
     o = read_table(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
     raw = (
@@ -228,16 +230,14 @@ def _graph_jaccard_neighbors(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 GRAPH_JACCARD_NBR_SQL = f"""
-WITH raw AS (
-    SELECT DISTINCT o_custkey AS cust, l_suppkey AS supp
-    FROM lineitem JOIN orders ON l_orderkey = o_orderkey),
+WITH trade_pairs AS ({TRADE_PAIRS_SQL}),
 edges AS (
     SELECT cust, supp FROM (
         SELECT cust, supp,
                row_number() OVER (PARTITION BY cust
                    ORDER BY md5(CAST(cust AS VARCHAR) || ':'
                                || CAST(supp AS VARCHAR)), supp) AS srk
-        FROM raw) WHERE srk <= {_NBR_DEG_CAP}),
+        FROM trade_pairs) WHERE srk <= {_NBR_DEG_CAP}),
 deg AS (SELECT supp, count(*) AS deg FROM edges GROUP BY supp),
 shared AS (
     SELECT a.supp AS s1, b.supp AS s2, count(*) AS shared

@@ -27,6 +27,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from trackdechets_etl_spark.io.readers import read_table
+from trackdechets_etl_spark.plans.fixtures import TRADE_PAIRS_SQL, trade_pairs
 from trackdechets_etl_spark.queries import QuerySpec
 from trackdechets_etl_spark.session import materialize
 
@@ -181,13 +182,7 @@ def _graph_degree_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Distinct trade edges once (the one real shuffle), then per-side
     degree counts and a log2 bucket rollup — output is
     sides × log-buckets rows at any scale."""
-    li = read_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_suppkey")
-    o = read_table(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
-    edges = materialize(
-        li.join(o, li.l_orderkey == o.o_orderkey)
-        .select(F.col("o_custkey").alias("cust"), F.col("l_suppkey").alias("supp"))
-        .distinct()
-    )
+    edges = materialize(trade_pairs(spark, sf_dir))
 
     def side_hist(frame, key, label):
         deg = frame.groupBy(key).agg(F.count(F.lit(1)).alias("deg"))
@@ -205,12 +200,10 @@ def _graph_degree_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-DEGREE_HISTOGRAM_SQL = """
-WITH edges AS (
-    SELECT DISTINCT o_custkey AS cust, l_suppkey AS supp
-    FROM lineitem JOIN orders ON l_orderkey = o_orderkey),
-cd AS (SELECT cust, count(*) AS deg FROM edges GROUP BY cust),
-sd AS (SELECT supp, count(*) AS deg FROM edges GROUP BY supp),
+DEGREE_HISTOGRAM_SQL = f"""
+WITH trade_pairs AS ({TRADE_PAIRS_SQL}),
+cd AS (SELECT cust, count(*) AS deg FROM trade_pairs GROUP BY cust),
+sd AS (SELECT supp, count(*) AS deg FROM trade_pairs GROUP BY supp),
 h AS (
     SELECT 'customer' AS side,
            CAST(floor(log2(deg)) AS BIGINT) AS log2_bucket

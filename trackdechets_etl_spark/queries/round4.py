@@ -25,6 +25,11 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from trackdechets_etl_spark.io.readers import read_table
+from trackdechets_etl_spark.plans.fixtures import (
+    TRADE_EDGES_SQL,
+    TRADE_PAIRS_SQL,
+    trade_edges,
+)
 from trackdechets_etl_spark.queries import QuerySpec
 from trackdechets_etl_spark.queries.round61 import _hex8_int_sql
 from trackdechets_etl_spark.session import materialize
@@ -342,32 +347,17 @@ FROM per_user, anchor
 
 _PR_ITER = 5
 _PR_DAMP = 0.85
-_SUPP_OFFSET = 1_000_000
 
 
 def _graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     """PageRank over the symmetrized customer↔supplier trade graph
-    (distinct (o_custkey, l_suppkey) pairs from orders⨝lineitem;
-    supplier ids offset so the node space is disjoint). Fixed 5
-    iterations, damping 0.85 — deterministic, matched step-for-step by
-    the unrolled CTE oracle."""
+    (``plans.fixtures.trade_edges``). Fixed 5 iterations, damping 0.85 —
+    deterministic, matched step-for-step by the unrolled CTE oracle."""
     from trackdechets_etl_spark.operators.graph import pagerank
 
-    li = read_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_suppkey")
-    o = read_table(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
-    raw = (
-        li.join(o, li.l_orderkey == o.o_orderkey)
-        .select(F.col("o_custkey").alias("cust"), F.col("l_suppkey").alias("supp"))
-        .distinct()
+    ranks = pagerank(
+        trade_edges(spark, sf_dir), iterations=_PR_ITER, damping=_PR_DAMP
     )
-    edges = raw.select(
-        F.col("cust").alias("src"), (F.col("supp") + _SUPP_OFFSET).alias("dst")
-    ).unionByName(
-        raw.select(
-            (F.col("supp") + _SUPP_OFFSET).alias("src"), F.col("cust").alias("dst")
-        )
-    )
-    ranks = pagerank(edges, iterations=_PR_ITER, damping=_PR_DAMP)
     return ranks.select("node", F.round("rank", 6).alias("rank"))
 
 
@@ -385,13 +375,8 @@ def _pr_oracle() -> str:
         prev = f"r{k}"
     chain = ",\n".join(steps)
     return f"""
-WITH eraw AS (
-    SELECT DISTINCT o_custkey AS cust, l_suppkey AS supp
-    FROM lineitem JOIN orders ON l_orderkey = o_orderkey),
-edges AS (
-    SELECT cust AS src, supp + {_SUPP_OFFSET} AS dst FROM eraw
-    UNION ALL
-    SELECT supp + {_SUPP_OFFSET} AS src, cust AS dst FROM eraw),
+WITH trade_pairs AS ({TRADE_PAIRS_SQL}),
+edges AS ({TRADE_EDGES_SQL}),
 deg AS (SELECT src, count(*) AS d FROM edges GROUP BY src),
 nn AS (SELECT count(*) AS n FROM deg),
 r0 AS (SELECT src AS node, 1.0 / (SELECT n FROM nn) AS rank FROM deg),

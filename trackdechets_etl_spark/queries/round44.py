@@ -30,6 +30,11 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from trackdechets_etl_spark.io.readers import read_table
+from trackdechets_etl_spark.plans.fixtures import (
+    TRADE_EDGES_SQL,
+    TRADE_PAIRS_SQL,
+    trade_edges,
+)
 from trackdechets_etl_spark.queries import QuerySpec
 from trackdechets_etl_spark.session import materialize
 
@@ -163,32 +168,13 @@ FROM tot CROSS JOIN cutoff
 # ------------------------------------------------ label propagation
 
 _LP_ROUNDS = 3
-_LP_OFFSET = 1_000_000
 
 
 def _graph_label_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li = read_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_suppkey")
-    o = read_table(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
-    raw = (
-        li.join(o, li.l_orderkey == o.o_orderkey)
-        .select(
-            F.col("o_custkey").alias("cust"), F.col("l_suppkey").alias("supp")
-        )
-        .distinct()
-    )
     # Eager: a lazy checkpoint materializes only AFTER the first
     # job finishes, so the single final action would still
     # re-derive the join+distinct edge list once per round.
-    edges = materialize(
-        raw.select(
-            F.col("cust").alias("src"), (F.col("supp") + _LP_OFFSET).alias("dst")
-        ).unionByName(
-            raw.select(
-                (F.col("supp") + _LP_OFFSET).alias("src"),
-                F.col("cust").alias("dst"),
-            )
-        )
-    )
+    edges = materialize(trade_edges(spark, sf_dir))
     labels = edges.select(F.col("src").alias("node")).distinct().select(
         "node", F.col("node").alias("label")
     )
@@ -225,13 +211,8 @@ def _graph_label_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _lp_oracle() -> str:
     parts = [
         f"""
-raw AS (
-    SELECT DISTINCT o.o_custkey AS cust, l.l_suppkey AS supp
-    FROM lineitem l JOIN orders o ON l.l_orderkey = o.o_orderkey),
-edges AS (
-    SELECT cust AS src, supp + {_LP_OFFSET} AS dst FROM raw
-    UNION ALL
-    SELECT supp + {_LP_OFFSET} AS src, cust AS dst FROM raw),
+trade_pairs AS ({TRADE_PAIRS_SQL}),
+edges AS ({TRADE_EDGES_SQL}),
 l0 AS (SELECT DISTINCT src AS node, src AS label FROM edges)"""
     ]
     for step in range(1, _LP_ROUNDS + 1):

@@ -28,6 +28,11 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from trackdechets_etl_spark.io.readers import read_table
+from trackdechets_etl_spark.plans.fixtures import (
+    TRADE_EDGES_SQL,
+    TRADE_PAIRS_SQL,
+    trade_edges,
+)
 from trackdechets_etl_spark.queries import QuerySpec
 from trackdechets_etl_spark.session import materialize
 
@@ -155,32 +160,10 @@ FROM scored ORDER BY mahalanobis_d2 DESC, vec_id LIMIT {_OUT_TOP}
 
 _KCORE_K = 12
 _KCORE_ROUNDS = 5
-_KCORE_OFFSET = 1_000_000
 
 
 def _graph_kcore_peel(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li = read_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_suppkey")
-    o = read_table(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
-    raw = (
-        li.join(o, li.l_orderkey == o.o_orderkey)
-        .select(
-            F.col("o_custkey").alias("cust"), F.col("l_suppkey").alias("supp")
-        )
-        .distinct()
-    )
-    edges = materialize(
-        raw.select(
-            F.col("cust").alias("src"),
-            (F.col("supp") + _KCORE_OFFSET).alias("dst"),
-        )
-        .unionByName(
-            raw.select(
-                (F.col("supp") + _KCORE_OFFSET).alias("src"),
-                F.col("cust").alias("dst"),
-            )
-        ),
-        eager=False,
-    )
+    edges = materialize(trade_edges(spark, sf_dir), eager=False)
     # One (round, n_nodes, n_edges) row per round from one aggregate:
     # each kept node adds (round, 1, 0), each kept edge (round, 0, 1),
     # and a (round, 0, 0) row per round keeps a round that peeled
@@ -228,13 +211,8 @@ def _kcore_oracle() -> str:
     # ~3s). The hint changes evaluation only, never results.
     parts = [
         f"""
-raw AS MATERIALIZED (
-    SELECT DISTINCT o.o_custkey AS cust, l.l_suppkey AS supp
-    FROM lineitem l JOIN orders o ON l.l_orderkey = o.o_orderkey),
-e0 AS MATERIALIZED (
-    SELECT cust AS src, supp + {_KCORE_OFFSET} AS dst FROM raw
-    UNION ALL
-    SELECT supp + {_KCORE_OFFSET} AS src, cust AS dst FROM raw)"""
+trade_pairs AS MATERIALIZED ({TRADE_PAIRS_SQL}),
+e0 AS MATERIALIZED ({TRADE_EDGES_SQL})"""
     ]
     for rnd in range(1, _KCORE_ROUNDS + 1):
         parts.append(

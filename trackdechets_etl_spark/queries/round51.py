@@ -24,6 +24,11 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from trackdechets_etl_spark.io.readers import read_table
+from trackdechets_etl_spark.plans.fixtures import (
+    TRADE_EDGES_SQL,
+    TRADE_PAIRS_SQL,
+    trade_pairs,
+)
 from trackdechets_etl_spark.queries import QuerySpec
 from trackdechets_etl_spark.session import materialize
 
@@ -100,12 +105,8 @@ FROM ({body}) ORDER BY lag_days
 
 # ------------------------------------------- degree assortativity
 
-_AS_OFFSET = 1_000_000
-
 
 def _graph_degree_assortativity(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li = read_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_suppkey")
-    o = read_table(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
     # r14: the directed-edge frame is the union of both orientations of
     # each undirected (cust, supp) edge, so every moment over it is a
     # symmetric function of the half graph: n = 2m, sx = sy =
@@ -114,14 +115,7 @@ def _graph_degree_assortativity(spark: SparkSession, sf_dir: str) -> DataFrame:
     # bit-identical to the doubled-frame form. The union + 2m-row
     # degree/join passes are replaced by half-size passes over the raw
     # bipartite edge set (lazy-checkpointed once for its 3 consumers).
-    raw = materialize(
-        li.join(o, li.l_orderkey == o.o_orderkey)
-        .select(
-            F.col("o_custkey").alias("cust"), F.col("l_suppkey").alias("supp")
-        )
-        .distinct(),
-        eager=False,
-    )
+    raw = materialize(trade_pairs(spark, sf_dir), eager=False)
     degc = raw.groupBy("cust").agg(F.count(F.lit(1)).alias("dc"))
     degs = raw.groupBy("supp").agg(F.count(F.lit(1)).alias("ds"))
     pairs = raw.join(degc, "cust").join(degs, "supp").select("dc", "ds")
@@ -145,13 +139,8 @@ def _graph_degree_assortativity(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 ASSORTATIVITY_SQL = f"""
-WITH raw AS (
-    SELECT DISTINCT o.o_custkey AS cust, l.l_suppkey AS supp
-    FROM lineitem l JOIN orders o ON l.l_orderkey = o.o_orderkey),
-edges AS (
-    SELECT cust AS src, supp + {_AS_OFFSET} AS dst FROM raw
-    UNION ALL
-    SELECT supp + {_AS_OFFSET} AS src, cust AS dst FROM raw),
+WITH trade_pairs AS ({TRADE_PAIRS_SQL}),
+edges AS ({TRADE_EDGES_SQL}),
 deg AS (SELECT src, CAST(count(*) AS BIGINT) AS deg FROM edges GROUP BY src),
 pairs AS (
     SELECT a.deg AS dx, b.deg AS dy

@@ -31,36 +31,17 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from trackdechets_etl_spark.io.readers import read_table
+from trackdechets_etl_spark.plans.fixtures import (
+    TRADE_EDGES_SQL,
+    TRADE_PAIRS_SQL,
+    trade_edges,
+)
 from trackdechets_etl_spark.queries import QuerySpec
 from trackdechets_etl_spark.session import materialize
 
 # ------------------------------------- harmonic centrality (top-20)
 
-_HC_OFFSET = 1_000_000  # supplier ids into a disjoint range (khop contract)
 _HC_TOP = 20
-
-
-def _trade_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li = read_table(spark, sf_dir, "lineitem").select(
-        "l_orderkey", "l_suppkey"
-    )
-    o = read_table(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
-    raw = (
-        li.join(o, li.l_orderkey == o.o_orderkey)
-        .select(
-            F.col("o_custkey").alias("cust"), F.col("l_suppkey").alias("supp")
-        )
-        .distinct()
-    )
-    return raw.select(
-        F.col("cust").alias("src"),
-        (F.col("supp") + _HC_OFFSET).alias("dst"),
-    ).unionByName(
-        raw.select(
-            (F.col("supp") + _HC_OFFSET).alias("src"),
-            F.col("cust").alias("dst"),
-        )
-    )
 
 
 def _graph_harmonic_centrality_top(
@@ -81,7 +62,7 @@ def _graph_harmonic_centrality_top(
     exploding the ≤ 20 set bits of each cumulative mask (n_hops are
     successive differences), so unreached nodes contribute nothing
     (harmonic semantics on disconnected graphs)."""
-    edges = materialize(_trade_edges(spark, sf_dir))
+    edges = materialize(trade_edges(spark, sf_dir))
     deg = edges.groupBy("src").agg(F.count(F.lit(1)).alias("degree"))
     # bit index per source: rank under the same (degree desc, src asc)
     # total order that picks the top-20. The window input is the
@@ -151,13 +132,8 @@ def _graph_harmonic_centrality_top(
 
 
 HARMONIC_SQL = f"""
-WITH raw AS (
-    SELECT DISTINCT o.o_custkey AS cust, l.l_suppkey AS supp
-    FROM lineitem l JOIN orders o ON l.l_orderkey = o.o_orderkey),
-edges AS (
-    SELECT cust AS src, supp + {_HC_OFFSET} AS dst FROM raw
-    UNION ALL
-    SELECT supp + {_HC_OFFSET} AS src, cust AS dst FROM raw),
+WITH trade_pairs AS ({TRADE_PAIRS_SQL}),
+edges AS ({TRADE_EDGES_SQL}),
 deg AS (SELECT src, count(*) AS degree FROM edges GROUP BY src),
 sources AS (
     SELECT src AS s, degree FROM deg

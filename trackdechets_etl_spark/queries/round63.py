@@ -477,7 +477,7 @@ SELECT n_cal,
        round(min(q_cents) / 100.0, 2) AS q_hat,
        round(avg(CASE WHEN abs(cents - mc) <= q_cents
                       THEN 1.0 ELSE 0.0 END), 6) AS coverage,
-       0.9 AS target
+       CAST(0.9 AS DOUBLE) AS target
 FROM o JOIN model USING (g) CROSS JOIN qhat
 WHERE NOT is_cal
 GROUP BY n_cal

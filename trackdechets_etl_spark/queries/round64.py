@@ -53,6 +53,7 @@ from pyspark.sql import functions as F
 
 from trackdechets_etl_spark.io.readers import read_table
 from trackdechets_etl_spark.llm.similarity import bucket_expr
+from trackdechets_etl_spark.plans.fixtures import TRADE_PAIRS_SQL, trade_pairs
 from trackdechets_etl_spark.queries import QuerySpec
 from trackdechets_etl_spark.queries.round62 import _bucket_sql
 from trackdechets_etl_spark.session import materialize
@@ -701,20 +702,7 @@ FROM j GROUP BY yr ORDER BY yr
 def _graph_modularity_nation(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    li = read_table(spark, sf_dir, "lineitem").select(
-        "l_orderkey", "l_suppkey"
-    )
-    o = read_table(spark, sf_dir, "orders").select(
-        "o_orderkey", "o_custkey"
-    )
-    edges = (
-        li.join(o, li.l_orderkey == o.o_orderkey)
-        .select(
-            F.col("o_custkey").alias("cust"),
-            F.col("l_suppkey").alias("supp"),
-        )
-        .distinct()
-    )
+    edges = trade_pairs(spark, sf_dir)
     cn = read_table(spark, sf_dir, "customer").select(
         F.col("c_custkey").alias("cust"),
         F.col("c_nationkey").alias("cnat"),
@@ -764,13 +752,11 @@ def _graph_modularity_nation(
     )
 
 
-MODULARITY_SQL = """
-WITH edges AS (
-    SELECT DISTINCT o_custkey AS cust, l_suppkey AS supp
-    FROM lineitem JOIN orders ON l_orderkey = o_orderkey),
+MODULARITY_SQL = f"""
+WITH trade_pairs AS ({TRADE_PAIRS_SQL}),
 e AS (
     SELECT cust, supp, c_nationkey AS cnat, s_nationkey AS snat
-    FROM edges
+    FROM trade_pairs
     JOIN customer ON cust = c_custkey
     JOIN supplier ON supp = s_suppkey),
 m AS (SELECT CAST(count(*) AS BIGINT) AS m FROM e),

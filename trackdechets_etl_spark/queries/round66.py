@@ -556,7 +556,7 @@ ov AS (
     SELECT dd, CAST(count(m) AS BIGINT) AS ov
     FROM grid LEFT JOIN joint ON m <= dd GROUP BY dd)
 SELECT CAST({_RBO_DEPTH} AS BIGINT) AS depth,
-       {_RBO_P} AS p,
+       CAST({_RBO_P} AS DOUBLE) AS p,
        round(sum((CASE dd {_RBO_W_CASE} END) * ov / dd), 6)
            AS rbo_trunc,
        CAST(max(CASE WHEN dd = {_RBO_DEPTH} THEN ov END) AS BIGINT)

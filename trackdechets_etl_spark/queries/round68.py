@@ -53,6 +53,7 @@ from pyspark.sql import functions as F
 
 from trackdechets_etl_spark.io.readers import read_table
 from trackdechets_etl_spark.llm.similarity import cosine
+from trackdechets_etl_spark.plans.fixtures import TRADE_PAIRS_SQL, trade_pairs
 from trackdechets_etl_spark.queries import QuerySpec
 from trackdechets_etl_spark.queries.llm import _cos_sql
 from trackdechets_etl_spark.session import materialize
@@ -388,41 +389,28 @@ _RC_TOP = 20
 
 
 def _graph_rich_club(spark: SparkSession, sf_dir: str) -> DataFrame:
-    e = materialize(
-        read_table(spark, sf_dir, "lineitem")
-        .select("l_orderkey", "l_suppkey")
-        .join(
-            read_table(spark, sf_dir, "orders").select(
-                "o_orderkey", "o_custkey"
-            ),
-            F.col("l_orderkey") == F.col("o_orderkey"),
-        )
-        .select(
-            F.col("o_custkey").alias("c"), F.col("l_suppkey").alias("s")
-        )
-        .distinct()
-    )
+    e = materialize(trade_pairs(spark, sf_dir))
     topc = (
-        e.groupBy("c")
+        e.groupBy("cust")
         .agg(F.count(F.lit(1)).alias("dg"))
-        .orderBy(F.desc("dg"), F.asc("c"))
+        .orderBy(F.desc("dg"), F.asc("cust"))
         .limit(_RC_TOP)
-        .select("c")
+        .select("cust")
     )
     tops = (
-        e.groupBy("s")
+        e.groupBy("supp")
         .agg(F.count(F.lit(1)).alias("dg"))
-        .orderBy(F.desc("dg"), F.asc("s"))
+        .orderBy(F.desc("dg"), F.asc("supp"))
         .limit(_RC_TOP)
-        .select("s")
+        .select("supp")
     )
-    hub_edges = e.join(F.broadcast(topc), "c").join(
-        F.broadcast(tops), "s"
+    hub_edges = e.join(F.broadcast(topc), "cust").join(
+        F.broadcast(tops), "supp"
     )
     tot = e.agg(
         F.count(F.lit(1)).cast("long").alias("m"),
-        F.countDistinct("c").cast("long").alias("nc"),
-        F.countDistinct("s").cast("long").alias("ns"),
+        F.countDistinct("cust").cast("long").alias("nc"),
+        F.countDistinct("supp").cast("long").alias("ns"),
     )
     he = hub_edges.agg(
         F.count(F.lit(1)).cast("long").alias("mh")
@@ -448,21 +436,19 @@ def _graph_rich_club(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 RICH_CLUB_SQL = f"""
-WITH e AS (
-    SELECT DISTINCT o_custkey AS c, l_suppkey AS s
-    FROM lineitem JOIN orders ON l_orderkey = o_orderkey),
-topc AS (SELECT c FROM (SELECT c, count(*) dg FROM e GROUP BY c)
-         ORDER BY dg DESC, c LIMIT {_RC_TOP}),
-tops AS (SELECT s FROM (SELECT s, count(*) dg FROM e GROUP BY s)
-         ORDER BY dg DESC, s LIMIT {_RC_TOP}),
+WITH e AS ({TRADE_PAIRS_SQL}),
+topc AS (SELECT cust FROM (SELECT cust, count(*) dg FROM e GROUP BY cust)
+         ORDER BY dg DESC, cust LIMIT {_RC_TOP}),
+tops AS (SELECT supp FROM (SELECT supp, count(*) dg FROM e GROUP BY supp)
+         ORDER BY dg DESC, supp LIMIT {_RC_TOP}),
 tot AS (
     SELECT CAST(count(*) AS BIGINT) AS m,
-           CAST(count(DISTINCT c) AS BIGINT) AS nc,
-           CAST(count(DISTINCT s) AS BIGINT) AS ns
+           CAST(count(DISTINCT cust) AS BIGINT) AS nc,
+           CAST(count(DISTINCT supp) AS BIGINT) AS ns
     FROM e),
 he AS (
     SELECT CAST(count(*) AS BIGINT) AS mh
-    FROM e JOIN topc USING (c) JOIN tops USING (s)),
+    FROM e JOIN topc USING (cust) JOIN tops USING (supp)),
 kk AS (
     SELECT CAST((SELECT count(*) FROM topc) AS BIGINT) AS kc,
            CAST((SELECT count(*) FROM tops) AS BIGINT) AS ks)

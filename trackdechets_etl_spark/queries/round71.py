@@ -49,6 +49,7 @@ from pyspark.sql import functions as F
 
 from trackdechets_etl_spark.io.readers import read_table
 from trackdechets_etl_spark.llm.similarity import dot
+from trackdechets_etl_spark.plans.fixtures import TRADE_PAIRS_SQL, trade_pairs
 from trackdechets_etl_spark.queries import QuerySpec
 from trackdechets_etl_spark.queries.llm import _cos_sql
 
@@ -483,21 +484,11 @@ _PL_MICRO = 1_000_000
 def _graph_degree_powerlaw(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    e = (
-        read_table(spark, sf_dir, "lineitem")
-        .select("l_orderkey", "l_suppkey")
-        .join(
-            read_table(spark, sf_dir, "orders").select(
-                "o_orderkey", "o_custkey"
-            ),
-            F.col("l_orderkey") == F.col("o_orderkey"),
-        )
-        .select(
-            F.col("o_custkey").alias("c"), F.col("l_suppkey").alias("s")
-        )
-        .distinct()
+    deg = (
+        trade_pairs(spark, sf_dir)
+        .groupBy("cust")
+        .agg(F.count(F.lit(1)).cast("long").alias("dg"))
     )
-    deg = e.groupBy("c").agg(F.count(F.lit(1)).cast("long").alias("dg"))
     dist = deg.groupBy("dg").agg(
         F.count(F.lit(1)).cast("long").alias("f")
     )
@@ -550,10 +541,9 @@ def _graph_degree_powerlaw(
 
 
 POWERLAW_SQL = f"""
-WITH e AS (
-    SELECT DISTINCT o_custkey AS c, l_suppkey AS s
-    FROM lineitem JOIN orders ON l_orderkey = o_orderkey),
-deg AS (SELECT c, CAST(count(*) AS BIGINT) AS dg FROM e GROUP BY c),
+WITH trade_pairs AS ({TRADE_PAIRS_SQL}),
+deg AS (SELECT cust, CAST(count(*) AS BIGINT) AS dg
+        FROM trade_pairs GROUP BY cust),
 dist AS (SELECT dg, CAST(count(*) AS BIGINT) AS f
          FROM deg GROUP BY dg),
 tot AS (SELECT CAST(sum(f) AS BIGINT) AS nt FROM dist),

@@ -40,6 +40,11 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from trackdechets_etl_spark.io.readers import read_table
+from trackdechets_etl_spark.plans.fixtures import (
+    TRADE_EDGES_SQL,
+    TRADE_PAIRS_SQL,
+    trade_edges,
+)
 from trackdechets_etl_spark.queries import QuerySpec
 from trackdechets_etl_spark.session import materialize
 
@@ -140,42 +145,20 @@ ORDER BY channel
 
 _KH_K = 3
 _KH_SEED_MAX = 5  # seeds: customers with c_custkey < 5
-_KH_OFFSET = 1_000_000  # supplier node ids offset into a disjoint range
 
 
 def _graph_khop_reach(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Minimum hop distance (0..3) from seed customers over the
-    symmetrized customer↔supplier trade graph (distinct
-    (o_custkey, l_suppkey) pairs from orders⨝lineitem — the
-    ``graph_pagerank`` edge set, round4.py). Classic frontier BFS:
+    symmetrized customer↔supplier trade graph
+    (``plans.fixtures.trade_edges``). Classic frontier BFS:
     each round joins the frontier to the edge list and anti-joins the
     visited set, so a node's label is its FIRST (minimum) hop count.
     The edge frame is checkpointed once and reused by all rounds; at
     100 TB each round is one shuffle keyed by node id and the frontier
     shrinks monotonically — the anti-join keeps re-expansion of
     already-settled nodes off the wire entirely."""
-    li = read_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_suppkey")
-    o = read_table(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
-    raw = (
-        li.join(o, li.l_orderkey == o.o_orderkey)
-        .select(
-            F.col("o_custkey").alias("cust"), F.col("l_suppkey").alias("supp")
-        )
-        .distinct()
-    )
     # one materialization, K join legs
-    edges = materialize(
-        raw.select(
-            F.col("cust").alias("src"),
-            (F.col("supp") + _KH_OFFSET).alias("dst"),
-        ).unionByName(
-            raw.select(
-                (F.col("supp") + _KH_OFFSET).alias("src"),
-                F.col("cust").alias("dst"),
-            )
-        ),
-        eager=False,
-    )
+    edges = materialize(trade_edges(spark, sf_dir), eager=False)
     c = read_table(spark, sf_dir, "customer")
     dist = c.filter(F.col("c_custkey") < _KH_SEED_MAX).select(
         F.col("c_custkey").alias("node"), F.lit(0).alias("dist")
@@ -216,13 +199,8 @@ def _khop_oracle() -> str:
         f"SELECT * FROM d{i}" for i in range(_KH_K + 1)
     )
     return f"""
-WITH eraw AS (
-    SELECT DISTINCT o_custkey AS cust, l_suppkey AS supp
-    FROM lineitem JOIN orders ON l_orderkey = o_orderkey),
-edges AS (
-    SELECT cust AS src, supp + {_KH_OFFSET} AS dst FROM eraw
-    UNION ALL
-    SELECT supp + {_KH_OFFSET} AS src, cust AS dst FROM eraw),
+WITH trade_pairs AS ({TRADE_PAIRS_SQL}),
+edges AS ({TRADE_EDGES_SQL}),
 d0 AS (SELECT c_custkey AS node, 0 AS dist FROM customer
        WHERE c_custkey < {_KH_SEED_MAX}),
 {chain}

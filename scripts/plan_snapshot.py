@@ -129,10 +129,12 @@ def canon_plan(s: str) -> str:
     # rule; all were HOF consumers downstream of the reordered front).
     # Renumber them in order of first appearance within the plan, so a
     # plan that swaps which lambda variable it references still differs.
+    # A two-argument lambda's second variable prints as y_N and a
+    # third's as z_N, numbered from the same counter.
     ids: dict[str, int] = {}
     return re.sub(
-        r"\bx_(\d+)",
-        lambda m: f"x_{ids.setdefault(m.group(1), len(ids))}",
+        r"\b([xyz])_(\d+)",
+        lambda m: f"{m.group(1)}_{ids.setdefault(m.group(2), len(ids))}",
         s,
     )
 

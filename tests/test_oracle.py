@@ -30,9 +30,12 @@ REGISTRY = all_queries()
 # functions.scalar.hash_key key or of a keyed-shingle step of llm/dedup
 # (shingle keys, prefix positions, Jaccard candidates, overlap counts)
 # that the workloads do not already run, every consumer of the
-# plans.fixtures trade graph, and the two oracles re-typed to DOUBLE
-# (orders_conformal_interval, text_topk_rbo_eras); the rest of the sweep
-# is marked slow (see pytest.ini) and runs with -m "slow or not slow".
+# plans.fixtures trade graph, the two oracles re-typed to DOUBLE
+# (orders_conformal_interval, text_topk_rbo_eras), every consumer of the
+# float-score rank key (operators.ranking.score_order and its per-group
+# top-k) and of the llm/similarity and llm/pq retrieval kernels, and one
+# consumer of the range-partitioned global prefix max; the rest of the
+# sweep is marked slow (see pytest.ini) and runs with -m "slow or not slow".
 _DEFAULT_SHARD = {name for work in WORKLOADS.values() for name, _ in work} | {
     "dedup_embedding_cosine",
     "sample_weighted_reservoir",
@@ -60,6 +63,24 @@ _DEFAULT_SHARD = {name for work in WORKLOADS.values() for name, _ in work} | {
     "graph_degree_powerlaw",
     "orders_conformal_interval",
     "text_topk_rbo_eras",
+    "sim_ivfpq_topk",
+    "sim_pq_recall",
+    "sim_lsh_recall",
+    "sim_ndcg_eval",
+    "sim_knn_classify",
+    "sim_matryoshka_recall",
+    "text_tfidf_topk",
+    "text_bm25_topk",
+    "text_lmir_topk",
+    "sim_maxsim",
+    "sim_map_eval",
+    "sim_mrr_eval",
+    "sim_recall_curve_nplanes",
+    "embedding_label_noise_knn",
+    "embedding_label_noise_recall",
+    "embedding_mmr_select",
+    "sim_rrf_hybrid",
+    "events_late_arrivals",
 }
 
 

@@ -35,6 +35,22 @@ def test_shifted_lambda_counter_is_equal():
     assert plan_snapshot.canon_plan(early) == plan_snapshot.canon_plan(late)
 
 
+def _zip_plan(x: int, y: int, body: tuple[int, int]) -> str:
+    a, b = body
+    return (
+        f"Project [zip_with(xs#11, ys#12, lambdafunction((lambda x_{a}#21 "
+        f"* lambda y_{b}#22), lambda x_{x}#21, lambda y_{y}#22, false)) AS z#30]"
+    )
+
+
+def test_shifted_second_lambda_variable_is_equal():
+    early = _zip_plan(2, 400, body=(2, 400))
+    late = _zip_plan(2, 406, body=(2, 406))
+    assert plan_snapshot.canon_plan(early) == plan_snapshot.canon_plan(late)
+    swapped = _zip_plan(2, 400, body=(2, 2))
+    assert plan_snapshot.canon_plan(early) != plan_snapshot.canon_plan(swapped)
+
+
 def _distinct_plan(cols: tuple[str, str], gid_of: dict[str, int], base: int) -> str:
     """A two-distinct-count aggregate as Spark prints it: ``cols`` is the
     order of the distinct columns, ``gid_of`` the group id of each

@@ -626,3 +626,22 @@ def test_trade_graph_has_one_home():
         if pattern.search(line)
     ]
     assert not hits, f"trade graph derived outside plans/fixtures.py: {hits}"
+
+
+def test_score_order_has_one_home():
+    """Ranking by a float score (rounded to 9 dp descending, then a tie
+    column) is built by ``operators.ranking.score_order`` only, so Spark
+    and the DuckDB oracles order near-equal scores by one rule."""
+    import re
+    from pathlib import Path
+
+    pkg = Path(__file__).resolve().parents[1] / "trackdechets_etl_spark"
+    pattern = re.compile(r", 9\)\.desc\(\)")
+    hits = [
+        f"{path.relative_to(pkg.parent)}:{n}"
+        for path in sorted(pkg.rglob("*.py"))
+        if path != pkg / "operators" / "ranking.py"
+        for n, line in enumerate(path.read_text().splitlines(), 1)
+        if pattern.search(line)
+    ]
+    assert not hits, f"score rank key outside operators/ranking.py: {hits}"

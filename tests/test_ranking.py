@@ -1,7 +1,9 @@
 """operators/ranking.py invariants: the range-partitioned global rank
 and closed-form ntile must be bit-identical to the single-partition
 ``row_number``/``ntile`` windows they replace, across bucket counts,
-frame sizes (including N < buckets and N == 1), and partition counts.
+frame sizes (including N < buckets and N == 1), and partition counts;
+and the float-score rank key ties scores equal to 9 dp and breaks the
+tie by its tie column.
 """
 
 from __future__ import annotations
@@ -15,12 +17,42 @@ from pyspark.sql import functions as F
 from trackdechets_etl_spark.operators.ranking import (
     global_row_number,
     ntile_from_rank,
+    score_order,
+    top_k_per_group,
 )
 
 
-# r15: slow shard — excluded from the default pytest run (see
-# pytest.ini); run the full suite with -m "slow or not slow".
-pytestmark = pytest.mark.slow
+# The score-rank tests run in the default shard; the partition-count
+# sweeps below carry the slow mark (excluded from the default pytest
+# run, see pytest.ini; run the full suite with -m "slow or not slow").
+slow = pytest.mark.slow
+
+# (group, id, score): ids 1 and 2 differ only past the 9th decimal, so
+# they tie and rank by id although id 2's raw score is the larger; ids 0
+# and 9 differ from them at the 8th decimal and rank by score.
+_SCORES = [
+    (1, 2, 0.5000000004),
+    (1, 1, 0.5000000001),
+    (1, 0, 0.49999999),
+    (1, 9, 0.50000001),
+    (2, 5, 0.25),
+]
+
+
+def test_score_order_ties_at_nine_decimals(spark):
+    df = spark.createDataFrame(_SCORES, "g int, id long, score double")
+    got = [
+        r.id for r in df.filter("g = 1").orderBy(*score_order("score", "id")).collect()
+    ]
+    assert got == [9, 1, 2, 0]
+
+
+def test_top_k_per_group_cuts_each_group(spark):
+    df = spark.createDataFrame(_SCORES, "g int, id long, score double")
+    out = top_k_per_group(df, "g", "score", "id", 3, "rk")
+    assert dict(out.dtypes)["rk"] == "int"
+    got = sorted((r.g, r.rk, r.id) for r in out.collect())
+    assert got == [(1, 1, 9), (1, 2, 1), (1, 3, 2), (2, 1, 5)]
 
 def _frame(spark, n, seed=7):
     rng = random.Random(seed)
@@ -30,6 +62,7 @@ def _frame(spark, n, seed=7):
     )
 
 
+@slow
 @pytest.mark.parametrize("n", [1, 3, 13, 1000])
 def test_global_row_number_matches_window(spark, n):
     df = _frame(spark, n)
@@ -42,6 +75,7 @@ def test_global_row_number_matches_window(spark, n):
     assert got.agg(F.min("rk"), F.max("rk"), F.count("*")).first() == (1, n, n)
 
 
+@slow
 @pytest.mark.parametrize("buckets", [4, 7, 10])
 @pytest.mark.parametrize("n", [1, 3, 13, 1000])
 def test_ntile_from_rank_matches_ntile(spark, buckets, n):
@@ -55,6 +89,7 @@ def test_ntile_from_rank_matches_ntile(spark, buckets, n):
     assert j.filter(F.col("nt") != F.col("nt2")).count() == 0
 
 
+@slow
 def test_global_row_number_no_single_partition_window(spark):
     """The whole point: the row-scale frame must never hit a
     single-partition window — only the partition-count-sized offset
@@ -80,6 +115,7 @@ def test_global_row_number_no_single_partition_window(spark):
         )
 
 
+@slow
 def test_prefix_sum_matches_window(spark):
     from trackdechets_etl_spark.operators.ranking import global_row_number
 
@@ -98,6 +134,7 @@ def test_prefix_sum_matches_window(spark):
     assert j.filter(F.col("cs") != F.col("cs2")).count() == 0
 
 
+@slow
 def test_prefix_max_exclusive_matches_window(spark):
     from trackdechets_etl_spark.operators.ranking import (
         global_prefix_max_exclusive,

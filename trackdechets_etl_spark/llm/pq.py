@@ -29,7 +29,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from trackdechets_etl_spark.llm.similarity import as_double
+from trackdechets_etl_spark.llm.similarity import as_double, ivf_route
+from trackdechets_etl_spark.operators.ranking import top_k_per_group
 from trackdechets_etl_spark.session import materialize
 
 # Parameters picked by a measured sweep on the test corpus (numpy
@@ -148,6 +149,42 @@ def pq_encode(e: DataFrame, cents: DataFrame) -> DataFrame:
     return materialize(_assign(e, cents))
 
 
+def _query_tables(
+    e: DataFrame, cents: DataFrame, query_ids_max: int
+) -> tuple[DataFrame, DataFrame, DataFrame]:
+    """What ADC needs from the query side and the codebook: the
+    queries' per-(m, code) partial dots ``partial`` (the M×K lookup
+    table, broadcast), each code's squared centroid norm ``cn2``
+    (a candidate's norm is the root of its codes' sum) and the exact
+    query norms ``qnorm``."""
+    qe = e.filter(F.col("vid") < query_ids_max)
+    partial = (
+        qe.join(F.broadcast(cents), ["m", "i"])
+        .groupBy(F.col("vid").alias("q_id"), "m", "code")
+        .agg(F.sum(F.col("val") * F.col("cval")).alias("pdot"))
+    )
+    cn2 = cents.groupBy("m", "code").agg(
+        F.sum(F.col("cval") * F.col("cval")).alias("n2")
+    )
+    qnorm = qe.groupBy(F.col("vid").alias("q_id")).agg(
+        F.sqrt(F.sum(F.col("val") * F.col("val"))).alias("qnorm")
+    )
+    return partial, cn2, qnorm
+
+
+def _adc_cut(scored: DataFrame, k: int) -> DataFrame:
+    """Approximate cosine ``adot / (qnorm * cnorm)`` per (query,
+    candidate) pair, cut to each query's top ``k``."""
+    cos = scored.filter(F.col("c_id") != F.col("q_id")).select(
+        "q_id",
+        "c_id",
+        (F.col("adot") / (F.col("qnorm") * F.col("cnorm"))).alias("cos"),
+    )
+    return top_k_per_group(cos, "q_id", "cos", "c_id", k).select(
+        "q_id", "c_id", "rank", F.round("cos", 6).alias("cos_approx")
+    )
+
+
 def adc_topk(
     e: DataFrame,
     codes: DataFrame,
@@ -160,46 +197,18 @@ def adc_topk(
     dot is the sum of its M code lookups, and its norm comes from the
     codebook (sum of its centroids' squared norms). Raw candidate
     vectors are never touched — only codes."""
-    qe = e.filter(F.col("vid") < query_ids_max)
-    partial = (
-        qe.join(F.broadcast(cents), ["m", "i"])
-        .groupBy(F.col("vid").alias("q_id"), "m", "code")
-        .agg(F.sum(F.col("val") * F.col("cval")).alias("pdot"))
-    )
-    cn2 = cents.groupBy("m", "code").agg(
-        F.sum(F.col("cval") * F.col("cval")).alias("n2")
-    )
+    partial, cn2, qnorm = _query_tables(e, cents, query_ids_max)
     cnorm = (
         codes.join(F.broadcast(cn2), ["m", "code"])
         .groupBy(F.col("vid").alias("c_id"))
         .agg(F.sqrt(F.sum("n2")).alias("cnorm"))
-    )
-    qnorm = qe.groupBy(F.col("vid").alias("q_id")).agg(
-        F.sqrt(F.sum(F.col("val") * F.col("val"))).alias("qnorm")
     )
     adc = (
         codes.join(F.broadcast(partial), ["m", "code"])
         .groupBy(F.col("vid").alias("c_id"), "q_id")
         .agg(F.sum("pdot").alias("adot"))
     )
-    scored = (
-        adc.join(cnorm, "c_id")
-        .join(F.broadcast(qnorm), "q_id")
-        .filter(F.col("c_id") != F.col("q_id"))
-        .select(
-            "q_id",
-            "c_id",
-            (F.col("adot") / (F.col("qnorm") * F.col("cnorm"))).alias("cos"),
-        )
-    )
-    w = Window.partitionBy("q_id").orderBy(
-        F.round(F.col("cos"), 9).desc(), F.col("c_id").asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("q_id", "c_id", "rank", F.round("cos", 6).alias("cos_approx"))
-    )
+    return _adc_cut(adc.join(cnorm, "c_id").join(F.broadcast(qnorm), "q_id"), k)
 
 
 def ivfpq_topk(
@@ -219,32 +228,10 @@ def ivfpq_topk(
     At 100 TB: codes live partitioned by list id (partition pruning on
     the probe), the codebook and the query's M×K lookup table broadcast.
     """
-    from trackdechets_etl_spark.llm.similarity import cosine, label_centroids
-
-    # --- coarse quantizer + query routing (same discipline as ivf_topk)
-    cents_coarse = label_centroids(emb, id_col, vec_col, label_col).select(
-        F.col(label_col).alias("__list"), F.col("centroid")
-    )
     q = emb.filter(F.col(id_col) < query_ids_max).select(
         F.col(id_col).alias("q_id"), F.col(vec_col).alias("q_vec")
     )
-    routed = (
-        F.broadcast(q)
-        .crossJoin(F.broadcast(cents_coarse))
-        .select(
-            "q_id",
-            "__list",
-            cosine(F.col("q_vec"), F.col("centroid")).alias("__rcos"),
-        )
-    )
-    wr = Window.partitionBy("q_id").orderBy(
-        F.round(F.col("__rcos"), 9).desc(), F.col("__list").asc()
-    )
-    assigned = (
-        routed.withColumn("__rn", F.row_number().over(wr))
-        .filter(F.col("__rn") == 1)
-        .select("q_id", "__list")
-    )
+    assigned = ivf_route(emb, id_col, vec_col, label_col, q).select("q_id", "__list")
 
     # --- PQ codebook + codes over the full corpus
     e = materialize(explode_subspaces(emb, id_col, vec_col))
@@ -252,23 +239,12 @@ def ivfpq_topk(
     codes = pq_encode(e, cents)
 
     # --- ADC restricted to the routed list
-    qe = e.filter(F.col("vid") < query_ids_max)
-    partial = (
-        qe.join(F.broadcast(cents), ["m", "i"])
-        .groupBy(F.col("vid").alias("q_id"), "m", "code")
-        .agg(F.sum(F.col("val") * F.col("cval")).alias("pdot"))
-    )
-    cn2 = cents.groupBy("m", "code").agg(
-        F.sum(F.col("cval") * F.col("cval")).alias("n2")
-    )
+    partial, cn2, qnorm = _query_tables(e, cents, query_ids_max)
     labels = emb.select(
         F.col(id_col).alias("vid"), F.col(label_col).alias("__list")
     )
     cand_codes = codes.join(labels, "vid").join(
         F.broadcast(assigned), "__list"
-    )
-    qnorm = qe.groupBy(F.col("vid").alias("q_id")).agg(
-        F.sqrt(F.sum(F.col("val") * F.col("val"))).alias("qnorm")
     )
     # Candidate norms ride the ADC aggregation itself: cn2 (M*K rows)
     # broadcast-joins the same frame as the query lookup table, and one
@@ -288,20 +264,4 @@ def ivfpq_topk(
             F.sqrt(F.sum("n2")).alias("cnorm"),
         )
     )
-    scored = (
-        adc.join(F.broadcast(qnorm), "q_id")
-        .filter(F.col("c_id") != F.col("q_id"))
-        .select(
-            "q_id",
-            "c_id",
-            (F.col("adot") / (F.col("qnorm") * F.col("cnorm"))).alias("cos"),
-        )
-    )
-    w = Window.partitionBy("q_id").orderBy(
-        F.round(F.col("cos"), 9).desc(), F.col("c_id").asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("q_id", "c_id", "rank", F.round("cos", 6).alias("cos_approx"))
-    )
+    return _adc_cut(adc.join(F.broadcast(qnorm), "q_id"), k)

@@ -1,15 +1,24 @@
 """Similarity search over embedding columns (array<float>).
 
-- ``cosine``: JVM-side dot/norms via ``zip_with`` + ``aggregate`` on
-  double-cast arrays — no UDF, stays in codegen.
-- ``topk_bruteforce``: exact top-k for a (small) query set via
-  broadcast-join + window rank. This is the baseline: O(queries × corpus).
-- ``lsh_bucket_topk``: random-hyperplane LSH — deterministic ±1
-  hyperplanes derived from md5 in *Python at plan-build time* (so the
-  exact same literals appear in the Spark plan and the DuckDB oracle),
-  sign-pattern bucket per vector, then top-k within the query's bucket
-  only. The scale path: the corpus is scanned once to bucket, and each
-  query probes ~corpus/2^planes vectors.
+- ``cosine`` and ``norm``: JVM-side dot/norms via ``zip_with`` +
+  ``aggregate`` on double-cast arrays — no UDF, stays in codegen.
+
+Every top-k search is one operator: generate candidates, score them,
+cut to the top k. ``_cosine_topk`` is the scoring-and-cut kernel they
+share: cosine from norms projected once per side (not once per pair),
+then ``operators.ranking.top_k_per_group`` under the engine's float
+rank key. Only the candidate generator differs:
+
+- ``topk_bruteforce``: every corpus vector (broadcast query side, cross
+  join). The exact baseline: O(queries × corpus).
+- ``lsh_bucket_topk``: the query's random-hyperplane LSH bucket —
+  deterministic ±1 hyperplanes derived from md5 in *Python at
+  plan-build time* (so the exact same literals appear in the Spark plan
+  and the DuckDB oracle), sign-pattern bucket per vector. The scale
+  path: the corpus is scanned once to bucket, and each query probes
+  ~corpus/2^planes vectors.
+- ``ivf_topk``: the query's IVF list, chosen by ``ivf_route`` (nearest
+  label centroid), which ``llm.pq.ivfpq_topk`` shares.
 
 At 100 TB the corpus side is partitioned by bucket (write-time layout),
 so a probe touches one partition — the IVF idea expressed as parquet
@@ -23,6 +32,8 @@ import hashlib
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
+
+from trackdechets_etl_spark.operators.ranking import score_order, top_k_per_group
 
 N_PLANES = 4
 
@@ -39,7 +50,17 @@ def dot(a: Column, b: Column) -> Column:
     )
 
 
+def norm(v: Column) -> Column:
+    """Euclidean norm of an array column, in double: the same operands
+    and fold order as the norms inside :func:`cosine`, so a cosine
+    built from per-side norms is bit-identical to it."""
+    return F.sqrt(dot(as_double(v), as_double(v)))
+
+
 def cosine(a: Column, b: Column) -> Column:
+    # Not built from norm(): each side's cast is shared by its dot and
+    # its norm, and building it twice would rename lambda variables in
+    # the plan of every cosine() caller.
     da, db = as_double(a), as_double(b)
     return dot(da, db) / (F.sqrt(dot(da, da)) * F.sqrt(dot(db, db)))
 
@@ -65,6 +86,51 @@ def bucket_expr(emb: Column, dims: int, n_planes: int = N_PLANES) -> Column:
     return bucket.cast("int")
 
 
+def _side(
+    df: DataFrame,
+    id_col: str,
+    vec_col: str,
+    side: str,
+    *keys: str | Column,
+    norm_col: str | None = None,
+) -> DataFrame:
+    """One side of a cosine search: ``{side}_id``, ``{side}_vec``, the
+    join ``keys`` and the vector's norm in ``__{side}n``, projected
+    once per row of this side, not once per candidate pair. The norm is
+    computed here unless ``df`` already holds it in ``norm_col``."""
+    n = F.col(norm_col) if norm_col else norm(F.col(vec_col))
+    return df.select(
+        F.col(id_col).alias(f"{side}_id"),
+        F.col(vec_col).alias(f"{side}_vec"),
+        *keys,
+        n.alias(f"__{side}n"),
+    )
+
+
+def _cosine_topk(q: DataFrame, c: DataFrame, on: str | None, k: int) -> DataFrame:
+    """The retrieval kernel every vector search shares: pair the
+    (small, broadcast) query side ``q`` with its candidates ``c`` —
+    all of them when ``on`` is None, else those with the same ``on``
+    key — score each pair by cosine from the per-side norms, and cut
+    each query's candidates to the top ``k`` under ``score_order``
+    (cos rounded to 9 dp desc, candidate id asc). Only the candidate
+    generator differs between the searches. The per-side form has
+    the same operands and fold order as :func:`cosine`, so its
+    scores are bit-identical."""
+    pairs = F.broadcast(q).crossJoin(c) if on is None else F.broadcast(q).join(c, on)
+    scored = pairs.filter(F.col("q_id") != F.col("c_id")).select(
+        "q_id",
+        "c_id",
+        (
+            dot(as_double(F.col("q_vec")), as_double(F.col("c_vec")))
+            / (F.col("__qn") * F.col("__cn"))
+        ).alias("cos"),
+    )
+    return top_k_per_group(scored, "q_id", "cos", "c_id", k).select(
+        "q_id", "c_id", "rank", F.round("cos", 6).alias("cos_sim")
+    )
+
+
 def topk_bruteforce(
     emb: DataFrame,
     id_col: str,
@@ -73,51 +139,11 @@ def topk_bruteforce(
     k: int = 5,
 ) -> DataFrame:
     """Exact top-k cosine neighbors for every vector with id <
-    ``query_ids_max``. The query side is tiny → broadcast; the corpus is
-    scanned once. Rank key is (cos rounded to 9dp desc, id asc) for
-    engine-stable ordering."""
-    # Norms are projected once per SIDE (r14, the near_dup_pairs_bucketed
-    # rule): cosine() would recompute sqrt(dot(v,v)) for both vectors on
-    # every (query, candidate) pair — queries×corpus pairs — when the
-    # corpus norm is a per-row quantity computable in the single corpus
-    # scan. Same expression shape and fold order as cosine() →
-    # bit-identical output (pinned by the sf0.01/0.1 oracle compare and
-    # the partition/strategy invariance gates).
-    q = emb.filter(F.col(id_col) < query_ids_max).select(
-        F.col(id_col).alias("q_id"),
-        F.col(vec_col).alias("q_vec"),
-        F.sqrt(dot(as_double(F.col(vec_col)), as_double(F.col(vec_col)))).alias(
-            "__qn"
-        ),
-    )
-    c = emb.select(
-        F.col(id_col).alias("c_id"),
-        F.col(vec_col).alias("c_vec"),
-        F.sqrt(dot(as_double(F.col(vec_col)), as_double(F.col(vec_col)))).alias(
-            "__cn"
-        ),
-    )
-    scored = (
-        F.broadcast(q)
-        .crossJoin(c)
-        .filter(F.col("q_id") != F.col("c_id"))
-        .select(
-            "q_id",
-            "c_id",
-            (
-                dot(as_double(F.col("q_vec")), as_double(F.col("c_vec")))
-                / (F.col("__qn") * F.col("__cn"))
-            ).alias("cos"),
-        )
-    )
-    w = Window.partitionBy("q_id").orderBy(
-        F.round(F.col("cos"), 9).desc(), F.col("c_id").asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("q_id", "c_id", "rank", F.round("cos", 6).alias("cos_sim"))
-    )
+    ``query_ids_max``: every corpus vector is a candidate. The query
+    side is tiny → broadcast; the corpus is scanned once."""
+    q = _side(emb.filter(F.col(id_col) < query_ids_max), id_col, vec_col, "q")
+    c = _side(emb, id_col, vec_col, "c")
+    return _cosine_topk(q, c, None, k)
 
 
 def lsh_bucket_topk(
@@ -129,49 +155,23 @@ def lsh_bucket_topk(
     k: int = 5,
 ) -> DataFrame:
     """Approximate top-k: candidates restricted to the query's LSH
-    bucket. Same rank key as the exact variant."""
-    # Per-side norm projection (r14) — see topk_bruteforce.
+    bucket."""
     bucketed = emb.select(
         F.col(id_col),
         F.col(vec_col),
         bucket_expr(F.col(vec_col), dims).alias("bucket"),
-        F.sqrt(dot(as_double(F.col(vec_col)), as_double(F.col(vec_col)))).alias(
-            "__n"
-        ),
+        norm(F.col(vec_col)).alias("__n"),
     )
-    q = bucketed.filter(F.col(id_col) < query_ids_max).select(
-        F.col(id_col).alias("q_id"),
-        F.col(vec_col).alias("q_vec"),
+    q = _side(
+        bucketed.filter(F.col(id_col) < query_ids_max),
+        id_col,
+        vec_col,
+        "q",
         "bucket",
-        F.col("__n").alias("__qn"),
+        norm_col="__n",
     )
-    c = bucketed.select(
-        F.col(id_col).alias("c_id"),
-        F.col(vec_col).alias("c_vec"),
-        "bucket",
-        F.col("__n").alias("__cn"),
-    )
-    scored = (
-        F.broadcast(q)
-        .join(c, "bucket")
-        .filter(F.col("q_id") != F.col("c_id"))
-        .select(
-            "q_id",
-            "c_id",
-            (
-                dot(as_double(F.col("q_vec")), as_double(F.col("c_vec")))
-                / (F.col("__qn") * F.col("__cn"))
-            ).alias("cos"),
-        )
-    )
-    w = Window.partitionBy("q_id").orderBy(
-        F.round(F.col("cos"), 9).desc(), F.col("c_id").asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("q_id", "c_id", "rank", F.round("cos", 6).alias("cos_sim"))
-    )
+    c = _side(bucketed, id_col, vec_col, "c", "bucket", norm_col="__n")
+    return _cosine_topk(q, c, "bucket", k)
 
 
 def label_centroids(
@@ -214,6 +214,37 @@ def label_centroids(
     )
 
 
+def ivf_route(
+    emb: DataFrame, id_col: str, vec_col: str, label_col: str, q: DataFrame
+) -> DataFrame:
+    """IVF routing with ``nprobe=1``: the coarse quantizer is one
+    centroid per ``label_col`` value (``label_centroids`` — the IVF list
+    assignment is given by the label here; a production build would
+    k-means its own lists), and each query of ``q`` (``q_id``,
+    ``q_vec``, …) goes to its nearest centroid by cosine. The centroid
+    set is tiny → broadcast; the argmax uses ``score_order`` with a
+    list-asc tie-break. Returns ``q``'s columns plus the routed
+    ``__list``."""
+    cents = label_centroids(emb, id_col, vec_col, label_col).select(
+        F.col(label_col).alias("__list"), F.col("centroid")
+    )
+    routed = (
+        F.broadcast(q)
+        .crossJoin(F.broadcast(cents))
+        .select(
+            *q.columns,
+            "__list",
+            cosine(F.col("q_vec"), F.col("centroid")).alias("__rcos"),
+        )
+    )
+    wr = Window.partitionBy("q_id").orderBy(*score_order("__rcos", "__list"))
+    return (
+        routed.withColumn("__rn", F.row_number().over(wr))
+        .filter(F.col("__rn") == 1)
+        .select(*q.columns, "__list")
+    )
+
+
 def ivf_topk(
     emb: DataFrame,
     id_col: str,
@@ -222,81 +253,16 @@ def ivf_topk(
     query_ids_max: int,
     k: int = 5,
 ) -> DataFrame:
-    """IVF (inverted-file) approximate top-k with ``nprobe=1``:
+    """IVF (inverted-file) approximate top-k: route each query to its
+    list (:func:`ivf_route`), then take candidates from ONLY that list.
 
-    1. coarse quantizer: one centroid per ``label_col`` partition
-       (``label_centroids`` — the IVF list assignment is given by the
-       label here; a production build would k-means its own lists);
-    2. route each query to its nearest centroid by cosine (centroid set
-       is tiny → broadcast, rank key rounded to 9dp with label-asc
-       tie-break for engine-stable argmax);
-    3. scan ONLY that list for candidates and rank top-k with the same
-       key as the exact variant.
-
-    At 100 TB the corpus is written partitioned by list id, so step 3 is
-    partition pruning — each query reads corpus/n_lists, not the corpus.
+    At 100 TB the corpus is written partitioned by list id, so the
+    candidate scan is partition pruning — each query reads
+    corpus/n_lists, not the corpus.
     """
-    cents = label_centroids(emb, id_col, vec_col, label_col).select(
-        F.col(label_col).alias("__list"), F.col("centroid")
-    )
-    # Per-side norm projection (r14) — see topk_bruteforce. The query
-    # norm rides through the routing window; the candidate norm is
-    # computed once per corpus row in the list scan.
-    q = emb.filter(F.col(id_col) < query_ids_max).select(
-        F.col(id_col).alias("q_id"),
-        F.col(vec_col).alias("q_vec"),
-        F.sqrt(dot(as_double(F.col(vec_col)), as_double(F.col(vec_col)))).alias(
-            "__qn"
-        ),
-    )
-    routed = (
-        F.broadcast(q)
-        .crossJoin(F.broadcast(cents))
-        .select(
-            "q_id",
-            "q_vec",
-            "__qn",
-            "__list",
-            cosine(F.col("q_vec"), F.col("centroid")).alias("__rcos"),
-        )
-    )
-    wr = Window.partitionBy("q_id").orderBy(
-        F.round(F.col("__rcos"), 9).desc(), F.col("__list").asc()
-    )
-    assigned = (
-        routed.withColumn("__rn", F.row_number().over(wr))
-        .filter(F.col("__rn") == 1)
-        .select("q_id", "q_vec", "__qn", "__list")
-    )
-    c = emb.select(
-        F.col(id_col).alias("c_id"),
-        F.col(vec_col).alias("c_vec"),
-        F.col(label_col).alias("__list"),
-        F.sqrt(dot(as_double(F.col(vec_col)), as_double(F.col(vec_col)))).alias(
-            "__cn"
-        ),
-    )
-    scored = (
-        F.broadcast(assigned)
-        .join(c, "__list")
-        .filter(F.col("q_id") != F.col("c_id"))
-        .select(
-            "q_id",
-            "c_id",
-            (
-                dot(as_double(F.col("q_vec")), as_double(F.col("c_vec")))
-                / (F.col("__qn") * F.col("__cn"))
-            ).alias("cos"),
-        )
-    )
-    w = Window.partitionBy("q_id").orderBy(
-        F.round(F.col("cos"), 9).desc(), F.col("c_id").asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("q_id", "c_id", "rank", F.round("cos", 6).alias("cos_sim"))
-    )
+    q = _side(emb.filter(F.col(id_col) < query_ids_max), id_col, vec_col, "q")
+    c = _side(emb, id_col, vec_col, "c", F.col(label_col).alias("__list"))
+    return _cosine_topk(ivf_route(emb, id_col, vec_col, label_col, q), c, "__list", k)
 
 
 def near_dup_pairs_bucketed(
@@ -328,10 +294,7 @@ def near_dup_pairs_bucketed(
         F.col(id_col),
         F.col(vec_col),
         bucket_expr(F.col(vec_col), dims, n_planes).alias("bucket"),
-    ).withColumn(
-        "__n",
-        F.sqrt(dot(as_double(F.col(vec_col)), as_double(F.col(vec_col)))),
-    )
+    ).withColumn("__n", norm(F.col(vec_col)))
     a = bk.select(
         "bucket",
         F.col(id_col).alias("id_a"),

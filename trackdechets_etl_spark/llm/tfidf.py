@@ -17,6 +17,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from trackdechets_etl_spark.operators.ranking import top_k_per_group
 from trackdechets_etl_spark.session import materialize
 
 
@@ -37,11 +38,11 @@ def tfidf(
     docs: DataFrame,
     text_col: str,
     id_col: str,
-    top_k: int | None = None,
+    top_k: int,
 ) -> DataFrame:
-    """Per-(doc, term) TF-IDF weights; optionally only each doc's
-    ``top_k`` terms (rank key: weight rounded to 9dp desc, term asc —
-    engine-stable). Weight = tf * ln(n_docs / df)."""
+    """Each doc's ``top_k`` terms by TF-IDF weight, ranked under
+    ``score_order`` (weight rounded to 9 dp desc, term asc).
+    Weight = tf * ln(n_docs / df)."""
     # tc feeds BOTH the df table and the scored join, and Spark does
     # not reuse the exchange between the two consumers (verified:
     # no ReusedExchange in the plan) — without materialization the
@@ -60,15 +61,8 @@ def tfidf(
             "tfidf"
         ),
     )
-    if top_k is None:
-        return scored
-    w = Window.partitionBy(id_col).orderBy(
-        F.round(F.col("tfidf"), 9).desc(), F.col("term").asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= top_k)
-        .select(id_col, "term", "tf", "tfidf", F.col("rank").cast("long").alias("rank"))
+    return top_k_per_group(scored, id_col, "tfidf", "term", top_k).select(
+        id_col, "term", "tf", "tfidf", F.col("rank").cast("long").alias("rank")
     )
 
 

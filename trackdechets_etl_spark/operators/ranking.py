@@ -10,6 +10,10 @@ range partition, then add per-partition row-count offsets. The offset
 frame has one row per partition — bounded by cluster configuration,
 not by data — so its cumulative window is trivially small.
 
+``score_order`` is the engine's one rule for ranking by a float score
+(rounded to 9 dp descending, then a tie column ascending), and
+``top_k_per_group`` the per-group top-k cut built on it.
+
 ``ntile_from_rank`` turns an exact global rank into the same bucket
 ntile() would assign, via the closed-form split (N rows, B buckets:
 q = N div B, r = N mod B; the first r buckets hold q+1 rows). Combined
@@ -24,7 +28,7 @@ the ranking semantics the registry's analytics queries add on top.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import Column, DataFrame, Window, WindowSpec
 from pyspark.sql import functions as F
 
 from trackdechets_etl_spark.session import materialize
@@ -32,6 +36,56 @@ from trackdechets_etl_spark.session import materialize
 _PID = "__gr_pid"
 _LRN = "__gr_lrn"
 _OFF = "__gr_off"
+
+
+def score_order(score: str, tie: str) -> list[Column]:
+    """The rank key for a float ``score``: rounded to 9 dp descending,
+    then ``tie`` ascending. Spark and DuckDB can differ in a double's
+    last bits (summation order, libm), so ordering by the raw score
+    would let such a wobble swap two near-equal candidates between the
+    engines; at 9 dp they tie and ``tie`` decides. Works in both
+    ``Window.orderBy`` and ``DataFrame.orderBy``."""
+    return [F.round(F.col(score), 9).desc(), F.col(tie).asc()]
+
+
+def top_k_per_group(
+    df: DataFrame,
+    by: str | list[str],
+    score: str,
+    tie: str,
+    k: int,
+    rank_col: str = "rank",
+) -> DataFrame:
+    """The rows ranked 1..``k`` within each ``by`` group under
+    :func:`score_order`, with their 1-based rank in ``rank_col``
+    (``row_number``'s int; cast it where a BIGINT is emitted)."""
+    w = Window.partitionBy(by).orderBy(*score_order(score, tie))
+    return df.withColumn(rank_col, F.row_number().over(w)).filter(
+        F.col(rank_col) <= k
+    )
+
+
+def _range_partitioned(
+    df: DataFrame, order_cols: list[Column], num_partitions: int | None
+) -> tuple[DataFrame, WindowSpec]:
+    """``df`` range-partitioned on ``order_cols`` (into
+    ``spark.sql.shuffle.partitions`` parts by default) with its
+    partition id in ``_PID``, lazily materialized so the boundaries are
+    sampled once for both consumers (the ranked rows and the
+    per-partition totals); and the window over all strictly preceding
+    partitions that turns those totals into offsets. The offset frame
+    has one row per partition: the cumulative window's input is bounded
+    by cluster config, never by data volume."""
+    if num_partitions is None:
+        num_partitions = int(
+            df.sparkSession.conf.get("spark.sql.shuffle.partitions", "32")
+        )
+    rp = materialize(
+        df.repartitionByRange(num_partitions, *order_cols)
+        .withColumn(_PID, F.spark_partition_id()),
+        eager=False,
+    )
+    return rp, Window.orderBy(_PID).rowsBetween(Window.unboundedPreceding, -1)
 
 
 def global_row_number(
@@ -60,14 +114,7 @@ def global_row_number(
     the decomposed sum is bit-identical to the single-partition
     window's; a double column would expose association order.
     """
-    spark = df.sparkSession
-    if num_partitions is None:
-        num_partitions = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
-    rp = materialize(
-        df.repartitionByRange(num_partitions, *order_cols)
-        .withColumn(_PID, F.spark_partition_id()),
-        eager=False,
-    )
+    rp, wc = _range_partitioned(df, order_cols, num_partitions)
     w = Window.partitionBy(_PID).orderBy(*order_cols)
     local = rp.withColumn(_LRN, F.row_number().over(w))
     size_aggs = [F.count(F.lit(1)).alias("__gr_n")]
@@ -81,9 +128,6 @@ def global_row_number(
         )
         size_aggs.append(F.sum(value_col).alias("__gr_vt"))
     sizes = rp.groupBy(_PID).agg(*size_aggs)
-    # one row per partition: the cumulative window's input is bounded
-    # by cluster config, never by data volume.
-    wc = Window.orderBy(_PID).rowsBetween(Window.unboundedPreceding, -1)
     off_cols = [
         F.col(_PID),
         F.coalesce(F.sum("__gr_n").over(wc), F.lit(0)).alias(_OFF),
@@ -116,20 +160,12 @@ def global_prefix_max_exclusive(
     the watermark shape — with the same range-partitioned
     decomposition as :func:`global_row_number`. Max is associative and
     commutative, so the split is exact for any orderable type."""
-    spark = df.sparkSession
-    if num_partitions is None:
-        num_partitions = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
-    rp = materialize(
-        df.repartitionByRange(num_partitions, *order_cols)
-        .withColumn(_PID, F.spark_partition_id()),
-        eager=False,
-    )
+    rp, wc = _range_partitioned(df, order_cols, num_partitions)
     w = Window.partitionBy(_PID).orderBy(*order_cols).rowsBetween(
         Window.unboundedPreceding, -1
     )
     local = rp.withColumn("__gr_lm", F.max(value_col).over(w))
     totals = rp.groupBy(_PID).agg(F.max(value_col).alias("__gr_t"))
-    wc = Window.orderBy(_PID).rowsBetween(Window.unboundedPreceding, -1)
     offsets = totals.select(_PID, F.max("__gr_t").over(wc).alias("__gr_moff"))
     return (
         local.join(F.broadcast(offsets), _PID)

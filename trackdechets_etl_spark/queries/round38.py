@@ -23,6 +23,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from trackdechets_etl_spark.io.readers import read_table
+from trackdechets_etl_spark.operators.ranking import top_k_per_group
 from trackdechets_etl_spark.queries import QuerySpec
 from trackdechets_etl_spark.session import materialize
 
@@ -103,12 +104,8 @@ def _text_bm25_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("query", "doc_id")
         .agg(F.sum("s").alias("score"))
     )
-    w = Window.partitionBy("query").orderBy(
-        F.round(F.col("score"), 9).desc(), F.col("doc_id").asc()
-    )
     return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= _BM25_K)
+        top_k_per_group(scored, "query", "score", "doc_id", _BM25_K)
         .select(
             "query",
             "doc_id",

@@ -35,6 +35,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from trackdechets_etl_spark.io.readers import read_table
+from trackdechets_etl_spark.operators.ranking import top_k_per_group
 from trackdechets_etl_spark.queries import QuerySpec
 
 # ------------------------------------------------ BPE merges
@@ -289,6 +290,22 @@ ORDER BY user_id, session_seq, sub_seq
 _NOISE_K = 5
 
 
+def _knn_majority(scored: DataFrame) -> DataFrame:
+    """The kNN label vote: each probe ``pid`` (label ``plabel``) keeps
+    its ``_NOISE_K`` nearest neighbours ``nid`` by ``cos`` under
+    ``score_order``, and returns the neighbour label ``nlabel`` with the
+    most votes ``n_votes`` (ties: label asc). Shared with the recall
+    twin (embedding_label_noise_recall, round54.py)."""
+    knn = top_k_per_group(scored, "pid", "cos", "nid", _NOISE_K, "rnk")
+    votes = knn.groupBy("pid", "plabel", "nlabel").agg(
+        F.count(F.lit(1)).alias("n_votes")
+    )
+    wm = Window.partitionBy("pid").orderBy(F.desc("n_votes"), F.asc("nlabel"))
+    return votes.withColumn("mr", F.row_number().over(wm)).filter(
+        F.col("mr") == 1
+    )
+
+
 _NOISE_PROBE_HEX = "28"  # md5(vec_id) < 0x28/0xff -> ~1/6.4 of vectors
 
 
@@ -333,19 +350,8 @@ def _embedding_label_noise_knn(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("pid") != F.col("nid"))
         .select("pid", "plabel", "nid", "nlabel", cosine(F.col("pv"), F.col("nv")).alias("cos"))
     )
-    wr = Window.partitionBy("pid").orderBy(
-        F.round(F.col("cos"), 9).desc(), F.col("nid").asc()
-    )
-    knn = scored.withColumn("rnk", F.row_number().over(wr)).filter(
-        F.col("rnk") <= _NOISE_K
-    )
-    votes = knn.groupBy("pid", "plabel", "nlabel").agg(
-        F.count(F.lit(1)).alias("n_votes")
-    )
-    wm = Window.partitionBy("pid").orderBy(F.desc("n_votes"), F.asc("nlabel"))
     return (
-        votes.withColumn("mr", F.row_number().over(wm))
-        .filter(F.col("mr") == 1)
+        _knn_majority(scored)
         .select(
             F.col("pid").alias("vec_id"),
             F.col("plabel").cast("long").alias("label"),

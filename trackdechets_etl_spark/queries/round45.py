@@ -26,6 +26,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from trackdechets_etl_spark.io.readers import read_table
+from trackdechets_etl_spark.operators.ranking import score_order
 from trackdechets_etl_spark.queries import QuerySpec
 from trackdechets_etl_spark.session import materialize
 
@@ -57,7 +58,7 @@ def _embedding_mmr_select(spark: SparkSession, sf_dir: str) -> DataFrame:
     # top-k via orderBy+limit -> TakeOrderedAndProject (per-partition
     # heaps, k rows cross the wire) — never a corpus-scale window.
     cand = materialize(
-        scored.orderBy(F.round(F.col("sim_q"), 9).desc(), F.col("vec_id").asc())
+        scored.orderBy(*score_order("sim_q", "vec_id"))
         .limit(_MMR_POOL)
         .select("vec_id", "embedding", "sim_q"),
         eager=False,
@@ -111,7 +112,7 @@ def _embedding_mmr_select(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "vec_id", "sim_q", (_MMR_LAMBDA * F.col("sim_q")).alias("mmr")
             )
         pick = materialize(
-            pool.orderBy(F.round(F.col("mmr"), 9).desc(), F.col("vec_id").asc())
+            pool.orderBy(*score_order("mmr", "vec_id"))
             .limit(1)
             .select(
                 F.lit(k).cast("long").alias("pick_rank"),

@@ -25,36 +25,15 @@ Invariant tests in tests/test_round54.py.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, SparkSession, Window
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from trackdechets_etl_spark.io.readers import read_table
 from trackdechets_etl_spark.queries import QuerySpec
+from trackdechets_etl_spark.queries.round41 import _NOISE_K, _knn_majority
 
 _REC_PROBE_HEX = "08"  # md5(vec_id) first byte < 0x08 -> ~1/32 of vectors
-_REC_K = 5
 _EMB_DIMS = 64
-
-
-def _majority(scored: DataFrame, out_col: str) -> DataFrame:
-    """5-NN majority label per probe, deterministic tie-breaks (cosine
-    rounded to 9dp desc, neighbor id asc; then votes desc, label asc) —
-    identical to embedding_label_noise_knn's voting stage."""
-    wr = Window.partitionBy("pid").orderBy(
-        F.round(F.col("cos"), 9).desc(), F.col("nid").asc()
-    )
-    knn = scored.withColumn("rnk", F.row_number().over(wr)).filter(
-        F.col("rnk") <= _REC_K
-    )
-    votes = knn.groupBy("pid", "plabel", "nlabel").agg(
-        F.count(F.lit(1)).alias("n_votes")
-    )
-    wm = Window.partitionBy("pid").orderBy(F.desc("n_votes"), F.asc("nlabel"))
-    return (
-        votes.withColumn("mr", F.row_number().over(wm))
-        .filter(F.col("mr") == 1)
-        .select("pid", "plabel", F.col("nlabel").alias(out_col))
-    )
 
 
 def _embedding_label_noise_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -92,13 +71,12 @@ def _embedding_label_noise_recall(spark: SparkSession, sf_dir: str) -> DataFrame
         )
 
     # exact: broadcast the BOUNDED probe side only; corpus scanned once
-    exact = _majority(
-        score(F.broadcast(probe.drop("bucket")).crossJoin(corpus.drop("bucket"))),
-        "maj_exact",
-    )
+    exact = _knn_majority(
+        score(F.broadcast(probe.drop("bucket")).crossJoin(corpus.drop("bucket")))
+    ).select("pid", "plabel", F.col("nlabel").alias("maj_exact"))
     # bucketed: the production plan — equi-join on the LSH bucket
-    lsh = _majority(score(probe.join(corpus, "bucket")), "maj_lsh").select(
-        "pid", "maj_lsh"
+    lsh = _knn_majority(score(probe.join(corpus, "bucket"))).select(
+        "pid", F.col("nlabel").alias("maj_lsh")
     )
     j = exact.join(lsh, "pid", "left")
     noisy_exact = F.col("maj_exact") != F.col("plabel")
@@ -147,13 +125,13 @@ ex_knn AS (
         SELECT pid, plabel, nlabel,
                row_number() OVER (PARTITION BY pid
                    ORDER BY round(cos, 9) DESC, nid ASC) AS rnk
-        FROM ex_scored) WHERE rnk <= {_REC_K}),
+        FROM ex_scored) WHERE rnk <= {_NOISE_K}),
 ls_knn AS (
     SELECT * FROM (
         SELECT pid, plabel, nlabel,
                row_number() OVER (PARTITION BY pid
                    ORDER BY round(cos, 9) DESC, nid ASC) AS rnk
-        FROM ls_scored) WHERE rnk <= {_REC_K}),
+        FROM ls_scored) WHERE rnk <= {_NOISE_K}),
 ex_m AS (
     SELECT pid, plabel, nlabel AS maj_exact FROM (
         SELECT pid, plabel, nlabel,

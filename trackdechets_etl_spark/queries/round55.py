@@ -50,6 +50,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from trackdechets_etl_spark.io.readers import read_table
+from trackdechets_etl_spark.operators.ranking import score_order
 from trackdechets_etl_spark.queries import QuerySpec
 
 # ------------------------------------------- Mann-Whitney U
@@ -394,9 +395,7 @@ def _sim_mrr_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
             "q_id", "c_id", cosine(F.col("qv"), F.col("cv")).alias("cos")
         )
     )
-    wr = Window.partitionBy("q_id").orderBy(
-        F.round(F.col("cos"), 9).desc(), F.col("c_id").asc()
-    )
+    wr = Window.partitionBy("q_id").orderBy(*score_order("cos", "c_id"))
     ranked = scored.withColumn("rnk", F.row_number().over(wr))
     hit = exact_nn.join(
         ranked.select("q_id", F.col("c_id").alias("nn_id"), "rnk"),

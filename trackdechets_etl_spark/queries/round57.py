@@ -78,6 +78,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from trackdechets_etl_spark.io.readers import read_table
+from trackdechets_etl_spark.operators.ranking import top_k_per_group
 from trackdechets_etl_spark.queries import QuerySpec
 
 # ------------------------------------- repeated span coverage
@@ -482,9 +483,14 @@ _EMB_DIMS = 64
 
 
 def _sim_recall_curve_nplanes(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from trackdechets_etl_spark.llm.similarity import bucket_expr, cosine
+    from trackdechets_etl_spark.llm.similarity import (
+        bucket_expr,
+        cosine,
+        topk_bruteforce,
+    )
 
-    e = read_table(spark, sf_dir, "embeddings").select(
+    emb = read_table(spark, sf_dir, "embeddings")
+    e = emb.select(
         "vec_id",
         "embedding",
         bucket_expr(F.col("embedding"), _EMB_DIMS, _RC_MAX_PLANES).alias("b8"),
@@ -499,24 +505,8 @@ def _sim_recall_curve_nplanes(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("embedding").alias("c_vec"),
         F.col("b8").alias("c_b8"),
     )
-    # exact top-k: bounded probe side broadcast, corpus scanned once
-    exact_scored = (
-        F.broadcast(probe)
-        .crossJoin(corpus)
-        .filter(F.col("q_id") != F.col("c_id"))
-        .select(
-            "q_id",
-            "c_id",
-            cosine(F.col("q_vec"), F.col("c_vec")).alias("cos"),
-        )
-    )
-    we = Window.partitionBy("q_id").orderBy(
-        F.round(F.col("cos"), 9).desc(), F.col("c_id").asc()
-    )
-    exact = (
-        exact_scored.withColumn("rnk", F.row_number().over(we))
-        .filter(F.col("rnk") <= _RC_K)
-        .select("q_id", "c_id")
+    exact = topk_bruteforce(emb, "vec_id", "embedding", _RC_QUERIES, k=_RC_K).select(
+        "q_id", "c_id"
     )
     # nested buckets: the P-plane bucket is b8 % 2^P (plane p = bit p),
     # so ONE bucket computation serves every swept config.
@@ -538,18 +528,18 @@ def _sim_recall_curve_nplanes(spark: SparkSession, sf_dir: str) -> DataFrame:
     cand = p_exp.join(c_exp, ["n_planes", "bk"]).filter(
         F.col("q_id") != F.col("c_id")
     )
-    wl = Window.partitionBy("n_planes", "q_id").orderBy(
-        F.round(F.col("cos"), 9).desc(), F.col("c_id").asc()
-    )
-    lsh = (
+    lsh = top_k_per_group(
         cand.select(
             "n_planes",
             "q_id",
             "c_id",
             cosine(F.col("q_vec"), F.col("c_vec")).alias("cos"),
-        )
-        .withColumn("rnk", F.row_number().over(wl))
-        .filter(F.col("rnk") <= _RC_K)
+        ),
+        ["n_planes", "q_id"],
+        "cos",
+        "c_id",
+        _RC_K,
+        "rnk",
     )
     hits = lsh.join(exact, ["q_id", "c_id"])
     n_cand = cand.groupBy("n_planes").agg(

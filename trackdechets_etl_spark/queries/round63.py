@@ -56,7 +56,7 @@ from pyspark.sql import functions as F
 
 from trackdechets_etl_spark.io.readers import read_table
 from trackdechets_etl_spark.llm.similarity import cosine
-from trackdechets_etl_spark.operators.ranking import global_row_number
+from trackdechets_etl_spark.operators.ranking import global_row_number, score_order
 from trackdechets_etl_spark.queries import QuerySpec
 from trackdechets_etl_spark.queries.round61 import _hex8_int_sql
 from trackdechets_etl_spark.session import materialize
@@ -296,9 +296,7 @@ def _sim_rrf_hybrid(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).alias("rrf_raw"),
     )
     return (
-        fused.orderBy(
-            F.round("rrf_raw", 9).desc(), F.asc("doc_id")
-        )
+        fused.orderBy(*score_order("rrf_raw", "doc_id"))
         .limit(_RRF_OUT_K)
         .select(
             "doc_id",

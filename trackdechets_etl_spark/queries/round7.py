@@ -39,6 +39,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from trackdechets_etl_spark.io.readers import read_table
+from trackdechets_etl_spark.operators.ranking import top_k_per_group
 from trackdechets_etl_spark.queries import QuerySpec
 from trackdechets_etl_spark.session import materialize
 
@@ -672,13 +673,11 @@ def _sim_maxsim(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     per_qsub = pairs.groupBy("qid", "did", "qs").agg(F.max("d").alias("mx"))
     scores = per_qsub.groupBy("qid", "did").agg(F.sum("mx").alias("score"))
-    w = Window.partitionBy("qid").orderBy(
-        F.round(F.col("score"), 9).desc(), F.col("did").asc()
-    )
-    return (
-        scores.withColumn("rank", F.row_number().over(w).cast("long"))
-        .filter(F.col("rank") <= _MAXSIM_K)
-        .select("qid", "did", "rank", F.round("score", 6).alias("maxsim"))
+    return top_k_per_group(scores, "qid", "score", "did", _MAXSIM_K).select(
+        "qid",
+        "did",
+        F.col("rank").cast("long").alias("rank"),
+        F.round("score", 6).alias("maxsim"),
     )
 
 

@@ -77,6 +77,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from trackdechets_etl_spark.io.readers import read_table
+from trackdechets_etl_spark.operators.ranking import top_k_per_group
 from trackdechets_etl_spark.queries import QuerySpec
 from trackdechets_etl_spark.session import materialize
 
@@ -347,8 +348,7 @@ _MAP_W = {j: 60 // j for j in range(1, _MAP_K + 1)}
 
 def _sim_map_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     from trackdechets_etl_spark.llm.similarity import (
-        bucket_expr,
-        cosine,
+        lsh_bucket_topk,
         topk_bruteforce,
     )
 
@@ -356,40 +356,15 @@ def _sim_map_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     rel = topk_bruteforce(
         e, "vec_id", "embedding", _MAP_Q, k=_MAP_K
     ).select("q_id", "c_id", F.lit(1).alias("is_rel"))
-    bucketed = e.select(
-        "vec_id",
-        "embedding",
-        bucket_expr(F.col("embedding"), 64).alias("bucket"),
-    )
-    q = bucketed.filter(F.col("vec_id") < _MAP_Q).select(
-        F.col("vec_id").alias("q_id"),
-        F.col("embedding").alias("qv"),
-        "bucket",
-    )
-    c = bucketed.select(
-        F.col("vec_id").alias("c_id"),
-        F.col("embedding").alias("cv"),
-        "bucket",
-    )
-    wr = Window.partitionBy("q_id").orderBy(
-        F.round(F.col("cos"), 9).desc(), F.col("c_id").asc()
-    )
     ranked = (
-        F.broadcast(q)
-        .join(c, "bucket")
-        .filter(F.col("q_id") != F.col("c_id"))
-        .select(
-            "q_id", "c_id", cosine(F.col("qv"), F.col("cv")).alias("cos")
-        )
-        .withColumn("rnk", F.row_number().over(wr))
-        .filter(F.col("rnk") <= _MAP_K)
+        lsh_bucket_topk(e, "vec_id", "embedding", 64, _MAP_Q, k=_MAP_K)
         .join(rel, ["q_id", "c_id"], "left")
         .withColumn("r", F.coalesce("is_rel", F.lit(0)))
     )
     per_q = ranked.groupBy("q_id").agg(
         *[
             F.coalesce(
-                F.max(F.when(F.col("rnk") == j, F.col("r"))), F.lit(0)
+                F.max(F.when(F.col("rank") == j, F.col("r"))), F.lit(0)
             ).alias(f"r{j}")
             for j in range(1, _MAP_K + 1)
         ]
@@ -931,12 +906,8 @@ def _text_lmir_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         ).alias("score"),
     )
-    w = Window.partitionBy("query").orderBy(
-        F.round(F.col("score"), 9).desc(), F.col("doc_id").asc()
-    )
     return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= _LMIR_K)
+        top_k_per_group(scored, "query", "score", "doc_id", _LMIR_K)
         .select(
             "query",
             "doc_id",

@@ -27,6 +27,44 @@ def test_cc_chain_needs_multiple_rounds(spark, small_gate):
     assert labels == {10: 10, 11: 10, 12: 10, 13: 10, 14: 10, 20: 20, 21: 20}
 
 
+def test_cc_loop_broadcasts_labels_by_edge_count(spark, monkeypatch):
+    """The distributed loop broadcasts the labels, bounded by the edge
+    count, although their plan statistics say otherwise: ``pairs``
+    here is a materialized self-join of 3,000 ids, so the frames built
+    from it carry the join's 9M-row estimate. Each round's join is a
+    broadcast in the initial plan (no sort-merge join and its two
+    shuffles), and the labels equal the union-find path's."""
+    from pyspark.sql import functions as F
+
+    from trackdechets_etl_spark.operators import graph
+
+    ids = spark.range(3000)
+    # Components {4k, .., 4k+3}: paths of 3 hops, so several rounds.
+    pairs = (
+        ids.join(ids.withColumnRenamed("id", "nxt"), F.col("nxt") == F.col("id") + 1)
+        .filter(F.col("id") % 4 != 3)
+        .select(F.col("id").alias("id_a"), F.col("nxt").alias("id_b"))
+        .localCheckpoint()
+    )
+    plans = []
+    real = graph.materialize
+
+    def spy(df, eager=True):
+        plans.append(df._jdf.queryExecution().executedPlan().toString())
+        return real(df, eager)
+
+    monkeypatch.setattr(graph, "materialize", spy)
+    looped = connected_components(pairs, "id_a", "id_b", small_graph_edges=0)
+    joins = [p for p in plans if "Join" in p]
+    monkeypatch.setattr(graph, "materialize", real)
+    assert len(joins) >= 3, f"{len(joins)} rounds"
+    for plan in joins:
+        assert "BroadcastHashJoin" in plan and "SortMergeJoin" not in plan, plan
+    found = connected_components(pairs, "id_a", "id_b")
+    assert sorted(looped.collect()) == sorted(found.collect())
+    assert {r["label"] for r in looped.collect()} == set(range(0, 3000, 4))
+
+
 def test_cc_raises_instead_of_returning_partial_labels(spark):
     # ADVICE r1: diameter > max_iterations must be a loud error, never a
     # silently wrong half-propagated labeling. (Distributed loop only —

@@ -371,6 +371,21 @@ def test_fan_out_decides_from_listed_bytes(spark, tmp_path, uri):
         spark.conf.set(conf, old)
 
 
+def test_fan_out_reads_split_size_with_a_unit(spark):
+    """Spark returns a byte-size conf as it was set, unit and all: the
+    fan-out reads ``spark.sql.files.maxPartitionBytes`` set to ``128m``
+    (an ``int()`` of it raised ``ValueError``), as 128 MiB."""
+    from trackdechets_etl_spark.io.readers import read_table
+
+    conf = "spark.sql.files.maxPartitionBytes"
+    old = spark.conf.get(conf)
+    try:
+        spark.conf.set(conf, "128m")
+        assert _round_robin(read_table(spark, SF_DIR, "documents"))
+    finally:
+        spark.conf.set(conf, old)
+
+
 def test_compact_parquet_sizes_uri_like_path(spark, tmp_path):
     from trackdechets_etl_spark.io.writers import compact_parquet
 

@@ -645,3 +645,22 @@ def test_score_order_has_one_home():
         if pattern.search(line)
     ]
     assert not hits, f"score rank key outside operators/ranking.py: {hits}"
+
+
+def test_byte_size_confs_read_through_conf_bytes():
+    """Spark returns a conf as it was set, so a byte size may carry a
+    unit (``128m``, ``10MB``) that ``int()`` rejects: the package reads
+    byte-size confs through ``session.conf_bytes`` only, and parses no
+    conf string with ``int()``."""
+    import re
+    from pathlib import Path
+
+    pkg = Path(__file__).resolve().parents[1] / "trackdechets_etl_spark"
+    pattern = re.compile(r"\bint\(\s*[\w.]*conf\.get\(")
+    hits = [
+        f"{path.relative_to(pkg.parent)}:{text.count(chr(10), 0, m.start()) + 1}"
+        for path in sorted(pkg.rglob("*.py"))
+        for text in [path.read_text()]
+        for m in pattern.finditer(text)
+    ]
+    assert not hits, f"int() of a conf string: {hits}"

@@ -1,7 +1,9 @@
 """``session.materialize``: a local checkpoint on ``local[...]``, a reliable
 checkpoint anywhere else, so a result survives the loss of the executor
 that computed it, and is deleted once its frame is collected. Also the
-session's generated-class cache, which a warm round must not outgrow."""
+session's generated-class cache, which a warm round must not outgrow,
+and the broadcast gate on a known size (``conf_bytes``,
+``broadcast_if_fits``) with the Spark jobs it saves the graph loops."""
 
 from __future__ import annotations
 
@@ -12,8 +14,13 @@ from pathlib import Path
 
 import pytest
 
+from trackdechets_etl_spark.canon import canon
 from trackdechets_etl_spark.queries import all_queries
-from trackdechets_etl_spark.session import is_local_master
+from trackdechets_etl_spark.session import (
+    broadcast_if_fits,
+    conf_bytes,
+    is_local_master,
+)
 from tests.conftest import SF_DIR
 
 REPO = Path(__file__).resolve().parents[1]
@@ -57,6 +64,93 @@ def test_warm_round_reuses_generated_classes(spark):
     one_round()
     again = compiles.getCount() - before
     assert again < 20, f"the second round compiled {again} classes again"
+
+
+_THRESHOLD = "spark.sql.autoBroadcastJoinThreshold"
+
+
+@pytest.fixture
+def threshold(spark):
+    """Sets the broadcast threshold for one test, then restores it."""
+    old = spark.conf.get(_THRESHOLD)
+    yield lambda value: spark.conf.set(_THRESHOLD, value)
+    spark.conf.set(_THRESHOLD, old)
+
+
+@pytest.mark.parametrize(
+    "value, expected",
+    [
+        ("67108864", 64 * 1024 * 1024),
+        ("64m", 64 * 1024 * 1024),
+        ("10MB", 10 * 1024 * 1024),
+        ("10485760b", 10 * 1024 * 1024),
+        ("-1", -1),
+    ],
+)
+def test_conf_bytes_parses_like_spark(spark, threshold, value, expected):
+    threshold(value)
+    assert conf_bytes(spark, _THRESHOLD) == expected
+
+
+def _hinted(df) -> bool:
+    return "ResolvedHint" in df._jdf.queryExecution().analyzed().toString()
+
+
+def test_broadcast_if_fits_at_the_threshold(spark, threshold):
+    """Spark's per-row estimate for one long column is 8 + 8 bytes: ten
+    rows fit a 160-byte threshold exactly and are hinted, eleven are
+    not; at -1 (disabled) not even an empty frame is."""
+    df = spark.range(10)
+    threshold("160")
+    assert _hinted(broadcast_if_fits(df, 10))
+    assert not _hinted(broadcast_if_fits(df, 11))
+    threshold("-1")
+    assert not _hinted(broadcast_if_fits(df, 0))
+
+
+def _warm_round_jobs(spark, sf_dir: str, names) -> dict[str, int]:
+    """Jobs per query, build and sink together, in the second of two
+    rounds, counted from the query's job group."""
+    queries = all_queries()
+    sc = spark.sparkContext
+    jobs = {}
+    for rnd in range(2):
+        for name in names:
+            group = f"warm-jobs/{sf_dir}/{rnd}/{name}"
+            sc.setJobGroup(group, name)
+            try:
+                df = queries[name].fn(spark, sf_dir)
+                df.write.format("noop").mode("overwrite").save()
+            finally:
+                sc.setLocalProperty("spark.jobGroup.id", None)
+            jobs[name] = len(sc.statusTracker().getJobIdsForGroup(group))
+    return jobs
+
+
+@pytest.mark.parametrize("sf_dir", [SF_DIR, SF_DIR.replace("sf0.001", "sf0.01")])
+def test_graph_loops_skip_the_discarded_shuffles(spark, sf_dir):
+    """Gated on a row count the loop knows (PageRank's node count,
+    k-core's edge count over k), PageRank's ``ranks`` and k-core's
+    ``keep`` broadcast in the initial plan, so AQE no longer
+    shuffles the edge and node frames of a sort-merge join it then
+    throws away: 26 -> 20 and 24 -> 16 jobs at sf0.01 (k-core at
+    sf0.001 peels to nothing after one round and ran 10 before)."""
+    jobs = _warm_round_jobs(spark, sf_dir, ("graph_pagerank", "graph_kcore_peel"))
+    assert jobs["graph_pagerank"] <= 20, jobs
+    assert jobs["graph_kcore_peel"] <= 17, jobs
+
+
+@pytest.mark.parametrize("name", ["graph_pagerank", "graph_kcore_peel"])
+def test_graph_loops_match_oracle_with_broadcast_disabled(spark, duck, threshold, name):
+    """At a threshold of -1 the gate hints nothing and both loops run
+    their shuffle joins, the path a node set past the threshold takes."""
+    threshold("-1")
+    spec = all_queries()[name]
+    df = spec.fn(spark, SF_DIR)
+    rows, cols = [tuple(r) for r in df.collect()], df.columns
+    res = duck.execute(spec.oracle)
+    want_cols = [d[0] for d in res.description]
+    assert canon(rows, cols) == canon(res.fetchall(), want_cols)
 
 
 # Runs in its own process so the session-scoped local[...] fixture is

@@ -39,6 +39,8 @@ from pyspark.sql.types import (
     TimestampNTZType,
 )
 
+from trackdechets_etl_spark.session import conf_bytes
+
 
 def resolve_source_path(url_or_path: str, dest: str) -> str:
     """S1/S2: fetch a remote file to local disk, or copy a local path.
@@ -337,7 +339,7 @@ def _fan_out_small_scan(spark: SparkSession, df: DataFrame) -> DataFrame:
     yields thousands of splits, so ``est_splits >= parallelism`` and no
     extra shuffle is inserted.
     """
-    max_bytes = int(spark.conf.get("spark.sql.files.maxPartitionBytes", "134217728"))
+    max_bytes = conf_bytes(spark, "spark.sql.files.maxPartitionBytes")
     parallelism = spark.sparkContext.defaultParallelism
     est_splits = max(1, table_bytes(df) // max_bytes)
     if est_splits < parallelism:

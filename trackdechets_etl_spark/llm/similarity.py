@@ -2,6 +2,9 @@
 
 - ``cosine`` and ``norm``: JVM-side dot/norms via ``zip_with`` +
   ``aggregate`` on double-cast arrays — no UDF, stays in codegen.
+  ``cosine_from_norms`` scores a candidate pair from norms projected
+  once per row of each side, for searches that score each vector
+  against many candidates.
 
 Every top-k search is one operator: generate candidates, score them,
 cut to the top k. ``_cosine_topk`` is the scoring-and-cut kernel they
@@ -55,6 +58,14 @@ def norm(v: Column) -> Column:
     and fold order as the norms inside :func:`cosine`, so a cosine
     built from per-side norms is bit-identical to it."""
     return F.sqrt(dot(as_double(v), as_double(v)))
+
+
+def cosine_from_norms(a: Column, b: Column, norm_a: Column, norm_b: Column) -> Column:
+    """Cosine of ``a`` and ``b`` given their :func:`norm` columns,
+    projected once per row of each side rather than once per candidate
+    pair. The same operands and fold order as :func:`cosine`, so the
+    value is bit-identical to it."""
+    return dot(as_double(a), as_double(b)) / (norm_a * norm_b)
 
 
 def cosine(a: Column, b: Column) -> Column:
@@ -121,9 +132,8 @@ def _cosine_topk(q: DataFrame, c: DataFrame, on: str | None, k: int) -> DataFram
     scored = pairs.filter(F.col("q_id") != F.col("c_id")).select(
         "q_id",
         "c_id",
-        (
-            dot(as_double(F.col("q_vec")), as_double(F.col("c_vec")))
-            / (F.col("__qn") * F.col("__cn"))
+        cosine_from_norms(
+            F.col("q_vec"), F.col("c_vec"), F.col("__qn"), F.col("__cn")
         ).alias("cos"),
     )
     return top_k_per_group(scored, "q_id", "cos", "c_id", k).select(
@@ -314,8 +324,9 @@ def near_dup_pairs_bucketed(
             "id_a",
             "id_b",
             F.round(
-                dot(as_double(F.col("vec_a")), as_double(F.col("vec_b")))
-                / (F.col("na") * F.col("nb")),
+                cosine_from_norms(
+                    F.col("vec_a"), F.col("vec_b"), F.col("na"), F.col("nb")
+                ),
                 6,
             ).alias("cos_sim"),
         )

@@ -8,7 +8,8 @@ Iterative min-label propagation, pure DataFrame ops:
   its own label and its neighbors' labels — labels are monotonically
   non-increasing, so the sum of labels is a convergence metric that
   needs no row-level diff join;
-- each round is ONE shuffle (join on the edge endpoint + groupBy min);
+- each round is ONE shuffle (the labels broadcast to the edges while
+  their known size fits, then groupBy min);
   rounds needed = graph diameter, which for near-dup clusters is tiny
   (dup groups are near-cliques, typically diameter ≤ 2-3);
 - ``session.materialize`` truncates lineage each round (a local
@@ -26,7 +27,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from trackdechets_etl_spark.functions.scalar import hash_key
-from trackdechets_etl_spark.session import materialize
+from trackdechets_etl_spark.session import broadcast_if_fits, materialize
 
 # Below this many (symmetrized, distinct) edges, label via driver-side
 # union-find instead of the distributed loop — see the fast path in
@@ -148,8 +149,11 @@ def connected_components(
     prev_sum = _label_sig(labels)
     converged = False
     for _ in range(max_iterations):
+        # Every node of the symmetrized graph has an edge, so labels
+        # has at most n_edges rows: broadcast it while that fits.
         neighbor_labels = edges.join(
-            labels.select(F.col("node").alias("v"), "label"), "v"
+            broadcast_if_fits(labels.select(F.col("node").alias("v"), "label"), n_edges),
+            "v",
         ).select(F.col("u").alias("node"), "label")
         labels = materialize(
             labels.unionByName(neighbor_labels)
@@ -260,14 +264,17 @@ def pagerank(
     )
     for i in range(iterations):
         if i > 0:
-            # ranks is nodes-sized (≪ edges) but GROWS with the graph,
-            # so no broadcast hint: AQE broadcasts it while it fits
-            # (keeping the edge table from shuffling inside the loop)
-            # and falls back to a shuffle join on src when the node set
-            # outgrows the threshold — a forced hint would instead
-            # crash the loop at cluster scale.
+            # ranks has one row per node, n_nodes of them. A
+            # materialized ranks keeps its origin plan's size estimate
+            # (a join's: edges × nodes), so unhinted, AQE plans a
+            # sort-merge join and shuffles the edge table and ranks
+            # before it sees the real size. The hint is gated on the
+            # known row count: while n_nodes fit the broadcast
+            # threshold the edge table never shuffles in the loop;
+            # past it the join stays a shuffle join on src.
             contribs = e_deg.join(
-                ranks.withColumnRenamed("node", "src"), "src"
+                broadcast_if_fits(ranks.withColumnRenamed("node", "src"), n_nodes),
+                "src",
             ).select("dst", (F.col("rank") / F.col("out_deg")).alias("c"))
         ranks = (
             contribs.groupBy("dst")

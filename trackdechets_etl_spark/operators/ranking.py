@@ -77,8 +77,11 @@ def _range_partitioned(
     has one row per partition: the cumulative window's input is bounded
     by cluster config, never by data volume."""
     if num_partitions is None:
-        num_partitions = int(
-            df.sparkSession.conf.get("spark.sql.shuffle.partitions", "32")
+        # spark.sql.shuffle.partitions as Spark parsed it.
+        num_partitions = (
+            df.sparkSession._jsparkSession.sessionState()
+            .conf()
+            .defaultNumShufflePartitions()
         )
     rp = materialize(
         df.repartitionByRange(num_partitions, *order_cols)

@@ -310,7 +310,11 @@ _NOISE_PROBE_HEX = "28"  # md5(vec_id) < 0x28/0xff -> ~1/6.4 of vectors
 
 
 def _embedding_label_noise_knn(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from trackdechets_etl_spark.llm.similarity import bucket_expr, cosine
+    from trackdechets_etl_spark.llm.similarity import (
+        bucket_expr,
+        cosine_from_norms,
+        norm,
+    )
 
     EMB_DIMS = 64
     e = read_table(spark, sf_dir, "embeddings").select(
@@ -318,6 +322,7 @@ def _embedding_label_noise_knn(spark: SparkSession, sf_dir: str) -> DataFrame:
         "label",
         "embedding",
         bucket_expr(F.col("embedding"), EMB_DIMS).alias("bucket"),
+        norm(F.col("embedding")).alias("n"),
     )
     # deterministic md5 probe sample caps the probe side; candidate
     # generation is an EQUI-JOIN on the hyperplane-LSH bucket (the
@@ -337,18 +342,28 @@ def _embedding_label_noise_knn(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("vec_id").alias("pid"),
         F.col("label").alias("plabel"),
         F.col("embedding").alias("pv"),
+        F.col("n").alias("pn"),
         "bucket",
     )
     b = e.select(
         F.col("vec_id").alias("nid"),
         F.col("label").alias("nlabel"),
         F.col("embedding").alias("nv"),
+        F.col("n").alias("nn"),
         "bucket",
     )
     scored = (
         a.join(b, "bucket")
         .filter(F.col("pid") != F.col("nid"))
-        .select("pid", "plabel", "nid", "nlabel", cosine(F.col("pv"), F.col("nv")).alias("cos"))
+        .select(
+            "pid",
+            "plabel",
+            "nid",
+            "nlabel",
+            cosine_from_norms(
+                F.col("pv"), F.col("nv"), F.col("pn"), F.col("nn")
+            ).alias("cos"),
+        )
     )
     return (
         _knn_majority(scored)

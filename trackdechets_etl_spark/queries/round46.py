@@ -34,7 +34,7 @@ from trackdechets_etl_spark.plans.fixtures import (
     trade_edges,
 )
 from trackdechets_etl_spark.queries import QuerySpec
-from trackdechets_etl_spark.session import materialize
+from trackdechets_etl_spark.session import broadcast_if_fits, materialize
 
 # ------------------------------------------- discount elasticity
 
@@ -171,6 +171,12 @@ def _graph_kcore_peel(spark: SparkSession, sf_dir: str) -> DataFrame:
     tagged = spark.range(1, _KCORE_ROUNDS + 1).select(
         F.col("id").alias("round"), F.lit(0).alias("node"), F.lit(0).alias("edge")
     )
+    # Each kept node is the source of at least _KCORE_K edges, and the
+    # edges only shrink, so one edge count before the loop bounds every
+    # round's keep: at most n_edges // _KCORE_K rows. A distinct count
+    # of the nodes is tighter on this graph (its mean degree is above
+    # _KCORE_K) but costs a second shuffle and about twice the time.
+    max_keep = edges.count() // _KCORE_K
     for rnd in range(1, _KCORE_ROUNDS + 1):
         keep = materialize(
             edges.groupBy("src")
@@ -179,13 +185,23 @@ def _graph_kcore_peel(spark: SparkSession, sf_dir: str) -> DataFrame:
             .select(F.col("src").alias("node")),
             eager=False,
         )
-        # The two semi-joins read one broadcast of keep (the second is a
-        # ReusedExchange): a round is four jobs, the degree shuffle, the
-        # edge and keep shuffles AQE plans before it sees keep's size,
-        # and that broadcast.
+        # keep, materialized, carries its origin plan's size estimate,
+        # so unhinted, AQE plans both semi-joins as sort-merge joins
+        # and shuffles edges and keep before it sees keep's size. Gated
+        # on max_keep, the two semi-joins read one broadcast of keep (the
+        # second is a ReusedExchange): a round is two jobs, the degree
+        # shuffle and that broadcast. Past the threshold they stay
+        # shuffle joins.
         edges = materialize(
-            edges.join(keep.select(F.col("node").alias("src")), "src", "left_semi")
-            .join(keep.select(F.col("node").alias("dst")), "dst", "left_semi"),
+            edges.join(
+                broadcast_if_fits(keep.select(F.col("node").alias("src")), max_keep),
+                "src",
+                "left_semi",
+            ).join(
+                broadcast_if_fits(keep.select(F.col("node").alias("dst")), max_keep),
+                "dst",
+                "left_semi",
+            ),
             eager=False,
         )
         r = F.lit(rnd).cast("long").alias("round")

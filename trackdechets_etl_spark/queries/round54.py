@@ -37,13 +37,18 @@ _EMB_DIMS = 64
 
 
 def _embedding_label_noise_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from trackdechets_etl_spark.llm.similarity import bucket_expr, cosine
+    from trackdechets_etl_spark.llm.similarity import (
+        bucket_expr,
+        cosine_from_norms,
+        norm,
+    )
 
     e = read_table(spark, sf_dir, "embeddings").select(
         "vec_id",
         "label",
         "embedding",
         bucket_expr(F.col("embedding"), _EMB_DIMS).alias("bucket"),
+        norm(F.col("embedding")).alias("n"),
     )
     probe = e.filter(
         F.substring(F.md5(F.col("vec_id").cast("string")), 1, 2)
@@ -52,12 +57,14 @@ def _embedding_label_noise_recall(spark: SparkSession, sf_dir: str) -> DataFrame
         F.col("vec_id").alias("pid"),
         F.col("label").alias("plabel"),
         F.col("embedding").alias("pv"),
+        F.col("n").alias("pn"),
         "bucket",
     )
     corpus = e.select(
         F.col("vec_id").alias("nid"),
         F.col("label").alias("nlabel"),
         F.col("embedding").alias("nv"),
+        F.col("n").alias("nn"),
         "bucket",
     )
 
@@ -67,7 +74,9 @@ def _embedding_label_noise_recall(spark: SparkSession, sf_dir: str) -> DataFrame
             "plabel",
             "nid",
             "nlabel",
-            cosine(F.col("pv"), F.col("nv")).alias("cos"),
+            cosine_from_norms(
+                F.col("pv"), F.col("nv"), F.col("pn"), F.col("nn")
+            ).alias("cos"),
         )
 
     # exact: broadcast the BOUNDED probe side only; corpus scanned once

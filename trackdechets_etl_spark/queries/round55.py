@@ -367,8 +367,10 @@ _MRR_Q = 10  # probe queries: vec_id < 10, the TOPK_QUERY_IDS contract
 
 def _sim_mrr_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     from trackdechets_etl_spark.llm.similarity import (
+        _side,
         bucket_expr,
-        cosine,
+        cosine_from_norms,
+        norm,
         topk_bruteforce,
     )
 
@@ -380,19 +382,27 @@ def _sim_mrr_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
         "vec_id",
         "embedding",
         bucket_expr(F.col("embedding"), 64).alias("bucket"),
+        norm(F.col("embedding")).alias("__n"),
     )
-    q = bucketed.filter(F.col("vec_id") < _MRR_Q).select(
-        F.col("vec_id").alias("q_id"), F.col("embedding").alias("qv"), "bucket"
+    q = _side(
+        bucketed.filter(F.col("vec_id") < _MRR_Q),
+        "vec_id",
+        "embedding",
+        "q",
+        "bucket",
+        norm_col="__n",
     )
-    c = bucketed.select(
-        F.col("vec_id").alias("c_id"), F.col("embedding").alias("cv"), "bucket"
-    )
+    c = _side(bucketed, "vec_id", "embedding", "c", "bucket", norm_col="__n")
     scored = (
         F.broadcast(q)
         .join(c, "bucket")
         .filter(F.col("q_id") != F.col("c_id"))
         .select(
-            "q_id", "c_id", cosine(F.col("qv"), F.col("cv")).alias("cos")
+            "q_id",
+            "c_id",
+            cosine_from_norms(
+                F.col("q_vec"), F.col("c_vec"), F.col("__qn"), F.col("__cn")
+            ).alias("cos"),
         )
     )
     wr = Window.partitionBy("q_id").orderBy(*score_order("cos", "c_id"))

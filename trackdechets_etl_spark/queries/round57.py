@@ -485,7 +485,8 @@ _EMB_DIMS = 64
 def _sim_recall_curve_nplanes(spark: SparkSession, sf_dir: str) -> DataFrame:
     from trackdechets_etl_spark.llm.similarity import (
         bucket_expr,
-        cosine,
+        cosine_from_norms,
+        norm,
         topk_bruteforce,
     )
 
@@ -494,16 +495,19 @@ def _sim_recall_curve_nplanes(spark: SparkSession, sf_dir: str) -> DataFrame:
         "vec_id",
         "embedding",
         bucket_expr(F.col("embedding"), _EMB_DIMS, _RC_MAX_PLANES).alias("b8"),
+        norm(F.col("embedding")).alias("n"),
     )
     probe = e.filter(F.col("vec_id") < _RC_QUERIES).select(
         F.col("vec_id").alias("q_id"),
         F.col("embedding").alias("q_vec"),
         F.col("b8").alias("q_b8"),
+        F.col("n").alias("q_n"),
     )
     corpus = e.select(
         F.col("vec_id").alias("c_id"),
         F.col("embedding").alias("c_vec"),
         F.col("b8").alias("c_b8"),
+        F.col("n").alias("c_n"),
     )
     exact = topk_bruteforce(emb, "vec_id", "embedding", _RC_QUERIES, k=_RC_K).select(
         "q_id", "c_id"
@@ -517,12 +521,14 @@ def _sim_recall_curve_nplanes(spark: SparkSession, sf_dir: str) -> DataFrame:
         "n_planes",
         "q_id",
         "q_vec",
+        "q_n",
         F.expr("q_b8 % shiftleft(1, n_planes)").alias("bk"),
     )
     c_exp = corpus.crossJoin(F.broadcast(planes)).select(
         "n_planes",
         "c_id",
         "c_vec",
+        "c_n",
         F.expr("c_b8 % shiftleft(1, n_planes)").alias("bk"),
     )
     cand = p_exp.join(c_exp, ["n_planes", "bk"]).filter(
@@ -533,7 +539,9 @@ def _sim_recall_curve_nplanes(spark: SparkSession, sf_dir: str) -> DataFrame:
             "n_planes",
             "q_id",
             "c_id",
-            cosine(F.col("q_vec"), F.col("c_vec")).alias("cos"),
+            cosine_from_norms(
+                F.col("q_vec"), F.col("c_vec"), F.col("q_n"), F.col("c_n")
+            ).alias("cos"),
         ),
         ["n_planes", "q_id"],
         "cos",

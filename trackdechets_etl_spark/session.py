@@ -30,13 +30,20 @@ Scale posture (100 TB target, tested on local[N]):
   are deleted once their frame is garbage-collected
   (``spark.cleaner.referenceTracking.cleanCheckpoints``); without it
   every materialized frame stayed in ``spark.checkpoint.dir``.
+- ``broadcast_if_fits`` hints a broadcast when a frame's row count is
+  known and Spark's own size estimate for that many rows fits
+  ``spark.sql.autoBroadcastJoinThreshold`` (read by ``conf_bytes``, the
+  one reader of byte-size confs); no knob of its own (docs/SCALE.md,
+  "Broadcast gated on a known size").
 """
 
 from __future__ import annotations
 
 import os
+import re
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
 
 
 def get_spark(
@@ -107,3 +114,43 @@ def materialize(df: DataFrame, eager: bool = True) -> DataFrame:
     if is_local_master(df.sparkSession.sparkContext.master):
         return df.localCheckpoint(eager=eager)
     return df.checkpoint(eager=True)
+
+
+# Spark's byte suffixes (JavaUtils.byteStringAs), as powers of 1024.
+_BYTE_SUFFIXES = {
+    "b": 0, "k": 1, "kb": 1, "m": 2, "mb": 2, "g": 3, "gb": 3,
+    "t": 4, "tb": 4, "p": 5, "pb": 5,
+}
+
+
+def conf_bytes(spark: SparkSession, key: str) -> int:
+    """A byte-size conf in bytes, parsed as Spark parses it: the value
+    comes back as it was set (``"134217728"``, ``"128m"``, ``"10MB"``,
+    Spark's default ``"10485760b"``), a suffix-less number is bytes,
+    and a leading ``-`` negates it, so ``-1`` (disabled) stays -1.
+    Raises ``ValueError`` on a value Spark would reject too."""
+    raw = spark.conf.get(key)
+    text = raw.strip().lower()
+    sign = -1 if text.startswith("-") else 1
+    m = re.fullmatch(r"([0-9]+)([a-z]*)", text[1:] if sign < 0 else text)
+    if m is None or m.group(2) not in ("", *_BYTE_SUFFIXES):
+        raise ValueError(f"{key}={raw!r} is not a byte size")
+    return sign * int(m.group(1)) * 1024 ** _BYTE_SUFFIXES.get(m.group(2), 0)
+
+
+def broadcast_if_fits(df: DataFrame, rows: int) -> DataFrame:
+    """``F.broadcast(df)`` when ``rows`` rows of ``df`` fit
+    ``spark.sql.autoBroadcastJoinThreshold`` by Spark's own per-row
+    estimate (8 bytes of row overhead plus the schema's default size),
+    else ``df`` unchanged; a threshold of -1 never hints.
+
+    For a frame whose row count the caller knows (or bounds) but whose
+    plan statistics are far larger: a frame returned by
+    :func:`materialize` keeps its origin plan's estimate, a product of
+    the inputs for a join, so AQE plans a sort-merge join on it and
+    shuffles both sides before it sees the real size. Past the
+    threshold the join stays the shuffle join Spark would plan."""
+    threshold = conf_bytes(df.sparkSession, "spark.sql.autoBroadcastJoinThreshold")
+    if rows * (8 + df._jdf.schema().defaultSize()) <= threshold:
+        return F.broadcast(df)
+    return df

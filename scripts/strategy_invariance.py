@@ -1,15 +1,20 @@
 """Physical-strategy invariance probe: run every registry query at
-sf0.01 under three execution regimes and require bit-identical values
-(exact float repr, the partition_invariance.py convention):
+sf0.01 under several execution regimes and require bit-identical values
+(exact float repr through ``canon``, so even sub-1e-9 drift fails):
 
-  baseline   — the engine's session defaults (AQE on, 64 MiB
-               auto-broadcast threshold)
-  no-aqe     — spark.sql.adaptive.enabled=false: no runtime
-               coalescing, no skew-join splitting, no
-               broadcast-join conversion
-  no-auto-bc — autoBroadcastJoinThreshold=-1 (both static and AQE
-               variants): every non-hinted join falls back to
-               sort-merge / shuffled-hash
+  baseline     — the engine's session defaults (AQE on, 64 MiB
+                 auto-broadcast threshold), 32 shuffle partitions
+  partitions-7 — spark.sql.shuffle.partitions=7: float-sum association
+                 order changes with partitioning, so a diff is a latent
+                 cluster-scale nondeterminism (a 1000-executor cluster
+                 re-associates every partial aggregate)
+  no-aqe       — spark.sql.adaptive.enabled=false: no runtime
+                 coalescing, no skew-join splitting, no
+                 broadcast-join conversion
+  no-auto-bc   — autoBroadcastJoinThreshold=-1 (both static and AQE
+                 variants): every non-hinted join falls back to
+                 sort-merge / shuffled-hash
+  no-codegen   — whole-stage codegen off (interpreted evaluation)
 
 Why this is a 100 TB gate and not local busywork: on a 1000-executor
 cluster the SAME query text gets DIFFERENT physical plans than on
@@ -45,6 +50,10 @@ REGIMES = {
         "spark.sql.adaptive.enabled": "true",
         "spark.sql.autoBroadcastJoinThreshold": str(64 * 1024 * 1024),
         "spark.sql.adaptive.autoBroadcastJoinThreshold": str(64 * 1024 * 1024),
+        "spark.sql.shuffle.partitions": "32",
+    },
+    "partitions-7": {
+        "spark.sql.shuffle.partitions": "7",
     },
     "no-aqe": {
         "spark.sql.adaptive.enabled": "false",

@@ -24,7 +24,8 @@ REGISTRY = all_queries()
 # five reference pipelines, the 22 headline queries and the iterative
 # graph_pagerank and graph_kcore_peel, heavy users of
 # session.materialize), one consumer of each shared SQL/Column helper
-# (cosine and hyperplane SQL, md5 hex to int SQL, array dot product) and
+# (the llm/similarity cosine, norm and LSH-bucket SQL, md5 hex to int
+# SQL, array dot product) and
 # of each sized or converted read (the orders rank gate, the documents
 # and embeddings fan-out, events.ts), and every consumer of a
 # functions.scalar.hash_key key or of a keyed-shingle step of llm/dedup
@@ -81,6 +82,11 @@ _DEFAULT_SHARD = {name for work in WORKLOADS.values() for name, _ in work} | {
     "embedding_mmr_select",
     "sim_rrf_hybrid",
     "events_late_arrivals",
+    "sim_silhouette_lsh",
+    "embedding_bucket_label_eval",
+    "embedding_centroid_drift",
+    "dedup_semantic_prune",
+    "embedding_array_stats",
 }
 
 

@@ -567,41 +567,38 @@ def test_bloom_prefilter_probe_is_constant_time_and_broadcast(spark):
     assert "SortMergeJoin" not in plan, "fact table shuffled for a join"
 
 
+def _package_hits(pattern: str, *homes: str) -> list[str]:
+    """``path:line`` of every match of the regex ``pattern`` in the
+    package's Python files, skipping the ``homes`` (paths relative to
+    the package) where the concern is allowed to live. Matches may span
+    lines."""
+    import re
+    from pathlib import Path
+
+    pkg = Path(__file__).resolve().parents[1] / "trackdechets_etl_spark"
+    rx = re.compile(pattern)
+    return [
+        f"{path.relative_to(pkg.parent)}:{text.count(chr(10), 0, m.start()) + 1}"
+        for path in sorted(pkg.rglob("*.py"))
+        if path.relative_to(pkg).as_posix() not in homes
+        for text in [path.read_text()]
+        for m in rx.finditer(text)
+    ]
+
+
 def test_only_materialize_cuts_lineage():
     """Every lineage cut goes through ``session.materialize``, which
     picks a local or a reliable checkpoint from the master; a direct
     ``localCheckpoint``/``.checkpoint(`` elsewhere would lose its result
     with the executor that computed it on a cluster."""
-    import re
-    from pathlib import Path
-
-    pkg = Path(__file__).resolve().parents[1] / "trackdechets_etl_spark"
-    pattern = re.compile(r"localCheckpoint|\.checkpoint\(")
-    hits = [
-        f"{path.relative_to(pkg.parent)}:{n}"
-        for path in sorted(pkg.rglob("*.py"))
-        if path != pkg / "session.py"
-        for n, line in enumerate(path.read_text().splitlines(), 1)
-        if pattern.search(line)
-    ]
+    hits = _package_hits(r"localCheckpoint|\.checkpoint\(", "session.py")
     assert not hits, f"lineage cut outside session.materialize: {hits}"
 
 
 def test_only_hash_key_hashes():
     """Every 64-bit key goes through ``functions.scalar.hash_key``, so
     which hash and how wide is decided (and documented) in one place."""
-    import re
-    from pathlib import Path
-
-    pkg = Path(__file__).resolve().parents[1] / "trackdechets_etl_spark"
-    pattern = re.compile(r"xxhash64\(")
-    hits = [
-        f"{path.relative_to(pkg.parent)}:{n}"
-        for path in sorted(pkg.rglob("*.py"))
-        if path != pkg / "functions" / "scalar.py"
-        for n, line in enumerate(path.read_text().splitlines(), 1)
-        if pattern.search(line)
-    ]
+    hits = _package_hits(r"xxhash64\(", "functions/scalar.py")
     assert not hits, f"xxhash64 outside hash_key: {hits}"
 
 
@@ -609,22 +606,12 @@ def test_trade_graph_has_one_home():
     """The customer↔supplier trade graph (its pairs and the supplier node
     offset) is derived in ``plans/fixtures.py`` only, so its edge set and
     node encoding are decided in one place."""
-    import re
-    from pathlib import Path
-
-    pkg = Path(__file__).resolve().parents[1] / "trackdechets_etl_spark"
-    pattern = re.compile(
+    hits = _package_hits(
         r"OFFSET\s*=\s*1_?000_?000\b"
         r"|DISTINCT\s+(o\.)?o_custkey\s+AS\s+\w+\s*,\s*(l\.)?l_suppkey"
-        r"|DISTINCT\s+(l\.)?l_suppkey\s+AS\s+\w+\s*,\s*(o\.)?o_custkey"
+        r"|DISTINCT\s+(l\.)?l_suppkey\s+AS\s+\w+\s*,\s*(o\.)?o_custkey",
+        "plans/fixtures.py",
     )
-    hits = [
-        f"{path.relative_to(pkg.parent)}:{n}"
-        for path in sorted(pkg.rglob("*.py"))
-        if path != pkg / "plans" / "fixtures.py"
-        for n, line in enumerate(path.read_text().splitlines(), 1)
-        if pattern.search(line)
-    ]
     assert not hits, f"trade graph derived outside plans/fixtures.py: {hits}"
 
 
@@ -632,18 +619,7 @@ def test_score_order_has_one_home():
     """Ranking by a float score (rounded to 9 dp descending, then a tie
     column) is built by ``operators.ranking.score_order`` only, so Spark
     and the DuckDB oracles order near-equal scores by one rule."""
-    import re
-    from pathlib import Path
-
-    pkg = Path(__file__).resolve().parents[1] / "trackdechets_etl_spark"
-    pattern = re.compile(r", 9\)\.desc\(\)")
-    hits = [
-        f"{path.relative_to(pkg.parent)}:{n}"
-        for path in sorted(pkg.rglob("*.py"))
-        if path != pkg / "operators" / "ranking.py"
-        for n, line in enumerate(path.read_text().splitlines(), 1)
-        if pattern.search(line)
-    ]
+    hits = _package_hits(r", 9\)\.desc\(\)", "operators/ranking.py")
     assert not hits, f"score rank key outside operators/ranking.py: {hits}"
 
 
@@ -652,15 +628,21 @@ def test_byte_size_confs_read_through_conf_bytes():
     unit (``128m``, ``10MB``) that ``int()`` rejects: the package reads
     byte-size confs through ``session.conf_bytes`` only, and parses no
     conf string with ``int()``."""
-    import re
-    from pathlib import Path
-
-    pkg = Path(__file__).resolve().parents[1] / "trackdechets_etl_spark"
-    pattern = re.compile(r"\bint\(\s*[\w.]*conf\.get\(")
-    hits = [
-        f"{path.relative_to(pkg.parent)}:{text.count(chr(10), 0, m.start()) + 1}"
-        for path in sorted(pkg.rglob("*.py"))
-        for text in [path.read_text()]
-        for m in pattern.finditer(text)
-    ]
+    hits = _package_hits(r"\bint\(\s*[\w.]*conf\.get\(")
     assert not hits, f"int() of a conf string: {hits}"
+
+
+def test_cosine_sql_has_one_home():
+    """The DuckDB norm and cosine (``sqrt(list_dot_product(``) are
+    written in ``llm/similarity.py`` only, next to their Spark twins, so
+    every oracle embeds one text of each formula."""
+    hits = _package_hits(r"sqrt\(\s*list_dot_product\(", "llm/similarity.py")
+    assert not hits, f"norm/cosine SQL outside llm/similarity.py: {hits}"
+
+
+def test_lsh_bucket_sql_has_one_home():
+    """The DuckDB hyperplane-LSH bucket (``CASE WHEN list_dot_product(``)
+    is written in ``llm/similarity.py`` only, next to ``bucket_expr``,
+    with the same hyperplane literals."""
+    hits = _package_hits(r"CASE\s+WHEN\s+list_dot_product\(", "llm/similarity.py")
+    assert not hits, f"LSH bucket SQL outside llm/similarity.py: {hits}"

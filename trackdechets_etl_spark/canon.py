@@ -1,12 +1,12 @@
 """Canonical row normalization shared by the verification probes.
 
 Exact-repr float compare (no rounding, no tolerance): these helpers
-back the invariance gates (`scripts/partition_invariance.py`,
-`scripts/strategy_invariance.py`), which exist specifically to detect
-sub-epsilon float drift between execution regimes — canonicalization
-looser than the driver's value hash would let the drift pass. One
-definition so the gates can never disagree about what "bit-identical"
-means. The oracle compares (`tests/test_oracle.py`,
+back the invariance gate (`scripts/strategy_invariance.py`, whose
+regimes include 7 vs 32 shuffle partitions), which exists specifically
+to detect sub-epsilon float drift between execution regimes —
+canonicalization looser than the driver's value hash would let the
+drift pass. One definition so the gates can never disagree about what
+"bit-identical" means. The oracle compares (`tests/test_oracle.py`,
 `scripts/selfcheck_sf001.py`, perfbench's check) use it too.
 """
 

@@ -35,7 +35,6 @@ def write_bucketed(
     table: str,
     bucket_by: str,
     n_buckets: int = 32,
-    sort_by: str | None = None,
     mode: str = "overwrite",
 ) -> None:
     """Bucketed managed table: rows are hash-bucketed on the join key at
@@ -44,10 +43,9 @@ def write_bucketed(
     layout for fact-fact joins at 100 TB (the broadcast escape hatch
     only works while one side stays dim-sized). Requires saveAsTable
     (bucket metadata lives in the catalog)."""
-    writer = df.write.mode(mode).bucketBy(n_buckets, bucket_by)
-    if sort_by:
-        writer = writer.sortBy(sort_by)
-    writer.format("parquet").saveAsTable(table)
+    df.write.mode(mode).bucketBy(n_buckets, bucket_by).format(
+        "parquet"
+    ).saveAsTable(table)
 
 
 def compact_parquet(

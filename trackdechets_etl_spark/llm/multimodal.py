@@ -86,7 +86,7 @@ def decode_payload(payload: bytes, kind: str, fake: bool = False) -> list[float]
     ]
 
 
-def decode_features(df: DataFrame, fake: bool = True, batch_hint: int = 1024) -> DataFrame:
+def decode_features(df: DataFrame, fake: bool = True) -> DataFrame:
     """Arrow-batched decode over ``mapInPandas``: each Python worker
     receives pandas batches of (doc_id, payload, mm_kind, n_bytes) and
     emits the DECODED_SCHEMA rows. Partition-parallel — on a cluster

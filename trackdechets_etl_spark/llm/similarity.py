@@ -2,9 +2,12 @@
 
 - ``cosine`` and ``norm``: JVM-side dot/norms via ``zip_with`` +
   ``aggregate`` on double-cast arrays — no UDF, stays in codegen.
-  ``cosine_from_norms`` scores a candidate pair from norms projected
-  once per row of each side, for searches that score each vector
-  against many candidates.
+  ``cosine`` is ``cosine_from_norms`` over two ``norm`` columns; a
+  search that scores each vector against many candidates projects the
+  norms once per row of each side and calls ``cosine_from_norms``.
+- ``norm_sql``, ``cosine_sql`` and ``bucket_sql``: the DuckDB twins of
+  ``norm``, ``cosine`` and ``bucket_expr`` that the oracles embed, so
+  each formula is written once per engine.
 
 Every top-k search is one operator: generate candidates, score them,
 cut to the top k. ``_cosine_topk`` is the scoring-and-cut kernel they
@@ -54,26 +57,27 @@ def dot(a: Column, b: Column) -> Column:
 
 
 def norm(v: Column) -> Column:
-    """Euclidean norm of an array column, in double: the same operands
-    and fold order as the norms inside :func:`cosine`, so a cosine
-    built from per-side norms is bit-identical to it."""
+    """Euclidean norm of an array column, in double."""
     return F.sqrt(dot(as_double(v), as_double(v)))
 
 
 def cosine_from_norms(a: Column, b: Column, norm_a: Column, norm_b: Column) -> Column:
-    """Cosine of ``a`` and ``b`` given their :func:`norm` columns,
-    projected once per row of each side rather than once per candidate
-    pair. The same operands and fold order as :func:`cosine`, so the
-    value is bit-identical to it."""
+    """Cosine of ``a`` and ``b`` given their :func:`norm` columns."""
     return dot(as_double(a), as_double(b)) / (norm_a * norm_b)
 
 
 def cosine(a: Column, b: Column) -> Column:
-    # Not built from norm(): each side's cast is shared by its dot and
-    # its norm, and building it twice would rename lambda variables in
-    # the plan of every cosine() caller.
-    da, db = as_double(a), as_double(b)
-    return dot(da, db) / (F.sqrt(dot(da, da)) * F.sqrt(dot(db, db)))
+    return cosine_from_norms(a, b, norm(a), norm(b))
+
+
+def norm_sql(v: str) -> str:
+    """DuckDB twin of :func:`norm` over a ``DOUBLE[]`` expression."""
+    return f"sqrt(list_dot_product({v}, {v}))"
+
+
+def cosine_sql(a: str, b: str) -> str:
+    """DuckDB twin of :func:`cosine` over two ``DOUBLE[]`` expressions."""
+    return f"list_dot_product({a}, {b}) / ({norm_sql(a)} * {norm_sql(b)})"
 
 
 def hyperplane(plane: int, dims: int) -> list[float]:
@@ -95,6 +99,18 @@ def bucket_expr(emb: Column, dims: int, n_planes: int = N_PLANES) -> Column:
         term = F.when(dot(emb_d, w) > 0, F.lit(2**p)).otherwise(F.lit(0))
         bucket = term if bucket is None else bucket + term
     return bucket.cast("int")
+
+
+def bucket_sql(v: str, dims: int, n_planes: int = N_PLANES) -> str:
+    """DuckDB twin of :func:`bucket_expr` over a ``DOUBLE[]`` expression,
+    with the same :func:`hyperplane` literals."""
+    terms = []
+    for p in range(n_planes):
+        w = ", ".join(str(x) for x in hyperplane(p, dims))
+        terms.append(
+            f"(CASE WHEN list_dot_product({v}, [{w}]) > 0 THEN {2 ** p} ELSE 0 END)"
+        )
+    return f"CAST({' + '.join(terms)} AS INT)"
 
 
 def _side(
@@ -125,9 +141,7 @@ def _cosine_topk(q: DataFrame, c: DataFrame, on: str | None, k: int) -> DataFram
     key — score each pair by cosine from the per-side norms, and cut
     each query's candidates to the top ``k`` under ``score_order``
     (cos rounded to 9 dp desc, candidate id asc). Only the candidate
-    generator differs between the searches. The per-side form has
-    the same operands and fold order as :func:`cosine`, so its
-    scores are bit-identical."""
+    generator differs between the searches."""
     pairs = F.broadcast(q).crossJoin(c) if on is None else F.broadcast(q).join(c, on)
     scored = pairs.filter(F.col("q_id") != F.col("c_id")).select(
         "q_id",
@@ -294,12 +308,9 @@ def near_dup_pairs_bucketed(
     the sampled all-pairs eval twin (``near_dup_pairs``) and the
     ``sim_recall_curve_nplanes`` query."""
     # The norm is projected once per SIDE, not evaluated per pair:
-    # cosine() would recompute sqrt(dot(v,v)) for both vectors on every
-    # candidate pair, and pair volume here scales as N²/2^planes — at
-    # corpus scale the redundant norms are 2/3 of the verify
-    # arithmetic. Same fold order and expression shape as cosine() →
-    # bit-identical (pinned at sf0.01 + sf0.1; A/B best-of-4 at sf0.1:
-    # 0.94 → 0.81 s even at this SF).
+    # pair volume here scales as N²/2^planes, and at corpus scale the
+    # per-pair norms would be 2/3 of the verify arithmetic (A/B
+    # best-of-4 at sf0.1: 0.94 → 0.81 s even at this SF).
     bk = emb.select(
         F.col(id_col),
         F.col(vec_col),

@@ -43,7 +43,7 @@ from trackdechets_etl_spark.functions.scalar import (
     lpad_code,
 )
 from trackdechets_etl_spark.operators.dedup import dedup_by_key, keep_last_by
-from trackdechets_etl_spark.operators.joins import enrich_left
+from trackdechets_etl_spark.operators.joins import enrich_left, fanout_name_join
 from trackdechets_etl_spark.operators.stats import coverage_stats
 from trackdechets_etl_spark.plans import fixtures as FX
 
@@ -162,7 +162,7 @@ def enrich_installations_frames(
     - ``comp``:  nom, siret_candidate, ``extra_cols``
     """
     b1 = _pre_name_join(inst, etab, gerep_df)
-    j2 = b1.join(comp, b1.nom_ets == comp.nom, "left")
+    j2 = fanout_name_join(b1, comp, "nom_ets", "nom")
     return j2.select(
         "code_s3ic",
         "inst_id",

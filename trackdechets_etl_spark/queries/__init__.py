@@ -103,33 +103,6 @@ _VERIFY_FIRST = [
     "sim_matryoshka_recall",
 ]
 
-# Machine-checkable post-window rotation queue for the NEXT round
-# (ADVICE r14: persist the promise as a list the next session can
-# validate, not prose). Ordering contract: any entry whose plan
-# changes next round goes FIRST, then this queue in order — the
-# remaining r06 stale greens oldest-first in their CORRECTNESS file
-# order, skipping entries with newer green rows. Validated against
-# the registry in all_queries() alongside _VERIFY_FIRST.
-_NEXT_ROTATION_QUEUE = [
-    "tpch_q11_important_stock",
-    "events_attribution",
-    "linkage_blocking_score",
-    "dedup_semantic_prune",
-    "events_seasonal_dow",
-    "orders_backlog_aging",
-    "events_uplift_cuped",
-    "text_bigram_lm_score",
-    "events_bounce_rate",
-    "graph_neighbor_mode",
-    "dq_profile_drift",
-    "orders_survival_km",
-    "text_langid_eval",
-    "events_srm_check",
-    "text_js_divergence",
-    "orders_abc_class",
-    "layout_file_skipping",
-]
-
 
 def all_queries() -> dict[str, QuerySpec]:
     merged: dict[str, QuerySpec] = {}
@@ -145,11 +118,6 @@ def all_queries() -> dict[str, QuerySpec]:
     missing = [n for n in _VERIFY_FIRST if n not in merged]
     if missing:
         raise ValueError(f"_VERIFY_FIRST names not in registry: {missing}")
-    stale_queue = [n for n in _NEXT_ROTATION_QUEUE if n not in merged]
-    if stale_queue:
-        raise ValueError(
-            f"_NEXT_ROTATION_QUEUE names not in registry: {stale_queue}"
-        )
     front = {n: merged[n] for n in _VERIFY_FIRST}
     back = {n: s for n, s in merged.items() if n not in front}
     return {**front, **back}

@@ -16,7 +16,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from trackdechets_etl_spark.io.readers import read_table
-from trackdechets_etl_spark.llm.similarity import ivf_topk
+from trackdechets_etl_spark.llm.similarity import cosine_sql, ivf_topk, norm_sql
 from trackdechets_etl_spark.operators.percentiles import (
     exact_percentiles_value_counts,
 )
@@ -26,7 +26,6 @@ from trackdechets_etl_spark.operators.temporal import (
     semi_anti_split,
 )
 from trackdechets_etl_spark.queries import QuerySpec
-from trackdechets_etl_spark.queries.llm import _cos_sql
 
 # --------------------------------------------------------------- as-of join
 
@@ -305,14 +304,14 @@ per_dim AS (
 cent AS (SELECT label, list(a ORDER BY i) AS cvec FROM per_dim GROUP BY label),
 q AS (SELECT vec_id AS q_id, v AS qv FROM e WHERE vec_id < {IVF_QUERY_IDS}),
 routed AS (
-    SELECT q_id, qv, label, {_cos_sql('qv', 'cvec')} AS rcos FROM q, cent),
+    SELECT q_id, qv, label, {cosine_sql('qv', 'cvec')} AS rcos FROM q, cent),
 assigned AS (
     SELECT q_id, qv, label FROM (
         SELECT *, row_number() OVER (
             PARTITION BY q_id ORDER BY round(rcos, 9) DESC, label ASC) AS rn
         FROM routed) WHERE rn = 1),
 scored AS (
-    SELECT a.q_id, c.vec_id AS c_id, {_cos_sql('a.qv', 'c.v')} AS cos
+    SELECT a.q_id, c.vec_id AS c_id, {cosine_sql('a.qv', 'c.v')} AS cos
     FROM assigned a JOIN e c ON c.label = a.label AND c.vec_id <> a.q_id),
 r AS (
     SELECT *, row_number() OVER (
@@ -929,11 +928,11 @@ def _embedding_array_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-EMBEDDING_ARRAY_STATS_SQL = """
+EMBEDDING_ARRAY_STATS_SQL = f"""
 WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings)
 SELECT vec_id,
        CAST(len(v) AS BIGINT) AS n_dims,
-       round(sqrt(list_dot_product(v, v)), 6) AS l2_norm,
+       round({norm_sql('v')}, 6) AS l2_norm,
        round(list_aggregate(v, 'sum') / len(v), 6) AS mean_val,
        round(list_aggregate(v, 'min'), 6) AS min_val,
        round(list_aggregate(v, 'max'), 6) AS max_val

@@ -24,11 +24,12 @@ from trackdechets_etl_spark.llm.dedup import (
 )
 from trackdechets_etl_spark.llm.multimodal import frame_sample_offsets, with_payload
 from trackdechets_etl_spark.llm.similarity import (
-    N_PLANES,
-    hyperplane,
+    bucket_sql,
+    cosine_sql,
     lsh_bucket_topk,
     near_dup_pairs,
     near_dup_pairs_bucketed,
+    norm_sql,
     topk_bruteforce,
 )
 from trackdechets_etl_spark.queries import QuerySpec
@@ -51,23 +52,6 @@ sizes AS (SELECT doc_id, CAST(count(*) AS BIGINT) AS n_sh FROM sh GROUP BY doc_i
 """
 
 _EMB = "e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings)"
-
-
-def _cos_sql(a: str, b: str) -> str:
-    return (
-        f"list_dot_product({a}, {b}) / "
-        f"(sqrt(list_dot_product({a}, {a})) * sqrt(list_dot_product({b}, {b})))"
-    )
-
-
-def _plane_sql(p: int) -> str:
-    return "[" + ", ".join(str(x) for x in hyperplane(p, EMB_DIMS)) + "]"
-
-
-_BUCKET_SQL = " + ".join(
-    f"(CASE WHEN list_dot_product(v, {_plane_sql(p)}) > 0 THEN {2 ** p} ELSE 0 END)"
-    for p in range(N_PLANES)
-)
 
 
 # ------------------------------------------------------------------ text ops
@@ -321,10 +305,10 @@ def _dedup_embedding_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 DEDUP_EMB_COSINE_SQL = f"""
 WITH {_EMB},
-bk AS (SELECT vec_id, v, CAST({_BUCKET_SQL} AS INT) AS bucket FROM e),
+bk AS (SELECT vec_id, v, {bucket_sql('v', EMB_DIMS)} AS bucket FROM e),
 p AS (
     SELECT a.vec_id AS id_a, b.vec_id AS id_b,
-           round({_cos_sql('a.v', 'b.v')}, 6) AS cos_sim
+           round({cosine_sql('a.v', 'b.v')}, 6) AS cos_sim
     FROM bk a JOIN bk b USING (bucket)
     WHERE a.vec_id < b.vec_id)
 SELECT id_a, id_b, cos_sim FROM p WHERE cos_sim >= {NEAR_DUP_THRESHOLD}
@@ -353,7 +337,7 @@ WITH {_EMB},
 a AS (SELECT vec_id AS id_a, v AS va FROM e WHERE vec_id % {NEAR_DUP_SAMPLE_MOD} = 0),
 b AS (SELECT vec_id AS id_b, v AS vb FROM e),
 p AS (
-    SELECT id_a, id_b, round({_cos_sql('va', 'vb')}, 6) AS cos_sim
+    SELECT id_a, id_b, round({cosine_sql('va', 'vb')}, 6) AS cos_sim
     FROM a, b WHERE id_a < id_b)
 SELECT id_a, id_b, cos_sim FROM p WHERE cos_sim >= {NEAR_DUP_THRESHOLD}
 """
@@ -372,7 +356,7 @@ SIM_TOPK_SQL = f"""
 WITH {_EMB},
 q AS (SELECT vec_id AS q_id, v AS qv FROM e WHERE vec_id < {TOPK_QUERY_IDS}),
 scored AS (
-    SELECT q_id, c.vec_id AS c_id, {_cos_sql('qv', 'c.v')} AS cos
+    SELECT q_id, c.vec_id AS c_id, {cosine_sql('qv', 'c.v')} AS cos
     FROM q, e c WHERE c.vec_id <> q_id),
 r AS (
     SELECT *, row_number() OVER (
@@ -390,10 +374,10 @@ def _sim_lsh_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 SIM_LSH_TOPK_SQL = f"""
 WITH {_EMB},
-bk AS (SELECT vec_id, v, CAST({_BUCKET_SQL} AS INT) AS bucket FROM e),
+bk AS (SELECT vec_id, v, {bucket_sql('v', EMB_DIMS)} AS bucket FROM e),
 q AS (SELECT vec_id AS q_id, v AS qv, bucket FROM bk WHERE vec_id < {TOPK_QUERY_IDS}),
 scored AS (
-    SELECT q_id, c.vec_id AS c_id, {_cos_sql('qv', 'c.v')} AS cos
+    SELECT q_id, c.vec_id AS c_id, {cosine_sql('qv', 'c.v')} AS cos
     FROM q JOIN bk c USING (bucket) WHERE c.vec_id <> q_id),
 r AS (
     SELECT *, row_number() OVER (
@@ -426,7 +410,7 @@ def _emb_normalize(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 EMB_NORMALIZE_SQL = f"""
 WITH {_EMB},
-n AS (SELECT vec_id, v, sqrt(list_dot_product(v, v)) AS norm FROM e)
+n AS (SELECT vec_id, v, {norm_sql('v')} AS norm FROM e)
 SELECT vec_id,
        round(norm, 6) AS l2_norm,
        array_to_string(

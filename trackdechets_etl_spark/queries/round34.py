@@ -27,6 +27,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from trackdechets_etl_spark.io.readers import read_table
+from trackdechets_etl_spark.llm.similarity import cosine_sql
 from trackdechets_etl_spark.plans.fixtures import TRADE_PAIRS_SQL, trade_pairs
 from trackdechets_etl_spark.queries import QuerySpec
 from trackdechets_etl_spark.session import materialize
@@ -75,11 +76,7 @@ def _sim_matryoshka_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _mrl_topk_cte(vec_expr: str, alias: str) -> str:
-    cos = (
-        f"list_dot_product(q.{vec_expr}, c.{vec_expr}) / "
-        f"(sqrt(list_dot_product(q.{vec_expr}, q.{vec_expr})) * "
-        f"sqrt(list_dot_product(c.{vec_expr}, c.{vec_expr})))"
-    )
+    cos = cosine_sql(f"q.{vec_expr}", f"c.{vec_expr}")
     return f"""
 {alias}_scored AS (
     SELECT q.vec_id AS q_id, c.vec_id AS c_id, {cos} AS cos

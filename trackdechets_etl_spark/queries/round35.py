@@ -30,6 +30,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from trackdechets_etl_spark.io.readers import read_table
+from trackdechets_etl_spark.llm.similarity import cosine_sql
 from trackdechets_etl_spark.queries import QuerySpec
 
 # ------------------------------------------------ encoding advisor
@@ -162,7 +163,7 @@ def _embedding_centroid_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-CENTROID_DRIFT_SQL = """
+CENTROID_DRIFT_SQL = f"""
 WITH e AS (
     SELECT vec_id, label, vec_id % 2 AS half, embedding::DOUBLE[] AS v
     FROM embeddings),
@@ -181,9 +182,7 @@ counts AS (
            CAST(sum(CASE WHEN half = 1 THEN 1 ELSE 0 END) AS BIGINT) AS n_b
     FROM e GROUP BY label)
 SELECT CAST(a.label AS BIGINT) AS label, counts.n_a, counts.n_b,
-       round(list_dot_product(a.c, b.c)
-             / (sqrt(list_dot_product(a.c, a.c))
-                * sqrt(list_dot_product(b.c, b.c))), 6) AS cos_halves
+       round({cosine_sql('a.c', 'b.c')}, 6) AS cos_halves
 FROM vecs a
 JOIN vecs b ON a.label = b.label AND a.half = 0 AND b.half = 1
 JOIN counts ON counts.label = a.label

@@ -35,6 +35,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from trackdechets_etl_spark.io.readers import read_table
+from trackdechets_etl_spark.llm.similarity import bucket_sql, cosine_sql
 from trackdechets_etl_spark.operators.ranking import top_k_per_group
 from trackdechets_etl_spark.queries import QuerySpec
 
@@ -378,34 +379,16 @@ def _embedding_label_noise_knn(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _noise_plane_sql(p: int) -> str:
-    from trackdechets_etl_spark.llm.similarity import hyperplane
-
-    return "[" + ", ".join(str(x) for x in hyperplane(p, 64)) + "]"
-
-
-def _noise_bucket_sql() -> str:
-    from trackdechets_etl_spark.llm.similarity import N_PLANES
-
-    return " + ".join(
-        f"(CASE WHEN list_dot_product(v, {_noise_plane_sql(p)}) > 0"
-        f" THEN {2 ** p} ELSE 0 END)"
-        for p in range(N_PLANES)
-    )
-
-
 LABEL_NOISE_SQL = f"""
 WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v, label FROM embeddings),
 bk AS (SELECT vec_id, v, label,
-              CAST({_noise_bucket_sql()} AS INT) AS bucket FROM e),
+              {bucket_sql('v', 64)} AS bucket FROM e),
 p AS (SELECT * FROM bk
       WHERE substring(md5(CAST(vec_id AS VARCHAR)), 1, 2) < '28'),
 scored AS (
     SELECT a.vec_id AS pid, a.label AS plabel,
            b.vec_id AS nid, b.label AS nlabel,
-           list_dot_product(a.v, b.v)
-             / (sqrt(list_dot_product(a.v, a.v))
-                * sqrt(list_dot_product(b.v, b.v))) AS cos
+           {cosine_sql('a.v', 'b.v')} AS cos
     FROM p a JOIN bk b ON a.bucket = b.bucket AND a.vec_id <> b.vec_id),
 knn AS (
     SELECT * FROM (

@@ -147,27 +147,15 @@ def _sim_ndcg_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _ndcg_oracle() -> str:
-    from trackdechets_etl_spark.llm.similarity import N_PLANES, hyperplane
-    from trackdechets_etl_spark.queries.llm import _cos_sql
+    from trackdechets_etl_spark.llm.similarity import bucket_sql, cosine_sql
 
-    dims = 64
-    # the LSH bucket expression mirrored with the same literal planes
-    # (the sim_lsh_bucket_topk oracle convention)
-    bucket_terms = []
-    for p in range(N_PLANES):
-        vec = hyperplane(p, dims)
-        lit = "[" + ", ".join(str(x) for x in vec) + "]"
-        bucket_terms.append(
-            f"(CASE WHEN list_dot_product(v, {lit}) > 0 THEN {1 << p} ELSE 0 END)"
-        )
-    bucket = " + ".join(bucket_terms)
     discounts = ", ".join(str(d) for d in _DISCOUNTS)
     return f"""
 WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
-b AS (SELECT vec_id, v, {bucket} AS bkt FROM e),
+b AS (SELECT vec_id, v, {bucket_sql('v', 64)} AS bkt FROM e),
 q AS (SELECT vec_id AS q_id, v AS qv, bkt FROM b WHERE vec_id < {_NDCG_QUERIES}),
 exact_scored AS (
-    SELECT q.q_id, c.vec_id AS c_id, {_cos_sql('q.qv', 'c.v')} AS cos
+    SELECT q.q_id, c.vec_id AS c_id, {cosine_sql('q.qv', 'c.v')} AS cos
     FROM q JOIN e c ON c.vec_id <> q.q_id),
 exact_r AS (
     SELECT q_id, c_id, row_number() OVER (
@@ -176,7 +164,7 @@ exact_r AS (
 rel AS (SELECT q_id, c_id, {_NDCG_K + 1} - rank AS rel
         FROM exact_r WHERE rank <= {_NDCG_K}),
 approx_scored AS (
-    SELECT q.q_id, c.vec_id AS c_id, {_cos_sql('q.qv', 'c.v')} AS cos
+    SELECT q.q_id, c.vec_id AS c_id, {cosine_sql('q.qv', 'c.v')} AS cos
     FROM q JOIN b c ON c.bkt = q.bkt AND c.vec_id <> q.q_id),
 approx_r AS (
     SELECT q_id, c_id, row_number() OVER (

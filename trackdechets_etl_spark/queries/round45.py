@@ -135,7 +135,7 @@ def _embedding_mmr_select(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _mmr_oracle() -> str:
-    from trackdechets_etl_spark.queries.llm import _cos_sql
+    from trackdechets_etl_spark.llm.similarity import cosine_sql
 
     lam = _MMR_LAMBDA
     parts = [
@@ -143,7 +143,7 @@ def _mmr_oracle() -> str:
 e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
 q AS (SELECT v AS qv FROM e WHERE vec_id = {_MMR_Q}),
 scored AS (
-    SELECT e.vec_id, e.v, {_cos_sql('e.v', 'q.qv')} AS sim_q
+    SELECT e.vec_id, e.v, {cosine_sql('e.v', 'q.qv')} AS sim_q
     FROM e CROSS JOIN q WHERE e.vec_id <> {_MMR_Q}),
 cand AS (
     SELECT vec_id, v, sim_q FROM (
@@ -151,7 +151,7 @@ cand AS (
             ORDER BY round(sim_q, 9) DESC, vec_id ASC) AS rnk
         FROM scored) WHERE rnk <= {_MMR_POOL}),
 pair AS (
-    SELECT a.vec_id, b.vec_id AS bid, {_cos_sql('a.v', 'b.v')} AS sim_cc
+    SELECT a.vec_id, b.vec_id AS bid, {cosine_sql('a.v', 'b.v')} AS sim_cc
     FROM cand a JOIN cand b ON a.vec_id <> b.vec_id),
 s1 AS (
     SELECT 1 AS pick_rank, vec_id AS pick_id, sim_q,

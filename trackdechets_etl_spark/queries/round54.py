@@ -107,27 +107,23 @@ def _embedding_label_noise_recall(spark: SparkSession, sf_dir: str) -> DataFrame
 
 
 def _recall_oracle() -> str:
-    from trackdechets_etl_spark.queries.round41 import _noise_bucket_sql
+    from trackdechets_etl_spark.llm.similarity import bucket_sql, cosine_sql
 
     return f"""
 WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v, label FROM embeddings),
 bk AS (SELECT vec_id, v, label,
-              CAST({_noise_bucket_sql()} AS INT) AS bucket FROM e),
+              {bucket_sql('v', _EMB_DIMS)} AS bucket FROM e),
 p AS (SELECT * FROM bk
       WHERE substring(md5(CAST(vec_id AS VARCHAR)), 1, 2) < '{_REC_PROBE_HEX}'),
 ex_scored AS (
     SELECT a.vec_id AS pid, a.label AS plabel,
            b.vec_id AS nid, b.label AS nlabel,
-           list_dot_product(a.v, b.v)
-             / (sqrt(list_dot_product(a.v, a.v))
-                * sqrt(list_dot_product(b.v, b.v))) AS cos
+           {cosine_sql('a.v', 'b.v')} AS cos
     FROM p a, bk b WHERE a.vec_id <> b.vec_id),
 ls_scored AS (
     SELECT a.vec_id AS pid, a.label AS plabel,
            b.vec_id AS nid, b.label AS nlabel,
-           list_dot_product(a.v, b.v)
-             / (sqrt(list_dot_product(a.v, a.v))
-                * sqrt(list_dot_product(b.v, b.v))) AS cos
+           {cosine_sql('a.v', 'b.v')} AS cos
     FROM p a JOIN bk b ON a.bucket = b.bucket AND a.vec_id <> b.vec_id),
 ex_knn AS (
     SELECT * FROM (

@@ -573,33 +573,18 @@ def _sim_recall_curve_nplanes(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _rc_bucket_sql(n_planes: int) -> str:
-    from trackdechets_etl_spark.llm.similarity import hyperplane
-
-    def plane_sql(p: int) -> str:
-        w = hyperplane(p, _EMB_DIMS)
-        lits = ", ".join(f"{x:.1f}" for x in w)
-        return f"[{lits}]::DOUBLE[]"
-
-    return " + ".join(
-        f"(CASE WHEN list_dot_product(v, {plane_sql(p)}) > 0"
-        f" THEN {2 ** p} ELSE 0 END)"
-        for p in range(n_planes)
-    )
-
-
 def _recall_curve_oracle() -> str:
+    from trackdechets_etl_spark.llm.similarity import bucket_sql, cosine_sql
+
     planes_rows = ", ".join(f"({p})" for p in _RC_PLANES)
     return f"""
 WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
 bk AS (SELECT vec_id, v,
-              CAST({_rc_bucket_sql(_RC_MAX_PLANES)} AS INT) AS b8 FROM e),
+              {bucket_sql('v', _EMB_DIMS, _RC_MAX_PLANES)} AS b8 FROM e),
 p AS (SELECT * FROM bk WHERE vec_id < {_RC_QUERIES}),
 ex_scored AS (
     SELECT a.vec_id AS q_id, b.vec_id AS c_id,
-           list_dot_product(a.v, b.v)
-             / (sqrt(list_dot_product(a.v, a.v))
-                * sqrt(list_dot_product(b.v, b.v))) AS cos
+           {cosine_sql('a.v', 'b.v')} AS cos
     FROM p a, bk b WHERE a.vec_id <> b.vec_id),
 exact AS (
     SELECT q_id, c_id FROM (
@@ -624,9 +609,7 @@ lsh AS (
     SELECT n_planes, q_id, c_id FROM (
         SELECT n_planes, q_id, c_id,
                row_number() OVER (PARTITION BY n_planes, q_id
-                   ORDER BY round(list_dot_product(q_vec, c_vec)
-                       / (sqrt(list_dot_product(q_vec, q_vec))
-                          * sqrt(list_dot_product(c_vec, c_vec))), 9) DESC,
+                   ORDER BY round({cosine_sql('q_vec', 'c_vec')}, 9) DESC,
                    c_id ASC) AS rnk
         FROM cand) WHERE rnk <= {_RC_K}),
 nc AS (SELECT n_planes, CAST(count(*) AS BIGINT) AS n_candidates

@@ -877,13 +877,14 @@ def _sim_knn_classify(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _sim_knn_sql() -> str:
-    from trackdechets_etl_spark.queries.llm import _EMB, _cos_sql
+    from trackdechets_etl_spark.llm.similarity import cosine_sql
+    from trackdechets_etl_spark.queries.llm import _EMB
 
     return f"""
 WITH {_EMB},
 q AS (SELECT vec_id AS q_id, v AS qv FROM e WHERE vec_id < {_KNN_QUERY_IDS}),
 scored AS (
-    SELECT q_id, c.vec_id AS c_id, {_cos_sql('qv', 'c.v')} AS cos
+    SELECT q_id, c.vec_id AS c_id, {cosine_sql('qv', 'c.v')} AS cos
     FROM q, e c WHERE c.vec_id <> q_id),
 nn AS (
     SELECT q_id, c_id FROM (

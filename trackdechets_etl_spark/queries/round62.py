@@ -55,9 +55,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from trackdechets_etl_spark.io.readers import read_table
-from trackdechets_etl_spark.llm.similarity import bucket_expr
+from trackdechets_etl_spark.llm.similarity import bucket_expr, bucket_sql
 from trackdechets_etl_spark.queries import QuerySpec
-from trackdechets_etl_spark.queries.llm import _plane_sql
 
 EMB_DIMS = 64
 
@@ -289,14 +288,6 @@ FROM per
 # ------------------------------------------------- LSH silhouette
 
 
-def _bucket_sql(n_planes: int = 4) -> str:
-    return " + ".join(
-        f"(CASE WHEN list_dot_product(v, {_plane_sql(p)}) > 0"
-        f" THEN {2 ** p} ELSE 0 END)"
-        for p in range(n_planes)
-    )
-
-
 def _sim_silhouette_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = read_table(spark, sf_dir, "embeddings").select(
         "vec_id",
@@ -353,7 +344,7 @@ def _sim_silhouette_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
 SILHOUETTE_SQL = f"""
 WITH e AS (
     SELECT vec_id, embedding::DOUBLE[] AS v,
-           CAST({_bucket_sql()} AS INT) AS bucket
+           {bucket_sql('v', EMB_DIMS)} AS bucket
     FROM embeddings),
 ex AS (
     SELECT vec_id, bucket, i AS pos, v[i] AS x

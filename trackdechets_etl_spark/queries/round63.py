@@ -55,7 +55,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from trackdechets_etl_spark.io.readers import read_table
-from trackdechets_etl_spark.llm.similarity import cosine
+from trackdechets_etl_spark.llm.similarity import cosine, cosine_sql
 from trackdechets_etl_spark.operators.ranking import global_row_number, score_order
 from trackdechets_etl_spark.queries import QuerySpec
 from trackdechets_etl_spark.queries.round61 import _hex8_int_sql
@@ -338,10 +338,7 @@ qv AS (SELECT embedding::DOUBLE[] AS qvec FROM embeddings
        WHERE vec_id = {_RRF_QUERY_VEC_ID}),
 dense AS (
     SELECT vec_id AS doc_id,
-           round(list_dot_product(embedding::DOUBLE[], qvec)
-                 / (sqrt(list_dot_product(embedding::DOUBLE[],
-                                          embedding::DOUBLE[]))
-                    * sqrt(list_dot_product(qvec, qvec))), 9) AS skey
+           round({cosine_sql('embedding::DOUBLE[]', 'qvec')}, 9) AS skey
     FROM embeddings, qv
     ORDER BY skey DESC, doc_id LIMIT {_RRF_LIST_K}),
 rs AS (

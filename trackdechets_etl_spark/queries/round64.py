@@ -52,10 +52,9 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from trackdechets_etl_spark.io.readers import read_table
-from trackdechets_etl_spark.llm.similarity import bucket_expr
+from trackdechets_etl_spark.llm.similarity import bucket_expr, bucket_sql
 from trackdechets_etl_spark.plans.fixtures import TRADE_PAIRS_SQL, trade_pairs
 from trackdechets_etl_spark.queries import QuerySpec
-from trackdechets_etl_spark.queries.round62 import _bucket_sql
 from trackdechets_etl_spark.session import materialize
 
 EMB_DIMS = 64
@@ -135,7 +134,7 @@ def _embedding_bucket_label_eval(
 BUCKET_LABEL_SQL = f"""
 WITH e AS (
     SELECT vec_id, CAST(label AS BIGINT) AS label,
-           CAST({_bucket_sql()} AS INT) AS bucket
+           {bucket_sql('v', EMB_DIMS)} AS bucket
     FROM (SELECT vec_id, label, embedding::DOUBLE[] AS v
           FROM embeddings)),
 bl AS (

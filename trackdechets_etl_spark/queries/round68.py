@@ -52,10 +52,9 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from trackdechets_etl_spark.io.readers import read_table
-from trackdechets_etl_spark.llm.similarity import cosine
+from trackdechets_etl_spark.llm.similarity import cosine, cosine_sql
 from trackdechets_etl_spark.plans.fixtures import TRADE_PAIRS_SQL, trade_pairs
 from trackdechets_etl_spark.queries import QuerySpec
-from trackdechets_etl_spark.queries.llm import _cos_sql
 from trackdechets_etl_spark.session import materialize
 
 # ------------------------------------------------- two-way ANOVA
@@ -277,7 +276,7 @@ negs AS (
     FROM ranked),
 trips AS (
     SELECT anchors.label,
-           {_cos_sql("av", "pv")} - {_cos_sql("av", "nv")} AS m
+           {cosine_sql("av", "pv")} - {cosine_sql("av", "nv")} AS m
     FROM anchors JOIN negs USING (label, rk))
 SELECT label,
        CAST(count(*) AS BIGINT) AS n_triplets,

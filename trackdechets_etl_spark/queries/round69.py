@@ -49,9 +49,8 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from trackdechets_etl_spark.io.readers import read_table
-from trackdechets_etl_spark.llm.similarity import cosine
+from trackdechets_etl_spark.llm.similarity import cosine, cosine_sql
 from trackdechets_etl_spark.queries import QuerySpec
-from trackdechets_etl_spark.queries.llm import _cos_sql
 from trackdechets_etl_spark.session import materialize
 
 EMB_DIMS = 64
@@ -198,7 +197,7 @@ q AS (SELECT vec_id AS q_id, v AS qv FROM e
       WHERE vec_id < {_IVF_RC_QUERIES}),
 routed AS (
     SELECT q_id, qv, clist,
-           round({_cos_sql("qv", "cvec")}, 9) AS rcos
+           round({cosine_sql("qv", "cvec")}, 9) AS rcos
     FROM q, cent),
 assigned AS (
     SELECT q_id, qv, clist, crank FROM (
@@ -208,7 +207,7 @@ assigned AS (
     WHERE crank <= {max(_IVF_RC_NPROBES)}),
 cands AS (
     SELECT a.q_id, c.vec_id AS c_id, a.crank,
-           round({_cos_sql("a.qv", "c.v")}, 9) AS ckey
+           round({cosine_sql("a.qv", "c.v")}, 9) AS ckey
     FROM assigned a JOIN e c ON c.label = a.clist
     WHERE c.vec_id <> a.q_id),
 nps(nprobe) AS (VALUES {", ".join(f"({np})" for np in _IVF_RC_NPROBES)}),
@@ -221,7 +220,7 @@ approx AS (
     WHERE rk <= {_IVF_RC_K}),
 exact_scored AS (
     SELECT q_id, c.vec_id AS c_id,
-           round({_cos_sql("qv", "c.v")}, 9) AS ckey
+           round({cosine_sql("qv", "c.v")}, 9) AS ckey
     FROM q, e c WHERE c.vec_id <> q_id),
 exact AS (
     SELECT q_id, c_id FROM (

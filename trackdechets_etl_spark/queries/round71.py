@@ -48,10 +48,9 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from trackdechets_etl_spark.io.readers import read_table
-from trackdechets_etl_spark.llm.similarity import dot
+from trackdechets_etl_spark.llm.similarity import cosine_sql, dot
 from trackdechets_etl_spark.plans.fixtures import TRADE_PAIRS_SQL, trade_pairs
 from trackdechets_etl_spark.queries import QuerySpec
-from trackdechets_etl_spark.queries.llm import _cos_sql
 
 # ------------------------------------------- class-balanced sample
 
@@ -119,9 +118,8 @@ def _embedding_hubness_score(
 ) -> DataFrame:
     # Norms are projected per SIDE before the crossJoin: cosine() would
     # re-evaluate sqrt(dot(v,v)) per PAIR, and with ~N/4 queries the
-    # pair count makes that the dominant arithmetic (3 dots/pair → 1).
-    # Same fold order, same expression shape → bit-identical (pinned
-    # at sf0.01 + sf0.1); A/B best-of-4 at sf0.1: 2.08 → 1.33 s.
+    # pair count makes that the dominant arithmetic (3 dots/pair → 1);
+    # A/B best-of-4 at sf0.1: 2.08 → 1.33 s.
     e = read_table(spark, sf_dir, "embeddings").select(
         "vec_id", F.col("embedding").cast("array<double>").alias("v")
     ).withColumn("n", F.sqrt(dot(F.col("v"), F.col("v"))))
@@ -196,7 +194,7 @@ q AS (SELECT vec_id AS q_id, v AS qv FROM e
             < '{_HUB_QUERY_HEX}'),
 scored AS (
     SELECT q_id, c.vec_id AS c_id,
-           round({_cos_sql("qv", "c.v")}, 9) AS ckey
+           round({cosine_sql("qv", "c.v")}, 9) AS ckey
     FROM q, e c WHERE c.vec_id <> q_id),
 occ AS (
     SELECT c_id, CAST(count(*) AS BIGINT) AS n5

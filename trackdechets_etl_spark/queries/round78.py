@@ -413,7 +413,7 @@ def _sim_map_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _map_oracle() -> str:
-    from trackdechets_etl_spark.queries.round41 import _noise_bucket_sql
+    from trackdechets_etl_spark.llm.similarity import bucket_sql, cosine_sql
 
     rel_cols = ",\n           ".join(
         f"COALESCE(max(CASE WHEN rnk = {j} THEN r END), 0) AS r{j}"
@@ -431,24 +431,20 @@ WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
 q AS (SELECT vec_id AS q_id, v AS qv FROM e WHERE vec_id < {_MAP_Q}),
 ex_scored AS (
     SELECT q_id, e.vec_id AS c_id,
-           list_dot_product(qv, e.v)
-             / (sqrt(list_dot_product(qv, qv))
-                * sqrt(list_dot_product(e.v, e.v))) AS cos
+           {cosine_sql('qv', 'e.v')} AS cos
     FROM q, e WHERE e.vec_id <> q_id),
 rel AS (
     SELECT q_id, c_id FROM (
         SELECT q_id, c_id, row_number() OVER (PARTITION BY q_id
             ORDER BY round(cos, 9) DESC, c_id ASC) AS rnk
         FROM ex_scored) WHERE rnk <= {_MAP_K}),
-bk AS (SELECT vec_id, v, CAST({_noise_bucket_sql()} AS INT) AS bucket
+bk AS (SELECT vec_id, v, {bucket_sql('v', 64)} AS bucket
        FROM e),
 qb AS (SELECT vec_id AS q_id, v AS qv, bucket FROM bk
        WHERE vec_id < {_MAP_Q}),
 ls_scored AS (
     SELECT q_id, b.vec_id AS c_id,
-           list_dot_product(qv, b.v)
-             / (sqrt(list_dot_product(qv, qv))
-                * sqrt(list_dot_product(b.v, b.v))) AS cos
+           {cosine_sql('qv', 'b.v')} AS cos
     FROM qb JOIN bk b ON qb.bucket = b.bucket AND b.vec_id <> q_id),
 ranked AS (
     SELECT q_id, c_id, row_number() OVER (PARTITION BY q_id

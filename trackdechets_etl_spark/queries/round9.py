@@ -40,6 +40,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from trackdechets_etl_spark.io.readers import read_table
+from trackdechets_etl_spark.llm.similarity import cosine_sql
 from trackdechets_etl_spark.plans.fixtures import (
     TRADE_EDGES_SQL,
     TRADE_PAIRS_SQL,
@@ -395,17 +396,13 @@ cent AS (
     SELECT label, list(a ORDER BY i) AS centroid FROM per_dim GROUP BY label),
 scored AS (
     SELECT vec_id, label, v,
-           round(list_dot_product(v, centroid)
-                 / (sqrt(list_dot_product(v, v))
-                    * sqrt(list_dot_product(centroid, centroid))), 6) AS cos_c
+           round({cosine_sql('v', 'centroid')}, 6) AS cos_c
     FROM e JOIN cent USING (label)),
 dropped AS (
     SELECT DISTINCT a.vec_id
     FROM scored a JOIN scored b
       ON a.label = b.label AND a.vec_id != b.vec_id
-    WHERE round(list_dot_product(a.v, b.v)
-                / (sqrt(list_dot_product(a.v, a.v))
-                   * sqrt(list_dot_product(b.v, b.v))), 6) >= {_SEM_TAU}
+    WHERE round({cosine_sql('a.v', 'b.v')}, 6) >= {_SEM_TAU}
       AND (b.cos_c > a.cos_c
            OR (b.cos_c = a.cos_c AND b.vec_id < a.vec_id)))
 SELECT s.vec_id, s.label, s.cos_c,

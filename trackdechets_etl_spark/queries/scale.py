@@ -23,6 +23,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from trackdechets_etl_spark.io.readers import read_table
+from trackdechets_etl_spark.llm.similarity import cosine_sql
 from trackdechets_etl_spark.queries import QuerySpec
 from trackdechets_etl_spark.session import materialize
 
@@ -300,9 +301,7 @@ cent AS (SELECT label, list(a ORDER BY i) AS cvec FROM per_dim GROUP BY label),
 q AS (SELECT vec_id AS q_id, v AS qv FROM base WHERE vec_id < {_IVFPQ_QUERY_IDS}),
 routed AS (
     SELECT q_id, label,
-           list_dot_product(qv, cvec)
-           / (sqrt(list_dot_product(qv, qv)) * sqrt(list_dot_product(cvec, cvec)))
-               AS rcos
+           {cosine_sql('qv', 'cvec')} AS rcos
     FROM q, cent),
 assigned AS (
     SELECT q_id, label FROM (

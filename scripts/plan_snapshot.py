@@ -3,6 +3,11 @@ sf0.01 into one JSON file (name -> canonicalized plan text), so a
 refactor can prove "the physical plan Spark executes did not
 change" query by query, and ``--diff`` can show where a plan changed.
 
+A query that cuts its lineage while it is built (``session.materialize``
+checkpoints a frame) returns a plan that only scans the stored result,
+so each entry is the plan of every cut, in order, followed by the plan
+the query returns: a change before a cut still shows.
+
 Canonicalization strips plan/exprId churn that is not physical:
 #NNN expression ids, plan_id=NNN tags, checkpoint RDD ids, and the
 hash-ordered columns and group ids of multi-distinct aggregates.
@@ -18,6 +23,7 @@ import json
 import os
 import re
 import sys
+from contextlib import contextmanager
 from itertools import zip_longest
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
@@ -148,6 +154,42 @@ def plan_text(df) -> str:
     return canon_plan(df._jdf.queryExecution().executedPlan().toString())
 
 
+# The line between two plans of one snapshot entry.
+_CUT = "=== materialize cut ==="
+
+
+@contextmanager
+def recording_cuts():
+    """Within the block, every ``localCheckpoint``/``checkpoint`` of a
+    DataFrame first appends the canonical text of the plan it cuts to
+    the yielded list. Reading the plan of an analyzed frame starts no
+    job."""
+    from pyspark.sql.classic.dataframe import DataFrame
+
+    cuts: list[str] = []
+
+    def recorded(method):
+        def cut(self, *args, **kwargs):
+            cuts.append(plan_text(self))
+            return method(self, *args, **kwargs)
+
+        return cut
+
+    originals = {m: getattr(DataFrame, m) for m in ("localCheckpoint", "checkpoint")}
+    for m, method in originals.items():
+        setattr(DataFrame, m, recorded(method))
+    try:
+        yield cuts
+    finally:
+        for m, method in originals.items():
+            setattr(DataFrame, m, method)
+
+
+def snapshot_entry(cuts: list[str], plan: str) -> str:
+    """One snapshot entry: the plans of ``cuts`` in order, then ``plan``."""
+    return f"\n{_CUT}\n".join([*cuts, plan])
+
+
 def first_difference(a: str, b: str) -> tuple[str, str]:
     """The first line at which plan texts ``a`` and ``b`` differ, from
     each side (``""`` where one side has run out of lines)."""
@@ -202,15 +244,18 @@ def main() -> None:
     # with different _VERIFY_FIRST window orders would renumber every
     # later query's plan and flag false diffs (r15: the window rotation
     # alone "changed" 42 untouched plans before this pin).
-    for name in sorted(registry):
-        spec = registry[name]
-        if only and name not in only:
-            continue
-        try:
-            snap[name] = plan_text(spec.fn(spark, SF_DIR))
-        except Exception as exc:
-            snap[name] = f"ERROR:{type(exc).__name__}"
-            print(f"{name}: ERROR {exc}", file=sys.stderr)
+    with recording_cuts() as cuts:
+        for name in sorted(registry):
+            spec = registry[name]
+            if only and name not in only:
+                continue
+            cuts.clear()
+            try:
+                plan = plan_text(spec.fn(spark, SF_DIR))
+                snap[name] = snapshot_entry(cuts, plan)
+            except Exception as exc:
+                snap[name] = f"ERROR:{type(exc).__name__}"
+                print(f"{name}: ERROR {exc}", file=sys.stderr)
     with open(out_path, "w") as f:
         json.dump(snap, f, indent=0, sort_keys=True)
     errors = sorted(

@@ -1,6 +1,7 @@
 """Connected-components correctness on hand-built graphs: multi-hop
 chains (forcing several propagation rounds), multiple components,
-singletons, and the canonical-flag contract of dedup_clusters.
+singletons, and the canonical-flag contract of dedup_clusters; and
+the graph queries of ``queries/graph.py`` against driver-side replays.
 """
 
 from __future__ import annotations
@@ -131,3 +132,92 @@ def test_trade_edges_symmetric_and_disjoint(spark):
     customers = {c for c, _ in pairs}
     suppliers = {s + OFF for _, s in pairs}
     assert max(customers) < OFF <= min(suppliers)
+
+
+def test_graph_queries_live_in_graph_module():
+    """Every ``graph_*`` registry query is defined in ``queries/graph.py``,
+    the family's one home."""
+    from trackdechets_etl_spark.queries import all_queries
+
+    elsewhere = {
+        name: spec.fn.__module__
+        for name, spec in all_queries().items()
+        if name.startswith("graph_")
+        and spec.fn.__module__ != "trackdechets_etl_spark.queries.graph"
+    }
+    assert not elsewhere, f"graph queries outside queries/graph.py: {elsewhere}"
+
+
+def _copurchase_replay(spark) -> set[tuple[int, int]]:
+    """Driver-side replay of the co-purchase edges: ``(u, v)`` with
+    ``u < v`` for every part pair that co-occurs in at least two orders."""
+    from collections import Counter
+    from itertools import combinations
+
+    from trackdechets_etl_spark.io.readers import read_table
+    from tests.conftest import SF_DIR
+
+    by_order: dict[int, set] = {}
+    li = read_table(spark, SF_DIR, "lineitem").select("l_orderkey", "l_partkey")
+    for r in li.collect():
+        by_order.setdefault(r.l_orderkey, set()).add(r.l_partkey)
+    support = Counter(
+        p for parts in by_order.values() for p in combinations(sorted(parts), 2)
+    )
+    return {p for p, n in support.items() if n >= 2}
+
+
+def test_triangles_match_bruteforce(spark):
+    """Replay triangle enumeration driver-side from the same edge set."""
+    from collections import Counter
+
+    from trackdechets_etl_spark.queries import all_queries
+    from tests.conftest import SF_DIR
+
+    edges = _copurchase_replay(spark)
+    adj: dict[int, set] = {}
+    for u, v in edges:
+        adj.setdefault(u, set()).add(v)
+    tri_count = Counter()
+    for a, b in edges:
+        for c in adj.get(b, set()):
+            if (a, c) in edges:
+                tri_count[a] += 1
+                tri_count[b] += 1
+                tri_count[c] += 1
+    want = sorted(tri_count.items(), key=lambda kv: (-kv[1], kv[0]))[:20]
+    got = [
+        (r.part_id, r.n_triangles)
+        for r in all_queries()["graph_triangles"].fn(spark, SF_DIR).collect()
+    ]
+    assert got == want
+    assert got, "degenerate graph: no triangles at support 2"
+
+
+def test_clustering_coeff_matches_python_replay(spark):
+    from trackdechets_etl_spark.queries import all_queries
+    from tests.conftest import SF_DIR
+
+    rows = all_queries()["graph_clustering_coefficient"].fn(spark, SF_DIR).collect()
+    assert 0 < len(rows) <= 20
+    # replay: same support-2 co-purchase edge set, brute-force cc
+    adj: dict[int, set[int]] = {}
+    for u, v in _copurchase_replay(spark):
+        adj.setdefault(u, set()).add(v)
+        adj.setdefault(v, set()).add(u)
+    for r in rows:
+        nbrs = adj[r.part_id]
+        assert r.degree == len(nbrs)
+        tri = sum(
+            1
+            for x in nbrs
+            for y in nbrs
+            if x < y and y in adj.get(x, set())
+        )
+        assert r.n_triangles == tri
+        want = 2.0 * tri / (len(nbrs) * (len(nbrs) - 1))
+        assert abs(r.clustering_coeff - want) < 1e-6
+        assert 0.0 <= r.clustering_coeff <= 1.0
+    # descending order, deterministic tie-break
+    ccs = [(-r.clustering_coeff, r.part_id) for r in rows]
+    assert ccs == sorted(ccs)

@@ -15,29 +15,30 @@ import pytest
 
 from perfbench.workloads import WORKLOADS
 from trackdechets_etl_spark.canon import canon
-from trackdechets_etl_spark.queries import all_queries
+from trackdechets_etl_spark.queries import all_queries, graph
 from tests.conftest import SF_DIR
 
 REGISTRY = all_queries()
 
 # The default shard checks every query a perfbench workload runs (the
-# five reference pipelines, the 22 headline queries and the iterative
-# graph_pagerank and graph_kcore_peel, heavy users of
-# session.materialize), one consumer of each shared SQL/Column helper
+# five reference pipelines and the 22 headline queries), every query of
+# queries/graph.py (the plans.fixtures trade graph, the co-purchase
+# triangles and the iterative loops, heavy users of session.materialize),
+# one consumer of each shared SQL/Column helper
 # (the llm/similarity cosine, norm and LSH-bucket SQL, md5 hex to int
 # SQL, array dot product) and
 # of each sized or converted read (the orders rank gate, the documents
 # and embeddings fan-out, events.ts), and every consumer of a
 # functions.scalar.hash_key key or of a keyed-shingle step of llm/dedup
 # (shingle keys, prefix positions, Jaccard candidates, overlap counts)
-# that the workloads do not already run, every consumer of the
-# plans.fixtures trade graph, the two oracles re-typed to DOUBLE
+# that the workloads do not already run, the two oracles re-typed to DOUBLE
 # (orders_conformal_interval, text_topk_rbo_eras), every consumer of the
 # float-score rank key (operators.ranking.score_order and its per-group
 # top-k) and of the llm/similarity and llm/pq retrieval kernels, and one
 # consumer of the range-partitioned global prefix max; the rest of the
 # sweep is marked slow (see pytest.ini) and runs with -m "slow or not slow".
 _DEFAULT_SHARD = {name for work in WORKLOADS.values() for name, _ in work} | {
+    *graph.QUERIES,
     "dedup_embedding_cosine",
     "sample_weighted_reservoir",
     "ml_kmeans_lite",
@@ -52,16 +53,6 @@ _DEFAULT_SHARD = {name for work in WORKLOADS.values() for name, _ in work} | {
     "join_fuzzy_name",
     "join_bloom_prefilter",
     "dedup_clusters",
-    "graph_khop_reach",
-    "graph_neighbor_mode",
-    "graph_jaccard_neighbors",
-    "graph_degree_histogram",
-    "graph_label_propagation",
-    "graph_degree_assortativity",
-    "graph_harmonic_centrality_top",
-    "graph_modularity_nation",
-    "graph_rich_club",
-    "graph_degree_powerlaw",
     "orders_conformal_interval",
     "text_topk_rbo_eras",
     "sim_ivfpq_topk",

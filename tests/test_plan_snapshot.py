@@ -1,7 +1,7 @@
 """The plan-snapshot canonicalizer renumbers lambda variables within
 each plan: a shifted session counter hashes the same, a changed
 reference does not. The snapshot text keeps every field of a wide
-plan."""
+plan, and the plans cut by a materialization."""
 
 from __future__ import annotations
 
@@ -114,3 +114,31 @@ def test_plans_differing_past_the_field_cut_differ(spark):
     assert "more fields" not in a
     assert a != b
     assert plan_snapshot.first_difference(a, b) != ("", "")
+
+
+def _count_after_cut(spark, modulus: int):
+    """A count over a frame that ``session.materialize`` cut after a
+    filter on ``modulus``."""
+    from pyspark.sql import functions as F
+
+    from trackdechets_etl_spark.session import materialize
+
+    cut = materialize(spark.range(100).filter(F.col("id") % modulus == 0))
+    return cut.groupBy().count()
+
+
+def test_change_before_a_cut_shows(spark):
+    from pyspark.sql.classic.dataframe import DataFrame
+
+    original = DataFrame.localCheckpoint
+    entries = []
+    for modulus in (2, 3):
+        with plan_snapshot.recording_cuts() as cuts:
+            plan = plan_snapshot.plan_text(_count_after_cut(spark, modulus))
+            entries.append((plan, plan_snapshot.snapshot_entry(cuts, plan)))
+    assert DataFrame.localCheckpoint is original
+    (plan_2, entry_2), (plan_3, entry_3) = entries
+    # the returned plan only scans the cut, so it hides the filter
+    assert plan_2 == plan_3
+    assert entry_2 != entry_3
+    assert "% 2" in plan_snapshot.first_difference(entry_2, entry_3)[0]

@@ -646,3 +646,11 @@ def test_lsh_bucket_sql_has_one_home():
     with the same hyperplane literals."""
     hits = _package_hits(r"CASE\s+WHEN\s+list_dot_product\(", "llm/similarity.py")
     assert not hits, f"LSH bucket SQL outside llm/similarity.py: {hits}"
+
+
+def test_norm_has_one_home():
+    """The Spark norm (``F.sqrt(dot(``) is built by ``llm.similarity.norm``
+    only, so every norm casts its array the same way as its DuckDB twin
+    ``norm_sql``."""
+    hits = _package_hits(r"F\.sqrt\(\s*dot\(", "llm/similarity.py")
+    assert not hits, f"Spark norm outside llm/similarity.py: {hits}"

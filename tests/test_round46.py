@@ -71,7 +71,7 @@ def test_kcore_emits_every_round_after_the_graph_empties(spark, tmp_path):
     A round whose graph is empty still has its row, all zeros."""
     import duckdb
 
-    from trackdechets_etl_spark.queries.round46 import _KCORE_K, _KCORE_ROUNDS
+    from trackdechets_etl_spark.queries.graph import _KCORE_K, _KCORE_ROUNDS
 
     pairs = [(1, s) for s in range(1, _KCORE_K + 1)] + [
         (100 + 20 * s + j, s)

@@ -256,48 +256,6 @@ def test_benford_output_is_distribution(spark):
     assert abs(sum(r.benford_share for r in rows) - 1.0) < 1e-3
 
 
-# ---------------------------------------------------------- triangles
-
-
-def test_triangles_match_bruteforce(spark):
-    """Replay triangle enumeration driver-side from the same edge set."""
-    from itertools import combinations
-
-    li = {
-        (r.l_orderkey, r.l_partkey)
-        for r in spark.read.parquet(f"{SF_DIR}/lineitem.parquet")
-        .select("l_orderkey", "l_partkey")
-        .collect()
-    }
-    by_order: dict[int, set] = {}
-    for ok, pk in li:
-        by_order.setdefault(ok, set()).add(pk)
-    from collections import Counter
-
-    pair_support = Counter()
-    for parts in by_order.values():
-        for u, v in combinations(sorted(parts), 2):
-            pair_support[(u, v)] += 1
-    edges = {p for p, n in pair_support.items() if n >= 2}
-    adj: dict[int, set] = {}
-    for u, v in edges:
-        adj.setdefault(u, set()).add(v)
-    tri_count = Counter()
-    for a, b in edges:
-        for c in adj.get(b, set()):
-            if (a, c) in edges:
-                tri_count[a] += 1
-                tri_count[b] += 1
-                tri_count[c] += 1
-    want = sorted(tri_count.items(), key=lambda kv: (-kv[1], kv[0]))[:20]
-    got = [
-        (r.part_id, r.n_triangles)
-        for r in REGISTRY["graph_triangles"].fn(spark, SF_DIR).collect()
-    ]
-    assert got == want
-    assert got, "degenerate graph: no triangles at support 2"
-
-
 # ---------------------------------------------------- equi-depth bins
 
 

@@ -913,7 +913,7 @@ def _embedding_array_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-vector statistics via higher-order functions (transform/
     aggregate/array_min/array_max) — all JVM expressions inside
     whole-stage codegen, zero Python in the loop."""
-    from trackdechets_etl_spark.llm.similarity import as_double, dot
+    from trackdechets_etl_spark.llm.similarity import as_double, norm
 
     e = read_table(spark, sf_dir, "embeddings")
     v = as_double(F.col("embedding"))
@@ -921,7 +921,7 @@ def _embedding_array_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     return e.select(
         "vec_id",
         F.size("embedding").cast("long").alias("n_dims"),
-        F.round(F.sqrt(dot(v, v)), 6).alias("l2_norm"),
+        F.round(norm(F.col("embedding")), 6).alias("l2_norm"),
         F.round(total / F.size("embedding"), 6).alias("mean_val"),
         F.round(F.array_min(v), 6).alias("min_val"),
         F.round(F.array_max(v), 6).alias("max_val"),

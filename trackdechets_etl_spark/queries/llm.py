@@ -24,11 +24,13 @@ from trackdechets_etl_spark.llm.dedup import (
 )
 from trackdechets_etl_spark.llm.multimodal import frame_sample_offsets, with_payload
 from trackdechets_etl_spark.llm.similarity import (
+    as_double,
     bucket_sql,
     cosine_sql,
     lsh_bucket_topk,
     near_dup_pairs,
     near_dup_pairs_bucketed,
+    norm,
     norm_sql,
     topk_bruteforce,
 )
@@ -391,19 +393,17 @@ FROM r WHERE rank <= 5
 def _emb_normalize(spark: SparkSession, sf_dir: str) -> DataFrame:
     """L2-normalize embeddings (the standard pre-step before cosine ops
     can become plain dot products). JVM-side transform/aggregate."""
-    from trackdechets_etl_spark.llm.similarity import as_double, dot
-
     e = read_table(spark, sf_dir, "embeddings")
     v = as_double(F.col("embedding"))
-    norm = F.sqrt(dot(v, v))
+    l2 = norm(F.col("embedding"))
     # The driver's pandas-based canonicalizer cannot hash list-valued
     # cells, so the registry query surfaces the unit vector as integer
     # micro-units joined into one string (round(x*1e6) is exact on both
     # engines; double->string casts are NOT engine-stable, longs are).
-    unit_micro = F.transform(v, lambda x: F.round(x / norm * 1000000).cast("long"))
+    unit_micro = F.transform(v, lambda x: F.round(x / l2 * 1000000).cast("long"))
     return e.select(
         "vec_id",
-        F.round(norm, 6).alias("l2_norm"),
+        F.round(l2, 6).alias("l2_norm"),
         F.concat_ws(",", unit_micro.cast("array<string>")).alias("unit_vec_micro"),
     )
 

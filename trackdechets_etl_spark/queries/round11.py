@@ -1,5 +1,4 @@
-"""Round-5 additions, sixth batch: session-interval analytics and a
-bipartite label-assignment op.
+"""Round-5 additions, sixth batch: session-interval analytics.
 
 - ``events_concurrency_peak``: peak concurrent sessions per day by
   sweep-line — sessions (30-min-gap rule, end = last event + timeout)
@@ -10,11 +9,6 @@ bipartite label-assignment op.
 - ``events_bounce_rate``: single-event sessions over total sessions
   per day — the engagement-quality companion to the session window op.
   Integer counts, ratio rounded at 4.
-- ``graph_neighbor_mode``: majority-vote label assignment across the
-  bipartite trade graph — each supplier takes the modal market segment
-  of its customer neighbours (ties by lexicographically smallest
-  segment). One aggregation + one deterministic argmax window; the
-  1-round core of label propagation.
 
 All pure DataFrame algebra with exact DuckDB twins; invariant tests in
 tests/test_round11.py. Extensions beyond the reference DAGs, same
@@ -27,7 +21,6 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from trackdechets_etl_spark.io.readers import read_table
-from trackdechets_etl_spark.plans.fixtures import TRADE_PAIRS_SQL, trade_pairs
 from trackdechets_etl_spark.queries import QuerySpec
 
 _SESSION_GAP_MIN = 30
@@ -200,60 +193,9 @@ ORDER BY day
 """
 
 
-def _graph_neighbor_mode(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Majority-vote label assignment over the bipartite trade graph:
-    each supplier takes the modal c_mktsegment of its distinct
-    customer neighbours, ties broken by the lexicographically smallest
-    segment. Votes are one aggregation over the distinct edge list;
-    the winner is a deterministic row_number window over the
-    (supplier × segment) vote table — supplier-keyed and
-    segment-count-bounded, so the argmax never touches fact-sized
-    data. The 1-round core of label propagation; K rounds = repeat
-    with the new labels."""
-    c = read_table(spark, sf_dir, "customer").select(
-        "c_custkey", "c_mktsegment"
-    )
-    votes = (
-        trade_pairs(spark, sf_dir)
-        .join(c, F.col("cust") == F.col("c_custkey"))
-        .groupBy("supp", "c_mktsegment")
-        .agg(F.count(F.lit(1)).alias("votes"))
-    )
-    w = Window.partitionBy("supp").orderBy(F.desc("votes"), F.col("c_mktsegment"))
-    return (
-        votes.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") == 1)
-        .select(
-            F.col("supp").alias("s_suppkey"),
-            F.col("c_mktsegment").alias("assigned_segment"),
-            F.col("votes").alias("votes"),
-        )
-        .orderBy("s_suppkey")
-    )
-
-
-GRAPH_NEIGHBOR_MODE_SQL = f"""
-WITH trade_pairs AS ({TRADE_PAIRS_SQL}),
-votes AS (
-    SELECT supp AS s_suppkey, c_mktsegment, CAST(count(*) AS BIGINT) AS votes
-    FROM trade_pairs JOIN customer ON cust = c_custkey
-    GROUP BY 1, 2),
-ranked AS (
-    SELECT *, row_number() OVER (PARTITION BY s_suppkey
-                                 ORDER BY votes DESC, c_mktsegment) AS rn
-    FROM votes)
-SELECT s_suppkey, c_mktsegment AS assigned_segment, votes
-FROM ranked WHERE rn = 1
-ORDER BY s_suppkey
-"""
-
-
 QUERIES: dict[str, QuerySpec] = {
     "events_concurrency_peak": QuerySpec(
         _events_concurrency_peak, EVENTS_CONCURRENCY_SQL
     ),
     "events_bounce_rate": QuerySpec(_events_bounce_rate, EVENTS_BOUNCE_SQL),
-    "graph_neighbor_mode": QuerySpec(
-        _graph_neighbor_mode, GRAPH_NEIGHBOR_MODE_SQL
-    ),
 }

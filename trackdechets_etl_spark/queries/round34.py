@@ -1,5 +1,5 @@
-"""Round-6 additions, fourth batch: Matryoshka truncation eval, a
-dataset datasheet, and bipartite degree structure.
+"""Round-6 additions, fourth batch: Matryoshka truncation eval and a
+dataset datasheet.
 
 - ``sim_matryoshka_recall``: recall@5 of cosine top-k computed on the
   TRUNCATED leading 16 dims against the full 64-dim exact baseline —
@@ -13,10 +13,6 @@ dataset datasheet, and bipartite degree structure.
   whitespace tokens, exact-duplicate share, char-length extremes —
   the summary table a dataset card ships. One fingerprint aggregation
   + one rollup.
-- ``graph_degree_histogram``: log2-bucketed degree distribution of
-  the customer↔supplier bipartite trade graph, both sides in one
-  frame — the shape readout that decides skew strategy (which keys
-  need salting/capping) before any heavy graph job runs.
 
 Invariant tests in tests/test_round34.py.
 """
@@ -28,9 +24,7 @@ from pyspark.sql import functions as F
 
 from trackdechets_etl_spark.io.readers import read_table
 from trackdechets_etl_spark.llm.similarity import cosine_sql
-from trackdechets_etl_spark.plans.fixtures import TRADE_PAIRS_SQL, trade_pairs
 from trackdechets_etl_spark.queries import QuerySpec
-from trackdechets_etl_spark.session import materialize
 
 # ------------------------------------------------ Matryoshka recall
 
@@ -172,54 +166,9 @@ FROM m GROUP BY lang ORDER BY lang
 """
 
 
-# ------------------------------------------------ degree histogram
-
-
-def _graph_degree_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Distinct trade edges once (the one real shuffle), then per-side
-    degree counts and a log2 bucket rollup — output is
-    sides × log-buckets rows at any scale."""
-    edges = materialize(trade_pairs(spark, sf_dir))
-
-    def side_hist(frame, key, label):
-        deg = frame.groupBy(key).agg(F.count(F.lit(1)).alias("deg"))
-        return deg.select(
-            F.lit(label).alias("side"),
-            F.floor(F.log2("deg")).cast("long").alias("log2_bucket"),
-        ).groupBy("side", "log2_bucket").agg(
-            F.count(F.lit(1)).cast("long").alias("n_nodes")
-        )
-
-    return (
-        side_hist(edges, "cust", "customer")
-        .unionByName(side_hist(edges, "supp", "supplier"))
-        .orderBy("side", "log2_bucket")
-    )
-
-
-DEGREE_HISTOGRAM_SQL = f"""
-WITH trade_pairs AS ({TRADE_PAIRS_SQL}),
-cd AS (SELECT cust, count(*) AS deg FROM trade_pairs GROUP BY cust),
-sd AS (SELECT supp, count(*) AS deg FROM trade_pairs GROUP BY supp),
-h AS (
-    SELECT 'customer' AS side,
-           CAST(floor(log2(deg)) AS BIGINT) AS log2_bucket
-    FROM cd
-    UNION ALL
-    SELECT 'supplier' AS side,
-           CAST(floor(log2(deg)) AS BIGINT) AS log2_bucket
-    FROM sd)
-SELECT side, log2_bucket, CAST(count(*) AS BIGINT) AS n_nodes
-FROM h GROUP BY side, log2_bucket ORDER BY side, log2_bucket
-"""
-
-
 QUERIES: dict[str, QuerySpec] = {
     "sim_matryoshka_recall": QuerySpec(
         _sim_matryoshka_recall, _build_matryoshka_sql()
     ),
     "dataset_card_stats": QuerySpec(_dataset_card_stats, DATASET_CARD_SQL),
-    "graph_degree_histogram": QuerySpec(
-        _graph_degree_histogram, DEGREE_HISTOGRAM_SQL
-    ),
 }

@@ -1,16 +1,15 @@
 """Round-4 operator additions: cohort/retention analytics, market-basket
 self-join, SCD2 validity intervals, document chunking, intra-document
-repetition stats, RFM segmentation, fixed-iteration PageRank, key-skew
-profiling, hierarchy-to-root traversal, lag-gap sessionization,
-volume-anomaly z-scores, snapshot diffing, and a declarative
-data-quality gate.
+repetition stats, RFM segmentation, key-skew profiling,
+hierarchy-to-root traversal, lag-gap sessionization, volume-anomaly
+z-scores, snapshot diffing, and a declarative data-quality gate.
 
 These widen the engine beyond the reference's ETL surface (the
 reference has none of these — designed extensions in the spirit of
 SURVEY §7/M6) with shapes a 100 TB training-data or product-analytics
 pipeline needs: windowed change detection, self-join co-occurrence,
-overlapping text chunking for context-window packing, iterative graph
-propagation, quantile bucketing, and incremental-ETL auditing.
+overlapping text chunking for context-window packing, quantile
+bucketing, and incremental-ETL auditing.
 
 Scale notes per query are inline; the common rules: facts are never
 broadcast, every self-join is projected to its key columns first, and
@@ -25,11 +24,6 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from trackdechets_etl_spark.io.readers import read_table
-from trackdechets_etl_spark.plans.fixtures import (
-    TRADE_EDGES_SQL,
-    TRADE_PAIRS_SQL,
-    trade_edges,
-)
 from trackdechets_etl_spark.queries import QuerySpec
 from trackdechets_etl_spark.queries.round61 import _hex8_int_sql
 from trackdechets_etl_spark.session import materialize
@@ -341,51 +335,6 @@ SELECT user_id,
            AS m_quartile
 FROM per_user, anchor
 """
-
-
-# ---------------------------------------------------- pagerank
-
-_PR_ITER = 5
-_PR_DAMP = 0.85
-
-
-def _graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """PageRank over the symmetrized customer↔supplier trade graph
-    (``plans.fixtures.trade_edges``). Fixed 5 iterations, damping 0.85 —
-    deterministic, matched step-for-step by the unrolled CTE oracle."""
-    from trackdechets_etl_spark.operators.graph import pagerank
-
-    ranks = pagerank(
-        trade_edges(spark, sf_dir), iterations=_PR_ITER, damping=_PR_DAMP
-    )
-    return ranks.select("node", F.round("rank", 6).alias("rank"))
-
-
-def _pr_oracle() -> str:
-    steps = []
-    prev = "r0"
-    for k in range(1, _PR_ITER + 1):
-        steps.append(
-            f"r{k} AS (SELECT e.dst AS node, "
-            f"(SELECT {1 - _PR_DAMP} / n FROM nn) + {_PR_DAMP} * "
-            f"sum({prev}.rank / deg.d) AS rank "
-            f"FROM edges e JOIN {prev} ON e.src = {prev}.node "
-            f"JOIN deg ON e.src = deg.src GROUP BY e.dst)"
-        )
-        prev = f"r{k}"
-    chain = ",\n".join(steps)
-    return f"""
-WITH trade_pairs AS ({TRADE_PAIRS_SQL}),
-edges AS ({TRADE_EDGES_SQL}),
-deg AS (SELECT src, count(*) AS d FROM edges GROUP BY src),
-nn AS (SELECT count(*) AS n FROM deg),
-r0 AS (SELECT src AS node, 1.0 / (SELECT n FROM nn) AS rank FROM deg),
-{chain}
-SELECT node, round(rank, 6) AS rank FROM r{_PR_ITER}
-"""
-
-
-PAGERANK_SQL = _pr_oracle()
 
 
 # ---------------------------------------------------- key-skew diagnostic
@@ -723,7 +672,6 @@ QUERIES: dict[str, QuerySpec] = {
     "text_chunk_overlap": QuerySpec(_text_chunk_overlap, CHUNK_SQL),
     "text_repetition_stats": QuerySpec(_text_repetition_stats, REPETITION_SQL),
     "events_rfm_segments": QuerySpec(_events_rfm_segments, RFM_SQL),
-    "graph_pagerank": QuerySpec(_graph_pagerank, PAGERANK_SQL),
     "diag_key_skew": QuerySpec(_diag_key_skew, KEY_SKEW_SQL),
     "hierarchy_roots": QuerySpec(_hierarchy_roots, HIERARCHY_SQL),
     "events_sessionize_ids": QuerySpec(_events_sessionize_ids, SESSIONIZE_SQL),

@@ -1,5 +1,5 @@
-"""Round-7 additions, sixth batch: RAKE keywords, exact p95 activity
-cutoff, label-propagation communities.
+"""Round-7 additions, sixth batch: RAKE keywords and exact p95
+activity cutoff.
 
 - ``text_rake_keywords``: RAKE keyword scoring — documents split into
   candidate phrases at stopword boundaries (the phrase segmentation is
@@ -14,12 +14,6 @@ cutoff, label-propagation communities.
   value covering ≥95% of users, and one more aggregate counts the
   power users at or above it. The round33 distinct-value discipline
   applied to percentiles.
-- ``graph_label_propagation``: 3 synchronous label-propagation rounds
-  over the symmetrized customer↔supplier trade graph (the pagerank
-  edge set) with a deterministic update (most-frequent neighbor label,
-  ties to the smallest) — community detection where connected
-  components is too coarse (the trade graph is one giant component).
-  Fixed-K unrolled, fully lazy; per-round windows partition by node.
 
 Invariant tests in tests/test_round44.py.
 """
@@ -30,13 +24,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from trackdechets_etl_spark.io.readers import read_table
-from trackdechets_etl_spark.plans.fixtures import (
-    TRADE_EDGES_SQL,
-    TRADE_PAIRS_SQL,
-    trade_edges,
-)
 from trackdechets_etl_spark.queries import QuerySpec
-from trackdechets_etl_spark.session import materialize
 
 # ------------------------------------------------ RAKE keywords
 
@@ -165,87 +153,9 @@ FROM tot CROSS JOIN cutoff
 """
 
 
-# ------------------------------------------------ label propagation
-
-_LP_ROUNDS = 3
-
-
-def _graph_label_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # Eager: a lazy checkpoint materializes only AFTER the first
-    # job finishes, so the single final action would still
-    # re-derive the join+distinct edge list once per round.
-    edges = materialize(trade_edges(spark, sf_dir))
-    labels = edges.select(F.col("src").alias("node")).distinct().select(
-        "node", F.col("node").alias("label")
-    )
-    for _ in range(_LP_ROUNDS):
-        neigh = edges.join(
-            labels.select(F.col("node").alias("dst"), "label"), "dst"
-        ).select(F.col("src").alias("node"), "label")
-        # One exchange per round for the big frame: hash(node) from
-        # the repartition satisfies BOTH aggregates (subset rule), and
-        # argmax-by-(count desc, label asc) is a max over a
-        # (c, -label) struct — hash aggregates only, no per-node sort
-        # (the former row_number window re-exchanged counts AND sorted
-        # every partition).
-        counts = (
-            neigh.repartition("node")
-            .groupBy("node", "label")
-            .agg(F.count(F.lit(1)).alias("c"))
-        )
-        labels = counts.groupBy("node").agg(
-            (
-                -F.max(
-                    F.struct(F.col("c"), (-F.col("label")).alias("nl"))
-                )["nl"]
-            ).alias("label")
-        )
-    return (
-        labels.groupBy("label")
-        .agg(F.count(F.lit(1)).cast("long").alias("community_size"))
-        .select(F.col("label").cast("long").alias("community"), "community_size")
-        .orderBy(F.desc("community_size"), "community")
-    )
-
-
-def _lp_oracle() -> str:
-    parts = [
-        f"""
-trade_pairs AS ({TRADE_PAIRS_SQL}),
-edges AS ({TRADE_EDGES_SQL}),
-l0 AS (SELECT DISTINCT src AS node, src AS label FROM edges)"""
-    ]
-    for step in range(1, _LP_ROUNDS + 1):
-        parts.append(
-            f"""
-n{step} AS (
-    SELECT e.src AS node, l.label, count(*) AS c
-    FROM edges e JOIN l{step - 1} l ON e.dst = l.node
-    GROUP BY e.src, l.label),
-l{step} AS (
-    SELECT node, label FROM (
-        SELECT node, label, row_number() OVER (PARTITION BY node
-            ORDER BY c DESC, label ASC) AS rn
-        FROM n{step}) WHERE rn = 1)"""
-        )
-    return (
-        "WITH "
-        + ",".join(parts)
-        + f"""
-SELECT CAST(label AS BIGINT) AS community,
-       CAST(count(*) AS BIGINT) AS community_size
-FROM l{_LP_ROUNDS} GROUP BY label
-ORDER BY community_size DESC, community
-"""
-    )
-
-
 QUERIES: dict[str, QuerySpec] = {
     "text_rake_keywords": QuerySpec(_text_rake_keywords, _rake_oracle()),
     "events_p95_activity_cutoff": QuerySpec(
         _events_p95_activity_cutoff, P95_CUTOFF_SQL
-    ),
-    "graph_label_propagation": QuerySpec(
-        _graph_label_propagation, _lp_oracle()
     ),
 }

@@ -1,5 +1,5 @@
-"""Round-7 additions, eighth batch: discount elasticity, embedding
-outliers, k-core peeling.
+"""Round-7 additions, eighth batch: discount elasticity and embedding
+outliers.
 
 - ``lineitem_discount_elasticity``: closed-form least-squares slope of
   quantity on discount level — ALL sums are int64 (discount scaled to
@@ -13,11 +13,6 @@ outliers, k-core peeling.
   per-term z² snapped to integer micro-units so the 64-term sum is an
   exact int64 (no float association anywhere), TakeOrdered top-k. The
   embedding-space data-quality sweep run before training.
-- ``graph_kcore_peel``: 5 rounds of k-core peeling (k=12) on the
-  trade graph — each round drops nodes with degree < k and the edges
-  they carry; emits the (round, nodes, edges) trajectory, so
-  convergence (or not, on adversarial graphs) is IN the output rather
-  than assumed. Rounds chain lazily; every join is keyed.
 
 Invariant tests in tests/test_round46.py.
 """
@@ -28,13 +23,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from trackdechets_etl_spark.io.readers import read_table
-from trackdechets_etl_spark.plans.fixtures import (
-    TRADE_EDGES_SQL,
-    TRADE_PAIRS_SQL,
-    trade_edges,
-)
 from trackdechets_etl_spark.queries import QuerySpec
-from trackdechets_etl_spark.session import broadcast_if_fits, materialize
 
 # ------------------------------------------- discount elasticity
 
@@ -156,108 +145,6 @@ FROM scored ORDER BY mahalanobis_d2 DESC, vec_id LIMIT {_OUT_TOP}
 """
 
 
-# ------------------------------------------- k-core peeling
-
-_KCORE_K = 12
-_KCORE_ROUNDS = 5
-
-
-def _graph_kcore_peel(spark: SparkSession, sf_dir: str) -> DataFrame:
-    edges = materialize(trade_edges(spark, sf_dir), eager=False)
-    # One (round, n_nodes, n_edges) row per round from one aggregate:
-    # each kept node adds (round, 1, 0), each kept edge (round, 0, 1),
-    # and a (round, 0, 0) row per round keeps a round that peeled
-    # everything in the output.
-    tagged = spark.range(1, _KCORE_ROUNDS + 1).select(
-        F.col("id").alias("round"), F.lit(0).alias("node"), F.lit(0).alias("edge")
-    )
-    # Each kept node is the source of at least _KCORE_K edges, and the
-    # edges only shrink, so one edge count before the loop bounds every
-    # round's keep: at most n_edges // _KCORE_K rows. A distinct count
-    # of the nodes is tighter on this graph (its mean degree is above
-    # _KCORE_K) but costs a second shuffle and about twice the time.
-    max_keep = edges.count() // _KCORE_K
-    for rnd in range(1, _KCORE_ROUNDS + 1):
-        keep = materialize(
-            edges.groupBy("src")
-            .agg(F.count(F.lit(1)).alias("deg"))
-            .filter(F.col("deg") >= _KCORE_K)
-            .select(F.col("src").alias("node")),
-            eager=False,
-        )
-        # keep, materialized, carries its origin plan's size estimate,
-        # so unhinted, AQE plans both semi-joins as sort-merge joins
-        # and shuffles edges and keep before it sees keep's size. Gated
-        # on max_keep, the two semi-joins read one broadcast of keep (the
-        # second is a ReusedExchange): a round is two jobs, the degree
-        # shuffle and that broadcast. Past the threshold they stay
-        # shuffle joins.
-        edges = materialize(
-            edges.join(
-                broadcast_if_fits(keep.select(F.col("node").alias("src")), max_keep),
-                "src",
-                "left_semi",
-            ).join(
-                broadcast_if_fits(keep.select(F.col("node").alias("dst")), max_keep),
-                "dst",
-                "left_semi",
-            ),
-            eager=False,
-        )
-        r = F.lit(rnd).cast("long").alias("round")
-        tagged = tagged.unionByName(
-            keep.select(r, F.lit(1).alias("node"), F.lit(0).alias("edge"))
-        ).unionByName(edges.select(r, F.lit(0).alias("node"), F.lit(1).alias("edge")))
-    # _KCORE_ROUNDS rows: sorted in one partition, without the sampling
-    # job and range shuffle of a global orderBy.
-    return (
-        tagged.groupBy("round")
-        .agg(F.sum("node").alias("n_nodes"), F.sum("edge").alias("n_edges"))
-        .coalesce(1)
-        .sortWithinPartitions("round")
-    )
-
-
-def _kcore_oracle() -> str:
-    # Every CTE in the peel chain is AS MATERIALIZED: each e{rnd} is
-    # referenced by k{rnd+1}, e{rnd+1} AND a final count — left to the
-    # inlining heuristic, DuckDB re-evaluates the chain per reference
-    # (exponential in rounds; at sf0.1 the un-hinted form spilled >80GB
-    # of temp and died on disk, while the materialized form runs in
-    # ~3s). The hint changes evaluation only, never results.
-    parts = [
-        f"""
-trade_pairs AS MATERIALIZED ({TRADE_PAIRS_SQL}),
-e0 AS MATERIALIZED ({TRADE_EDGES_SQL})"""
-    ]
-    for rnd in range(1, _KCORE_ROUNDS + 1):
-        parts.append(
-            f"""
-k{rnd} AS MATERIALIZED (
-    SELECT src AS node FROM e{rnd - 1}
-    GROUP BY src HAVING count(*) >= {_KCORE_K}),
-e{rnd} AS MATERIALIZED (
-    SELECT e.src, e.dst FROM e{rnd - 1} e
-    WHERE e.src IN (SELECT node FROM k{rnd})
-      AND e.dst IN (SELECT node FROM k{rnd}))"""
-        )
-    selects = " UNION ALL ".join(
-        f"SELECT {r} AS round, (SELECT count(*) FROM k{r}) AS n_nodes, "
-        f"(SELECT count(*) FROM e{r}) AS n_edges"
-        for r in range(1, _KCORE_ROUNDS + 1)
-    )
-    return (
-        "WITH "
-        + ",".join(parts)
-        + f"""
-SELECT CAST(round AS BIGINT) AS round,
-       CAST(n_nodes AS BIGINT) AS n_nodes,
-       CAST(n_edges AS BIGINT) AS n_edges
-FROM ({selects}) ORDER BY round
-"""
-    )
-
-
 QUERIES: dict[str, QuerySpec] = {
     "lineitem_discount_elasticity": QuerySpec(
         _lineitem_discount_elasticity, DISCOUNT_ELASTICITY_SQL
@@ -265,5 +152,4 @@ QUERIES: dict[str, QuerySpec] = {
     "embedding_outlier_topk": QuerySpec(
         _embedding_outlier_topk, EMB_OUTLIER_SQL
     ),
-    "graph_kcore_peel": QuerySpec(_graph_kcore_peel, _kcore_oracle()),
 }

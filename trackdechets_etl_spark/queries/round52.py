@@ -1,13 +1,6 @@
-"""Round-7 additions, fourteenth batch: local clustering coefficient,
-PMI collocations, Spearman rank correlation.
+"""Round-7 additions, fourteenth batch: PMI collocations and
+Spearman rank correlation.
 
-- ``graph_clustering_coefficient``: per-node local clustering
-  coefficient on the co-purchase graph (same support-2 edge set as
-  ``graph_triangles``): cc(v) = 2*T(v) / (deg(v)*(deg(v)-1)) — the
-  "how clique-like is this node's neighborhood" companion to the raw
-  triangle count. Triangle enumeration is the oriented three-way
-  equi-join (each triangle once), degrees one aggregate; the division
-  is the only float.
 - ``text_pmi_bigrams``: pointwise mutual information of adjacent word
   pairs — the classic collocation detector (PMI = ln p(ab) / p(a)p(b)).
   Bigram and unigram counts are distributed hash aggregates; corpus
@@ -36,100 +29,6 @@ from pyspark.sql import functions as F
 
 from trackdechets_etl_spark.io.readers import read_table
 from trackdechets_etl_spark.queries import QuerySpec
-from trackdechets_etl_spark.session import materialize
-
-# ------------------------------------- local clustering coefficient
-
-_CC_SUPPORT = 2
-_CC_TOP = 20
-
-
-def _graph_clustering_coefficient(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li = (
-        read_table(spark, sf_dir, "lineitem")
-        .select("l_orderkey", "l_partkey")
-        .distinct()
-    )
-    a = li.select(F.col("l_orderkey").alias("ok"), F.col("l_partkey").alias("u"))
-    b = li.select(F.col("l_orderkey").alias("ok"), F.col("l_partkey").alias("v"))
-    edges = (
-        a.join(b, "ok")
-        .filter(F.col("u") < F.col("v"))
-        .groupBy("u", "v")
-        .agg(F.count(F.lit(1)).alias("__support"))
-        .filter(F.col("__support") >= _CC_SUPPORT)
-        .select("u", "v")
-    )
-    edges = materialize(edges, eager=False)  # degree + three join legs
-    deg = (
-        edges.select(F.col("u").alias("node"))
-        .unionByName(edges.select(F.col("v").alias("node")))
-        .groupBy("node")
-        .agg(F.count(F.lit(1)).alias("degree"))
-    )
-    e1 = edges.select(F.col("u").alias("a"), F.col("v").alias("b"))
-    e2 = edges.select(F.col("u").alias("b"), F.col("v").alias("c"))
-    e3 = edges.select(F.col("u").alias("a"), F.col("v").alias("c"))
-    tri = e1.join(e2, "b").join(e3, ["a", "c"])
-    tcnt = (
-        tri.select(F.explode(F.array("a", "b", "c")).alias("node"))
-        .groupBy("node")
-        .agg(F.count(F.lit(1)).alias("n_triangles"))
-    )
-    scored = (
-        deg.join(tcnt, "node", "left")
-        .filter(F.col("degree") >= 2)
-        .select(
-            F.col("node").alias("part_id"),
-            F.col("degree").cast("long").alias("degree"),
-            F.coalesce(F.col("n_triangles"), F.lit(0))
-            .cast("long")
-            .alias("n_triangles"),
-            F.round(
-                F.lit(2.0)
-                * F.coalesce(F.col("n_triangles"), F.lit(0))
-                / (F.col("degree") * (F.col("degree") - 1)),
-                6,
-            ).alias("clustering_coeff"),
-        )
-    )
-    return scored.orderBy(
-        F.col("clustering_coeff").desc(), F.col("part_id").asc()
-    ).limit(_CC_TOP)
-
-
-CLUSTERING_COEFF_SQL = f"""
-WITH li AS (SELECT DISTINCT l_orderkey, l_partkey FROM lineitem),
-edges AS (
-    SELECT a.l_partkey AS u, b.l_partkey AS v
-    FROM li a JOIN li b
-      ON a.l_orderkey = b.l_orderkey AND a.l_partkey < b.l_partkey
-    GROUP BY 1, 2
-    HAVING count(*) >= {_CC_SUPPORT}),
-deg AS (
-    SELECT node, CAST(count(*) AS BIGINT) AS degree FROM (
-        SELECT u AS node FROM edges UNION ALL SELECT v FROM edges)
-    GROUP BY 1),
-tri AS (
-    SELECT e1.u AS a, e1.v AS b, e2.v AS c
-    FROM edges e1
-    JOIN edges e2 ON e1.v = e2.u
-    JOIN edges e3 ON e3.u = e1.u AND e3.v = e2.v),
-tcnt AS (
-    SELECT node, CAST(count(*) AS BIGINT) AS n_triangles FROM (
-        SELECT a AS node FROM tri
-        UNION ALL SELECT b FROM tri
-        UNION ALL SELECT c FROM tri)
-    GROUP BY 1)
-SELECT d.node AS part_id, d.degree,
-       coalesce(t.n_triangles, 0) AS n_triangles,
-       round(2.0 * coalesce(t.n_triangles, 0)
-             / (d.degree * (d.degree - 1)), 6) AS clustering_coeff
-FROM deg d LEFT JOIN tcnt t ON d.node = t.node
-WHERE d.degree >= 2
-ORDER BY clustering_coeff DESC, part_id ASC LIMIT {_CC_TOP}
-"""
-
 
 # --------------------------------------------------- PMI collocations
 
@@ -295,9 +194,6 @@ FROM s
 
 
 QUERIES: dict[str, QuerySpec] = {
-    "graph_clustering_coefficient": QuerySpec(
-        _graph_clustering_coefficient, CLUSTERING_COEFF_SQL
-    ),
     "text_pmi_bigrams": QuerySpec(_text_pmi_bigrams, TEXT_PMI_SQL),
     "lineitem_spearman_corr": QuerySpec(_lineitem_spearman_corr, SPEARMAN_SQL),
 }

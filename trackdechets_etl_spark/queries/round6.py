@@ -18,8 +18,6 @@ training-data pipeline) reaches for that were not yet first-class.
 - Dedup: ``dedup_incremental_batch`` (batch-vs-corpus probe) and the
   BPE merge statistic ``text_bpe_pairs`` (see also
   ``llm/dedup.py::containment_pairs`` → ``dedup_containment_pairs``).
-- Graph: ``graph_triangles`` (one-direction edge storage, three
-  co-partitioned join legs).
 - Similarity end-task: ``sim_knn_classify`` (majority vote over the
   top-k contract).
 
@@ -1023,88 +1021,6 @@ FROM ranked WHERE rn = 1
 """
 
 
-# ---------------------------------------------------- triangle count
-
-_TRI_SUPPORT = 2
-_TRI_TOP = 20
-
-
-def _graph_triangles(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-node triangle counts on the co-purchase graph (parts
-    co-occurring in ≥ {s} orders) — the canonical multi-way self-join:
-    with every edge stored once as ``u < v``, each triangle
-    ``a < b < c`` is enumerated exactly once by
-    ``e(a,b) ⋈ e(b,c) ⋈ e(a,c)``, so no dedup pass is needed. All
-    three legs are equi-joins co-partitioned on node keys (the same
-    single-key discipline as orders_market_basket); the support
-    threshold keeps the edge set sparse as the fact table grows —
-    graph density, not corpus size, is what triangle joins scale
-    with.""".format(s=_TRI_SUPPORT)
-    # r14: hash the raw projection on the order key BEFORE the dedup
-    # (the orders_market_basket / orders_basket_lift discipline). At
-    # sf0.1 the pair join is broadcast either way; the measured win
-    # (A/B 2.26 -> 1.78 s) is the narrower raw exchange replacing the
-    # (ok, pk)-keyed one with its near-useless partial dedup. At scale,
-    # where the deduped side cannot broadcast, the ok-partitioning
-    # additionally lets the pair self-join run without re-exchanging
-    # either side (subset rule), which the old key could not.
-    li = (
-        read_table(spark, sf_dir, "lineitem")
-        .select("l_orderkey", "l_partkey")
-        .repartition("l_orderkey")
-        .distinct()
-    )
-    a = li.select(F.col("l_orderkey").alias("ok"), F.col("l_partkey").alias("u"))
-    b = li.select(F.col("l_orderkey").alias("ok"), F.col("l_partkey").alias("v"))
-    edges = (
-        a.join(b, "ok")
-        .filter(F.col("u") < F.col("v"))
-        .groupBy("u", "v")
-        .agg(F.count(F.lit(1)).alias("__support"))
-        .filter(F.col("__support") >= _TRI_SUPPORT)
-        .select("u", "v")
-    )
-    edges = materialize(edges, eager=False)  # three join legs
-    e1 = edges.select(F.col("u").alias("a"), F.col("v").alias("b"))
-    e2 = edges.select(F.col("u").alias("b"), F.col("v").alias("c"))
-    e3 = edges.select(F.col("u").alias("a"), F.col("v").alias("c"))
-    tri = e1.join(e2, "b").join(e3, ["a", "c"])
-    nodes = tri.select(
-        F.explode(F.array("a", "b", "c")).alias("part_id")
-    )
-    counts = nodes.groupBy("part_id").agg(
-        F.count(F.lit(1)).alias("n_triangles")
-    )
-    return (
-        counts.orderBy(F.col("n_triangles").desc(), F.col("part_id").asc())
-        .limit(_TRI_TOP)
-        .select("part_id", F.col("n_triangles").cast("long").alias("n_triangles"))
-    )
-
-
-GRAPH_TRIANGLES_SQL = f"""
-WITH li AS (SELECT DISTINCT l_orderkey, l_partkey FROM lineitem),
-edges AS (
-    SELECT a.l_partkey AS u, b.l_partkey AS v
-    FROM li a JOIN li b
-      ON a.l_orderkey = b.l_orderkey AND a.l_partkey < b.l_partkey
-    GROUP BY 1, 2
-    HAVING count(*) >= {_TRI_SUPPORT}),
-tri AS (
-    SELECT e1.u AS a, e1.v AS b, e2.v AS c
-    FROM edges e1
-    JOIN edges e2 ON e1.v = e2.u
-    JOIN edges e3 ON e3.u = e1.u AND e3.v = e2.v),
-nodes AS (
-    SELECT a AS part_id FROM tri
-    UNION ALL SELECT b FROM tri
-    UNION ALL SELECT c FROM tri)
-SELECT part_id, CAST(count(*) AS BIGINT) AS n_triangles
-FROM nodes GROUP BY 1
-ORDER BY n_triangles DESC, part_id ASC LIMIT {_TRI_TOP}
-"""
-
-
 # ------------------------------------------------------- containment
 
 _CONTAINMENT_T = 0.9
@@ -1300,7 +1216,6 @@ QUERIES: dict[str, QuerySpec] = {
     "dedup_containment_pairs": QuerySpec(
         _dedup_containment, _dedup_containment_sql()
     ),
-    "graph_triangles": QuerySpec(_graph_triangles, GRAPH_TRIANGLES_SQL),
     "sim_knn_classify": QuerySpec(_sim_knn_classify, _sim_knn_sql()),
     "events_ab_lift": QuerySpec(_events_ab_lift, EVENTS_AB_LIFT_SQL),
     "orders_cohort_ltv": QuerySpec(_orders_cohort_ltv, ORDERS_COHORT_LTV_SQL),

@@ -1,6 +1,6 @@
 """Round-9 additions, ninth batch: classifier evaluation, decision
-stumps, empirical-Bayes shrinkage, cooperative-game attribution,
-economic price indices, and graph partition quality.
+stumps, empirical-Bayes shrinkage, cooperative-game attribution
+and economic price indices.
 
 - ``embedding_bucket_label_eval``: confusion-matrix evaluation of the
   hyperplane-LSH bucket-majority label assignment — per-label
@@ -32,13 +32,6 @@ economic price indices, and graph partition quality.
   part unit prices by ship year against the base (first) year,
   matched-part inner join (~190 parts/year probed). The BI/economics
   staple absent from the TPC-H family.
-- ``graph_modularity_nation``: Newman modularity Q of the nation
-  partition on the customer–supplier graph (the round51
-  assortativity edge set): per-community internal-edge and degree
-  sums, Q = Σ(e_c/m − (d_c/2m)²) — exact integers until the final
-  division. Quantifies whether nation boundaries are real communities
-  in the trade graph (the quality gate before trusting
-  label-propagation output).
 
 Reference provenance: none of these exist in the reference's 539-line
 pandas surface (dags/icpe-siretisation.py, dags/publish-open-data.py).
@@ -53,7 +46,6 @@ from pyspark.sql import functions as F
 
 from trackdechets_etl_spark.io.readers import read_table
 from trackdechets_etl_spark.llm.similarity import bucket_expr, bucket_sql
-from trackdechets_etl_spark.plans.fixtures import TRADE_PAIRS_SQL, trade_pairs
 from trackdechets_etl_spark.queries import QuerySpec
 from trackdechets_etl_spark.session import materialize
 
@@ -695,92 +687,6 @@ FROM j GROUP BY yr ORDER BY yr
 """
 
 
-# --------------------------------------------- nation modularity
-
-
-def _graph_modularity_nation(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    edges = trade_pairs(spark, sf_dir)
-    cn = read_table(spark, sf_dir, "customer").select(
-        F.col("c_custkey").alias("cust"),
-        F.col("c_nationkey").alias("cnat"),
-    )
-    sn = read_table(spark, sf_dir, "supplier").select(
-        F.col("s_suppkey").alias("supp"),
-        F.col("s_nationkey").alias("snat"),
-    )
-    e = edges.join(cn, "cust").join(sn, "supp")
-    m = e.agg(F.count(F.lit(1)).cast("long").alias("m"))
-    internal = (
-        e.filter(F.col("cnat") == F.col("snat"))
-        .groupBy(F.col("cnat").alias("nation"))
-        .agg(F.count(F.lit(1)).cast("long").alias("e_in"))
-    )
-    dsum = (
-        e.select(F.col("cnat").alias("nation"))
-        .unionByName(e.select(F.col("snat").alias("nation")))
-        .groupBy("nation")
-        .agg(F.count(F.lit(1)).cast("long").alias("d_c"))
-    )
-    per = (
-        dsum.join(internal, "nation", "left")
-        .na.fill(0, ["e_in"])
-        .crossJoin(F.broadcast(m))
-    )
-    qterm = F.col("e_in") / F.col("m") - (
-        F.col("d_c") / (2.0 * F.col("m"))
-    ) * (F.col("d_c") / (2.0 * F.col("m")))
-    per2 = per.select(
-        F.col("nation").cast("long").alias("nation"),
-        F.col("e_in"),
-        "d_c",
-        qterm.alias("q_raw"),
-    )
-    qtot = per2.agg(F.sum("q_raw").alias("q_total"))
-    return (
-        per2.crossJoin(F.broadcast(qtot))
-        .select(
-            "nation",
-            "e_in",
-            "d_c",
-            F.round("q_raw", 6).alias("q_term"),
-            F.round("q_total", 6).alias("modularity"),
-        )
-        .orderBy("nation")
-    )
-
-
-MODULARITY_SQL = f"""
-WITH trade_pairs AS ({TRADE_PAIRS_SQL}),
-e AS (
-    SELECT cust, supp, c_nationkey AS cnat, s_nationkey AS snat
-    FROM trade_pairs
-    JOIN customer ON cust = c_custkey
-    JOIN supplier ON supp = s_suppkey),
-m AS (SELECT CAST(count(*) AS BIGINT) AS m FROM e),
-internal AS (
-    SELECT cnat AS nation, CAST(count(*) AS BIGINT) AS e_in
-    FROM e WHERE cnat = snat GROUP BY cnat),
-dsum AS (
-    SELECT nation, CAST(count(*) AS BIGINT) AS d_c
-    FROM (SELECT cnat AS nation FROM e
-          UNION ALL SELECT snat AS nation FROM e)
-    GROUP BY nation),
-per AS (
-    SELECT dsum.nation, coalesce(e_in, 0) AS e_in, d_c,
-           coalesce(e_in, 0) * 1.0 / m
-           - (d_c / (2.0 * m)) * (d_c / (2.0 * m)) AS q_raw
-    FROM dsum LEFT JOIN internal USING (nation) CROSS JOIN m),
-qtot AS (SELECT sum(q_raw) AS q_total FROM per)
-SELECT CAST(nation AS BIGINT) AS nation, e_in, d_c,
-       round(q_raw, 6) AS q_term,
-       round(q_total, 6) AS modularity
-FROM per, qtot
-ORDER BY nation
-"""
-
-
 QUERIES: dict[str, QuerySpec] = {
     "embedding_bucket_label_eval": QuerySpec(
         _embedding_bucket_label_eval, BUCKET_LABEL_SQL
@@ -793,7 +699,4 @@ QUERIES: dict[str, QuerySpec] = {
         _events_shapley_attribution, SHAPLEY_SQL
     ),
     "part_price_index": QuerySpec(_part_price_index, PRICE_INDEX_SQL),
-    "graph_modularity_nation": QuerySpec(
-        _graph_modularity_nation, MODULARITY_SQL
-    ),
 }

@@ -1,6 +1,6 @@
 """Round-9 additions, thirteenth batch: factorial ANOVA, embedding
-triplet evaluation, intermittent-demand forecasting, rich-club graph
-structure, Markov entropy rate, and composite scorecards.
+triplet evaluation, intermittent-demand forecasting, Markov entropy
+rate, and composite scorecards.
 
 - ``lineitem_two_way_anova``: two-factor ANOVA with interaction
   (returnflag × linestatus on price cents) — SS decomposition from
@@ -22,12 +22,6 @@ structure, Markov entropy rate, and composite scorecards.
   required), demand rate z̄/ī. The supply-chain answer to forecasting
   a series that is 84% zeros (probed: 5 768 demand weeks of 71 400
   part-weeks) where a moving average is biased toward zero.
-- ``graph_rich_club``: bipartite rich-club coefficient — density of
-  edges among the top-20 customers × top-20 suppliers (by degree)
-  against the overall bipartite density. Ratio ≫ 1 means hubs trade
-  preferentially with hubs (the structural skew that breaks naive
-  partitioning); complements degree assortativity (round51)
-  which averages over ALL edges.
 - ``events_markov_entropy_rate``: entropy rate of the first-order
   event chain — H = Σ_s π_s · H(next|s) with π the observed state
   frequencies, plus predictability 1 − H/ln(k). The
@@ -53,9 +47,7 @@ from pyspark.sql import functions as F
 
 from trackdechets_etl_spark.io.readers import read_table
 from trackdechets_etl_spark.llm.similarity import cosine, cosine_sql
-from trackdechets_etl_spark.plans.fixtures import TRADE_PAIRS_SQL, trade_pairs
 from trackdechets_etl_spark.queries import QuerySpec
-from trackdechets_etl_spark.session import materialize
 
 # ------------------------------------------------- two-way ANOVA
 
@@ -382,84 +374,6 @@ LIMIT {_CROSTON_TOP}
 """
 
 
-# ------------------------------------------------------ rich club
-
-_RC_TOP = 20
-
-
-def _graph_rich_club(spark: SparkSession, sf_dir: str) -> DataFrame:
-    e = materialize(trade_pairs(spark, sf_dir))
-    topc = (
-        e.groupBy("cust")
-        .agg(F.count(F.lit(1)).alias("dg"))
-        .orderBy(F.desc("dg"), F.asc("cust"))
-        .limit(_RC_TOP)
-        .select("cust")
-    )
-    tops = (
-        e.groupBy("supp")
-        .agg(F.count(F.lit(1)).alias("dg"))
-        .orderBy(F.desc("dg"), F.asc("supp"))
-        .limit(_RC_TOP)
-        .select("supp")
-    )
-    hub_edges = e.join(F.broadcast(topc), "cust").join(
-        F.broadcast(tops), "supp"
-    )
-    tot = e.agg(
-        F.count(F.lit(1)).cast("long").alias("m"),
-        F.countDistinct("cust").cast("long").alias("nc"),
-        F.countDistinct("supp").cast("long").alias("ns"),
-    )
-    he = hub_edges.agg(
-        F.count(F.lit(1)).cast("long").alias("mh")
-    )
-    nca = topc.agg(F.count(F.lit(1)).cast("long").alias("kc"))
-    nsa = tops.agg(F.count(F.lit(1)).cast("long").alias("ks"))
-    j = (
-        tot.crossJoin(F.broadcast(he))
-        .crossJoin(F.broadcast(nca))
-        .crossJoin(F.broadcast(nsa))
-    )
-    hub_density = F.col("mh") / (F.col("kc") * F.col("ks"))
-    overall = F.col("m") / (F.col("nc") * F.col("ns"))
-    return j.select(
-        "m",
-        "mh",
-        F.col("kc").alias("n_hub_cust"),
-        F.col("ks").alias("n_hub_supp"),
-        F.round(hub_density, 6).alias("hub_density"),
-        F.round(overall, 6).alias("overall_density"),
-        F.round(hub_density / overall, 4).alias("rich_club_ratio"),
-    )
-
-
-RICH_CLUB_SQL = f"""
-WITH e AS ({TRADE_PAIRS_SQL}),
-topc AS (SELECT cust FROM (SELECT cust, count(*) dg FROM e GROUP BY cust)
-         ORDER BY dg DESC, cust LIMIT {_RC_TOP}),
-tops AS (SELECT supp FROM (SELECT supp, count(*) dg FROM e GROUP BY supp)
-         ORDER BY dg DESC, supp LIMIT {_RC_TOP}),
-tot AS (
-    SELECT CAST(count(*) AS BIGINT) AS m,
-           CAST(count(DISTINCT cust) AS BIGINT) AS nc,
-           CAST(count(DISTINCT supp) AS BIGINT) AS ns
-    FROM e),
-he AS (
-    SELECT CAST(count(*) AS BIGINT) AS mh
-    FROM e JOIN topc USING (cust) JOIN tops USING (supp)),
-kk AS (
-    SELECT CAST((SELECT count(*) FROM topc) AS BIGINT) AS kc,
-           CAST((SELECT count(*) FROM tops) AS BIGINT) AS ks)
-SELECT m, mh, kc AS n_hub_cust, ks AS n_hub_supp,
-       round(mh * 1.0 / (kc * ks), 6) AS hub_density,
-       round(m * 1.0 / (nc * ns), 6) AS overall_density,
-       round((mh * 1.0 / (kc * ks)) / (m * 1.0 / (nc * ns)), 4)
-           AS rich_club_ratio
-FROM tot, he, kk
-"""
-
-
 # ------------------------------------------- Markov entropy rate
 
 
@@ -670,7 +584,6 @@ QUERIES: dict[str, QuerySpec] = {
     "part_croston_intermittent": QuerySpec(
         _part_croston_intermittent, CROSTON_SQL
     ),
-    "graph_rich_club": QuerySpec(_graph_rich_club, RICH_CLUB_SQL),
     "events_markov_entropy_rate": QuerySpec(
         _events_markov_entropy_rate, MARKOV_ENTROPY_SQL
     ),

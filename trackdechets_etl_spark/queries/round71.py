@@ -1,6 +1,6 @@
 """Round-9 additions, sixteenth batch: class-balanced sampling,
-hubness diagnostics, parametric gap/price fits, regression
-discontinuity, and scale-free graph testing.
+hubness diagnostics, parametric gap/price fits and regression
+discontinuity.
 
 - ``sample_class_balanced``: class-balanced downsampling — every
   label capped at the smallest class size by deterministic md5 rank
@@ -30,11 +30,6 @@ discontinuity, and scale-free graph testing.
   micro-unit log moments (ln cents → integer micro-nats, decimal
   sums) — μ, σ, and the implied median/mean back in price units. The
   sanity check on every revenue model that assumes log-normality.
-- ``graph_degree_powerlaw``: scale-free test of the trade graph —
-  log-log OLS of the customer-degree CCDF over distinct degree values
-  (micro-unit integer OLS), α = 1 − slope and fit R². The measured
-  answer to "do hubs follow a power law" that rich-club and
-  assortativity only hint at.
 
 Reference provenance: none of these exist in the reference's 539-line
 pandas surface (dags/icpe-siretisation.py, dags/publish-open-data.py).
@@ -48,8 +43,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from trackdechets_etl_spark.io.readers import read_table
-from trackdechets_etl_spark.llm.similarity import cosine_sql, dot
-from trackdechets_etl_spark.plans.fixtures import TRADE_PAIRS_SQL, trade_pairs
+from trackdechets_etl_spark.llm.similarity import cosine_sql, dot, norm
 from trackdechets_etl_spark.queries import QuerySpec
 
 # ------------------------------------------- class-balanced sample
@@ -122,7 +116,7 @@ def _embedding_hubness_score(
     # A/B best-of-4 at sf0.1: 2.08 → 1.33 s.
     e = read_table(spark, sf_dir, "embeddings").select(
         "vec_id", F.col("embedding").cast("array<double>").alias("v")
-    ).withColumn("n", F.sqrt(dot(F.col("v"), F.col("v"))))
+    ).withColumn("n", norm(F.col("v")))
     q = e.filter(
         F.substring(F.md5(F.col("vec_id").cast("string")), 1, 1)
         < _HUB_QUERY_HEX
@@ -474,115 +468,6 @@ FROM f
 """
 
 
-# ---------------------------------------------- degree power law
-
-_PL_MICRO = 1_000_000
-
-
-def _graph_degree_powerlaw(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    deg = (
-        trade_pairs(spark, sf_dir)
-        .groupBy("cust")
-        .agg(F.count(F.lit(1)).cast("long").alias("dg"))
-    )
-    dist = deg.groupBy("dg").agg(
-        F.count(F.lit(1)).cast("long").alias("f")
-    )
-    tot = dist.agg(F.sum("f").cast("long").alias("nt"))
-    b = dist.select(
-        F.col("dg").alias("d2"), F.col("f").alias("f2")
-    )
-    ccdf = (
-        dist.join(F.broadcast(b), F.col("d2") >= F.col("dg"))
-        .groupBy("dg")
-        .agg(F.sum("f2").cast("long").alias("ge"))
-    )
-    xy = ccdf.crossJoin(F.broadcast(tot)).select(
-        F.round(F.log(F.col("dg").cast("double")) * _PL_MICRO)
-        .cast("long")
-        .alias("x"),
-        F.round(
-            F.log(F.col("ge") / F.col("nt")) * _PL_MICRO
-        )
-        .cast("long")
-        .alias("y"),
-    )
-    dec = lambda c: F.col(c).cast("decimal(38,0)")  # noqa: E731
-    m = xy.agg(
-        F.count(F.lit(1)).cast("long").alias("k"),
-        F.sum(dec("x")).alias("sx"),
-        F.sum(dec("y")).alias("sy"),
-        F.sum(dec("x") * dec("x")).alias("sxx"),
-        F.sum(dec("x") * dec("y")).alias("sxy"),
-        F.sum(dec("y") * dec("y")).alias("syy"),
-    )
-    d = lambda c: F.col(c).cast("double")  # noqa: E731
-    slope = (d("k") * d("sxy") - d("sx") * d("sy")) / (
-        d("k") * d("sxx") - d("sx") * d("sx")
-    )
-    r2 = (
-        (d("k") * d("sxy") - d("sx") * d("sy"))
-        * (d("k") * d("sxy") - d("sx") * d("sy"))
-        / (
-            (d("k") * d("sxx") - d("sx") * d("sx"))
-            * (d("k") * d("syy") - d("sy") * d("sy"))
-        )
-    )
-    return m.select(
-        F.col("k").alias("n_degree_values"),
-        F.round(slope, 6).alias("ccdf_slope"),
-        F.round(1.0 - slope, 6).alias("alpha"),
-        F.round(r2, 6).alias("r2"),
-    )
-
-
-POWERLAW_SQL = f"""
-WITH trade_pairs AS ({TRADE_PAIRS_SQL}),
-deg AS (SELECT cust, CAST(count(*) AS BIGINT) AS dg
-        FROM trade_pairs GROUP BY cust),
-dist AS (SELECT dg, CAST(count(*) AS BIGINT) AS f
-         FROM deg GROUP BY dg),
-tot AS (SELECT CAST(sum(f) AS BIGINT) AS nt FROM dist),
-ccdf AS (
-    SELECT a.dg, CAST(sum(b.f) AS BIGINT) AS ge
-    FROM dist a JOIN dist b ON b.dg >= a.dg
-    GROUP BY a.dg),
-xy AS (
-    SELECT CAST(round(ln(CAST(dg AS DOUBLE)) * {_PL_MICRO}, 0)
-                AS BIGINT) AS x,
-           CAST(round(ln(ge * 1.0 / nt) * {_PL_MICRO}, 0) AS BIGINT)
-               AS y
-    FROM ccdf, tot),
-m AS (
-    SELECT CAST(count(*) AS BIGINT) AS k,
-           sum(x) AS sx, sum(y) AS sy,
-           sum(x * x) AS sxx, sum(x * y) AS sxy, sum(y * y) AS syy
-    FROM xy),
-f AS (
-    SELECT k,
-           (CAST(k AS DOUBLE) * CAST(sxy AS DOUBLE)
-            - CAST(sx AS DOUBLE) * CAST(sy AS DOUBLE))
-           / (CAST(k AS DOUBLE) * CAST(sxx AS DOUBLE)
-              - CAST(sx AS DOUBLE) * CAST(sx AS DOUBLE)) AS slope,
-           (CAST(k AS DOUBLE) * CAST(sxy AS DOUBLE)
-            - CAST(sx AS DOUBLE) * CAST(sy AS DOUBLE))
-           * (CAST(k AS DOUBLE) * CAST(sxy AS DOUBLE)
-              - CAST(sx AS DOUBLE) * CAST(sy AS DOUBLE))
-           / ((CAST(k AS DOUBLE) * CAST(sxx AS DOUBLE)
-               - CAST(sx AS DOUBLE) * CAST(sx AS DOUBLE))
-              * (CAST(k AS DOUBLE) * CAST(syy AS DOUBLE)
-                 - CAST(sy AS DOUBLE) * CAST(sy AS DOUBLE))) AS r2
-    FROM m)
-SELECT k AS n_degree_values,
-       round(slope, 6) AS ccdf_slope,
-       round(1.0 - slope, 6) AS alpha,
-       round(r2, 6) AS r2
-FROM f
-"""
-
-
 QUERIES: dict[str, QuerySpec] = {
     "sample_class_balanced": QuerySpec(
         _sample_class_balanced, CLASS_BALANCED_SQL
@@ -598,8 +483,5 @@ QUERIES: dict[str, QuerySpec] = {
     ),
     "orders_lognormal_fit": QuerySpec(
         _orders_lognormal_fit, LOGNORMAL_SQL
-    ),
-    "graph_degree_powerlaw": QuerySpec(
-        _graph_degree_powerlaw, POWERLAW_SQL
     ),
 }

@@ -1,4 +1,4 @@
-"""Round-5 additions, fourth batch: marketing/graph/linkage analytics
+"""Round-5 additions, fourth batch: marketing/linkage analytics
 and a semantic-dedup training op.
 
 - ``events_attribution``: multi-touch attribution (first-touch,
@@ -6,10 +6,6 @@ and a semantic-dedup training op.
   a 7-day lookback. Linear credit is distributed in integer
   micro-credits (``1e6 div n``) so every sum is BIGINT-exact in both
   engines — no float accumulation-order hazard.
-- ``graph_khop_reach``: 3-hop BFS minimum-distance labels from seed
-  customers over the symmetrized customer↔supplier trade graph (same
-  edge set as ``graph_pagerank``). Spark runs frontier rounds with a
-  visited-set anti-join; the oracle unrolls the same rounds as CTEs.
 - ``linkage_blocking_score``: probabilistic record linkage
   (Fellegi–Sunter shape): block on nation, score field agreements
   (name id-suffix, account-balance proximity) with integer
@@ -41,13 +37,7 @@ from pyspark.sql import functions as F
 
 from trackdechets_etl_spark.io.readers import read_table
 from trackdechets_etl_spark.llm.similarity import cosine_sql
-from trackdechets_etl_spark.plans.fixtures import (
-    TRADE_EDGES_SQL,
-    TRADE_PAIRS_SQL,
-    trade_edges,
-)
 from trackdechets_etl_spark.queries import QuerySpec
-from trackdechets_etl_spark.session import materialize
 
 # ------------------------------------------------- multi-touch attribution
 
@@ -140,76 +130,6 @@ FROM scored
 GROUP BY channel
 ORDER BY channel
 """
-
-
-# ---------------------------------------------------- k-hop reachability
-
-_KH_K = 3
-_KH_SEED_MAX = 5  # seeds: customers with c_custkey < 5
-
-
-def _graph_khop_reach(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Minimum hop distance (0..3) from seed customers over the
-    symmetrized customer↔supplier trade graph
-    (``plans.fixtures.trade_edges``). Classic frontier BFS:
-    each round joins the frontier to the edge list and anti-joins the
-    visited set, so a node's label is its FIRST (minimum) hop count.
-    The edge frame is checkpointed once and reused by all rounds; at
-    100 TB each round is one shuffle keyed by node id and the frontier
-    shrinks monotonically — the anti-join keeps re-expansion of
-    already-settled nodes off the wire entirely."""
-    # one materialization, K join legs
-    edges = materialize(trade_edges(spark, sf_dir), eager=False)
-    c = read_table(spark, sf_dir, "customer")
-    dist = c.filter(F.col("c_custkey") < _KH_SEED_MAX).select(
-        F.col("c_custkey").alias("node"), F.lit(0).alias("dist")
-    )
-    frontier = dist.select("node")
-    for k in range(1, _KH_K + 1):
-        nxt = (
-            frontier.join(edges, frontier.node == edges.src)
-            .select("dst")
-            .distinct()
-            .withColumnRenamed("dst", "node")
-            .join(dist, "node", "left_anti")
-        )
-        dist = dist.unionByName(nxt.withColumn("dist", F.lit(k)))
-        frontier = nxt
-    return dist.orderBy("dist", "node")
-
-
-def _khop_oracle() -> str:
-    rounds = []
-    prev_all = "d0"
-    for k in range(1, _KH_K + 1):
-        rounds.append(
-            f"f{k} AS (SELECT DISTINCT e.dst AS node FROM edges e "
-            f"JOIN d{k - 1} ON e.src = d{k - 1}.node),\n"
-            f"d{k} AS (SELECT node, {k} AS dist FROM f{k} "
-            f"WHERE node NOT IN (SELECT node FROM {prev_all}))"
-        )
-        prev_all = (
-            "("
-            + " UNION ALL ".join(
-                f"SELECT node FROM d{i}" for i in range(k + 1)
-            )
-            + f") p{k}"
-        )
-    chain = ",\n".join(rounds)
-    union = " UNION ALL ".join(
-        f"SELECT * FROM d{i}" for i in range(_KH_K + 1)
-    )
-    return f"""
-WITH trade_pairs AS ({TRADE_PAIRS_SQL}),
-edges AS ({TRADE_EDGES_SQL}),
-d0 AS (SELECT c_custkey AS node, 0 AS dist FROM customer
-       WHERE c_custkey < {_KH_SEED_MAX}),
-{chain}
-SELECT node, dist FROM ({union}) t ORDER BY dist, node
-"""
-
-
-GRAPH_KHOP_SQL = _khop_oracle()
 
 
 # ----------------------------------------------- record linkage scoring
@@ -553,7 +473,6 @@ QUERIES: dict[str, QuerySpec] = {
     "events_attribution": QuerySpec(
         _events_attribution, EVENTS_ATTRIBUTION_SQL
     ),
-    "graph_khop_reach": QuerySpec(_graph_khop_reach, GRAPH_KHOP_SQL),
     "linkage_blocking_score": QuerySpec(
         _linkage_blocking_score, LINKAGE_SCORE_SQL
     ),

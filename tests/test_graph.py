@@ -134,20 +134,6 @@ def test_trade_edges_symmetric_and_disjoint(spark):
     assert max(customers) < OFF <= min(suppliers)
 
 
-def test_graph_queries_live_in_graph_module():
-    """Every ``graph_*`` registry query is defined in ``queries/graph.py``,
-    the family's one home."""
-    from trackdechets_etl_spark.queries import all_queries
-
-    elsewhere = {
-        name: spec.fn.__module__
-        for name, spec in all_queries().items()
-        if name.startswith("graph_")
-        and spec.fn.__module__ != "trackdechets_etl_spark.queries.graph"
-    }
-    assert not elsewhere, f"graph queries outside queries/graph.py: {elsewhere}"
-
-
 def _copurchase_replay(spark) -> set[tuple[int, int]]:
     """Driver-side replay of the co-purchase edges: ``(u, v)`` with
     ``u < v`` for every part pair that co-occurs in at least two orders."""

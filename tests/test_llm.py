@@ -20,7 +20,6 @@ from trackdechets_etl_spark.llm.multimodal import (
     with_payload,
 )
 from trackdechets_etl_spark.llm.similarity import (
-    cosine,
     near_dup_pairs,
     topk_bruteforce,
 )

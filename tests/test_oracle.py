@@ -15,7 +15,7 @@ import pytest
 
 from perfbench.workloads import WORKLOADS
 from trackdechets_etl_spark.canon import canon
-from trackdechets_etl_spark.queries import all_queries, graph
+from trackdechets_etl_spark.queries import all_queries, graph, sim
 from tests.conftest import SF_DIR
 
 REGISTRY = all_queries()
@@ -23,7 +23,9 @@ REGISTRY = all_queries()
 # The default shard checks every query a perfbench workload runs (the
 # five reference pipelines and the 22 headline queries), every query of
 # queries/graph.py (the plans.fixtures trade graph, the co-purchase
-# triangles and the iterative loops, heavy users of session.materialize),
+# triangles and the iterative loops, heavy users of session.materialize)
+# and of queries/sim.py (every consumer of the llm/similarity and llm/pq
+# searches and their SQL twins),
 # one consumer of each shared SQL/Column helper
 # (the llm/similarity cosine, norm and LSH-bucket SQL, md5 hex to int
 # SQL, array dot product) and
@@ -39,6 +41,7 @@ REGISTRY = all_queries()
 # sweep is marked slow (see pytest.ini) and runs with -m "slow or not slow".
 _DEFAULT_SHARD = {name for work in WORKLOADS.values() for name, _ in work} | {
     *graph.QUERIES,
+    *sim.QUERIES,
     "dedup_embedding_cosine",
     "sample_weighted_reservoir",
     "ml_kmeans_lite",
@@ -55,25 +58,13 @@ _DEFAULT_SHARD = {name for work in WORKLOADS.values() for name, _ in work} | {
     "dedup_clusters",
     "orders_conformal_interval",
     "text_topk_rbo_eras",
-    "sim_ivfpq_topk",
-    "sim_pq_recall",
-    "sim_lsh_recall",
-    "sim_ndcg_eval",
-    "sim_knn_classify",
-    "sim_matryoshka_recall",
     "text_tfidf_topk",
     "text_bm25_topk",
     "text_lmir_topk",
-    "sim_maxsim",
-    "sim_map_eval",
-    "sim_mrr_eval",
-    "sim_recall_curve_nplanes",
     "embedding_label_noise_knn",
     "embedding_label_noise_recall",
     "embedding_mmr_select",
-    "sim_rrf_hybrid",
     "events_late_arrivals",
-    "sim_silhouette_lsh",
     "embedding_bucket_label_eval",
     "embedding_centroid_drift",
     "dedup_semantic_prune",

@@ -586,6 +586,44 @@ def _package_hits(pattern: str, *homes: str) -> list[str]:
     ]
 
 
+def test_no_unused_imports():
+    """Every name a module-level import binds in the package, its tests
+    and scripts is used in that module (or listed in its ``__all__``),
+    so a move that orphans an import cannot leave it behind."""
+    import ast
+    from pathlib import Path
+
+    root = Path(__file__).resolve().parents[1]
+    unused = []
+    for path in sorted(
+        p
+        for d in ("trackdechets_etl_spark", "tests", "scripts")
+        for p in (root / d).rglob("*.py")
+    ):
+        tree = ast.parse(path.read_text())
+        bound = {
+            (a.asname or a.name).split(".")[0]: node.lineno
+            for node in tree.body
+            if isinstance(node, (ast.Import, ast.ImportFrom))
+            and getattr(node, "module", None) != "__future__"
+            for a in node.names
+        }
+        used = {n.id for n in ast.walk(tree) if isinstance(n, ast.Name)}
+        used |= {
+            elt.value
+            for node in tree.body
+            if isinstance(node, ast.Assign)
+            and any(getattr(t, "id", None) == "__all__" for t in node.targets)
+            for elt in node.value.elts
+        }
+        unused += [
+            f"{path.relative_to(root)}:{line} {name}"
+            for name, line in bound.items()
+            if name not in used
+        ]
+    assert not unused, f"unused imports: {unused}"
+
+
 def test_only_materialize_cuts_lineage():
     """Every lineage cut goes through ``session.materialize``, which
     picks a local or a reliable checkpoint from the master; a direct
@@ -646,6 +684,41 @@ def test_lsh_bucket_sql_has_one_home():
     with the same hyperplane literals."""
     hits = _package_hits(r"CASE\s+WHEN\s+list_dot_product\(", "llm/similarity.py")
     assert not hits, f"LSH bucket SQL outside llm/similarity.py: {hits}"
+
+
+def test_spark_cosine_has_one_home():
+    """The Spark cosine (a ``dot(...)`` divided by a product of norms) is
+    built by ``llm.similarity.cosine_from_norms`` only, so every pair
+    score folds its dot product and norms in one order, the order of its
+    DuckDB twin ``cosine_sql``."""
+    hits = _package_hits(
+        r"\bdot\((?:[^()]|\([^()]*\))*\)\s*/\s*\(", "llm/similarity.py"
+    )
+    assert not hits, f"Spark cosine outside llm/similarity.py: {hits}"
+
+
+def test_topk_sql_has_one_home():
+    """An oracle's cosine top-k (ranked by the cosine rounded to 9 dp,
+    then ``c_id``) comes from the ``llm/similarity`` SQL twins, which rank
+    through ``operators.ranking.top_k_per_group_sql``, so each search is
+    written once per engine. The one ranking a twin cannot serve is the
+    uncut LSH ranking of ``sim_mrr_eval`` (the exact neighbour may sit at
+    any rank)."""
+    import inspect
+
+    from trackdechets_etl_spark.queries import sim
+
+    lines, start = inspect.getsourcelines(sim._mrr_oracle)
+    leftover = {
+        f"trackdechets_etl_spark/queries/sim.py:{n}"
+        for n in range(start, start + len(lines))
+    }
+    hits = _package_hits(
+        r"round\((?:cos|\{cosine_sql\([^}]*\)\}), 9\) DESC,\s*c_id ASC",
+        "llm/similarity.py",
+    )
+    stray = [h for h in hits if h not in leftover]
+    assert not stray, f"cosine top-k SQL outside the llm/similarity twins: {stray}"
 
 
 def test_norm_has_one_home():

@@ -5,7 +5,6 @@ user activity streaks replayed in plain Python.
 from __future__ import annotations
 
 from collections import defaultdict
-from datetime import timedelta
 
 from tests.conftest import SF_DIR
 from trackdechets_etl_spark.queries import all_queries

@@ -22,7 +22,7 @@ def test_matryoshka_recall_bounds_and_self_consistency(spark):
     assert all(0.0 <= r.recall <= 1.0 for r in rows)
 
     from trackdechets_etl_spark.llm.similarity import topk_bruteforce
-    from trackdechets_etl_spark.queries.llm import TOPK_QUERY_IDS
+    from trackdechets_etl_spark.queries.sim import TOPK_QUERY_IDS
 
     e = read_table(spark, SF_DIR, "embeddings")
     full = topk_bruteforce(e, "vec_id", "embedding", TOPK_QUERY_IDS, k=5)

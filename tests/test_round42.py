@@ -1,4 +1,4 @@
-"""Invariant tests for round42: phrase search, NDCG, GDPR erasure,
+"""Invariant tests for round42: phrase search, GDPR erasure,
 referential integrity."""
 
 from __future__ import annotations
@@ -34,16 +34,6 @@ def test_phrase_search_matches_python_scan(spark):
                 want[(phrase, d.doc_id)] = n
     assert got == want
     assert want, "no phrase hits — weak fixture"
-
-
-def test_ndcg_bounded_and_perfect_when_bucket_exact(spark):
-    rows = _q("sim_ndcg_eval")(spark, SF_DIR).collect()
-    assert len(rows) >= 1
-    for r in rows:
-        assert 0.0 <= r.ndcg_at_5 <= 1.0 + 1e-9
-    # LSH can only lose or reorder relative to exact: if every probe
-    # had NDCG 0 the bucket join would be broken
-    assert any(r.ndcg_at_5 > 0 for r in rows)
 
 
 def test_gdpr_erasure_counts_consistent(spark):

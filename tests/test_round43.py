@@ -5,8 +5,6 @@ from __future__ import annotations
 
 import math
 
-from pyspark.sql import functions as F
-
 from trackdechets_etl_spark.io.readers import read_table
 from trackdechets_etl_spark.operators.merge import cdc_apply
 from trackdechets_etl_spark.queries import all_queries

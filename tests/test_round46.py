@@ -4,7 +4,6 @@ k-core peeling."""
 from __future__ import annotations
 
 import numpy as np
-from pyspark.sql import functions as F
 
 from trackdechets_etl_spark.io.readers import read_table
 from trackdechets_etl_spark.queries import all_queries

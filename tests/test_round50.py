@@ -3,7 +3,6 @@
 from __future__ import annotations
 
 import numpy as np
-from pyspark.sql import functions as F
 
 from trackdechets_etl_spark.io.readers import read_table
 from trackdechets_etl_spark.queries import all_queries

@@ -5,7 +5,7 @@ from __future__ import annotations
 
 import hashlib
 import math
-from collections import Counter, defaultdict
+from collections import Counter
 
 import pytest
 

@@ -11,9 +11,6 @@ import math
 
 from pyspark.sql import functions as F
 
-from trackdechets_etl_spark.operators.percentiles import (
-    exact_percentiles_value_counts,
-)
 from trackdechets_etl_spark.queries import all_queries
 from tests.conftest import write_corpus_table
 

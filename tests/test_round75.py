@@ -4,8 +4,6 @@ from __future__ import annotations
 
 import tempfile
 
-from pyspark.sql import functions as F
-
 from trackdechets_etl_spark.queries import all_queries
 from tests.conftest import write_corpus_table
 

@@ -1,7 +1,7 @@
 """Invariant tests for the round-14 additions (round78.py): Grubbs'
-test, Herfindahl index, Dice/overlap/Tversky pair metrics, MAP@5 /
-P@5 retrieval eval, Jonckheere-Terpstra DOW trend, Page's L,
-Atkinson index, LMIR-Dirichlet retrieval."""
+test, Herfindahl index, Dice/overlap/Tversky pair metrics,
+Jonckheere-Terpstra DOW trend, Page's L, Atkinson index,
+LMIR-Dirichlet retrieval."""
 
 from __future__ import annotations
 
@@ -116,45 +116,6 @@ def test_dice_relationships_hold_on_fixture(spark):
         assert 0.0 <= r.tversky <= 1.0 + 1e-9
         # Dice = 2I/(na+nb) recomputable from the emitted integers
         assert abs(r.dice - 2 * r.n_inter / (r.n_a + r.n_b)) < 1e-6
-
-
-# -------------------------------------------------- MAP@5 / P@5
-
-
-def test_map_eval_consistency(spark):
-    row = _q("sim_map_eval")(spark, SF_DIR).collect()[0]
-    assert row.n_queries == 10
-    assert 0 <= row.sum_hits_at_5 <= 5 * row.n_queries
-    assert 0 <= row.sum_ap_scaled <= 300 * row.n_queries
-    assert abs(row.map_at_5 - row.sum_ap_scaled / 3000.0) < 1e-6
-    assert abs(row.p_at_5 - row.sum_hits_at_5 / 50.0) < 1e-6
-    # AP@5 ≤ P@5 can fail (AP front-weights), but both are ≤ 1 and
-    # MAP = 1 ⇔ every ranked prefix is all-relevant
-    assert row.map_at_5 <= 1.0 and row.p_at_5 <= 1.0
-
-
-def test_map_perfect_when_lsh_equals_exact(spark):
-    """MAP@5 must be 1.0 when the LSH ranking's top-5 IS the exact
-    top-5 — run both on a tiny corpus where every vector lands in one
-    bucket (identical vectors direction-wise ⇒ same hyperplane side
-    signs)."""
-    import random
-
-    rng = random.Random(7)
-    base = [rng.uniform(-1, 1) for _ in range(64)]
-    rows = []
-    for i in range(12):
-        # same direction + tiny parallel scaling: one shared bucket,
-        # stable exact ranking by id tiebreak (all cosines equal 1)
-        rows.append((i, [x * (1.0 + 0.01 * i) for x in base], 1))
-    df = spark.createDataFrame(
-        rows, "vec_id long, embedding array<double>, label int"
-    )
-    with tempfile.TemporaryDirectory() as td:
-        write_corpus_table(df.coalesce(1), td, "embeddings")
-        row = _q("sim_map_eval")(spark, td).collect()[0]
-    assert row.n_queries == 10
-    assert row.map_at_5 == 1.0 and row.p_at_5 == 1.0
 
 
 # -------------------------------------- Jonckheere-Terpstra DOW

@@ -30,7 +30,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from trackdechets_etl_spark.llm.similarity import as_double, ivf_route
-from trackdechets_etl_spark.operators.ranking import top_k_per_group
+from trackdechets_etl_spark.operators.ranking import top_k_per_group, top_k_per_group_sql
 from trackdechets_etl_spark.session import materialize
 
 # Parameters picked by a measured sweep on the test corpus (numpy
@@ -265,3 +265,65 @@ def ivfpq_topk(
         )
     )
     return _adc_cut(adc.join(F.broadcast(qnorm), "q_id"), k)
+
+
+# DuckDB twins of the stages above, as CTE texts for the oracles. They
+# read a CTE named ``base`` (vec_id, v DOUBLE[]) and each other's CTEs.
+
+# explode_subspaces (``e``), train_codebook (seeds ``c0``, one Lloyd
+# step, codebook ``c1``) and pq_encode (``codes``).
+CODES_SQL = f"""e AS (
+    SELECT vec_id AS vid, CAST(i AS INT) AS i,
+           CAST((i - 1) // {DSUB} AS INT) AS m, v[i] AS val
+    FROM base, unnest(generate_series(1, {M * DSUB})) AS u(i)),
+c0 AS (
+    SELECT CAST(vid // {SEED_STRIDE} AS INT) AS code, m, i, val AS cval
+    FROM e WHERE vid % {SEED_STRIDE} = 0 AND vid < {SEED_STRIDE * K}),
+d0 AS (
+    SELECT e.vid, e.m, c0.code,
+           sum((e.val - c0.cval) * (e.val - c0.cval)) AS dist
+    FROM e JOIN c0 ON e.m = c0.m AND e.i = c0.i GROUP BY 1, 2, 3),
+a0 AS (
+    SELECT vid, m, code FROM (
+        SELECT *, row_number() OVER (
+            PARTITION BY vid, m ORDER BY round(dist, 9), code) AS rn
+        FROM d0) WHERE rn = 1),
+c1 AS (
+    SELECT a0.m, a0.code, e.i, avg(e.val) AS cval
+    FROM e JOIN a0 ON e.vid = a0.vid AND e.m = a0.m GROUP BY 1, 2, 3),
+d1 AS (
+    SELECT e.vid, e.m, c1.code,
+           sum((e.val - c1.cval) * (e.val - c1.cval)) AS dist
+    FROM e JOIN c1 ON e.m = c1.m AND e.i = c1.i GROUP BY 1, 2, 3),
+codes AS (
+    SELECT vid, m, code FROM (
+        SELECT *, row_number() OVER (
+            PARTITION BY vid, m ORDER BY round(dist, 9), code) AS rn
+        FROM d1) WHERE rn = 1)"""
+
+
+def query_tables_sql(query_ids_max: int) -> str:
+    """Twin of :func:`_query_tables` after :data:`CODES_SQL`: the CTEs
+    ``partial``, ``cn2`` and ``qn`` (``qnorm``), plus ``cnorm``, every
+    code-built candidate norm."""
+    return f"""qe AS (SELECT vid AS q_id, m, i, val FROM e WHERE vid < {query_ids_max}),
+partial AS (
+    SELECT q_id, c1.m, c1.code, sum(qe.val * c1.cval) AS pdot
+    FROM qe JOIN c1 ON qe.m = c1.m AND qe.i = c1.i GROUP BY 1, 2, 3),
+cn2 AS (SELECT m, code, sum(cval * cval) AS n2 FROM c1 GROUP BY 1, 2),
+cnorm AS (
+    SELECT codes.vid AS c_id, sqrt(sum(n2)) AS cnorm
+    FROM codes JOIN cn2 USING (m, code) GROUP BY 1),
+qn AS (SELECT q_id, sqrt(sum(val * val)) AS qnorm FROM qe GROUP BY 1)"""
+
+
+def adc_cut_sql(adc: str, k: int) -> str:
+    """Twin of :func:`_adc_cut` after :func:`query_tables_sql`, over the
+    relation ``adc`` (``q_id``, ``c_id``, ``adot``): a SELECT of
+    ``q_id``, ``c_id``, ``rank`` and ``cos_approx``."""
+    scored = f"""(
+    SELECT q_id, c_id, adot / (qnorm * cnorm) AS cos
+    FROM {adc} JOIN cnorm USING (c_id) JOIN qn USING (q_id)
+    WHERE c_id <> q_id)"""
+    return f"""SELECT q_id, c_id, rank, round(cos, 6) AS cos_approx
+FROM ({top_k_per_group_sql(scored, 'q_id', 'cos', 'c_id', k)})"""

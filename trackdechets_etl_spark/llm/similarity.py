@@ -7,7 +7,9 @@
   norms once per row of each side and calls ``cosine_from_norms``.
 - ``norm_sql``, ``cosine_sql`` and ``bucket_sql``: the DuckDB twins of
   ``norm``, ``cosine`` and ``bucket_expr`` that the oracles embed, so
-  each formula is written once per engine.
+  each formula is written once per engine. ``topk_bruteforce_sql``,
+  ``lsh_bucket_topk_sql``, ``ivf_topk_sql``, ``ivf_route_sql`` and
+  ``label_centroids_sql`` do the same for the searches below.
 
 Every top-k search is one operator: generate candidates, score them,
 cut to the top k. ``_cosine_topk`` is the scoring-and-cut kernel they
@@ -39,7 +41,11 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from trackdechets_etl_spark.operators.ranking import score_order, top_k_per_group
+from trackdechets_etl_spark.operators.ranking import (
+    score_order,
+    top_k_per_group,
+    top_k_per_group_sql,
+)
 
 N_PLANES = 4
 
@@ -111,6 +117,94 @@ def bucket_sql(v: str, dims: int, n_planes: int = N_PLANES) -> str:
             f"(CASE WHEN list_dot_product({v}, [{w}]) > 0 THEN {2 ** p} ELSE 0 END)"
         )
     return f"CAST({' + '.join(terms)} AS INT)"
+
+
+def _side_sql(
+    emb: str,
+    id_col: str,
+    vec_col: str,
+    side: str,
+    *keys: str,
+    query_ids_max: int | None = None,
+) -> str:
+    """DuckDB twin of :func:`_side` (``cosine_sql`` takes its own norms):
+    ``{side}_id``, ``{side}_vec`` and the ``keys`` of ``emb``, whose
+    ``vec_col`` is a ``DOUBLE[]`` expression; only the ids below
+    ``query_ids_max`` when it is given."""
+    cols = ", ".join([f"{id_col} AS {side}_id", f"{vec_col} AS {side}_vec", *keys])
+    where = "" if query_ids_max is None else f" WHERE {id_col} < {query_ids_max}"
+    return f"(SELECT {cols} FROM {emb}{where})"
+
+
+def _cosine_topk_sql(q: str, c: str, on: str | None, k: int) -> str:
+    """DuckDB twin of :func:`_cosine_topk` over the ``_side_sql``
+    relations ``q`` and ``c``: a SELECT of ``q_id``, ``c_id``, ``rank``
+    and ``cos_sim``."""
+    pairs = f"{q}, {c}" if on is None else f"{q} JOIN {c} USING ({on})"
+    scored = f"""(
+    SELECT q_id, c_id, {cosine_sql('q_vec', 'c_vec')} AS cos
+    FROM {pairs} WHERE q_id <> c_id)"""
+    return f"""SELECT q_id, c_id, rank, round(cos, 6) AS cos_sim
+FROM ({top_k_per_group_sql(scored, 'q_id', 'cos', 'c_id', k)})"""
+
+
+def topk_bruteforce_sql(
+    emb: str, id_col: str, vec_col: str, query_ids_max: int, k: int = 5
+) -> str:
+    """DuckDB twin of :func:`topk_bruteforce` over the relation ``emb``,
+    whose ``vec_col`` is a ``DOUBLE[]`` expression."""
+    q = _side_sql(emb, id_col, vec_col, "q", query_ids_max=query_ids_max)
+    return _cosine_topk_sql(q, _side_sql(emb, id_col, vec_col, "c"), None, k)
+
+
+def lsh_bucket_topk_sql(
+    emb: str, id_col: str, vec_col: str, dims: int, query_ids_max: int, k: int = 5
+) -> str:
+    """DuckDB twin of :func:`lsh_bucket_topk` over the relation ``emb``,
+    whose ``vec_col`` is a ``DOUBLE[]`` expression."""
+    bucketed = f"(SELECT *, {bucket_sql(vec_col, dims)} AS bucket FROM {emb})"
+    q = _side_sql(bucketed, id_col, vec_col, "q", "bucket", query_ids_max=query_ids_max)
+    c = _side_sql(bucketed, id_col, vec_col, "c", "bucket")
+    return _cosine_topk_sql(q, c, "bucket", k)
+
+
+def label_centroids_sql(emb: str, vec_col: str, label_col: str, dims: int) -> str:
+    """DuckDB twin of :func:`label_centroids` at its default 4 dp: a
+    SELECT of ``label_col`` and ``centroid`` over the relation ``emb``,
+    whose ``vec_col`` is a ``DOUBLE[]`` expression of ``dims`` entries."""
+    return f"""SELECT {label_col}, list(a ORDER BY i) AS centroid FROM (
+    SELECT {label_col}, i, round(avg(({vec_col})[i]), 4) AS a
+    FROM {emb}, unnest(generate_series(1, {dims})) AS u(i)
+    GROUP BY {label_col}, i)
+GROUP BY {label_col}"""
+
+
+def ivf_route_sql(emb: str, vec_col: str, label_col: str, dims: int, q: str) -> str:
+    """DuckDB twin of :func:`ivf_route`: the rows of the relation ``q``
+    (``q_id``, ``q_vec``, …) plus the ``__list`` of their nearest
+    :func:`label_centroids_sql` centroid."""
+    routed = f"""(
+    SELECT q.*, {label_col} AS __list, {cosine_sql('q_vec', 'centroid')} AS __rcos
+    FROM {q} q, ({label_centroids_sql(emb, vec_col, label_col, dims)}))"""
+    return f"""SELECT * EXCLUDE (__rcos, __rn)
+FROM ({top_k_per_group_sql(routed, 'q_id', '__rcos', '__list', 1, '__rn')})"""
+
+
+def ivf_topk_sql(
+    emb: str,
+    id_col: str,
+    vec_col: str,
+    label_col: str,
+    dims: int,
+    query_ids_max: int,
+    k: int = 5,
+) -> str:
+    """DuckDB twin of :func:`ivf_topk` over the relation ``emb``, whose
+    ``vec_col`` is a ``DOUBLE[]`` expression of ``dims`` entries."""
+    q = _side_sql(emb, id_col, vec_col, "q", query_ids_max=query_ids_max)
+    c = _side_sql(emb, id_col, vec_col, "c", f"{label_col} AS __list")
+    routed = f"({ivf_route_sql(emb, vec_col, label_col, dims, q)})"
+    return _cosine_topk_sql(routed, c, "__list", k)
 
 
 def _side(

@@ -12,7 +12,8 @@ not by data — so its cumulative window is trivially small.
 
 ``score_order`` is the engine's one rule for ranking by a float score
 (rounded to 9 dp descending, then a tie column ascending), and
-``top_k_per_group`` the per-group top-k cut built on it.
+``top_k_per_group`` the per-group top-k cut built on it;
+``top_k_per_group_sql`` is that cut's DuckDB twin for the oracles.
 
 ``ntile_from_rank`` turns an exact global rank into the same bucket
 ntile() would assign, via the closed-form split (N rows, B buckets:
@@ -63,6 +64,19 @@ def top_k_per_group(
     return df.withColumn(rank_col, F.row_number().over(w)).filter(
         F.col(rank_col) <= k
     )
+
+
+def top_k_per_group_sql(
+    rel: str, by: str, score: str, tie: str, k: int, rank_col: str = "rank"
+) -> str:
+    """DuckDB twin of :func:`top_k_per_group` over the relation ``rel``
+    (a name or a parenthesized query): a SELECT of its rows ranked
+    1..``k`` within each ``by`` group, under the same rank key."""
+    return f"""SELECT * FROM (
+    SELECT *, row_number() OVER (
+        PARTITION BY {by} ORDER BY round({score}, 9) DESC, {tie} ASC) AS {rank_col}
+    FROM {rel})
+WHERE {rank_col} <= {k}"""
 
 
 def _range_partitioned(

@@ -1,7 +1,7 @@
 """Advanced relational extensions beyond the reference's §2 surface:
 temporal joins (as-of, range), explicit semi/anti split, exact
 quantiles, CUBE grouping, deterministic hash sampling, histogram
-binning, IVF similarity search, and n-gram frequency ranking.
+binning, and n-gram frequency ranking.
 
 The reference (MTES-MCT/trackdechets-etl) has none of these — its joins
 are single-key equi-joins (``dags/icpe-siretisation.py:175,243,285,311``)
@@ -16,7 +16,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from trackdechets_etl_spark.io.readers import read_table
-from trackdechets_etl_spark.llm.similarity import cosine_sql, ivf_topk, norm_sql
+from trackdechets_etl_spark.llm.similarity import norm_sql
 from trackdechets_etl_spark.operators.percentiles import (
     exact_percentiles_value_counts,
 )
@@ -278,47 +278,6 @@ SELECT CAST(floor(o_totalprice / {HIST_BIN_WIDTH}) AS BIGINT) AS bin,
        round(min(o_totalprice), 2) AS min_price,
        round(max(o_totalprice), 2) AS max_price
 FROM orders GROUP BY 1
-"""
-
-
-# ------------------------------------------------------------- IVF search
-
-IVF_QUERY_IDS = 10
-EMB_DIMS = 64
-
-
-def _sim_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
-    e = read_table(spark, sf_dir, "embeddings")
-    out = ivf_topk(e, "vec_id", "embedding", "label", IVF_QUERY_IDS, k=5)
-    return out.select(
-        "q_id", "c_id", F.col("rank").cast("long").alias("rank"), "cos_sim"
-    )
-
-
-SIM_IVF_SQL = f"""
-WITH e AS (SELECT vec_id, label, embedding::DOUBLE[] AS v FROM embeddings),
-per_dim AS (
-    SELECT label, i, round(avg(v[i]), 4) AS a
-    FROM e, unnest(generate_series(1, {EMB_DIMS})) AS u(i)
-    GROUP BY label, i),
-cent AS (SELECT label, list(a ORDER BY i) AS cvec FROM per_dim GROUP BY label),
-q AS (SELECT vec_id AS q_id, v AS qv FROM e WHERE vec_id < {IVF_QUERY_IDS}),
-routed AS (
-    SELECT q_id, qv, label, {cosine_sql('qv', 'cvec')} AS rcos FROM q, cent),
-assigned AS (
-    SELECT q_id, qv, label FROM (
-        SELECT *, row_number() OVER (
-            PARTITION BY q_id ORDER BY round(rcos, 9) DESC, label ASC) AS rn
-        FROM routed) WHERE rn = 1),
-scored AS (
-    SELECT a.q_id, c.vec_id AS c_id, {cosine_sql('a.qv', 'c.v')} AS cos
-    FROM assigned a JOIN e c ON c.label = a.label AND c.vec_id <> a.q_id),
-r AS (
-    SELECT *, row_number() OVER (
-        PARTITION BY q_id ORDER BY round(cos, 9) DESC, c_id ASC) AS rank
-    FROM scored)
-SELECT q_id, c_id, CAST(rank AS BIGINT) AS rank, round(cos, 6) AS cos_sim
-FROM r WHERE rank <= 5
 """
 
 
@@ -762,57 +721,6 @@ SELECT doc_id, lang, n_chars FROM r WHERE rn <= {STRATA_N}
 """
 
 
-# ------------------------------------------------------------- LSH recall
-
-
-def _sim_lsh_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """ANN evaluation harness: recall@5 of the LSH-bucketed top-k
-    against the exact brute force, per query — the metric that decides
-    whether an approximate index is shippable. Both sides are
-    deterministic, so even the EVALUATION is oracle-checked."""
-    from trackdechets_etl_spark.llm.similarity import lsh_bucket_topk, topk_bruteforce
-    from trackdechets_etl_spark.queries.llm import EMB_DIMS, TOPK_QUERY_IDS
-
-    e = read_table(spark, sf_dir, "embeddings")
-    exact = topk_bruteforce(e, "vec_id", "embedding", TOPK_QUERY_IDS, k=5).select(
-        "q_id", F.col("c_id").alias("exact_c")
-    )
-    approx = lsh_bucket_topk(
-        e, "vec_id", "embedding", EMB_DIMS, TOPK_QUERY_IDS, k=5
-    ).select("q_id", F.col("c_id").alias("approx_c"))
-    hits = exact.join(
-        approx,
-        (exact.q_id == approx.q_id) & (exact.exact_c == approx.approx_c),
-    ).groupBy(exact.q_id).agg(F.count("*").alias("n_hits"))
-    return (
-        exact.groupBy("q_id")
-        .agg(F.count("*").alias("k"))
-        .join(hits, "q_id", "left")
-        .select(
-            "q_id",
-            F.round(
-                F.coalesce(F.col("n_hits"), F.lit(0)) / F.col("k"), 4
-            ).alias("recall_at_5"),
-        )
-    )
-
-
-def _sim_lsh_recall_sql() -> str:
-    from trackdechets_etl_spark.queries.llm import SIM_LSH_TOPK_SQL, SIM_TOPK_SQL
-
-    return f"""
-WITH exact_r AS ({SIM_TOPK_SQL}),
-approx_r AS ({SIM_LSH_TOPK_SQL}),
-hits AS (
-    SELECT e.q_id, CAST(count(*) AS BIGINT) AS n_hits
-    FROM exact_r e JOIN approx_r a ON e.q_id = a.q_id AND e.c_id = a.c_id
-    GROUP BY 1),
-ks AS (SELECT q_id, CAST(count(*) AS BIGINT) AS k FROM exact_r GROUP BY 1)
-SELECT ks.q_id, round(coalesce(hits.n_hits, 0) / ks.k, 4) AS recall_at_5
-FROM ks LEFT JOIN hits USING (q_id)
-"""
-
-
 # ------------------------------------------------- incremental aggregation
 
 INCR_CUTOFF = "1998-01-01"
@@ -1042,7 +950,6 @@ QUERIES: dict[str, QuerySpec] = {
         _embedding_array_stats, EMBEDDING_ARRAY_STATS_SQL
     ),
     "multimodal_decode": QuerySpec(_multimodal_decode, MULTIMODAL_DECODE_SQL),
-    "sim_lsh_recall": QuerySpec(_sim_lsh_recall, _sim_lsh_recall_sql()),
     "incremental_agg": QuerySpec(_incremental_agg, INCREMENTAL_AGG_SQL),
     "merge_upsert": QuerySpec(_merge_upsert, MERGE_UPSERT_SQL),
     "events_gap_fill": QuerySpec(_events_gap_fill, EVENTS_GAP_FILL_SQL),
@@ -1064,6 +971,5 @@ QUERIES: dict[str, QuerySpec] = {
     "agg_cube": QuerySpec(_agg_cube, AGG_CUBE_SQL),
     "sample_hash_deterministic": QuerySpec(_sample_hash, SAMPLE_HASH_SQL),
     "agg_histogram": QuerySpec(_agg_histogram, AGG_HISTOGRAM_SQL),
-    "sim_ivf_topk": QuerySpec(_sim_ivf, SIM_IVF_SQL),
     "text_top_bigrams": QuerySpec(_text_top_bigrams, TEXT_TOP_BIGRAMS_SQL),
 }

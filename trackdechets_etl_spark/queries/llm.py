@@ -1,7 +1,8 @@
-"""LLM-pipeline queries (dedup / similarity / text / multimodal) with
-DuckDB oracles. Every fuzzy operator (MinHash, SimHash, LSH) is built
-from deterministic md5-derived hashing so the oracle can implement the
-exact same algorithm in SQL — the checks are exact, not statistical.
+"""LLM-pipeline queries (dedup / embeddings / text / multimodal) with
+DuckDB oracles; the vector searches are in ``queries/sim.py``. Every
+fuzzy operator (MinHash, SimHash, LSH) is built from deterministic
+md5-derived hashing so the oracle can implement the exact same
+algorithm in SQL — the checks are exact, not statistical.
 """
 
 from __future__ import annotations
@@ -27,17 +28,14 @@ from trackdechets_etl_spark.llm.similarity import (
     as_double,
     bucket_sql,
     cosine_sql,
-    lsh_bucket_topk,
     near_dup_pairs,
     near_dup_pairs_bucketed,
     norm,
     norm_sql,
-    topk_bruteforce,
 )
 from trackdechets_etl_spark.queries import QuerySpec
 
 EMB_DIMS = 64
-TOPK_QUERY_IDS = 10
 NEAR_DUP_THRESHOLD = 0.4
 NEAR_DUP_SAMPLE_MOD = 50
 JACCARD_THRESHOLD = 0.8
@@ -345,49 +343,7 @@ SELECT id_a, id_b, cos_sim FROM p WHERE cos_sim >= {NEAR_DUP_THRESHOLD}
 """
 
 
-# ------------------------------------------------------------- similarity ops
-
-
-def _sim_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    e = read_table(spark, sf_dir, "embeddings")
-    out = topk_bruteforce(e, "vec_id", "embedding", TOPK_QUERY_IDS, k=5)
-    return out.select("q_id", "c_id", F.col("rank").cast("long").alias("rank"), "cos_sim")
-
-
-SIM_TOPK_SQL = f"""
-WITH {_EMB},
-q AS (SELECT vec_id AS q_id, v AS qv FROM e WHERE vec_id < {TOPK_QUERY_IDS}),
-scored AS (
-    SELECT q_id, c.vec_id AS c_id, {cosine_sql('qv', 'c.v')} AS cos
-    FROM q, e c WHERE c.vec_id <> q_id),
-r AS (
-    SELECT *, row_number() OVER (
-        PARTITION BY q_id ORDER BY round(cos, 9) DESC, c_id ASC) AS rank
-    FROM scored)
-SELECT q_id, c_id, CAST(rank AS BIGINT) AS rank, round(cos, 6) AS cos_sim
-FROM r WHERE rank <= 5
-"""
-
-
-def _sim_lsh_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    e = read_table(spark, sf_dir, "embeddings")
-    out = lsh_bucket_topk(e, "vec_id", "embedding", EMB_DIMS, TOPK_QUERY_IDS, k=5)
-    return out.select("q_id", "c_id", F.col("rank").cast("long").alias("rank"), "cos_sim")
-
-SIM_LSH_TOPK_SQL = f"""
-WITH {_EMB},
-bk AS (SELECT vec_id, v, {bucket_sql('v', EMB_DIMS)} AS bucket FROM e),
-q AS (SELECT vec_id AS q_id, v AS qv, bucket FROM bk WHERE vec_id < {TOPK_QUERY_IDS}),
-scored AS (
-    SELECT q_id, c.vec_id AS c_id, {cosine_sql('qv', 'c.v')} AS cos
-    FROM q JOIN bk c USING (bucket) WHERE c.vec_id <> q_id),
-r AS (
-    SELECT *, row_number() OVER (
-        PARTITION BY q_id ORDER BY round(cos, 9) DESC, c_id ASC) AS rank
-    FROM scored)
-SELECT q_id, c_id, CAST(rank AS BIGINT) AS rank, round(cos, 6) AS cos_sim
-FROM r WHERE rank <= 5
-"""
+# -------------------------------------------------------------- embedding ops
 
 
 def _emb_normalize(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -569,8 +525,6 @@ QUERIES: dict[str, QuerySpec] = {
     "dedup_embedding_cosine_exact": QuerySpec(
         _dedup_embedding_cosine_exact, DEDUP_EMB_COSINE_EXACT_SQL
     ),
-    "sim_topk_bruteforce": QuerySpec(_sim_topk, SIM_TOPK_SQL),
-    "sim_lsh_bucket_topk": QuerySpec(_sim_lsh_topk, SIM_LSH_TOPK_SQL),
     "multimodal_meta": QuerySpec(_mm_meta, MM_META_SQL),
     "embedding_normalize": QuerySpec(_emb_normalize, EMB_NORMALIZE_SQL),
     "embedding_label_centroids": QuerySpec(_label_centroids, LABEL_CENTROIDS_SQL),

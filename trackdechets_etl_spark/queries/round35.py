@@ -119,7 +119,11 @@ def _embedding_centroid_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     4dp-rounded centroid; per label the cosine between halves. The
     exploded frame shuffles once on (label, half, pos); output is
     labels-sized."""
-    from trackdechets_etl_spark.llm.similarity import as_double, cosine
+    from trackdechets_etl_spark.llm.similarity import (
+        as_double,
+        cosine_from_norms,
+        norm,
+    )
 
     e = read_table(spark, sf_dir, "embeddings").select(
         "vec_id", "label", as_double(F.col("embedding")).alias("v")
@@ -140,8 +144,13 @@ def _embedding_centroid_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("c")
         )
     )
-    a = cent.filter(F.col("half") == 0).select("label", F.col("c").alias("ca"))
-    b = cent.filter(F.col("half") == 1).select("label", F.col("c").alias("cb"))
+    cent = cent.withColumn("n", norm(F.col("c")))
+    a = cent.filter(F.col("half") == 0).select(
+        "label", F.col("c").alias("ca"), F.col("n").alias("na")
+    )
+    b = cent.filter(F.col("half") == 1).select(
+        "label", F.col("c").alias("cb"), F.col("n").alias("nb")
+    )
     counts = e.groupBy("label").agg(
         F.sum(F.when(F.col("vec_id") % 2 == 0, 1).otherwise(0))
         .cast("long")
@@ -157,7 +166,10 @@ def _embedding_centroid_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("label").cast("long").alias("label"),
             "n_a",
             "n_b",
-            F.round(cosine(F.col("ca"), F.col("cb")), 6).alias("cos_halves"),
+            F.round(
+                cosine_from_norms(F.col("ca"), F.col("cb"), F.col("na"), F.col("nb")),
+                6,
+            ).alias("cos_halves"),
         )
         .orderBy("label")
     )

@@ -1,5 +1,5 @@
-"""Round-7 additions, fourth batch: positional phrase search, NDCG
-ranking quality, GDPR erasure propagation, referential-integrity audit.
+"""Round-7 additions, fourth batch: positional phrase search, GDPR
+erasure propagation, referential-integrity audit.
 
 - ``text_phrase_search``: exact phrase matching via POSITIONAL posting
   lists — the IR operator BM25/TF-IDF can't express (bag-of-words
@@ -7,12 +7,6 @@ ranking quality, GDPR erasure propagation, referential-integrity audit.
   scan; subsequent terms join on (doc, position+offset). Only the
   query terms' postings are touched (the inverted-index contract);
   phrase hit counts per document, ranked.
-- ``sim_ndcg_eval``: NDCG@5 of the hyperplane-LSH ANN ranking against
-  exact cosine ranking, per probe query — the ranking-quality metric
-  recall@k misses (recall treats rank 1 and rank 5 alike). Graded
-  relevance = 6 - exact_rank; discount factors 1/log2(i+1) are
-  PRECOMPUTED literals embedded in both engines, so no libm log enters
-  the comparison.
 - ``pipeline_gdpr_erasure``: right-to-be-forgotten sweep — a
   deterministic md5-sampled user erasure set, anti-join survival
   counts and purged-row counts per affected table, one audit row per
@@ -28,7 +22,7 @@ Invariant tests in tests/test_round42.py.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from trackdechets_etl_spark.io.readers import read_table
@@ -98,88 +92,6 @@ WITH post AS (
          unnest(generate_series(1, len(w))) AS u(i)
     WHERE w[i] != '')
 SELECT phrase, doc_id, n_hits FROM ({body}) ORDER BY phrase, doc_id
-"""
-
-
-# ------------------------------------------------ NDCG eval
-
-_NDCG_K = 5
-_NDCG_QUERIES = 10
-# 1/log2(i+1) for i = 1..5, precomputed so neither engine's libm log
-# participates in the hash-checked math.
-_DISCOUNTS = [1.0, 0.630929754, 0.5, 0.430676558, 0.386852807]
-_IDEAL_DCG = sum((_NDCG_K + 1 - (i + 1)) * d for i, d in enumerate(_DISCOUNTS))
-
-
-def _sim_ndcg_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from trackdechets_etl_spark.llm.similarity import (
-        lsh_bucket_topk,
-        topk_bruteforce,
-    )
-    from trackdechets_etl_spark.queries.llm import EMB_DIMS
-
-    e = read_table(spark, sf_dir, "embeddings")
-    exact = topk_bruteforce(e, "vec_id", "embedding", _NDCG_QUERIES, k=_NDCG_K)
-    approx = lsh_bucket_topk(
-        e, "vec_id", "embedding", EMB_DIMS, _NDCG_QUERIES, k=_NDCG_K
-    )
-    # graded relevance of each exact neighbor: 6 - exact_rank
-    rel = exact.select(
-        "q_id", "c_id", (F.lit(_NDCG_K + 1) - F.col("rank")).alias("rel")
-    )
-    disc = F.element_at(
-        F.array(*[F.lit(d) for d in _DISCOUNTS]), F.col("rank").cast("int")
-    )
-    scored = (
-        approx.select("q_id", "c_id", "rank")
-        .join(rel, ["q_id", "c_id"], "left")
-        .select(
-            "q_id",
-            (F.coalesce(F.col("rel"), F.lit(0)) * disc).alias("gain"),
-        )
-    )
-    return (
-        scored.groupBy("q_id")
-        .agg(F.round(F.sum("gain") / F.lit(_IDEAL_DCG), 6).alias("ndcg_at_5"))
-        .select(F.col("q_id").cast("long").alias("q_id"), "ndcg_at_5")
-        .orderBy("q_id")
-    )
-
-
-def _ndcg_oracle() -> str:
-    from trackdechets_etl_spark.llm.similarity import bucket_sql, cosine_sql
-
-    discounts = ", ".join(str(d) for d in _DISCOUNTS)
-    return f"""
-WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
-b AS (SELECT vec_id, v, {bucket_sql('v', 64)} AS bkt FROM e),
-q AS (SELECT vec_id AS q_id, v AS qv, bkt FROM b WHERE vec_id < {_NDCG_QUERIES}),
-exact_scored AS (
-    SELECT q.q_id, c.vec_id AS c_id, {cosine_sql('q.qv', 'c.v')} AS cos
-    FROM q JOIN e c ON c.vec_id <> q.q_id),
-exact_r AS (
-    SELECT q_id, c_id, row_number() OVER (
-        PARTITION BY q_id ORDER BY round(cos, 9) DESC, c_id ASC) AS rank
-    FROM exact_scored),
-rel AS (SELECT q_id, c_id, {_NDCG_K + 1} - rank AS rel
-        FROM exact_r WHERE rank <= {_NDCG_K}),
-approx_scored AS (
-    SELECT q.q_id, c.vec_id AS c_id, {cosine_sql('q.qv', 'c.v')} AS cos
-    FROM q JOIN b c ON c.bkt = q.bkt AND c.vec_id <> q.q_id),
-approx_r AS (
-    SELECT q_id, c_id, row_number() OVER (
-        PARTITION BY q_id ORDER BY round(cos, 9) DESC, c_id ASC) AS rank
-    FROM approx_scored),
-ap AS (SELECT q_id, c_id, rank FROM approx_r WHERE rank <= {_NDCG_K}),
-disc(i, d) AS (SELECT i, ([{discounts}])[CAST(i AS INT)]
-               FROM unnest(generate_series(1, {_NDCG_K})) AS u(i)),
-gains AS (
-    SELECT ap.q_id, coalesce(rel.rel, 0) * disc.d AS gain
-    FROM ap JOIN disc ON ap.rank = disc.i
-    LEFT JOIN rel ON ap.q_id = rel.q_id AND ap.c_id = rel.c_id)
-SELECT CAST(q_id AS BIGINT) AS q_id,
-       round(sum(gain) / {_IDEAL_DCG!r}, 6) AS ndcg_at_5
-FROM gains GROUP BY q_id ORDER BY q_id
 """
 
 
@@ -294,7 +206,6 @@ FROM ({body}) ORDER BY fk_edge
 
 QUERIES: dict[str, QuerySpec] = {
     "text_phrase_search": QuerySpec(_text_phrase_search, _phrase_oracle()),
-    "sim_ndcg_eval": QuerySpec(_sim_ndcg_eval, _ndcg_oracle()),
     "pipeline_gdpr_erasure": QuerySpec(_pipeline_gdpr_erasure, GDPR_ERASURE_SQL),
     "dq_referential_integrity": QuerySpec(
         _dq_referential_integrity, _ref_integrity_oracle()

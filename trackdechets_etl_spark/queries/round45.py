@@ -39,11 +39,13 @@ _MMR_LAMBDA = 0.7
 
 
 def _embedding_mmr_select(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from trackdechets_etl_spark.llm.similarity import cosine
+    from trackdechets_etl_spark.llm.similarity import cosine_from_norms, norm
 
-    e = read_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
+    e = read_table(spark, sf_dir, "embeddings").select(
+        "vec_id", "embedding", norm(F.col("embedding")).alias("n")
+    )
     q = e.filter(F.col("vec_id") == _MMR_Q).select(
-        F.col("embedding").alias("qv")
+        F.col("embedding").alias("qv"), F.col("n").alias("qn")
     )
     scored = (
         e.filter(F.col("vec_id") != _MMR_Q)
@@ -51,8 +53,11 @@ def _embedding_mmr_select(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(
             "vec_id",
             "embedding",
+            "n",
             F.col("qv"),
-            cosine(F.col("embedding"), F.col("qv")).alias("sim_q"),
+            cosine_from_norms(
+                F.col("embedding"), F.col("qv"), F.col("n"), F.col("qn")
+            ).alias("sim_q"),
         )
     )
     # top-k via orderBy+limit -> TakeOrderedAndProject (per-partition
@@ -60,7 +65,7 @@ def _embedding_mmr_select(spark: SparkSession, sf_dir: str) -> DataFrame:
     cand = materialize(
         scored.orderBy(*score_order("sim_q", "vec_id"))
         .limit(_MMR_POOL)
-        .select("vec_id", "embedding", "sim_q"),
+        .select("vec_id", "embedding", "n", "sim_q"),
         eager=False,
     )
     pair = materialize(
@@ -70,6 +75,7 @@ def _embedding_mmr_select(spark: SparkSession, sf_dir: str) -> DataFrame:
                 cand.select(
                     F.col("vec_id").alias("bid"),
                     F.col("embedding").alias("bv"),
+                    F.col("n").alias("bn"),
                 )
             )
         )
@@ -77,7 +83,9 @@ def _embedding_mmr_select(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(
             F.col("a.vec_id").alias("vec_id"),
             "bid",
-            cosine(F.col("a.embedding"), F.col("bv")).alias("sim_cc"),
+            cosine_from_norms(
+                F.col("a.embedding"), F.col("bv"), F.col("a.n"), F.col("bn")
+            ).alias("sim_cc"),
         ),
         eager=False,
     )

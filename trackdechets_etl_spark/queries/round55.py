@@ -1,5 +1,5 @@
-"""Round-8 additions, second batch: rank statistics, a range join, a
-retrieval eval, and vocabulary coverage.
+"""Round-8 additions, second batch: rank statistics, a range join, and
+vocabulary coverage.
 
 - ``events_mann_whitney_u``: two-sample Mann-Whitney U between the
   purchase-value distributions of the two deterministic user halves —
@@ -26,13 +26,6 @@ retrieval eval, and vocabulary coverage.
   clamped to it (empty-clamp sessions filtered pre-explode), so even
   a continuously-active user whose gap-only session spans weeks emits
   only in-range bins; no sort-merge range scan, no cartesian.
-- ``sim_mrr_eval``: mean reciprocal rank of the exact nearest
-  neighbour inside the LSH-bucket ranking for the 10 probe queries —
-  the retrieval-eval companion to ``sim_ndcg_eval`` (NDCG grades the
-  whole list; MRR grades where the one right answer lands).
-  Reciprocal ranks snapped to exact integer micro-units
-  (1000000 div rank), so the mean is integer math until the last
-  division.
 - ``text_oov_rate_topv``: per-document out-of-vocabulary rate against
   the top-V corpus vocabulary (V=24 by count desc, term asc — the
   token-budget framing; a support floor is degenerate on the synthetic
@@ -50,7 +43,6 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from trackdechets_etl_spark.io.readers import read_table
-from trackdechets_etl_spark.operators.ranking import score_order
 from trackdechets_etl_spark.queries import QuerySpec
 
 # ------------------------------------------- Mann-Whitney U
@@ -360,117 +352,6 @@ ORDER BY hstart
 """
 
 
-# ------------------------------------------- MRR retrieval eval
-
-_MRR_Q = 10  # probe queries: vec_id < 10, the TOPK_QUERY_IDS contract
-
-
-def _sim_mrr_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from trackdechets_etl_spark.llm.similarity import (
-        _side,
-        bucket_expr,
-        cosine_from_norms,
-        norm,
-        topk_bruteforce,
-    )
-
-    e = read_table(spark, sf_dir, "embeddings")
-    exact_nn = topk_bruteforce(e, "vec_id", "embedding", _MRR_Q, k=1).select(
-        "q_id", F.col("c_id").alias("nn_id")
-    )
-    bucketed = e.select(
-        "vec_id",
-        "embedding",
-        bucket_expr(F.col("embedding"), 64).alias("bucket"),
-        norm(F.col("embedding")).alias("__n"),
-    )
-    q = _side(
-        bucketed.filter(F.col("vec_id") < _MRR_Q),
-        "vec_id",
-        "embedding",
-        "q",
-        "bucket",
-        norm_col="__n",
-    )
-    c = _side(bucketed, "vec_id", "embedding", "c", "bucket", norm_col="__n")
-    scored = (
-        F.broadcast(q)
-        .join(c, "bucket")
-        .filter(F.col("q_id") != F.col("c_id"))
-        .select(
-            "q_id",
-            "c_id",
-            cosine_from_norms(
-                F.col("q_vec"), F.col("c_vec"), F.col("__qn"), F.col("__cn")
-            ).alias("cos"),
-        )
-    )
-    wr = Window.partitionBy("q_id").orderBy(*score_order("cos", "c_id"))
-    ranked = scored.withColumn("rnk", F.row_number().over(wr))
-    hit = exact_nn.join(
-        ranked.select("q_id", F.col("c_id").alias("nn_id"), "rnk"),
-        ["q_id", "nn_id"],
-        "left",
-    )
-    # reciprocal rank in exact integer micro-units: 1000000 div rank
-    rr = F.when(
-        F.col("rnk").isNotNull(), F.floor(F.lit(1000000) / F.col("rnk"))
-    ).otherwise(F.lit(0))
-    return hit.agg(
-        F.count(F.lit(1)).cast("long").alias("n_queries"),
-        F.sum(F.col("rnk").isNotNull().cast("long")).cast("long").alias(
-            "n_found"
-        ),
-        F.sum(rr).cast("long").alias("sum_rr_micro"),
-        F.round(
-            F.sum(rr).cast("double") / 1000000.0 / F.count(F.lit(1)), 6
-        ).alias("mrr"),
-    )
-
-
-def _mrr_oracle() -> str:
-    from trackdechets_etl_spark.llm.similarity import bucket_sql, cosine_sql
-
-    return f"""
-WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
-q AS (SELECT vec_id AS q_id, v AS qv FROM e WHERE vec_id < {_MRR_Q}),
-ex_scored AS (
-    SELECT q_id, e.vec_id AS c_id,
-           {cosine_sql('qv', 'e.v')} AS cos
-    FROM q, e WHERE e.vec_id <> q_id),
-exact_nn AS (
-    SELECT q_id, c_id AS nn_id FROM (
-        SELECT q_id, c_id, row_number() OVER (PARTITION BY q_id
-            ORDER BY round(cos, 9) DESC, c_id ASC) AS rnk
-        FROM ex_scored) WHERE rnk = 1),
-bk AS (SELECT vec_id, v, {bucket_sql('v', 64)} AS bucket FROM e),
-qb AS (SELECT vec_id AS q_id, v AS qv, bucket FROM bk
-       WHERE vec_id < {_MRR_Q}),
-ls_scored AS (
-    SELECT q_id, b.vec_id AS c_id,
-           {cosine_sql('qv', 'b.v')} AS cos
-    FROM qb JOIN bk b ON qb.bucket = b.bucket AND b.vec_id <> q_id),
-ranked AS (
-    SELECT q_id, c_id, row_number() OVER (PARTITION BY q_id
-        ORDER BY round(cos, 9) DESC, c_id ASC) AS rnk
-    FROM ls_scored),
-hit AS (
-    SELECT exact_nn.q_id,
-           (SELECT rnk FROM ranked r
-            WHERE r.q_id = exact_nn.q_id AND r.c_id = exact_nn.nn_id) AS rnk
-    FROM exact_nn)
-SELECT CAST(count(*) AS BIGINT) AS n_queries,
-       CAST(sum(CASE WHEN rnk IS NOT NULL THEN 1 ELSE 0 END) AS BIGINT)
-           AS n_found,
-       CAST(sum(CASE WHEN rnk IS NOT NULL
-                THEN 1000000 // rnk ELSE 0 END) AS BIGINT) AS sum_rr_micro,
-       round(CAST(sum(CASE WHEN rnk IS NOT NULL
-                      THEN 1000000 // rnk ELSE 0 END) AS DOUBLE)
-             / 1000000.0 / count(*), 6) AS mrr
-FROM hit
-"""
-
-
 # ------------------------------------------- OOV rate vs top-V vocab
 
 _OOV_V = 24
@@ -532,6 +413,5 @@ QUERIES: dict[str, QuerySpec] = {
     "events_interval_overlap_join": QuerySpec(
         _events_interval_overlap_join, INTERVAL_OVERLAP_SQL
     ),
-    "sim_mrr_eval": QuerySpec(_sim_mrr_eval, _mrr_oracle()),
     "text_oov_rate_topv": QuerySpec(_text_oov_rate_topv, OOV_RATE_SQL),
 }

@@ -1,6 +1,6 @@
 """Round-9 additions, second batch: span-level dedup, k-group rank
-test, multiple OLS, SCD2 dimension build, LSH parameter-sweep recall
-curve, and a time-weighted average.
+test, multiple OLS, SCD2 dimension build, and a time-weighted
+average.
 
 - ``text_repeated_span_coverage``: per-document CROSS-document
   repeated 8-token span rate — the span-level memorization screen
@@ -46,17 +46,6 @@ curve, and a time-weighted average.
   only then compared through identical double expressions, so the
   flag is deterministic across engines at any scale. The SPC
   companion to the error-budget burn and debounced-alert rows.
-- ``sim_recall_curve_nplanes``: the LSH calibration CURVE in ONE
-  pass — where ``sim_lsh_recall`` (advanced.py) evaluates the one
-  production config, this sweeps recall@10 of the hyperplane-LSH
-  bucket retrieval vs the exact top-10 for n_planes in {2, 4, 6, 8}
-  simultaneously. Buckets
-  are nested by construction (plane p is bit p, so the P-plane bucket
-  is ``bucket8 % 2^P``), so one 8-plane bucket computation serves
-  every config; probes and corpus explode onto the 4 configs and meet
-  in a (n_planes, bucket) equi-join. Integer outputs (hit counts,
-  per-mille recall). This is the query that CHOOSES n_planes for the
-  production ANN/kNN paths.
 - ``events_twap_daily``: daily time-weighted average of ``value`` —
   each event weighted by the microseconds until the SAME USER's next
   event that day. Differs from round6's ``events_twap`` (per
@@ -78,7 +67,6 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from trackdechets_etl_spark.io.readers import read_table
-from trackdechets_etl_spark.operators.ranking import top_k_per_group
 from trackdechets_etl_spark.queries import QuerySpec
 
 # ------------------------------------- repeated span coverage
@@ -473,158 +461,6 @@ FROM g ORDER BY custkey, version_no
 """
 
 
-# --------------------------------- LSH recall curve over n_planes
-
-_RC_PLANES = [2, 4, 6, 8]
-_RC_MAX_PLANES = 8
-_RC_QUERIES = 10
-_RC_K = 10
-_EMB_DIMS = 64
-
-
-def _sim_recall_curve_nplanes(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from trackdechets_etl_spark.llm.similarity import (
-        bucket_expr,
-        cosine_from_norms,
-        norm,
-        topk_bruteforce,
-    )
-
-    emb = read_table(spark, sf_dir, "embeddings")
-    e = emb.select(
-        "vec_id",
-        "embedding",
-        bucket_expr(F.col("embedding"), _EMB_DIMS, _RC_MAX_PLANES).alias("b8"),
-        norm(F.col("embedding")).alias("n"),
-    )
-    probe = e.filter(F.col("vec_id") < _RC_QUERIES).select(
-        F.col("vec_id").alias("q_id"),
-        F.col("embedding").alias("q_vec"),
-        F.col("b8").alias("q_b8"),
-        F.col("n").alias("q_n"),
-    )
-    corpus = e.select(
-        F.col("vec_id").alias("c_id"),
-        F.col("embedding").alias("c_vec"),
-        F.col("b8").alias("c_b8"),
-        F.col("n").alias("c_n"),
-    )
-    exact = topk_bruteforce(emb, "vec_id", "embedding", _RC_QUERIES, k=_RC_K).select(
-        "q_id", "c_id"
-    )
-    # nested buckets: the P-plane bucket is b8 % 2^P (plane p = bit p),
-    # so ONE bucket computation serves every swept config.
-    planes = spark.createDataFrame(
-        [(p,) for p in _RC_PLANES], "n_planes int"
-    )
-    p_exp = probe.crossJoin(F.broadcast(planes)).select(
-        "n_planes",
-        "q_id",
-        "q_vec",
-        "q_n",
-        F.expr("q_b8 % shiftleft(1, n_planes)").alias("bk"),
-    )
-    c_exp = corpus.crossJoin(F.broadcast(planes)).select(
-        "n_planes",
-        "c_id",
-        "c_vec",
-        "c_n",
-        F.expr("c_b8 % shiftleft(1, n_planes)").alias("bk"),
-    )
-    cand = p_exp.join(c_exp, ["n_planes", "bk"]).filter(
-        F.col("q_id") != F.col("c_id")
-    )
-    lsh = top_k_per_group(
-        cand.select(
-            "n_planes",
-            "q_id",
-            "c_id",
-            cosine_from_norms(
-                F.col("q_vec"), F.col("c_vec"), F.col("q_n"), F.col("c_n")
-            ).alias("cos"),
-        ),
-        ["n_planes", "q_id"],
-        "cos",
-        "c_id",
-        _RC_K,
-        "rnk",
-    )
-    hits = lsh.join(exact, ["q_id", "c_id"])
-    n_cand = cand.groupBy("n_planes").agg(
-        F.count(F.lit(1)).cast("long").alias("n_candidates")
-    )
-    agg = hits.groupBy("n_planes").agg(
-        F.count(F.lit(1)).cast("long").alias("n_hits")
-    )
-    denom = _RC_QUERIES * _RC_K
-    return (
-        n_cand.join(agg, "n_planes", "left")
-        .select(
-            F.col("n_planes").cast("long").alias("n_planes"),
-            "n_candidates",
-            F.coalesce(F.col("n_hits"), F.lit(0))
-            .cast("long")
-            .alias("n_hits"),
-            (F.coalesce(F.col("n_hits"), F.lit(0)) * 1000 / F.lit(denom))
-            .cast("long")
-            .alias("recall_permille"),
-        )
-        .orderBy("n_planes")
-    )
-
-
-def _recall_curve_oracle() -> str:
-    from trackdechets_etl_spark.llm.similarity import bucket_sql, cosine_sql
-
-    planes_rows = ", ".join(f"({p})" for p in _RC_PLANES)
-    return f"""
-WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
-bk AS (SELECT vec_id, v,
-              {bucket_sql('v', _EMB_DIMS, _RC_MAX_PLANES)} AS b8 FROM e),
-p AS (SELECT * FROM bk WHERE vec_id < {_RC_QUERIES}),
-ex_scored AS (
-    SELECT a.vec_id AS q_id, b.vec_id AS c_id,
-           {cosine_sql('a.v', 'b.v')} AS cos
-    FROM p a, bk b WHERE a.vec_id <> b.vec_id),
-exact AS (
-    SELECT q_id, c_id FROM (
-        SELECT q_id, c_id,
-               row_number() OVER (PARTITION BY q_id
-                   ORDER BY round(cos, 9) DESC, c_id ASC) AS rnk
-        FROM ex_scored) WHERE rnk <= {_RC_K}),
-planes(n_planes) AS (VALUES {planes_rows}),
-p_exp AS (
-    SELECT n_planes, vec_id AS q_id, v AS q_vec,
-           b8 % (1 << n_planes) AS bk
-    FROM p, planes),
-c_exp AS (
-    SELECT n_planes, vec_id AS c_id, v AS c_vec,
-           b8 % (1 << n_planes) AS bk
-    FROM bk, planes),
-cand AS (
-    SELECT a.n_planes, a.q_id, b.c_id, a.q_vec, b.c_vec
-    FROM p_exp a JOIN c_exp b
-      ON a.n_planes = b.n_planes AND a.bk = b.bk AND a.q_id <> b.c_id),
-lsh AS (
-    SELECT n_planes, q_id, c_id FROM (
-        SELECT n_planes, q_id, c_id,
-               row_number() OVER (PARTITION BY n_planes, q_id
-                   ORDER BY round({cosine_sql('q_vec', 'c_vec')}, 9) DESC,
-                   c_id ASC) AS rnk
-        FROM cand) WHERE rnk <= {_RC_K}),
-nc AS (SELECT n_planes, CAST(count(*) AS BIGINT) AS n_candidates
-       FROM cand GROUP BY n_planes),
-h AS (SELECT n_planes, CAST(count(*) AS BIGINT) AS n_hits
-      FROM lsh JOIN exact USING (q_id, c_id) GROUP BY n_planes)
-SELECT CAST(nc.n_planes AS BIGINT) AS n_planes, nc.n_candidates,
-       CAST(coalesce(h.n_hits, 0) AS BIGINT) AS n_hits,
-       CAST(coalesce(h.n_hits, 0) * 1000 // {_RC_QUERIES * _RC_K} AS BIGINT)
-           AS recall_permille
-FROM nc LEFT JOIN h USING (n_planes)
-ORDER BY n_planes
-"""
-
-
 # ------------------------------------------ daily TWAP
 
 
@@ -760,9 +596,6 @@ QUERIES: dict[str, QuerySpec] = {
         _lineitem_multiple_ols, MULTIPLE_OLS_SQL
     ),
     "orders_scd2_intervals": QuerySpec(_orders_scd2_intervals, SCD2_SQL),
-    "sim_recall_curve_nplanes": QuerySpec(
-        _sim_recall_curve_nplanes, _recall_curve_oracle()
-    ),
     "events_twap_daily": QuerySpec(_events_twap_daily, TWAP_SQL),
     "events_pchart_control": QuerySpec(_events_pchart_control, PCHART_SQL),
 }

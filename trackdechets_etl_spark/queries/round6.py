@@ -18,8 +18,6 @@ training-data pipeline) reaches for that were not yet first-class.
 - Dedup: ``dedup_incremental_batch`` (batch-vs-corpus probe) and the
   BPE merge statistic ``text_bpe_pairs`` (see also
   ``llm/dedup.py::containment_pairs`` → ``dedup_containment_pairs``).
-- Similarity end-task: ``sim_knn_classify`` (majority vote over the
-  top-k contract).
 
 All pure DataFrame algebra with exact DuckDB twins; invariant tests in
 tests/test_round6.py.
@@ -816,97 +814,6 @@ FROM pts
 """
 
 
-# --------------------------------------------------- kNN classification
-
-_KNN_QUERY_IDS = 50
-_KNN_K = 5
-
-
-def _sim_knn_classify(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The ANN stack driven to an end task: 5-NN majority-vote label
-    prediction for the first {q} vectors (exact cosine neighbors —
-    the IVF/LSH/PQ variants swap in transparently since they share the
-    top-k contract). Vote tie-break is (count desc, label asc) so the
-    prediction is engine-deterministic. Output is per-query:
-    prediction, truth, hit flag. (On THIS corpus the synthetic labels
-    are independent of embedding geometry, so accuracy sits at chance;
-    the oracle-checked contract is the voting pipeline itself.)""".format(q=_KNN_QUERY_IDS)
-    from trackdechets_etl_spark.llm.similarity import topk_bruteforce
-
-    emb = read_table(spark, sf_dir, "embeddings")
-    nn = topk_bruteforce(
-        emb, "vec_id", "embedding", _KNN_QUERY_IDS, k=_KNN_K
-    )
-    labels = emb.select("vec_id", "label")
-    votes = (
-        nn.join(
-            labels.select(
-                F.col("vec_id").alias("c_id"), F.col("label").alias("c_label")
-            ),
-            "c_id",
-        )
-        .groupBy("q_id", "c_label")
-        .agg(F.count(F.lit(1)).alias("__votes"))
-    )
-    wv = Window.partitionBy("q_id").orderBy(
-        F.col("__votes").desc(), F.col("c_label").asc()
-    )
-    pred = (
-        votes.withColumn("__rn", F.row_number().over(wv))
-        .filter(F.col("__rn") == 1)
-        .select("q_id", F.col("c_label").alias("pred_label"))
-    )
-    return (
-        pred.join(
-            labels.select(
-                F.col("vec_id").alias("q_id"), F.col("label").alias("true_label")
-            ),
-            "q_id",
-        )
-        .select(
-            "q_id",
-            F.col("pred_label").cast("long").alias("pred_label"),
-            F.col("true_label").cast("long").alias("true_label"),
-            (F.col("pred_label") == F.col("true_label"))
-            .cast("long")
-            .alias("is_correct"),
-        )
-    )
-
-
-def _sim_knn_sql() -> str:
-    from trackdechets_etl_spark.llm.similarity import cosine_sql
-    from trackdechets_etl_spark.queries.llm import _EMB
-
-    return f"""
-WITH {_EMB},
-q AS (SELECT vec_id AS q_id, v AS qv FROM e WHERE vec_id < {_KNN_QUERY_IDS}),
-scored AS (
-    SELECT q_id, c.vec_id AS c_id, {cosine_sql('qv', 'c.v')} AS cos
-    FROM q, e c WHERE c.vec_id <> q_id),
-nn AS (
-    SELECT q_id, c_id FROM (
-        SELECT *, row_number() OVER (
-            PARTITION BY q_id ORDER BY round(cos, 9) DESC, c_id ASC) AS rank
-        FROM scored) WHERE rank <= {_KNN_K}),
-votes AS (
-    SELECT nn.q_id, emb.label AS c_label, count(*) AS n_votes
-    FROM nn JOIN embeddings emb ON nn.c_id = emb.vec_id
-    GROUP BY 1, 2),
-pred AS (
-    SELECT q_id, c_label AS pred_label FROM (
-        SELECT *, row_number() OVER (
-            PARTITION BY q_id ORDER BY n_votes DESC, c_label ASC) AS rn
-        FROM votes) WHERE rn = 1)
-SELECT p.q_id,
-       CAST(p.pred_label AS BIGINT) AS pred_label,
-       CAST(t.label AS BIGINT) AS true_label,
-       CAST(CASE WHEN p.pred_label = t.label THEN 1 ELSE 0 END AS BIGINT)
-           AS is_correct
-FROM pred p JOIN embeddings t ON p.q_id = t.vec_id
-"""
-
-
 # ----------------------------------------------- equi-depth histogram
 
 _EQD_BUCKETS = 10
@@ -1216,7 +1123,6 @@ QUERIES: dict[str, QuerySpec] = {
     "dedup_containment_pairs": QuerySpec(
         _dedup_containment, _dedup_containment_sql()
     ),
-    "sim_knn_classify": QuerySpec(_sim_knn_classify, _sim_knn_sql()),
     "events_ab_lift": QuerySpec(_events_ab_lift, EVENTS_AB_LIFT_SQL),
     "orders_cohort_ltv": QuerySpec(_orders_cohort_ltv, ORDERS_COHORT_LTV_SQL),
     "events_entropy_profile": QuerySpec(

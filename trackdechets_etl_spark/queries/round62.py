@@ -1,6 +1,6 @@
 """Round-9 additions, seventh batch: corpus unseen-mass estimation,
-embedding spectrum diagnostics, resampling-free variance, ANN cluster
-quality, ML ranking metrics, and heavy-tail estimation.
+embedding spectrum diagnostics, resampling-free variance, ML ranking
+metrics, and heavy-tail estimation.
 
 - ``text_good_turing_mass``: Good–Turing unseen-probability mass and
   Chao1 richness from the frequency-of-frequencies of 3-token
@@ -24,12 +24,6 @@ quality, ML ranking metrics, and heavy-tail estimation.
   NO random draws at all: every leave-one-out mean is algebra over
   per-group (n, sum) — the delete-a-group jackknife is THE variance
   estimate for cluster-correlated data.
-- ``sim_silhouette_lsh``: simplified silhouette of the hyperplane-LSH
-  partitioning (a = distance to own-bucket centroid, b = nearest
-  other-bucket centroid, s = (b−a)/max(a,b)) — the cluster-quality
-  gate for the ANN stack (sim_lsh_bucket_topk / IVF routing): low
-  mean silhouette on a bucket means its candidates are no better
-  than random and n_planes needs raising.
 - ``lineitem_roc_auc_discount``: ROC-AUC of discount as a return
   predictor via the rank-sum identity AUC = U/(n₁n₀), tie-corrected
   with exact integers (2U accumulated per score level, ≤11 levels) —
@@ -55,7 +49,6 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from trackdechets_etl_spark.io.readers import read_table
-from trackdechets_etl_spark.llm.similarity import bucket_expr, bucket_sql
 from trackdechets_etl_spark.queries import QuerySpec
 
 EMB_DIMS = 64
@@ -285,96 +278,6 @@ FROM per
 """
 
 
-# ------------------------------------------------- LSH silhouette
-
-
-def _sim_silhouette_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
-    e = read_table(spark, sf_dir, "embeddings").select(
-        "vec_id",
-        F.col("embedding").cast("array<double>").alias("v"),
-        bucket_expr(F.col("embedding"), EMB_DIMS).alias("bucket"),
-    )
-    ex = e.select(
-        "vec_id", "bucket", F.posexplode("v").alias("pos", "x")
-    )
-    # per-bucket per-dim centroid rounded at 6dp (the semantic-prune
-    # determinism contract); 2^planes × dims rows → always broadcast.
-    cent = ex.groupBy(F.col("bucket").alias("cb"), "pos").agg(
-        F.round(F.avg("x"), 6).alias("c")
-    )
-    d2 = (
-        ex.join(F.broadcast(cent), "pos")
-        .groupBy("vec_id", "bucket", "cb")
-        .agg(
-            F.sum((F.col("x") - F.col("c")) * (F.col("x") - F.col("c")))
-            .alias("d2")
-        )
-    )
-    ab = d2.groupBy("vec_id", "bucket").agg(
-        F.sqrt(
-            F.sum(F.when(F.col("cb") == F.col("bucket"), F.col("d2")))
-        ).alias("a"),
-        F.sqrt(
-            F.min(F.when(F.col("cb") != F.col("bucket"), F.col("d2")))
-        ).alias("b"),
-    )
-    sil = ab.select(
-        "bucket",
-        F.when(F.greatest("a", "b") == 0, F.lit(0.0))
-        .otherwise(
-            (F.col("b") - F.col("a")) / F.greatest("a", "b")
-        )
-        .alias("s"),
-    )
-    return (
-        sil.groupBy("bucket")
-        .agg(
-            F.count(F.lit(1)).cast("long").alias("n_vecs"),
-            F.round(F.avg("s"), 6).alias("mean_silhouette"),
-        )
-        .select(
-            F.col("bucket").cast("long").alias("bucket"),
-            "n_vecs",
-            "mean_silhouette",
-        )
-        .orderBy("bucket")
-    )
-
-
-SILHOUETTE_SQL = f"""
-WITH e AS (
-    SELECT vec_id, embedding::DOUBLE[] AS v,
-           {bucket_sql('v', EMB_DIMS)} AS bucket
-    FROM embeddings),
-ex AS (
-    SELECT vec_id, bucket, i AS pos, v[i] AS x
-    FROM e, unnest(generate_series(1, {EMB_DIMS})) AS u(i)),
-cent AS (
-    SELECT bucket AS cb, pos, round(avg(x), 6) AS c
-    FROM ex GROUP BY bucket, pos),
-d2 AS (
-    SELECT ex.vec_id, ex.bucket, cent.cb,
-           sum((x - c) * (x - c)) AS d2
-    FROM ex JOIN cent ON ex.pos = cent.pos
-    GROUP BY ex.vec_id, ex.bucket, cent.cb),
-ab AS (
-    SELECT vec_id, bucket,
-           sqrt(sum(CASE WHEN cb = bucket THEN d2 END)) AS a,
-           sqrt(min(CASE WHEN cb <> bucket THEN d2 END)) AS b
-    FROM d2 GROUP BY vec_id, bucket),
-sil AS (
-    SELECT bucket,
-           CASE WHEN greatest(a, b) = 0 THEN 0.0
-                ELSE (b - a) / greatest(a, b) END AS s
-    FROM ab)
-SELECT CAST(bucket AS BIGINT) AS bucket,
-       CAST(count(*) AS BIGINT) AS n_vecs,
-       round(avg(s), 6) AS mean_silhouette
-FROM sil GROUP BY bucket
-ORDER BY bucket
-"""
-
-
 # ------------------------------------------------------- ROC AUC
 
 
@@ -518,7 +421,6 @@ QUERIES: dict[str, QuerySpec] = {
     "orders_jackknife_mean_se": QuerySpec(
         _orders_jackknife_mean_se, JACKKNIFE_SQL
     ),
-    "sim_silhouette_lsh": QuerySpec(_sim_silhouette_lsh, SILHOUETTE_SQL),
     "lineitem_roc_auc_discount": QuerySpec(
         _lineitem_roc_auc_discount, ROC_AUC_SQL
     ),

@@ -1,6 +1,6 @@
-"""Round-9 additions, eighth batch: iterative GLM fitting, hybrid
-retrieval fusion, distribution-free prediction intervals, relational
-cross-validation, count-model diagnostics, and experiment sizing.
+"""Round-9 additions, eighth batch: iterative GLM fitting,
+distribution-free prediction intervals, relational cross-validation,
+count-model diagnostics, and experiment sizing.
 
 - ``lineitem_logistic_irls``: logistic regression of return
   probability on discount, fit by 4 Fisher-scoring (IRLS) iterations —
@@ -10,12 +10,6 @@ cross-validation, count-model diagnostics, and experiment sizing.
   broadcast beta. The oracle replays the identical 4 unrolled
   iterations as chained CTEs — proving the lazy-lineage loop ≡ the
   textbook IRLS recursion.
-- ``sim_rrf_hybrid``: reciprocal-rank-fusion hybrid retrieval — the
-  RAG-stack fusion step: BM25 top-50 (sparse, the round38 scorer with
-  one fixed query) ⊎ cosine-to-query top-50 (dense, query = vector 0),
-  RRF score Σ 1/(60+rank), final top-20. Ranks are computed by
-  bounded self-join count (lists are LIMIT-bounded) — no global
-  window anywhere.
 - ``orders_conformal_interval``: split-conformal prediction interval —
   md5-half calibration set, per-month mean model (integer cents),
   nonconformity = |residual|, q̂ = the exact ⌈0.9(n+1)⌉-th order
@@ -55,8 +49,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from trackdechets_etl_spark.io.readers import read_table
-from trackdechets_etl_spark.llm.similarity import cosine, cosine_sql
-from trackdechets_etl_spark.operators.ranking import global_row_number, score_order
+from trackdechets_etl_spark.operators.ranking import global_row_number
 from trackdechets_etl_spark.queries import QuerySpec
 from trackdechets_etl_spark.queries.round61 import _hex8_int_sql
 from trackdechets_etl_spark.session import materialize
@@ -175,192 +168,6 @@ FROM tot, it{iters}
 
 
 IRLS_SQL = _irls_sql()
-
-
-# ---------------------------------------------------- RRF hybrid
-
-_RRF_QUERY_TERMS = ["join", "hash", "scan"]  # round38's q_exec
-_RRF_QUERY_VEC_ID = 0
-_RRF_LIST_K = 50
-_RRF_OUT_K = 20
-_RRF_C = 60
-_BM25_K1 = 1.2
-_BM25_B = 0.75
-
-
-def _rank_by_self_join(lst: DataFrame, id_col: str) -> DataFrame:
-    """Competition rank on a LIMIT-bounded list via broadcast self-join
-    count of strictly-better rows — no window, total order
-    (score desc, id asc) so ranks are dense and unique."""
-    a, b = lst.alias("a"), lst.alias("b")
-    better = (F.col("b.skey") > F.col("a.skey")) | (
-        (F.col("b.skey") == F.col("a.skey"))
-        & (F.col(f"b.{id_col}") < F.col(f"a.{id_col}"))
-    )
-    return (
-        a.join(F.broadcast(b), better, "left")
-        .groupBy(F.col(f"a.{id_col}").alias(id_col))
-        .agg(
-            (F.count(F.col(f"b.{id_col}")) + 1)
-            .cast("long")
-            .alias("rank")
-        )
-    )
-
-
-def _sim_rrf_hybrid(spark: SparkSession, sf_dir: str) -> DataFrame:
-    d = read_table(spark, sf_dir, "documents")
-    tc = materialize(
-        d.select("doc_id", F.explode(F.split("text", " ")).alias("term"))
-        .filter(F.col("term") != "")
-        .groupBy("doc_id", "term")
-        .agg(F.count(F.lit(1)).alias("tf"))
-    )
-    dl = tc.groupBy("doc_id").agg(F.sum("tf").alias("dl"))
-    nd = d.agg(F.count(F.lit(1)).cast("double").alias("n_docs"))
-    ad = dl.agg(F.avg("dl").alias("avgdl"))
-    # JVM-side literal frame: broadcasting a Python-created frame
-    # costs ~4 s of serialization/exchange spin-up (round70 profile)
-    q = spark.range(len(_RRF_QUERY_TERMS)).select(
-        F.element_at(
-            F.array(*[F.lit(t) for t in _RRF_QUERY_TERMS]),
-            (F.col("id") + 1).cast("int"),
-        ).alias("term")
-    )
-    dfreq = (
-        tc.join(F.broadcast(q), "term")
-        .groupBy("term")
-        .agg(F.count(F.lit(1)).alias("df"))
-    )
-    idf = dfreq.crossJoin(F.broadcast(nd)).select(
-        "term",
-        F.log(
-            1.0
-            + (F.col("n_docs") - F.col("df") + 0.5) / (F.col("df") + 0.5)
-        ).alias("idf"),
-    )
-    sparse = materialize(
-        tc.join(F.broadcast(idf), "term")
-        .join(dl, "doc_id")
-        .crossJoin(F.broadcast(ad))
-        .select(
-            "doc_id",
-            (
-                F.col("idf")
-                * F.col("tf")
-                * (1.0 + _BM25_K1)
-                / (
-                    F.col("tf")
-                    + _BM25_K1
-                    * (1.0 - _BM25_B + _BM25_B * F.col("dl") / F.col("avgdl"))
-                )
-            ).alias("s"),
-        )
-        .groupBy("doc_id")
-        .agg(F.round(F.sum("s"), 9).alias("skey"))
-        .orderBy(F.desc("skey"), F.asc("doc_id"))
-        .limit(_RRF_LIST_K)
-    )
-    e = read_table(spark, sf_dir, "embeddings")
-    qv = e.filter(F.col("vec_id") == _RRF_QUERY_VEC_ID).select(
-        F.col("embedding").alias("qvec")
-    )
-    dense = materialize(
-        e.crossJoin(F.broadcast(qv))
-        .select(
-            F.col("vec_id").alias("doc_id"),
-            F.round(cosine(F.col("embedding"), F.col("qvec")), 9).alias(
-                "skey"
-            ),
-        )
-        .orderBy(F.desc("skey"), F.asc("doc_id"))
-        .limit(_RRF_LIST_K)
-    )
-    rs = _rank_by_self_join(sparse, "doc_id").withColumnRenamed(
-        "rank", "rank_sparse"
-    )
-    rd = _rank_by_self_join(dense, "doc_id").withColumnRenamed(
-        "rank", "rank_dense"
-    )
-    fused = rs.join(rd, "doc_id", "full_outer").select(
-        "doc_id",
-        F.coalesce("rank_sparse", F.lit(0)).alias("rank_sparse"),
-        F.coalesce("rank_dense", F.lit(0)).alias("rank_dense"),
-        (
-            F.coalesce(
-                1.0 / (_RRF_C + F.col("rank_sparse")), F.lit(0.0)
-            )
-            + F.coalesce(
-                1.0 / (_RRF_C + F.col("rank_dense")), F.lit(0.0)
-            )
-        ).alias("rrf_raw"),
-    )
-    return (
-        fused.orderBy(*score_order("rrf_raw", "doc_id"))
-        .limit(_RRF_OUT_K)
-        .select(
-            "doc_id",
-            "rank_sparse",
-            "rank_dense",
-            F.round("rrf_raw", 6).alias("rrf_score"),
-        )
-    )
-
-
-RRF_SQL = f"""
-WITH tc AS (
-    SELECT doc_id, term, CAST(count(*) AS BIGINT) AS tf
-    FROM (SELECT doc_id, unnest(string_split(text, ' ')) AS term
-          FROM documents)
-    WHERE term != '' GROUP BY doc_id, term),
-dl AS (SELECT doc_id, CAST(sum(tf) AS BIGINT) AS dl FROM tc GROUP BY doc_id),
-nd AS (SELECT CAST(count(*) AS DOUBLE) AS n_docs FROM documents),
-ad AS (SELECT avg(dl) AS avgdl FROM dl),
-q(term) AS (VALUES {", ".join(f"('{t}')" for t in _RRF_QUERY_TERMS)}),
-dfreq AS (
-    SELECT term, CAST(count(*) AS BIGINT) AS df
-    FROM tc WHERE term IN (SELECT term FROM q) GROUP BY term),
-idf AS (
-    SELECT term,
-           ln(1.0 + (nd.n_docs - df + 0.5) / (df + 0.5)) AS idf
-    FROM dfreq, nd),
-sparse AS (
-    SELECT doc_id, round(sum(idf.idf * tc.tf * (1.0 + {_BM25_K1})
-               / (tc.tf + {_BM25_K1} * (1.0 - {_BM25_B}
-                  + {_BM25_B} * dl.dl / ad.avgdl))), 9) AS skey
-    FROM tc
-    JOIN idf ON tc.term = idf.term
-    JOIN dl USING (doc_id)
-    CROSS JOIN ad
-    GROUP BY doc_id
-    ORDER BY skey DESC, doc_id LIMIT {_RRF_LIST_K}),
-qv AS (SELECT embedding::DOUBLE[] AS qvec FROM embeddings
-       WHERE vec_id = {_RRF_QUERY_VEC_ID}),
-dense AS (
-    SELECT vec_id AS doc_id,
-           round({cosine_sql('embedding::DOUBLE[]', 'qvec')}, 9) AS skey
-    FROM embeddings, qv
-    ORDER BY skey DESC, doc_id LIMIT {_RRF_LIST_K}),
-rs AS (
-    SELECT doc_id, CAST(row_number() OVER (
-        ORDER BY skey DESC, doc_id) AS BIGINT) AS rank_sparse
-    FROM sparse),
-rd AS (
-    SELECT doc_id, CAST(row_number() OVER (
-        ORDER BY skey DESC, doc_id) AS BIGINT) AS rank_dense
-    FROM dense),
-fused AS (
-    SELECT coalesce(rs.doc_id, rd.doc_id) AS doc_id,
-           coalesce(rank_sparse, 0) AS rank_sparse,
-           coalesce(rank_dense, 0) AS rank_dense,
-           coalesce(1.0 / ({_RRF_C} + rank_sparse), 0.0)
-           + coalesce(1.0 / ({_RRF_C} + rank_dense), 0.0) AS rrf_raw
-    FROM rs FULL OUTER JOIN rd ON rs.doc_id = rd.doc_id)
-SELECT doc_id, rank_sparse, rank_dense,
-       round(rrf_raw, 6) AS rrf_score
-FROM fused
-ORDER BY round(rrf_raw, 9) DESC, doc_id LIMIT {_RRF_OUT_K}
-"""
 
 
 # --------------------------------------------- conformal interval
@@ -751,7 +558,6 @@ FROM m
 
 QUERIES: dict[str, QuerySpec] = {
     "lineitem_logistic_irls": QuerySpec(_lineitem_logistic_irls, IRLS_SQL),
-    "sim_rrf_hybrid": QuerySpec(_sim_rrf_hybrid, RRF_SQL),
     "orders_conformal_interval": QuerySpec(
         _orders_conformal_interval, CONFORMAL_SQL
     ),

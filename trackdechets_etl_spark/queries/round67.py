@@ -1,6 +1,6 @@
 """Round-9 additions, twelfth batch: Poisson GLM, retention decay
-fitting, stylometry, seasonality strength, pseudo-relevance feedback,
-and closed-form tail-bound anomaly scoring.
+fitting, stylometry, seasonality strength, and closed-form tail-bound
+anomaly scoring.
 
 - ``events_poisson_glm_irls``: Poisson regression (log link) of
   hour-of-day event totals — 4 Fisher-scoring iterations on the
@@ -29,12 +29,6 @@ and closed-form tail-bound anomaly scoring.
   day-of-week means of the detrended series, strength = 1 −
   var(resid)/var(detrended) (and the trend analog). Quantifies what
   events_seasonal_dow only displays.
-- ``sim_query_expansion_prf``: pseudo-relevance feedback (Rocchio
-  lite) — BM25 top-10 for the round38 q_exec query, expand with the
-  top-5 TF-IDF terms of those pseudo-relevant docs (query terms
-  excluded), re-run BM25 with the expanded term set, report the new
-  top-10 with a newly_retrieved flag. The classic recall-boosting IR
-  loop, fully deterministic.
 - ``events_peak_hour_chernoff``: closed-form Chernoff upper bound
   P(X ≥ k) ≤ e^{−λ}(eλ/k)^k for the busiest wall-clock hour against
   the fitted Poisson rate — an anomaly p-bound with no factorials or
@@ -490,206 +484,6 @@ FROM agg
 """
 
 
-# ------------------------------------------------ PRF expansion
-
-_PRF_TERMS = ["join", "hash", "scan"]
-_PRF_FEEDBACK_DOCS = 10
-_PRF_EXPANSION = 5
-_PRF_OUT_K = 10
-_BM25_K1 = 1.2
-_BM25_B = 0.75
-
-
-def _bm25_scores(tc, dl, nd, ad, terms_df) -> DataFrame:
-    dfreq = (
-        tc.join(F.broadcast(terms_df), "term")
-        .groupBy("term")
-        .agg(F.count(F.lit(1)).alias("df"))
-    )
-    idf = dfreq.crossJoin(F.broadcast(nd)).select(
-        "term",
-        F.log(
-            1.0
-            + (F.col("n_docs") - F.col("df") + 0.5) / (F.col("df") + 0.5)
-        ).alias("idf"),
-    )
-    return (
-        tc.join(F.broadcast(idf), "term")
-        .join(dl, "doc_id")
-        .crossJoin(F.broadcast(ad))
-        .select(
-            "doc_id",
-            (
-                F.col("idf")
-                * F.col("tf")
-                * (1.0 + _BM25_K1)
-                / (
-                    F.col("tf")
-                    + _BM25_K1
-                    * (1.0 - _BM25_B + _BM25_B * F.col("dl") / F.col("avgdl"))
-                )
-            ).alias("s"),
-        )
-        .groupBy("doc_id")
-        .agg(F.round(F.sum("s"), 9).alias("skey"))
-    )
-
-
-def _sim_query_expansion_prf(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    d = read_table(spark, sf_dir, "documents")
-    tc = materialize(
-        d.select("doc_id", F.explode(F.split("text", " ")).alias("term"))
-        .filter(F.col("term") != "")
-        .groupBy("doc_id", "term")
-        .agg(F.count(F.lit(1)).alias("tf"))
-    )
-    dl = tc.groupBy("doc_id").agg(F.sum("tf").alias("dl"))
-    nd = d.agg(F.count(F.lit(1)).cast("double").alias("n_docs"))
-    ad = dl.agg(F.avg("dl").alias("avgdl"))
-    # JVM-side literal frame (the round70 broadcast-spin-up profile)
-    q0 = spark.range(len(_PRF_TERMS)).select(
-        F.element_at(
-            F.array(*[F.lit(t) for t in _PRF_TERMS]),
-            (F.col("id") + 1).cast("int"),
-        ).alias("term")
-    )
-    base = _bm25_scores(tc, dl, nd, ad, q0)
-    fb = materialize(
-        base.orderBy(F.desc("skey"), F.asc("doc_id"))
-        .limit(_PRF_FEEDBACK_DOCS)
-    )
-    # expansion: top TF-IDF terms inside the pseudo-relevant docs,
-    # excluding the original query terms
-    alldf = tc.groupBy("term").agg(
-        F.count(F.lit(1)).alias("dfa")
-    )
-    exp_terms = (
-        tc.join(F.broadcast(fb.select("doc_id")), "doc_id")
-        .groupBy("term")
-        .agg(F.sum("tf").alias("fbtf"))
-        .join(alldf, "term")
-        .crossJoin(F.broadcast(nd))
-        .filter(~F.col("term").isin(_PRF_TERMS))
-        .select(
-            "term",
-            F.round(
-                F.col("fbtf")
-                * F.log(
-                    1.0
-                    + (F.col("n_docs") - F.col("dfa") + 0.5)
-                    / (F.col("dfa") + 0.5)
-                ),
-                9,
-            ).alias("tkey"),
-        )
-        .orderBy(F.desc("tkey"), F.asc("term"))
-        .limit(_PRF_EXPANSION)
-        .select("term")
-    )
-    q1 = q0.unionByName(exp_terms)
-    final = _bm25_scores(tc, dl, nd, ad, q1)
-    top = materialize(
-        final.orderBy(F.desc("skey"), F.asc("doc_id"))
-        .limit(_PRF_OUT_K)
-    )
-    # rank via bounded self-join (window-free, the round63 pattern)
-    b = top.select(
-        F.col("doc_id").alias("bd"), F.col("skey").alias("bk")
-    )
-    better = (F.col("bk") > F.col("skey")) | (
-        (F.col("bk") == F.col("skey")) & (F.col("bd") < F.col("doc_id"))
-    )
-    ranked = (
-        top.join(F.broadcast(b), better, "left")
-        .groupBy("doc_id", "skey")
-        .agg((F.count("bd") + 1).cast("long").alias("rank"))
-    )
-    return (
-        ranked.join(
-            fb.select("doc_id").withColumn("in_fb", F.lit(1)),
-            "doc_id",
-            "left",
-        )
-        .select(
-            "doc_id",
-            "rank",
-            F.round("skey", 6).alias("score"),
-            F.when(F.col("in_fb").isNull(), 1)
-            .otherwise(0)
-            .cast("long")
-            .alias("newly_retrieved"),
-        )
-        .orderBy("rank")
-    )
-
-
-_PRF_Q0_VALUES = ", ".join(f"('{t}')" for t in _PRF_TERMS)
-_PRF_NOT_IN = ", ".join(f"'{t}'" for t in _PRF_TERMS)
-
-
-def _bm25_sql_block(qcte: str, out: str) -> str:
-    return f"""{out}_df AS (
-    SELECT term, CAST(count(*) AS BIGINT) AS df
-    FROM tc WHERE term IN (SELECT term FROM {qcte}) GROUP BY term),
-{out}_idf AS (
-    SELECT term,
-           ln(1.0 + (nd.n_docs - df + 0.5) / (df + 0.5)) AS idf
-    FROM {out}_df, nd),
-{out} AS (
-    SELECT doc_id, round(sum({out}_idf.idf * tc.tf * (1.0 + {_BM25_K1})
-               / (tc.tf + {_BM25_K1} * (1.0 - {_BM25_B}
-                  + {_BM25_B} * dl.dl / ad.avgdl))), 9) AS skey
-    FROM tc
-    JOIN {out}_idf ON tc.term = {out}_idf.term
-    JOIN dl USING (doc_id)
-    CROSS JOIN ad
-    GROUP BY doc_id)"""
-
-
-PRF_SQL = f"""
-WITH tc AS (
-    SELECT doc_id, term, CAST(count(*) AS BIGINT) AS tf
-    FROM (SELECT doc_id, unnest(string_split(text, ' ')) AS term
-          FROM documents)
-    WHERE term != '' GROUP BY doc_id, term),
-dl AS (SELECT doc_id, CAST(sum(tf) AS BIGINT) AS dl FROM tc GROUP BY doc_id),
-nd AS (SELECT CAST(count(*) AS DOUBLE) AS n_docs FROM documents),
-ad AS (SELECT avg(dl) AS avgdl FROM dl),
-q0(term) AS (VALUES {_PRF_Q0_VALUES}),
-{_bm25_sql_block("q0", "base")},
-fb AS (SELECT doc_id FROM base
-       ORDER BY skey DESC, doc_id LIMIT {_PRF_FEEDBACK_DOCS}),
-alldf AS (SELECT term, count(*) AS dfa FROM tc GROUP BY term),
-exp_terms AS (
-    SELECT tc.term
-    FROM tc JOIN fb USING (doc_id)
-    JOIN alldf ON tc.term = alldf.term
-    CROSS JOIN nd
-    WHERE tc.term NOT IN ({_PRF_NOT_IN})
-    GROUP BY tc.term, dfa, n_docs
-    ORDER BY round(sum(tf) * ln(1.0 + (n_docs - dfa + 0.5)
-                                / (dfa + 0.5)), 9) DESC, tc.term
-    LIMIT {_PRF_EXPANSION}),
-q1(term) AS (SELECT term FROM q0 UNION ALL SELECT term FROM exp_terms),
-{_bm25_sql_block("q1", "final")},
-top AS (SELECT doc_id, skey FROM final
-        ORDER BY skey DESC, doc_id LIMIT {_PRF_OUT_K}),
-ranked AS (
-    SELECT a.doc_id, a.skey, 1 + count(b.doc_id) AS rank
-    FROM top a LEFT JOIN top b
-      ON b.skey > a.skey OR (b.skey = a.skey AND b.doc_id < a.doc_id)
-    GROUP BY a.doc_id, a.skey)
-SELECT ranked.doc_id, CAST(rank AS BIGINT) AS rank,
-       round(skey, 6) AS score,
-       CAST(CASE WHEN fb.doc_id IS NULL THEN 1 ELSE 0 END AS BIGINT)
-           AS newly_retrieved
-FROM ranked LEFT JOIN fb ON ranked.doc_id = fb.doc_id
-ORDER BY rank
-"""
-
-
 # ------------------------------------------- peak-hour Chernoff
 
 
@@ -752,9 +546,6 @@ QUERIES: dict[str, QuerySpec] = {
     "text_burrows_delta": QuerySpec(_text_burrows_delta, BURROWS_SQL),
     "events_seasonality_strength": QuerySpec(
         _events_seasonality_strength, SEASONALITY_SQL
-    ),
-    "sim_query_expansion_prf": QuerySpec(
-        _sim_query_expansion_prf, PRF_SQL
     ),
     "events_peak_hour_chernoff": QuerySpec(
         _events_peak_hour_chernoff, CHERNOFF_SQL

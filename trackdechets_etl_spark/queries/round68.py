@@ -46,7 +46,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from trackdechets_etl_spark.io.readers import read_table
-from trackdechets_etl_spark.llm.similarity import cosine, cosine_sql
+from trackdechets_etl_spark.llm.similarity import cosine_from_norms, cosine_sql, norm
 from trackdechets_etl_spark.queries import QuerySpec
 
 # ------------------------------------------------- two-way ANOVA
@@ -206,14 +206,16 @@ def _embedding_triplet_eval(
         F.col("label").cast("long").alias("label"),
         F.col("embedding").cast("array<double>").alias("v"),
         F.md5(F.col("vec_id").cast("string")).alias("h"),
-    )
+    ).withColumn("n", norm(F.col("v")))
     w = Window.partitionBy("label").orderBy("h", "vec_id")
     ranked = e.withColumn("rk", F.row_number().over(w))
     anchors = ranked.select(
         "label",
         "rk",
         F.col("v").alias("av"),
+        F.col("n").alias("an"),
         F.lead("v").over(w).alias("pv"),
+        F.lead("n").over(w).alias("pn"),
     ).filter(F.col("pv").isNotNull())
     negs = ranked.select(
         ((F.col("label") + _TRIP_LABELS - 1) % _TRIP_LABELS).alias(
@@ -221,13 +223,14 @@ def _embedding_triplet_eval(
         ),
         "rk",
         F.col("v").alias("nv"),
+        F.col("n").alias("nn"),
     )
     trips = anchors.join(negs, ["label", "rk"])
     margins = trips.select(
         "label",
         (
-            cosine(F.col("av"), F.col("pv"))
-            - cosine(F.col("av"), F.col("nv"))
+            cosine_from_norms(F.col("av"), F.col("pv"), F.col("an"), F.col("pn"))
+            - cosine_from_norms(F.col("av"), F.col("nv"), F.col("an"), F.col("nn"))
         ).alias("m"),
     )
     return (

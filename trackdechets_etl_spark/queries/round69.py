@@ -1,14 +1,7 @@
-"""Round-9 additions, fourteenth batch: ANN tuning curves, stochastic
-inventory, AR-order identification, optimal-transport drift,
-time-series backtesting, and tokenizer sizing.
+"""Round-9 additions, fourteenth batch: stochastic inventory, AR-order
+identification, optimal-transport drift, time-series backtesting, and
+tokenizer sizing.
 
-- ``sim_ivf_recall_curve``: recall@5 of IVF retrieval as a function of
-  nprobe ∈ {1, 2, 4} — queries route to their top-nprobe centroids
-  (the round57 ``sim_recall_curve_nplanes`` pattern, IVF edition),
-  candidates come only from those lists, recall measured against the
-  exact brute-force top-5 under the identical rank key. THE tuning
-  curve an ANN deployment reads before picking nprobe: it prices
-  recall in scanned-list units.
 - ``orders_newsvendor_stock``: the newsvendor solution per order
   priority — optimal stock = the smallest daily order count whose
   exact CDF reaches the critical ratio 0.8 (underage 4 : overage 1,
@@ -45,201 +38,12 @@ tests in tests/test_round69.py.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from trackdechets_etl_spark.io.readers import read_table
-from trackdechets_etl_spark.llm.similarity import cosine, cosine_sql
 from trackdechets_etl_spark.queries import QuerySpec
 from trackdechets_etl_spark.session import materialize
-
-EMB_DIMS = 64
-
-
-# --------------------------------------------- IVF recall curve
-
-_IVF_RC_QUERIES = 10
-_IVF_RC_K = 5
-_IVF_RC_NPROBES = [1, 2, 4]
-
-
-def _sim_ivf_recall_curve(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    e = read_table(spark, sf_dir, "embeddings").select(
-        "vec_id",
-        F.col("label").cast("int").alias("label"),
-        F.col("embedding").cast("array<double>").alias("v"),
-    )
-    # centroids via the established per-dim avg rounded at 4dp
-    # (the sim_ivf_topk oracle idiom)
-    ex = e.select("label", F.posexplode("v").alias("pos", "x"))
-    per_dim = ex.groupBy("label", "pos").agg(
-        F.round(F.avg("x"), 4).alias("a")
-    )
-    cent = per_dim.groupBy("label").agg(
-        F.array_sort(
-            F.collect_list(F.struct("pos", "a"))
-        ).alias("pa")
-    ).select(
-        F.col("label").alias("clist"),
-        F.transform("pa", lambda s: s.getField("a")).alias("cvec"),
-    )
-    # coalesce the tiny frames: a crossJoin of two 32-partition
-    # inputs schedules 1024 near-empty tasks (~10 s of pure overhead
-    # measured at sf0.001)
-    q = (
-        e.filter(F.col("vec_id") < _IVF_RC_QUERIES)
-        .select(F.col("vec_id").alias("q_id"), F.col("v").alias("qv"))
-        .coalesce(1)
-    )
-    routed = F.broadcast(q).crossJoin(
-        F.broadcast(cent.coalesce(1))
-    ).select(
-        "q_id",
-        "qv",
-        "clist",
-        F.round(cosine(F.col("qv"), F.col("cvec")), 9).alias("rcos"),
-    )
-    wr = Window.partitionBy("q_id").orderBy(
-        F.desc("rcos"), F.asc("clist")
-    )
-    assigned = routed.withColumn(
-        "crank", F.row_number().over(wr)
-    ).filter(F.col("crank") <= max(_IVF_RC_NPROBES)).select(
-        "q_id", "qv", "clist", "crank"
-    )
-    c = e.select(
-        F.col("vec_id").alias("c_id"),
-        F.col("v").alias("cv"),
-        F.col("label").alias("clist"),
-    )
-    cands = materialize(
-        F.broadcast(assigned)
-        .join(c, "clist")
-        .filter(F.col("q_id") != F.col("c_id"))
-        .select(
-            "q_id",
-            "c_id",
-            "crank",
-            F.round(cosine(F.col("qv"), F.col("cv")), 9).alias("ckey"),
-        )
-    )
-    # literal nprobe grid via explode (a Python-created broadcast
-    # frame costs ~4.4 s of spin-up — profiled in round70)
-    per_np = cands.select(
-        "*",
-        F.explode(
-            F.array(*[F.lit(np) for np in _IVF_RC_NPROBES])
-        ).alias("nprobe"),
-    ).filter(F.col("crank") <= F.col("nprobe"))
-    nps = spark.range(len(_IVF_RC_NPROBES)).select(
-        F.element_at(
-            F.array(*[F.lit(np) for np in _IVF_RC_NPROBES]),
-            (F.col("id") + 1).cast("int"),
-        ).alias("nprobe")
-    )
-    wk = Window.partitionBy("nprobe", "q_id").orderBy(
-        F.desc("ckey"), F.asc("c_id")
-    )
-    approx = per_np.withColumn(
-        "rk", F.row_number().over(wk)
-    ).filter(F.col("rk") <= _IVF_RC_K).select(
-        "nprobe", "q_id", "c_id"
-    )
-    # exact ground truth under the identical rank key
-    exact_scored = (
-        F.broadcast(q)
-        .crossJoin(e.select(F.col("vec_id").alias("c_id"), F.col("v").alias("cv")))
-        .filter(F.col("q_id") != F.col("c_id"))
-        .select(
-            "q_id",
-            "c_id",
-            F.round(cosine(F.col("qv"), F.col("cv")), 9).alias("ckey"),
-        )
-    )
-    we = Window.partitionBy("q_id").orderBy(
-        F.desc("ckey"), F.asc("c_id")
-    )
-    exact = exact_scored.withColumn(
-        "rk", F.row_number().over(we)
-    ).filter(F.col("rk") <= _IVF_RC_K).select("q_id", "c_id")
-    hits = approx.join(exact, ["q_id", "c_id"]).groupBy(
-        "nprobe"
-    ).agg(F.count(F.lit(1)).cast("long").alias("n_hits"))
-    nq = q.agg(F.count(F.lit(1)).cast("long").alias("nq"))
-    return (
-        nps.join(hits, "nprobe", "left")
-        .na.fill(0, ["n_hits"])
-        .crossJoin(F.broadcast(nq))
-        .select(
-            F.col("nprobe").cast("long").alias("nprobe"),
-            F.col("nq").alias("n_queries"),
-            "n_hits",
-            F.round(
-                F.col("n_hits") / (F.col("nq") * _IVF_RC_K), 6
-            ).alias("recall_at_5"),
-        )
-        .orderBy("nprobe")
-    )
-
-
-IVF_RC_SQL = f"""
-WITH e AS (SELECT vec_id, label, embedding::DOUBLE[] AS v
-           FROM embeddings),
-per_dim AS (
-    SELECT label, i, round(avg(v[i]), 4) AS a
-    FROM e, unnest(generate_series(1, {EMB_DIMS})) AS u(i)
-    GROUP BY label, i),
-cent AS (SELECT label AS clist, list(a ORDER BY i) AS cvec
-         FROM per_dim GROUP BY label),
-q AS (SELECT vec_id AS q_id, v AS qv FROM e
-      WHERE vec_id < {_IVF_RC_QUERIES}),
-routed AS (
-    SELECT q_id, qv, clist,
-           round({cosine_sql("qv", "cvec")}, 9) AS rcos
-    FROM q, cent),
-assigned AS (
-    SELECT q_id, qv, clist, crank FROM (
-        SELECT *, row_number() OVER (
-            PARTITION BY q_id ORDER BY rcos DESC, clist) AS crank
-        FROM routed)
-    WHERE crank <= {max(_IVF_RC_NPROBES)}),
-cands AS (
-    SELECT a.q_id, c.vec_id AS c_id, a.crank,
-           round({cosine_sql("a.qv", "c.v")}, 9) AS ckey
-    FROM assigned a JOIN e c ON c.label = a.clist
-    WHERE c.vec_id <> a.q_id),
-nps(nprobe) AS (VALUES {", ".join(f"({np})" for np in _IVF_RC_NPROBES)}),
-approx AS (
-    SELECT nprobe, q_id, c_id FROM (
-        SELECT nprobe, q_id, c_id, row_number() OVER (
-            PARTITION BY nprobe, q_id
-            ORDER BY ckey DESC, c_id) AS rk
-        FROM nps JOIN cands ON crank <= nprobe)
-    WHERE rk <= {_IVF_RC_K}),
-exact_scored AS (
-    SELECT q_id, c.vec_id AS c_id,
-           round({cosine_sql("qv", "c.v")}, 9) AS ckey
-    FROM q, e c WHERE c.vec_id <> q_id),
-exact AS (
-    SELECT q_id, c_id FROM (
-        SELECT *, row_number() OVER (
-            PARTITION BY q_id ORDER BY ckey DESC, c_id) AS rk
-        FROM exact_scored)
-    WHERE rk <= {_IVF_RC_K}),
-hits AS (
-    SELECT nprobe, CAST(count(*) AS BIGINT) AS n_hits
-    FROM approx JOIN exact USING (q_id, c_id) GROUP BY nprobe),
-nq AS (SELECT CAST(count(*) AS BIGINT) AS nq FROM q)
-SELECT CAST(nps.nprobe AS BIGINT) AS nprobe,
-       nq AS n_queries,
-       coalesce(n_hits, 0) AS n_hits,
-       round(coalesce(n_hits, 0) * 1.0 / (nq * {_IVF_RC_K}), 6)
-           AS recall_at_5
-FROM nps LEFT JOIN hits ON nps.nprobe = hits.nprobe, nq
-ORDER BY nps.nprobe
-"""
 
 
 # ------------------------------------------------ newsvendor stock
@@ -706,9 +510,6 @@ FROM d GROUP BY lang ORDER BY lang
 
 
 QUERIES: dict[str, QuerySpec] = {
-    "sim_ivf_recall_curve": QuerySpec(
-        _sim_ivf_recall_curve, IVF_RC_SQL
-    ),
     "orders_newsvendor_stock": QuerySpec(
         _orders_newsvendor_stock, NEWSVENDOR_SQL
     ),

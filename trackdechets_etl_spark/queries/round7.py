@@ -1,6 +1,5 @@
 """Round-5 additions, second batch: sequence mining, corpus-level
-passage dedup, retrieval-index building, and late-interaction search —
-the remaining operator families a 100 TB training-data pipeline reaches
+passage dedup and retrieval-index building — the remaining operator families a 100 TB training-data pipeline reaches
 for that were not yet first-class.
 
 - Sequence / MATCH_RECOGNIZE-style: ``events_pattern_match`` compiles
@@ -15,9 +14,7 @@ for that were not yet first-class.
   (cross-document repeated 5-gram spans) and ``text_passage_dedup``
   (global passage-level dedup with per-document reconstruction —
   the Dolma/C4 paragraph-dedup shape).
-- Retrieval: ``text_posting_lists`` (inverted-index build) and
-  ``sim_maxsim`` (ColBERT-style late-interaction MaxSim over
-  subvector decompositions).
+- Retrieval: ``text_posting_lists`` (inverted-index build).
 - Feature engineering: ``embedding_standardize`` (per-dimension
   z-score over the exploded feature matrix).
 - Distribution stats: ``orders_gini`` (exact Gini coefficient of
@@ -39,7 +36,6 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from trackdechets_etl_spark.io.readers import read_table
-from trackdechets_etl_spark.operators.ranking import top_k_per_group
 from trackdechets_etl_spark.queries import QuerySpec
 from trackdechets_etl_spark.session import materialize
 
@@ -615,98 +611,6 @@ FROM ranked
 """
 
 
-# ------------------------------------------- late-interaction MaxSim
-
-_MAXSIM_NSUB = 8
-_MAXSIM_SUBD = 8
-_MAXSIM_NQ = 5
-_MAXSIM_K = 3
-
-
-def _sim_maxsim(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """ColBERT-style late-interaction retrieval: each 64-dim embedding
-    is decomposed into 8 contiguous 8-dim subvectors standing in for
-    per-token vectors; MaxSim(q, d) = Σ over query subvectors of the
-    max dot product against any document subvector. The query side
-    (ids < 5) broadcasts; per (query, doc, q-sub) maxes then per-pair
-    sums are plain aggregations; top-3 per query by the stable
-    (round(score, 9) desc, doc id) rank key shared with the other
-    sim_* queries. At 100 TB the corpus subvector frame is the thing
-    IVF/PQ routing would prune first — this operator is the exact
-    scoring kernel those variants re-rank with."""
-    e = read_table(spark, sf_dir, "embeddings")
-    sub = e.select(
-        "vec_id",
-        F.explode(
-            F.transform(
-                F.sequence(F.lit(0), F.lit(_MAXSIM_NSUB - 1)),
-                lambda s: F.struct(
-                    s.cast("int").alias("s"),
-                    F.transform(
-                        F.slice(
-                            "embedding", s * _MAXSIM_SUBD + 1, _MAXSIM_SUBD
-                        ),
-                        lambda x: x.cast("double"),
-                    ).alias("sub"),
-                ),
-            )
-        ).alias("x"),
-    ).select("vec_id", "x.s", "x.sub")
-    q = sub.filter(F.col("vec_id") < _MAXSIM_NQ).select(
-        F.col("vec_id").alias("qid"),
-        F.col("s").alias("qs"),
-        F.col("sub").alias("qsub"),
-    )
-    c = sub.select(
-        F.col("vec_id").alias("did"), F.col("sub").alias("csub")
-    )
-    dot = F.aggregate(
-        F.zip_with("qsub", "csub", lambda a, b: a * b),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
-    pairs = (
-        F.broadcast(q)
-        .crossJoin(c)
-        .filter(F.col("qid") != F.col("did"))
-        .select("qid", "did", "qs", dot.alias("d"))
-    )
-    per_qsub = pairs.groupBy("qid", "did", "qs").agg(F.max("d").alias("mx"))
-    scores = per_qsub.groupBy("qid", "did").agg(F.sum("mx").alias("score"))
-    return top_k_per_group(scores, "qid", "score", "did", _MAXSIM_K).select(
-        "qid",
-        "did",
-        F.col("rank").cast("long").alias("rank"),
-        F.round("score", 6).alias("maxsim"),
-    )
-
-
-SIM_MAXSIM_SQL = f"""
-WITH sub AS (
-    -- DOUBLE[] cast matters: list_dot_product on FLOAT[] accumulates
-    -- in float32 and diverges from Spark's double math at ~1e-6.
-    SELECT vec_id, CAST(s AS INTEGER) AS s,
-           CAST(embedding[CAST(s * {_MAXSIM_SUBD} + 1 AS BIGINT)
-                     :CAST(s * {_MAXSIM_SUBD} + {_MAXSIM_SUBD} AS BIGINT)]
-               AS DOUBLE[]) AS sub
-    FROM embeddings, UNNEST(range(0, {_MAXSIM_NSUB})) AS t(s)),
-q AS (SELECT vec_id AS qid, s AS qs, sub AS qsub
-      FROM sub WHERE vec_id < {_MAXSIM_NQ}),
-c AS (SELECT vec_id AS did, sub AS csub FROM sub),
-m AS (
-    SELECT qid, did, qs, max(list_dot_product(qsub, csub)) AS mx
-    FROM q, c WHERE qid != did GROUP BY qid, did, qs),
-sc AS (SELECT qid, did, sum(mx) AS score FROM m GROUP BY qid, did),
-r AS (
-    SELECT qid, did, score,
-           row_number() OVER (PARTITION BY qid
-                              ORDER BY round(score, 9) DESC, did) AS rn
-    FROM sc)
-SELECT qid, did, CAST(rn AS BIGINT) AS rank, round(score, 6) AS maxsim
-FROM r WHERE rn <= {_MAXSIM_K}
-"""
-
-
 # ------------------------------------------------ chi-square contingency
 
 _CHISQ_BUCKETS = 3
@@ -793,6 +697,5 @@ QUERIES: dict[str, QuerySpec] = {
         _embedding_standardize, EMBEDDING_STANDARDIZE_SQL
     ),
     "orders_gini": QuerySpec(_orders_gini, ORDERS_GINI_SQL),
-    "sim_maxsim": QuerySpec(_sim_maxsim, SIM_MAXSIM_SQL),
     "events_chisq": QuerySpec(_events_chisq, EVENTS_CHISQ_SQL),
 }

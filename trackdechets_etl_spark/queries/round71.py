@@ -43,7 +43,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from trackdechets_etl_spark.io.readers import read_table
-from trackdechets_etl_spark.llm.similarity import cosine_sql, dot, norm
+from trackdechets_etl_spark.llm.similarity import cosine_from_norms, cosine_sql, norm
 from trackdechets_etl_spark.queries import QuerySpec
 
 # ------------------------------------------- class-balanced sample
@@ -139,7 +139,7 @@ def _embedding_hubness_score(
             "q_id",
             "c_id",
             F.round(
-                dot(F.col("qv"), F.col("cv")) / (F.col("qn") * F.col("cn")),
+                cosine_from_norms(F.col("qv"), F.col("cv"), F.col("qn"), F.col("cn")),
                 9,
             ).alias("ckey"),
         )

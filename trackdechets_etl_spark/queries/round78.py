@@ -1,4 +1,4 @@
-"""Round-14 additions: eight grep-verified registry gaps in the
+"""Round-14 additions: grep-verified registry gaps in the
 statistical / IR / set-similarity families, each under the full oracle
 discipline (exact integers until the final divisions, fixed-order
 float algebra mirrored verbatim in the DuckDB twin).
@@ -26,12 +26,6 @@ float algebra mirrored verbatim in the DuckDB twin).
   pairs; 8-byte ``hash_key`` shingle keys on the engine side (the
   containment_pairs contract: 64-bit collisions are ~2⁻⁴⁰ on fixture
   vocabularies and the 3-SF oracle gate would surface one).
-- ``sim_map_eval``: precision@5 and MAP@5 of the LSH-bucket ANN
-  ranking against the exact brute-force top-5 (the relevant set) —
-  the retrieval-eval pair NDCG/MRR leave out. AP@5 is computed in
-  exact integer units: ap_scaled = Σ_j rel_j·cum_j·(60/j) ∈ [0, 300]
-  (60 = lcm(1..5)·... chosen so every term is integral), summed
-  exactly across queries; two final divisions produce MAP and P@5.
 - ``events_jonckheere_dow``: Jonckheere–Terpstra ordered-trend test
   of event value across the day-of-week order (Sun..Sat, the Spark
   ``dayofweek`` coding) — 2·JT accumulated in exact half-units over
@@ -337,145 +331,6 @@ ORDER BY id_a, id_b
 """
 
 
-# ------------------------------------------------ MAP@5 / P@5 eval
-
-_MAP_Q = 10
-_MAP_K = 5
-# per-rank integer weight 60/j so every AP term rel_j·cum_j·(60/j) is
-# integral; the per-query maximum is 300 (= all five relevant)
-_MAP_W = {j: 60 // j for j in range(1, _MAP_K + 1)}
-
-
-def _sim_map_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from trackdechets_etl_spark.llm.similarity import (
-        lsh_bucket_topk,
-        topk_bruteforce,
-    )
-
-    e = read_table(spark, sf_dir, "embeddings")
-    rel = topk_bruteforce(
-        e, "vec_id", "embedding", _MAP_Q, k=_MAP_K
-    ).select("q_id", "c_id", F.lit(1).alias("is_rel"))
-    ranked = (
-        lsh_bucket_topk(e, "vec_id", "embedding", 64, _MAP_Q, k=_MAP_K)
-        .join(rel, ["q_id", "c_id"], "left")
-        .withColumn("r", F.coalesce("is_rel", F.lit(0)))
-    )
-    per_q = ranked.groupBy("q_id").agg(
-        *[
-            F.coalesce(
-                F.max(F.when(F.col("rank") == j, F.col("r"))), F.lit(0)
-            ).alias(f"r{j}")
-            for j in range(1, _MAP_K + 1)
-        ]
-    )
-    cums = {
-        j: sum(F.col(f"r{i}") for i in range(1, j + 1))
-        for j in range(1, _MAP_K + 1)
-    }
-    ap_scaled = sum(
-        F.col(f"r{j}") * cums[j] * F.lit(_MAP_W[j])
-        for j in range(1, _MAP_K + 1)
-    )
-    # every probe query must contribute, including those whose LSH
-    # bucket produced no candidates at all
-    qs = e.filter(F.col("vec_id") < _MAP_Q).select(
-        F.col("vec_id").alias("q_id")
-    )
-    scored = qs.join(
-        per_q.select(
-            "q_id",
-            ap_scaled.cast("long").alias("ap_s"),
-            cums[_MAP_K].cast("long").alias("h5"),
-        ),
-        "q_id",
-        "left",
-    )
-    return scored.agg(
-        F.count(F.lit(1)).cast("long").alias("n_queries"),
-        F.sum(F.coalesce("ap_s", F.lit(0))).cast("long").alias(
-            "sum_ap_scaled"
-        ),
-        F.sum(F.coalesce("h5", F.lit(0))).cast("long").alias(
-            "sum_hits_at_5"
-        ),
-        F.round(
-            F.sum(F.coalesce("ap_s", F.lit(0))).cast("double")
-            / (300.0 * F.count(F.lit(1)).cast("double")),
-            6,
-        ).alias("map_at_5"),
-        F.round(
-            F.sum(F.coalesce("h5", F.lit(0))).cast("double")
-            / (5.0 * F.count(F.lit(1)).cast("double")),
-            6,
-        ).alias("p_at_5"),
-    )
-
-
-def _map_oracle() -> str:
-    from trackdechets_etl_spark.llm.similarity import bucket_sql, cosine_sql
-
-    rel_cols = ",\n           ".join(
-        f"COALESCE(max(CASE WHEN rnk = {j} THEN r END), 0) AS r{j}"
-        for j in range(1, _MAP_K + 1)
-    )
-    cum = {
-        j: "(" + " + ".join(f"r{i}" for i in range(1, j + 1)) + ")"
-        for j in range(1, _MAP_K + 1)
-    }
-    ap = " + ".join(
-        f"r{j} * {cum[j]} * {_MAP_W[j]}" for j in range(1, _MAP_K + 1)
-    )
-    return f"""
-WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
-q AS (SELECT vec_id AS q_id, v AS qv FROM e WHERE vec_id < {_MAP_Q}),
-ex_scored AS (
-    SELECT q_id, e.vec_id AS c_id,
-           {cosine_sql('qv', 'e.v')} AS cos
-    FROM q, e WHERE e.vec_id <> q_id),
-rel AS (
-    SELECT q_id, c_id FROM (
-        SELECT q_id, c_id, row_number() OVER (PARTITION BY q_id
-            ORDER BY round(cos, 9) DESC, c_id ASC) AS rnk
-        FROM ex_scored) WHERE rnk <= {_MAP_K}),
-bk AS (SELECT vec_id, v, {bucket_sql('v', 64)} AS bucket
-       FROM e),
-qb AS (SELECT vec_id AS q_id, v AS qv, bucket FROM bk
-       WHERE vec_id < {_MAP_Q}),
-ls_scored AS (
-    SELECT q_id, b.vec_id AS c_id,
-           {cosine_sql('qv', 'b.v')} AS cos
-    FROM qb JOIN bk b ON qb.bucket = b.bucket AND b.vec_id <> q_id),
-ranked AS (
-    SELECT q_id, c_id, row_number() OVER (PARTITION BY q_id
-        ORDER BY round(cos, 9) DESC, c_id ASC) AS rnk
-    FROM ls_scored),
-flags AS (
-    SELECT ranked.q_id, ranked.rnk,
-           CASE WHEN rel.c_id IS NOT NULL THEN 1 ELSE 0 END AS r
-    FROM ranked
-    LEFT JOIN rel ON rel.q_id = ranked.q_id AND rel.c_id = ranked.c_id
-    WHERE ranked.rnk <= {_MAP_K}),
-per_q AS (
-    SELECT q_id,
-           {rel_cols}
-    FROM flags GROUP BY q_id),
-scored AS (
-    SELECT q.q_id,
-           COALESCE({ap}, 0) AS ap_s,
-           COALESCE({cum[_MAP_K]}, 0) AS h5
-    FROM q LEFT JOIN per_q ON per_q.q_id = q.q_id)
-SELECT CAST(count(*) AS BIGINT) AS n_queries,
-       CAST(sum(ap_s) AS BIGINT) AS sum_ap_scaled,
-       CAST(sum(h5) AS BIGINT) AS sum_hits_at_5,
-       round(CAST(sum(ap_s) AS DOUBLE)
-             / (300.0 * CAST(count(*) AS DOUBLE)), 6) AS map_at_5,
-       round(CAST(sum(h5) AS DOUBLE)
-             / (5.0 * CAST(count(*) AS DOUBLE)), 6) AS p_at_5
-FROM scored
-"""
-
-
 # ------------------------------------ Jonckheere-Terpstra over DOW
 
 _JT_K = 7  # day-of-week groups, Spark dayofweek coding 1=Sun .. 7=Sat
@@ -629,7 +484,6 @@ QUERIES: dict[str, QuerySpec] = {
     "lineitem_grubbs_test": QuerySpec(_lineitem_grubbs_test, GRUBBS_SQL),
     "orders_herfindahl": QuerySpec(_orders_herfindahl, HERFINDAHL_SQL),
     "text_dice_tversky": QuerySpec(_text_dice_tversky, _dice_sql()),
-    "sim_map_eval": QuerySpec(_sim_map_eval, _map_oracle()),
     "events_jonckheere_dow": QuerySpec(
         _events_jonckheere_dow, _jt_sql()
     ),

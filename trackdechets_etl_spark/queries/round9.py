@@ -241,11 +241,15 @@ def _dedup_semantic_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
     6 before any comparison, so both engines agree exactly. At 100 TB
     the cluster count scales with the corpus so intra-cluster pair
     counts stay bounded; centroids broadcast."""
-    from trackdechets_etl_spark.llm.similarity import as_double, cosine
+    from trackdechets_etl_spark.llm.similarity import (
+        as_double,
+        cosine_from_norms,
+        norm,
+    )
 
     e = read_table(spark, sf_dir, "embeddings").select(
         "vec_id", "label", as_double(F.col("embedding")).alias("v")
-    )
+    ).withColumn("n", norm(F.col("v")))
     ex = e.select("label", F.posexplode("v").alias("pos", "x"))
     cent = (
         ex.groupBy("label", "pos")
@@ -257,29 +261,42 @@ def _dedup_semantic_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
                 lambda st: st["a"],
             ).alias("centroid")
         )
+        .withColumn("cn", norm(F.col("centroid")))
     )
     scored = e.join(F.broadcast(cent), "label").select(
         "vec_id",
         "label",
         "v",
-        F.round(cosine(F.col("v"), F.col("centroid")), 6).alias("cos_c"),
+        "n",
+        F.round(
+            cosine_from_norms(F.col("v"), F.col("centroid"), F.col("n"), F.col("cn")),
+            6,
+        ).alias("cos_c"),
     )
     a = scored.select(
         F.col("vec_id").alias("a_id"),
         F.col("label").alias("lbl"),
         F.col("v").alias("va"),
+        F.col("n").alias("na"),
         F.col("cos_c").alias("a_cos"),
     )
     b = scored.select(
         F.col("vec_id").alias("b_id"),
         F.col("label").alias("lbl"),
         F.col("v").alias("vb"),
+        F.col("n").alias("nb"),
         F.col("cos_c").alias("b_cos"),
     )
     dropped = (
         a.join(b, "lbl")
         .filter(F.col("a_id") != F.col("b_id"))
-        .filter(F.round(cosine(F.col("va"), F.col("vb")), 6) >= _SEM_TAU)
+        .filter(
+            F.round(
+                cosine_from_norms(F.col("va"), F.col("vb"), F.col("na"), F.col("nb")),
+                6,
+            )
+            >= _SEM_TAU
+        )
         .filter(
             (F.col("b_cos") > F.col("a_cos"))
             | (
